@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.engine.Context
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric","value","unit","queries","sf"}.
@@ -9,58 +11,57 @@ import org.apache.spark.sql.SparkSession
   * materializes every output column and cannot let the optimizer drop
   * sorts/projections, so the timing covers the full declared plan. */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One measured sweep: per query the min of two runs (the successful
+    * run's time if only one succeeded, -1 if neither did), and the queries
+    * with at least one failed run. */
+  final case class Sweep(times: Seq[(String, Double)], failed: Seq[String]) {
+    /** Queries without a successful run add nothing — the formula of every
+      * past round, kept so totals stay comparable; `failed` is what makes a
+      * crash visible. */
+    def total: Double = times.map(_._2).filter(_ >= 0).sum
+  }
+
+  /** Time one noop write of `fn`'s result, then isolate (untimed).
+    * -1 when the query fails. */
+  private def timeOnce(spark: SparkSession, sfDir: String, name: String,
+      fn: Query): Double = {
+    val t0 = System.nanoTime()
+    val elapsed =
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
+      }
+    Context.isolate(spark)
+    elapsed
+  }
+
+  /** Min of two measured runs per query, in name order: the second run
+    * reuses compiled codegen classes, so the min reflects steady-state
+    * execution rather than JIT noise. */
+  def sweep(spark: SparkSession, sfDir: String,
+      queries: Map[String, Query]): Sweep = {
+    val runs = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      (name, timeOnce(spark, sfDir, name, fn), timeOnce(spark, sfDir, name, fn))
+    }
+    Sweep(
+      runs.map { case (name, a, b) =>
+        name -> (if (a < 0 || b < 0) math.max(a, b) else math.min(a, b))
+      },
+      runs.collect { case (name, a, b) if a < 0 || b < 0 => name })
+  }
+
+  /** The compact headline line (the first line Bench prints). */
+  def shortLine(s: Sweep, sfDir: String): String =
+    s"""{"metric":"total","value":${s.total},"unit":"sec","n_queries":${s.times.size},"n_failed":${s.failed.size},"sf":"$sfDir"}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE may re-plan cached-plan output partitioning (see
-      // Context.session for the rationale and measurements)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Per-query state isolation, OUTSIDE the timed region (the former
-    // shape ran cleanup inside a `finally` that the elapsed expression
-    // waited on, charging cleanup to the query being measured):
-    // clearCache drops DataFrame persists; iterative operators
-    // (BFS/CC/PageRank) also leave RDD persists and localCheckpoint
-    // blocks behind — across a 276-query sweep those accumulate into
-    // block-manager memory pressure that taxes every later query (dedup
-    // family measured 2x slower in-session than isolated before this
-    // cleanup). The explicit GC then lets ContextCleaner's
-    // reference-queue pass reclaim dropped shuffle files and broadcast
-    // blocks between queries — the shuffle-file accumulation suspected
-    // behind the r7 4-5x in-sweep outliers (q_dedup_survivors 10.4 s
-    // in-sweep vs 2.5 s steady on identical code). Opt out with
-    // SPARK_GRAFT_BENCH_NO_GC=1.
-    val gcBetween = !sys.env.contains("SPARK_GRAFT_BENCH_NO_GC")
-    def isolate(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      if (gcBetween) { System.gc(); Thread.sleep(50) }
-    }
-
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val elapsed =
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] failed: ${e.getMessage}"); -1.0
-        }
-      isolate()
-      elapsed
-    }
+    val spark = Context.session(s"local[$cpus]", cpus.toInt)
 
     // Warm-up: run every query once at the smallest scale factor so the
     // measured pass reports steady-state (codegen classes compiled, JIT
@@ -71,17 +72,12 @@ object Bench {
       SparkEntry.queries.values.foreach { fn =>
         try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
         // NonFatal: warm-up failures are fine, VM errors/interrupts are not
-        catch { case scala.util.control.NonFatal(_) => () }
-        finally isolate() // warm-up persists must not leak into the runs
+        catch { case NonFatal(_) => () }
+        finally Context.isolate(spark) // warm-up persists must not leak into the runs
       }
-    else SparkEntry.queries.get("q_scan").foreach(run)
-    // Min of two measured runs per query: the second run reuses compiled
-    // codegen classes, so the min reflects steady-state execution rather
-    // than JIT noise — stabilizes round-over-round comparisons.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val a = run(fn); val b = run(fn)
-      name -> (if (a < 0 || b < 0) math.max(a, b) else math.min(a, b))
-    }
+    else SparkEntry.queries.get("q_scan")
+      .foreach(timeOnce(spark, sfDir, "q_scan", _))
+    val results = sweep(spark, sfDir, SparkEntry.queries)
     // per-query values rounded to 0.1 ms: a 319-entry map at full nanotime
     // precision is ~12 KB — rounding keeps the one-line JSON ~30% shorter
     // so a bounded log-tail capture is likelier to hold it whole (the r11
@@ -92,19 +88,16 @@ object Bench {
       if (v < 0) v.toString
       else BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP)
         .bigDecimal.toPlainString
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    val qs = results.times.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
     // SHORT line first, FULL line LAST: a bounded log capture may keep
     // only a head or only a tail — the head gets the compact headline,
     // and the tail ends with the complete per-query JSON (nothing is
     // printed to stdout after it, so a tail of >= the full line's length
     // always contains it intact).
-    val shortLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"sf":"$sfDir"}"""
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
-    println(shortLine)
+      s"""{"metric":"total","value":${results.total},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    println(shortLine(results, sfDir))
     // also persist the complete per-query map to a repo file: the driver's
     // log tail keeps only ~2 KB, which truncates the per-query line at
     // ~45 of 240+ entries — BENCH_LOCAL.json lets round-over-round
@@ -136,13 +129,15 @@ object Bench {
       val out = java.nio.file.Paths.get(repoRoot, "BENCH_LOCAL.json")
       // ADVICE r12: carry the environment alongside the numbers so
       // cross-round comparisons of this artifact are like-for-like
-      // (cpus, heap, gc isolation). Extra keys in the SIDE artifact only;
-      // the stdout contract line keeps its exact shape.
+      // (cpus, heap, gc isolation), plus the names of failed queries.
+      // Extra keys in the SIDE artifact only; the stdout full line keeps
+      // its exact shape.
+      val failed = results.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       val envLine = fullLine.dropRight(1) +
-        s""","cpus":$cpus,"heap_max_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},"gc_between":$gcBetween}"""
+        s""","cpus":$cpus,"heap_max_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},"gc_between":true,"failed":$failed}"""
       java.nio.file.Files.writeString(out, envLine + "\n")
       System.err.println(s"[bench] wrote $out")
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] BENCH_LOCAL.json write failed: ${e.getMessage}") }
     // the full line goes out LAST (after the BENCH_LOCAL.json side
     // artifact, whose stderr chatter must not land between the tail and

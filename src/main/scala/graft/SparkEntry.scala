@@ -92,7 +92,7 @@ object SparkEntry {
       graft.similarity.Ivf.train(base, k = 8, iters = 1))
     val store = scratch("ivf_stream_store")
     // fresh root per run: stale ingest=b* keys from a prior in-process
-    // run (QueryBench runs queries 3x) must not leak into this run's
+    // run (JobProfile re-runs a query) must not leak into this run's
     // probe — batch numbering restarts with the fresh checkpoint, and
     // only ingest=base is overwritten by the base write
     org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)

@@ -141,11 +141,15 @@ case class CsvOptions(
     mode: String = "PERMISSIVE")
 
 object Context {
-  /** Standard session shape for this engine: AQE on (runtime re-planning,
-    * skew-join splitting), shuffle partitions sized for the local harness
-    * (the 100 TB deployment would size this to ~2-3x total cores). */
-  def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession.builder()
+  /** The one session builder of this engine — every main and the test
+    * fixture come through here, so they all run the same engine config.
+    * AQE on (runtime re-planning, skew-join splitting), shuffle partitions
+    * sized for the local harness (the 100 TB deployment would size this to
+    * ~2-3x total cores). `conf` entries are applied last and override the
+    * defaults (the broadcast-off verify sweep, forced-spill thresholds). */
+  def session(master: String = "local[*]", shufflePartitions: Int = 32,
+      conf: Map[String, String] = Map.empty): SparkSession = {
+    val builder = SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -165,9 +169,29 @@ object Context {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.engine.GraftExtensions")
       .config("spark.ui.enabled", "false")
+    val spark = conf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Per-query state isolation; callers run it after a query's timing
+    * ends, never inside it. clearCache drops DataFrame persists; iterative
+    * operators (BFS/CC/PageRank) also leave RDD persists and
+    * localCheckpoint blocks behind — across a 300-query sweep those
+    * accumulate into block-manager memory pressure that taxes every later
+    * query (dedup family measured 2x slower in-session than isolated
+    * without this). The explicit GC then lets ContextCleaner's
+    * reference-queue pass reclaim dropped shuffle files and broadcast
+    * blocks before the next query (r7 saw 4-5x in-sweep outliers from
+    * shuffle-file accumulation: q_dedup_survivors 10.4 s in-sweep vs
+    * 2.5 s steady on identical code). */
+  def isolate(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    System.gc()
+    Thread.sleep(50)
   }
 
   /** One Context per session (weak keys — sessions are not retained). Temp
@@ -201,7 +225,7 @@ object Tables {
 
   /** Load a driver table. The events table's `ts` has shipped as either
     * nanosecond parquet timestamps (Spark reads them as raw longs under
-    * spark.sql.legacy.parquet.nanosAsLong — set in all our sessions) or
+    * spark.sql.legacy.parquet.nanosAsLong, set by Context.session) or
     * plain microsecond timestamps without UTC adjustment (Spark 4 infers
     * TimestampNTZ). Canonicalize both to the native microsecond
     * TimestampType: the nanos path uses integer arithmetic (`DIV` — a
@@ -267,15 +291,8 @@ object Tables {
     * under-parallel, so at production split counts (or after an
     * upstream shuffle) it is a no-op and never moves big data twice. */
   def spreadForKernel(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    // A/B escape hatch shared with the measurement tools: a floor past
-    // any real input (SPARK_GRAFT_SPREAD_MIN=9999999999999) disables
-    // kernel-input spreading so before/after comparisons need no checkout
-    val disabled = spark.conf.getOption("spark.graft.scan.spreadMinBytes")
-      .flatMap(v => scala.util.Try(v.toLong).toOption)
-      .exists(_ > (1L << 40))
-    val target = spark.sparkContext.defaultParallelism
+    val target = df.sparkSession.sparkContext.defaultParallelism
     val cur = df.rdd.getNumPartitions // planning only, no job
-    if (!disabled && cur * 2 < target) df.repartition(target) else df
+    if (cur * 2 < target) df.repartition(target) else df
   }
 }

@@ -75,13 +75,7 @@ object Analytics {
     val schema = bucketed.schema
       .add(pidCol, IntegerType, nullable = false)
       .add(lrnCol, LongType, nullable = false)
-    val debug = sys.env.get("GRAFT_DEBUG_BUCKETS").contains("1")
-    val rdd = bucketed.rdd.mapPartitionsWithIndex { (pid, it0) =>
-      val it = if (!debug) it0 else {
-        val buf = it0.toArray
-        System.err.println(s"[withLocalRank] pid=$pid rows=${buf.length}")
-        buf.iterator
-      }
+    val rdd = bucketed.rdd.mapPartitionsWithIndex { (pid, it) =>
       var lrn = 0L
       var prev: Seq[Any] = null
       it.map { r =>

@@ -145,9 +145,7 @@ object ContractStress {
       val wall = (System.nanoTime() - t0) / 1e9
       val sp = PlanAudit.singlePartitionViolations(PlanAudit.physicalPlan(df))
       if (sp.nonEmpty) failures ::= s"$n: ${sp.mkString("; ")}"
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.engine.Context.isolate(spark)
       if (rows == 0) failures ::= s"$n: zero rows at ${factor}x"
       drainTaskEvents()
       val stages = byStage.synchronized(byStage.view.mapValues(_.toSeq).toMap)

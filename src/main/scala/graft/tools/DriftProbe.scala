@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Sizes q_stream_reindex's audit floor: per-SF recall@5 of the frozen
@@ -16,15 +15,7 @@ import org.apache.spark.sql.functions._
   * the 0.8 floor at every SF (see SCALE.md round-11 table). */
 object DriftProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.engine.Context.session("local[8]", 8)
     import graft.similarity.Ivf
     // optional args: explicit table dirs (e.g. the ContractStress corpus)
     val dirs =

@@ -1,39 +1,31 @@
 package graft.tools
 
+import scala.util.control.NonFatal
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.engine.Context
 
-/** Optimization-round measurement aid: run ONE contract query with a
-  * SparkListener that records every job's wall time, task count, and
-  * call site, then print the jobs sorted by cost. Answers "where do the
-  * seconds of a multi-action query actually go" (train vs store write
-  * vs audit vs probe) — the Spark-UI stage view, reduced to a terminal,
-  * for sessions where the UI is disabled.
+/** The query runner for local iteration: run named contract queries in ONE
+  * session (the Bench.scala execution shape, minus the full sweep) — a
+  * warm-up, then `runs` timed noop writes each — with a SparkListener that
+  * records every job's wall time and call site. Prints every
+  * run, the best run, and the last run's jobs and stages sorted by cost.
+  * Answers "where do the seconds of a multi-action query actually go"
+  * (train vs store write vs audit vs probe) — the Spark-UI stage view,
+  * reduced to a terminal, for sessions where the UI is disabled — and
+  * catches in-session re-run failures and JIT-vs-steady-state deltas.
   *
-  * Usage: runMain graft.tools.JobProfile <query> [sfDir] [runs]
+  * Usage: runMain graft.tools.JobProfile <q1,q2,...> [sfDir] [runs]
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Context.session(s"local[$cpus]", cpus)
 
-    case class Job(id: Int, start: Long, var end: Long = -1L,
-      var tasks: Int = 0, site: String)
+    case class Job(id: Int, start: Long, site: String, var end: Long = -1L)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     @volatile var collecting = false
     val listener = new SparkListener {
@@ -42,7 +34,7 @@ object JobProfile {
           val site = Option(js.properties)
             .flatMap(p => Option(p.getProperty("callSite.short")))
             .getOrElse("?")
-          jobs.put(js.jobId, Job(js.jobId, js.time, site = site))
+          jobs.put(js.jobId, Job(js.jobId, js.time, site))
         }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
         val j = jobs.get(je.jobId)
@@ -63,44 +55,47 @@ object JobProfile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    val fn = graft.SparkEntry.queries(name)
-    def once(collect: Boolean): Double = {
-      collecting = collect
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      finally {
+    for (name <- names) {
+      val fn = graft.SparkEntry.queries(name)
+      // times the write alone; isolation runs after the clock stops
+      def once(collect: Boolean): Option[Double] = {
+        collecting = collect
+        val t0 = System.nanoTime()
+        val t =
+          try {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            Some((System.nanoTime() - t0) / 1e9)
+          } catch { case NonFatal(e) =>
+            println(s"[jobprofile] $name FAILED: ${e.getMessage}"); None
+          }
         collecting = false
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        Context.isolate(spark)
+        t
       }
-      (System.nanoTime() - t0) / 1e9
-    }
-    val warm = once(collect = false) // JIT/codegen warm-up
-    println(f"[jobprofile] $name warm-up ${warm}%.3f s")
-    var best = Double.MaxValue
-    (1 to runs).foreach { i =>
-      jobs.clear()
-      val t = once(collect = true)
-      println(f"[jobprofile] $name run$i ${t}%.3f s, ${jobs.size} jobs")
-      if (t < best) best = t
-      if (i == runs) { // print the last run's breakdown
-        import scala.jdk.CollectionConverters._
-        val done = jobs.values().asScala.filter(_.end > 0).toSeq
-        val total = done.map(j => j.end - j.start).sum / 1e3
-        println(f"[jobprofile] job wall sum ${total}%.3f s over ${done.size} jobs (gaps = driver time)")
-        val bySite = done.groupBy(_.site).map { case (s, js) =>
-          (s, js.map(j => j.end - j.start).sum / 1e3, js.size)
-        }.toSeq.sortBy(-_._2)
-        bySite.take(30).foreach { case (s, sec, n) =>
-          println(f"[jobprofile]   ${sec}%8.3f s  $n%4d jobs  $s")
-        }
-        done.sortBy(j => -(j.end - j.start)).take(15).foreach { j =>
-          println(f"[jobprofile]   job ${j.id}%4d  ${(j.end - j.start) / 1e3}%8.3f s  ${j.site}")
-        }
+      once(collect = false) // JIT/codegen warm-up
+        .foreach(w => println(f"[jobprofile] $name warm-up ${w}%.3f s"))
+      val times = (1 to runs).flatMap { i =>
+        jobs.clear()
+        val t = once(collect = true)
+        t.foreach(s => println(f"[jobprofile] $name run$i ${s}%.3f s, ${jobs.size} jobs"))
+        t
       }
+      // the last run's breakdown
+      import scala.jdk.CollectionConverters._
+      val done = jobs.values().asScala.filter(_.end > 0).toSeq
+      val total = done.map(j => j.end - j.start).sum / 1e3
+      println(f"[jobprofile] job wall sum ${total}%.3f s over ${done.size} jobs (gaps = driver time)")
+      val bySite = done.groupBy(_.site).map { case (s, js) =>
+        (s, js.map(j => j.end - j.start).sum / 1e3, js.size)
+      }.toSeq.sortBy(-_._2)
+      bySite.take(30).foreach { case (s, sec, n) =>
+        println(f"[jobprofile]   ${sec}%8.3f s  $n%4d jobs  $s")
+      }
+      done.sortBy(j => -(j.end - j.start)).take(15).foreach { j =>
+        println(f"[jobprofile]   job ${j.id}%4d  ${(j.end - j.start) / 1e3}%8.3f s  ${j.site}")
+      }
+      if (times.nonEmpty) println(f"[jobprofile] $name best ${times.min}%.3f s")
     }
-    println(f"[jobprofile] $name best ${best}%.3f s")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.Context
 
 /** Optimization-round evidence tool: write `.explain("formatted")` output
   * for the named contract queries to `<outDir>/<query>_<tag>.txt` — the
@@ -15,22 +15,8 @@ object PlanSnap {
     val tag = args(1)
     val names = args(2).split(",")
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // lets a "before" snapshot disable the scale-adaptive scan spread
-      // (SPARK_GRAFT_SPREAD_MIN=9999999999999) without a code checkout
-      .config("spark.graft.scan.spreadMinBytes",
-        sys.env.getOrElse("SPARK_GRAFT_SPREAD_MIN", (128L * 1024).toString))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = Context.session(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
@@ -43,11 +29,7 @@ object PlanSnap {
         println(s"[plansnap] wrote $outDir/${name}_$tag.txt")
       } catch { case e: Throwable =>
         println(s"[plansnap] $name FAILED: ${e.getMessage}")
-      } finally {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      } finally Context.isolate(spark)
     }
     spark.stop()
   }

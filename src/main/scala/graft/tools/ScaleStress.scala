@@ -193,9 +193,7 @@ object ScaleStress {
       val t0 = System.nanoTime()
       val rows = mk().count()
       val wall = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.engine.Context.isolate(spark)
       // task-end events arrive on the async listener bus after the job
       // returns — poll until the captured count stops moving so the
       // slowest task can't be missed and late events can't bleed into

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import scala.collection.mutable
+import graft.engine.Context
 
 /** Drives the SPILL paths — the one 100 TB behavior a 128 GiB local run
   * never exercises naturally: at scale, sort/window/join buffers and
@@ -37,29 +37,20 @@ object SpillStress {
         "q_array_funcs", "q_dedup_minhash")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = "/tmp/graft_spillstress"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config("spark.ui.enabled", "false")
+    val spark = Context.session("local[32]", 32, Map(
       // force the spill paths (see scaladoc)
-      .config("spark.shuffle.spill.numElementsForceSpillThreshold", "5000")
-      .config("spark.sql.windowExec.buffer.in.memory.threshold", "1024")
-      .config("spark.sql.windowExec.buffer.spill.threshold", "5000")
-      .config("spark.sql.sortMergeJoinExec.buffer.in.memory.threshold", "1024")
-      .config("spark.sql.sortMergeJoinExec.buffer.spill.threshold", "5000")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "128")
+      "spark.shuffle.spill.numElementsForceSpillThreshold" -> "5000",
+      "spark.sql.windowExec.buffer.in.memory.threshold" -> "1024",
+      "spark.sql.windowExec.buffer.spill.threshold" -> "5000",
+      "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold" -> "1024",
+      "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "5000",
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "128",
       // at 100 TB the join sides are big — disable auto-broadcast so the
       // TPC-H joins take the SortMergeJoin path whose sorts/buffers are
       // the spill machinery under test (explicit broadcast() hints in
       // operators keep their bounded broadcasts)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"))
     new java.io.File(outDir).mkdirs()
 
     case class Spill(var mem: Long = 0L, var disk: Long = 0L)
@@ -94,9 +85,7 @@ object SpillStress {
       df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$n")
       val wall = (System.nanoTime() - t0) / 1e9
       val rows = spark.read.parquet(s"$outDir/$n").count()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Context.isolate(spark)
       drain()
       val (mem, disk, nStages) = byStage.synchronized {
         (byStage.valuesIterator.map(_.mem).sum,
@@ -107,20 +96,7 @@ object SpillStress {
         failures ::= s"$n: no spill recorded — thresholds lost their teeth"
       println(f"$n%-20s $wall%8.2f $rows%9d ${mem / 1e6}%13.1f ${disk / 1e6}%14.1f $nStages%14d")
     }
-    // oracle twin dump (same escape logic as Verify)
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.Verify.writeOracleSql(outDir)
     spark.stop()
     if (failures.nonEmpty) {
       failures.foreach(f => System.err.println(s"[spillstress] FAIL $f"))

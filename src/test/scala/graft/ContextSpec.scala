@@ -81,6 +81,16 @@ class ContextSpec extends AnyFunSuite {
     assert(dropped.collect().length == 2)
   }
 
+  test("the test fixture runs the production session config") {
+    val conf = spark.conf
+    assert(conf.get(
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning") == "true")
+    assert(conf.get("spark.sql.extensions")
+      .contains("graft.engine.GraftExtensions"))
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
   test("events table canonicalizes nanos to TimestampType") {
     val ev = Tables.load(spark, SparkFixture.sfDir, "events")
     assert(ev.schema("ts").dataType == TimestampType)

@@ -1,22 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.engine.Context
 
-/** One shared SparkSession across all suites (local[4], UTC, AQE on). */
+/** One shared SparkSession across all suites, built by the production
+  * session builder so tests run the engine config the mains run. */
 object SparkFixture {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Context.session("local[4]", 4)
   val sfDir = "/root/testdata/sf0.001"
 }
