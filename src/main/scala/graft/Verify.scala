@@ -7,9 +7,14 @@ import graft.engine.Context
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional 3rd arg (local iteration only): comma-separated query names
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // optional 3rd arg (local iteration only): comma-separated query
+    // names; an unknown name is an error, not a silently empty run
+    val names: Set[String] =
+      if (args.length > 2) args(2).split(",").toSet
+      else SparkEntry.queries.keySet
+    val unknown = names -- SparkEntry.queries.keySet
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_NO_BROADCAST=1: verify under the CLUSTER-SCALE join
     // plan. At 100 TB no fact-table side fits a broadcast, so the plans
@@ -25,7 +30,7 @@ object Verify {
     val spark = Context.session(s"local[$cpus]", cpus.toInt, noBroadcast)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => names(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -34,13 +39,14 @@ object Verify {
       }
       finally Context.isolate(spark)
     }
-    writeOracleSql(outDir)
+    writeOracleSql(outDir, names)
     spark.stop()
   }
 
-  /** Write every query's DuckDB twin to `<outDir>/oracle_sql.json`, the
-    * file tools/check.py and the driver read. */
-  def writeOracleSql(outDir: String): Unit = {
+  /** Write the DuckDB twins of `names` (the queries that ran) to
+    * `<outDir>/oracle_sql.json`, the file tools/check.py and the driver
+    * read; check.py scores every key in it. */
+  def writeOracleSql(outDir: String, names: Set[String]): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -53,7 +59,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => names(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
   }

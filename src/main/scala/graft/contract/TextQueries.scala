@@ -1,0 +1,2664 @@
+package graft
+package contract
+
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.dedup.Dedup
+import graft.engine.Context
+import graft.functions.native
+
+import Shared._
+
+/** Text statistics, corpus curation, n-gram language models and BPE. */
+object TextQueries {
+
+  /** Shared BPE training replay (words → spaced vocab → k argmax/merge
+    * rounds) — the ONE definition both [[bpeTwin]] and [[bpeEncodeTwin]]
+    * build on, so the two queries can never train different merge
+    * sequences. `m$r` is MATERIALIZED: it is referenced by the v-chain,
+    * the encode chain, and the finals, and DuckDB would otherwise
+    * re-inline the whole upstream per reference. */
+  private def bpeTrainCtes(k: Int): String = {
+    val head =
+      """WITH words AS (
+           SELECT w, count(*) AS freq FROM (
+             SELECT unnest(regexp_split_to_array(text, '[ \n\t\r]+')) AS w
+             FROM documents) WHERE w <> '' GROUP BY w),
+         v0 AS (SELECT ' ' || regexp_replace(w, '(.)', '\1 ', 'g') AS s, freq
+                FROM words)"""
+    val rounds = (1 to k).map { r =>
+      s""",
+         t$r AS (SELECT string_split(trim(s), ' ') AS t, freq FROM v${r - 1}),
+         p$r AS (SELECT t[i] AS l, t[i+1] AS r, CAST(sum(freq) AS BIGINT) AS cnt
+           FROM t$r, unnest(generate_series(1, len(t) - 1)) AS g(i)
+           GROUP BY 1, 2),
+         m$r AS MATERIALIZED (SELECT l, r, cnt FROM p$r
+           ORDER BY cnt DESC, l, r LIMIT 1),
+         v$r AS (SELECT replace(s,
+             ' ' || (SELECT l FROM m$r) || ' ' || (SELECT r FROM m$r) || ' ',
+             ' ' || (SELECT l FROM m$r) || (SELECT r FROM m$r) || ' ') AS s, freq
+           FROM v${r - 1})"""
+    }.mkString
+    head + rounds
+  }
+
+  /** BPE training replay: k rounds unrolled as chained CTEs — each round
+    * counts adjacent pairs over the spaced-token word strings (weighted
+    * by word freq), picks the (cnt DESC, lhs, rhs) argmax, and applies
+    * the merge with the same non-overlapping replace() the engine uses. */
+  private def bpeTwin(k: Int): String = {
+    val finals = (1 to k).map(r =>
+      s"SELECT $r AS merge_rank, l AS lhs, r AS rhs, l || r AS merged, cnt AS freq FROM m$r")
+      .mkString("\n         UNION ALL ")
+    bpeTrainCtes(k) + "\n         " + finals + "\n         ORDER BY merge_rank"
+  }
+
+  /** BPE ENCODE replay: the same training chain as [[bpeTwin]], then the
+    * k merges applied in rank order to every word's spaced form with the
+    * identical non-overlapping replace(), summed to per-doc symbol
+    * counts. Wordless docs re-attach as zeros via the LEFT JOIN. */
+  private def bpeEncodeTwin(k: Int): String = {
+    val encode =
+      """,
+         dw AS (SELECT doc_id,
+             unnest(regexp_split_to_array(text, '[ \n\t\r]+')) AS w
+           FROM documents),
+         e0 AS MATERIALIZED (SELECT doc_id,
+             ' ' || regexp_replace(w, '(.)', '\1 ', 'g') AS s
+           FROM dw WHERE w <> '')""" +
+      (1 to k).map { r =>
+        s""",
+         e$r AS (SELECT doc_id, replace(s,
+             ' ' || (SELECT l FROM m$r) || ' ' || (SELECT r FROM m$r) || ' ',
+             ' ' || (SELECT l FROM m$r) || (SELECT r FROM m$r) || ' ') AS s
+           FROM e${r - 1})"""
+      }.mkString +
+      s""",
+         perdoc AS (SELECT doc_id,
+             CAST(sum(len(string_split(trim(s), ' '))) AS BIGINT)
+               AS bpe_tokens,
+             count(*) AS n_words
+           FROM e$k GROUP BY doc_id)
+         SELECT d.doc_id,
+           COALESCE(p.bpe_tokens, 0) AS bpe_tokens,
+           COALESCE(p.n_words, 0) AS n_words
+         FROM documents d LEFT JOIN perdoc p ON d.doc_id = p.doc_id
+         ORDER BY d.doc_id"""
+    bpeTrainCtes(k) + encode
+  }
+
+  /** Perceptron replay: k unrolled batch rounds. All-integer margins and
+    * update sums (cast back to BIGINT — DuckDB widens sum to HUGEINT), so
+    * the weight trajectory is exact in both engines. */
+  private def perceptronTwin(k: Int): String = {
+    val head =
+      """WITH feats AS MATERIALIZED (
+           SELECT CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS y,
+             CAST(1 AS BIGINT) AS x0,
+             CAST(length(regexp_extract_all(text, '\S+')) AS BIGINT) AS x1,
+             CAST(length(text) AS BIGINT) AS x2,
+             CAST(length(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS x3
+           FROM documents),
+         w0 AS (SELECT CAST(0 AS BIGINT) AS a, CAST(0 AS BIGINT) AS b,
+                CAST(0 AS BIGINT) AS c, CAST(0 AS BIGINT) AS d)"""
+    val rounds = (1 to k).map { r =>
+      val m = s"y * ((SELECT a FROM w${r - 1}) * x0 + " +
+        s"(SELECT b FROM w${r - 1}) * x1 + " +
+        s"(SELECT c FROM w${r - 1}) * x2 + " +
+        s"(SELECT d FROM w${r - 1}) * x3)"
+      s""",
+         g$r AS MATERIALIZED (SELECT
+             CAST(COALESCE(sum(CASE WHEN $m <= 0 THEN y * x0 ELSE 0 END), 0)
+               AS BIGINT) AS da,
+             CAST(COALESCE(sum(CASE WHEN $m <= 0 THEN y * x1 ELSE 0 END), 0)
+               AS BIGINT) AS db,
+             CAST(COALESCE(sum(CASE WHEN $m <= 0 THEN y * x2 ELSE 0 END), 0)
+               AS BIGINT) AS dc,
+             CAST(COALESCE(sum(CASE WHEN $m <= 0 THEN y * x3 ELSE 0 END), 0)
+               AS BIGINT) AS dd,
+             CAST(COALESCE(sum(CASE WHEN $m <= 0 THEN 1 ELSE 0 END), 0)
+               AS BIGINT) AS errs
+           FROM feats),
+         w$r AS (SELECT
+             (SELECT a FROM w${r - 1}) + (SELECT da FROM g$r) AS a,
+             (SELECT b FROM w${r - 1}) + (SELECT db FROM g$r) AS b,
+             (SELECT c FROM w${r - 1}) + (SELECT dc FROM g$r) AS c,
+             (SELECT d FROM w${r - 1}) + (SELECT dd FROM g$r) AS d)"""
+    }.mkString
+    val finals = (1 to k).map(r =>
+      s"""SELECT CAST($r AS BIGINT) AS iter, a AS w_bias, b AS w_tokens,
+           c AS w_chars, d AS w_digits,
+           (SELECT errs FROM g$r) AS errors FROM w$r""")
+      .mkString("\n         UNION ALL ")
+    head + rounds + "\n         " + finals + "\n         ORDER BY iter"
+  }
+
+  /** FIM twin, shared by q_fim and q_sql_fim: same width-safe hash for
+    * the apply coin and both cut points, same sorted pair, list slices
+    * 1-based inclusive = the engine's slice(start, length) windows;
+    * empty slices coalesced (DuckDB array_to_string(NULL on empty)). */
+  private val fimTwinSql: String =
+    s"""WITH tk AS (SELECT doc_id, text, string_split(text, ' ') AS toks
+           FROM documents),
+       c AS (
+         SELECT doc_id, text, toks, len(toks) AS L,
+           (${hash32Sql("doc_id * 17 + 1")}) % (len(toks) + 1) AS h1,
+           (${hash32Sql("doc_id * 17 + 2")}) % (len(toks) + 1) AS h2,
+           (${hash32Sql("doc_id * 17")}) % 2 = 0 AS applied
+         FROM tk),
+       s AS (
+         SELECT doc_id, text, toks, L, applied,
+           least(h1, h2) AS c1, greatest(h1, h2) AS c2
+         FROM c)
+       SELECT doc_id, applied AS fim_applied,
+         CASE WHEN applied THEN
+           '<PRE> ' || coalesce(array_to_string(toks[1:c1], ' '), '')
+             || ' <SUF> '
+             || coalesce(array_to_string(toks[c2+1:L], ' '), '')
+             || ' <MID> '
+             || coalesce(array_to_string(toks[c1+1:c2], ' '), '')
+         ELSE text END AS transformed
+       FROM s ORDER BY doc_id"""
+
+  /** Span-corruption twin, shared by q_span_corrupt and
+    * q_sql_span_corrupt: the same Knuth hash mask, gaps-and-islands
+    * runs, dense-rank sentinel ids, and string_agg ordered by
+    * (pos, prio, part) — the engine's sort_array struct order. */
+  private val spanCorruptTwinSql: String =
+    s"""WITH tk AS (SELECT doc_id, string_split(text, ' ') AS toks
+             FROM documents),
+         tok AS (
+           SELECT doc_id, s.i - 1 AS pos, toks[s.i] AS tok
+           FROM tk, unnest(generate_series(1, len(toks))) AS s(i)),
+         f AS (
+           SELECT doc_id, pos, tok,
+             (${hash32Sql("doc_id * 131 + pos")}) % 5 = 0 AS masked
+           FROM tok),
+         m AS (
+           SELECT doc_id, pos, tok,
+             pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
+               AS island
+           FROM f WHERE masked),
+         si AS (
+           SELECT doc_id, pos, tok, island,
+             dense_rank() OVER (PARTITION BY doc_id ORDER BY island) - 1
+               AS sid
+           FROM m),
+         st AS (
+           SELECT doc_id, min(pos) AS pos, 1 AS prio,
+             '<extra_id_' || sid || '>' AS part
+           FROM si GROUP BY doc_id, island, sid),
+         up AS (SELECT doc_id, pos, 2 AS prio, tok AS part
+           FROM f WHERE NOT masked),
+         mp AS (SELECT doc_id, pos, 2 AS prio, tok AS part FROM si),
+         mt AS (
+           SELECT doc_id,
+             string_agg(part, ' ' ORDER BY pos, prio, part)
+               AS masked_text
+           FROM (SELECT * FROM up UNION ALL SELECT * FROM st)
+           GROUP BY doc_id),
+         tt AS (
+           SELECT doc_id,
+             string_agg(part, ' ' ORDER BY pos, prio, part)
+               AS target_text
+           FROM (SELECT * FROM mp UNION ALL SELECT * FROM st)
+           GROUP BY doc_id),
+         cn AS (
+           SELECT doc_id,
+             CAST(sum(CASE WHEN masked THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_masked
+           FROM f GROUP BY doc_id),
+         ns AS (
+           SELECT doc_id, CAST(count(DISTINCT island) AS BIGINT)
+               AS n_spans
+           FROM m GROUP BY doc_id)
+         SELECT d.doc_id,
+           coalesce(mt.masked_text, '') AS masked_text,
+           coalesce(tt.target_text, '') AS target_text,
+           coalesce(cn.n_masked, 0) AS n_masked,
+           coalesce(ns.n_spans, 0) AS n_spans
+         FROM documents d
+           LEFT JOIN mt ON mt.doc_id = d.doc_id
+           LEFT JOIN tt ON tt.doc_id = d.doc_id
+           LEFT JOIN cn ON cn.doc_id = d.doc_id
+           LEFT JOIN ns ON ns.doc_id = d.doc_id
+         ORDER BY d.doc_id"""
+
+  /** The mid-level interpolated term P2(w3|w2) of the trigram scorer
+    * twin — used in two CASE branches, so ONE snippet keeps the copies
+    * textually identical. */
+  private val knTriP2Sql: String =
+    """(CASE WHEN x2.cont2 IS NOT NULL THEN
+         greatest(CAST(coalesce(md.cont23, 0) AS DOUBLE)
+             - CAST(0.75 AS DOUBLE), CAST(0 AS DOUBLE))
+           / CAST(x2.cont2 AS DOUBLE)
+         + CAST(0.75 AS DOUBLE) * CAST(x2.nf2 AS DOUBLE)
+           / CAST(x2.cont2 AS DOUBLE)
+           * (CAST(coalesce(cc.cont3, 0) AS DOUBLE)
+             / CAST(bt.b23 AS DOUBLE))
+       ELSE CAST(coalesce(cc.cont3, 0) AS DOUBLE)
+         / CAST(bt.b23 AS DOUBLE) END)"""
+
+  /** KN bigram scorer twin, shared by q_kn_perplexity and the
+    * stored-model variant q_kn_score_stored: model CTE at minCount=1
+    * (same rounded p_kn), then the seen / context-backoff / OOV-floor
+    * chain per scored bigram; DECIMAL(28,6) log-prob sums keep the
+    * fold order-independent. */
+  private val knPerplexityTwinSql: String =
+    """WITH toks AS (SELECT doc_id, source,
+             list_filter(string_split(text, ' '), x -> x <> '') AS tk
+           FROM documents),
+         rbigrams AS (
+           SELECT tk[i] AS w1, tk[i + 1] AS w2
+           FROM (SELECT tk FROM toks WHERE source <> 'src1'),
+             unnest(generate_series(1, len(tk) - 1)) AS t(i)
+           WHERE len(tk) > 1),
+         bg AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12
+                FROM rbigrams GROUP BY w1, w2),
+         ctx AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c_ctx,
+             CAST(count(*) AS BIGINT) AS n_follow FROM bg GROUP BY w1),
+         prec AS (SELECT w2, CAST(count(*) AS BIGINT) AS n_prec
+                  FROM bg GROUP BY w2),
+         types AS (SELECT CAST(count(*) AS BIGINT) AS b_types FROM bg),
+         model AS (SELECT bg.w1, bg.w2,
+             round(greatest(CAST(bg.c12 AS DOUBLE) - CAST(0.75 AS DOUBLE),
+                 CAST(0 AS DOUBLE)) / CAST(ctx.c_ctx AS DOUBLE)
+               + CAST(0.75 AS DOUBLE) * CAST(ctx.n_follow AS DOUBLE)
+                 / CAST(ctx.c_ctx AS DOUBLE)
+                 * (CAST(prec.n_prec AS DOUBLE)
+                   / CAST(types.b_types AS DOUBLE)), 6) AS p_kn
+           FROM bg JOIN ctx USING (w1) JOIN prec USING (w2)
+             CROSS JOIN types),
+         sbigrams AS (
+           SELECT doc_id, tk[i] AS w1, tk[i + 1] AS w2
+           FROM toks, unnest(generate_series(1, len(tk) - 1)) AS t(i)
+           WHERE source = 'src1' AND len(tk) > 1),
+         scored AS (SELECT sb.doc_id,
+             CAST(round(ln(greatest(
+               coalesce(m.p_kn,
+                 CASE WHEN c.c_ctx IS NOT NULL
+                   THEN CAST(0.75 AS DOUBLE) * CAST(c.n_follow AS DOUBLE)
+                     / CAST(c.c_ctx AS DOUBLE)
+                     * (CAST(coalesce(p.n_prec, 0) AS DOUBLE)
+                       / CAST(t2.b_types AS DOUBLE))
+                   ELSE CAST(0 AS DOUBLE) END),
+               CAST(1e-7 AS DOUBLE))), 6) AS DECIMAL(28,6)) AS lp
+           FROM sbigrams sb
+           LEFT JOIN model m ON sb.w1 = m.w1 AND sb.w2 = m.w2
+           LEFT JOIN ctx c ON sb.w1 = c.w1
+           LEFT JOIN prec p ON sb.w2 = p.w2
+           CROSS JOIN types t2),
+         agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nb, sum(lp) AS s
+                 FROM scored GROUP BY doc_id)
+         SELECT d.doc_id, CAST(coalesce(a.nb, 0) AS BIGINT) AS n_bigrams,
+           round(exp(-(CAST(a.s AS DOUBLE) / CAST(a.nb AS DOUBLE))), 6)
+             AS perplexity
+         FROM (SELECT doc_id FROM documents WHERE source = 'src1') d
+         LEFT JOIN agg a ON d.doc_id = a.doc_id
+         ORDER BY d.doc_id"""
+
+  /** Trigram scorer twin: model CTEs at minCount=1 over the non-src1
+    * corpus, then the seen / context-mass / mid-level / base / floor
+    * chain per scored trigram, DECIMAL-folded per document. Shared by
+    * q_kn_trigram_ppl and the stored-model q_kn_trigram_score_stored. */
+  private val knTrigramPplTwinSql: String =
+    s"""WITH toks AS (SELECT doc_id, source,
+           list_filter(string_split(text, ' '), x -> x <> '') AS tk
+         FROM documents),
+       rtri AS (
+         SELECT tk[i] AS w1, tk[i + 1] AS w2, tk[i + 2] AS w3
+         FROM (SELECT tk FROM toks WHERE source <> 'src1'),
+           unnest(generate_series(1, len(tk) - 2)) AS t(i)
+         WHERE len(tk) > 2),
+       tg AS (SELECT w1, w2, w3, CAST(count(*) AS BIGINT) AS c123
+              FROM rtri GROUP BY w1, w2, w3),
+       ctx12 AS (SELECT w1, w2, CAST(sum(c123) AS BIGINT) AS c12,
+           CAST(count(*) AS BIGINT) AS nf12 FROM tg GROUP BY w1, w2),
+       mid AS (SELECT w2, w3, CAST(count(*) AS BIGINT) AS cont23
+               FROM tg GROUP BY w2, w3),
+       ctx2 AS (SELECT w2, CAST(sum(cont23) AS BIGINT) AS cont2,
+           CAST(count(*) AS BIGINT) AS nf2 FROM mid GROUP BY w2),
+       c3 AS (SELECT w3, CAST(count(*) AS BIGINT) AS cont3
+              FROM mid GROUP BY w3),
+       btot AS (SELECT CAST(count(*) AS BIGINT) AS b23 FROM mid),
+       model AS (SELECT tg.w1, tg.w2, tg.w3,
+           round(greatest(CAST(tg.c123 AS DOUBLE) - CAST(0.75 AS DOUBLE),
+               CAST(0 AS DOUBLE)) / CAST(ctx12.c12 AS DOUBLE)
+             + CAST(0.75 AS DOUBLE) * CAST(ctx12.nf12 AS DOUBLE)
+               / CAST(ctx12.c12 AS DOUBLE)
+               * (greatest(CAST(mid.cont23 AS DOUBLE)
+                     - CAST(0.75 AS DOUBLE), CAST(0 AS DOUBLE))
+                   / CAST(ctx2.cont2 AS DOUBLE)
+                 + CAST(0.75 AS DOUBLE) * CAST(ctx2.nf2 AS DOUBLE)
+                   / CAST(ctx2.cont2 AS DOUBLE)
+                   * (CAST(c3.cont3 AS DOUBLE)
+                     / CAST(btot.b23 AS DOUBLE))), 6) AS p_kn
+         FROM tg JOIN ctx12 USING (w1, w2) JOIN mid USING (w2, w3)
+           JOIN ctx2 USING (w2) JOIN c3 USING (w3) CROSS JOIN btot),
+       stri AS (
+         SELECT doc_id, tk[i] AS w1, tk[i + 1] AS w2, tk[i + 2] AS w3
+         FROM toks, unnest(generate_series(1, len(tk) - 2)) AS t(i)
+         WHERE source = 'src1' AND len(tk) > 2),
+       scored AS (SELECT st.doc_id,
+           CAST(round(ln(greatest(
+             CASE WHEN m.p_kn IS NOT NULL THEN m.p_kn
+                  WHEN x12.c12 IS NOT NULL THEN
+                    CAST(0.75 AS DOUBLE) * CAST(x12.nf12 AS DOUBLE)
+                    / CAST(x12.c12 AS DOUBLE) * $knTriP2Sql
+                  ELSE $knTriP2Sql END,
+             CAST(1e-7 AS DOUBLE))), 6) AS DECIMAL(28,6)) AS lp
+         FROM stri st
+         LEFT JOIN model m ON st.w1 = m.w1 AND st.w2 = m.w2 AND st.w3 = m.w3
+         LEFT JOIN ctx12 x12 ON st.w1 = x12.w1 AND st.w2 = x12.w2
+         LEFT JOIN mid md ON st.w2 = md.w2 AND st.w3 = md.w3
+         LEFT JOIN ctx2 x2 ON st.w2 = x2.w2
+         LEFT JOIN c3 cc ON st.w3 = cc.w3
+         CROSS JOIN btot bt),
+       agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS nt, sum(lp) AS s
+               FROM scored GROUP BY doc_id)
+       SELECT d.doc_id, CAST(coalesce(a.nt, 0) AS BIGINT) AS n_trigrams,
+         round(exp(-(CAST(a.s AS DOUBLE) / CAST(a.nt AS DOUBLE))), 6)
+           AS perplexity
+       FROM (SELECT doc_id FROM documents WHERE source = 'src1') d
+       LEFT JOIN agg a ON d.doc_id = a.doc_id
+       ORDER BY d.doc_id"""
+
+  /** Kneser–Ney bigram-table twin, shared by the DataFrame path
+    * (q_kn_lm) and the SQL front door (q_sql_kn_lm). */
+  private val knLmTwinSql: String =
+    """WITH toks AS (SELECT list_filter(string_split(text, ' '),
+           x -> x <> '') AS tk FROM documents),
+       bigrams AS (
+         SELECT tk[i] AS w1, tk[i + 1] AS w2
+         FROM toks, unnest(generate_series(1, len(tk) - 1)) AS t(i)
+         WHERE len(tk) > 1),
+       bg AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12
+              FROM bigrams GROUP BY w1, w2),
+       ctx AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c_ctx,
+           CAST(count(*) AS BIGINT) AS n_follow FROM bg GROUP BY w1),
+       prec AS (SELECT w2, CAST(count(*) AS BIGINT) AS n_prec
+                FROM bg GROUP BY w2),
+       types AS (SELECT CAST(count(*) AS BIGINT) AS b_types FROM bg)
+       SELECT bg.w1, bg.w2, bg.c12, ctx.c_ctx, ctx.n_follow, prec.n_prec,
+         round(greatest(CAST(bg.c12 AS DOUBLE) - CAST(0.75 AS DOUBLE),
+             CAST(0 AS DOUBLE)) / CAST(ctx.c_ctx AS DOUBLE)
+           + CAST(0.75 AS DOUBLE) * CAST(ctx.n_follow AS DOUBLE)
+             / CAST(ctx.c_ctx AS DOUBLE)
+             * (CAST(prec.n_prec AS DOUBLE) / CAST(types.b_types AS DOUBLE)),
+           6) AS p_kn,
+         types.b_types, CAST(0.75 AS DOUBLE) AS discount
+       FROM bg JOIN ctx USING (w1) JOIN prec USING (w2) CROSS JOIN types
+       WHERE bg.c12 >= 5
+       ORDER BY w1, w2"""
+
+  /** The quality-screen signal expressions (token count, punct ratio,
+    * word-repetition) in DuckDB SQL — ONE definition shared by the
+    * q_quality_filter and q_curation_report twins so the two screens'
+    * signals can never drift. NOTE (known, inherited domain bound): the
+    * RE2 '\\S'/length() semantics here match TextStatsKernel only on
+    * text without U+000B or non-BMP characters — true of the driver
+    * corpus; a Unicode-wild corpus would need the kernel's charset
+    * replayed explicitly (same bound as every TextStats twin). */
+  private val qualitySignalsSql: String =
+    """length(regexp_extract_all(text, '\S+')) AS n_tokens,
+             CASE WHEN length(text) = 0 THEN 0.0
+                  ELSE CAST(length(regexp_replace(text,
+                         '[^.,;:!?''"()\[\]{}-]', '', 'g')) AS DOUBLE)
+                       / CAST(length(text) AS DOUBLE) END AS punct_ratio,
+             CASE WHEN len(list_filter(regexp_split_to_array(text, '\s+'),
+                            x -> x <> '')) = 0 THEN 0.0
+                  ELSE 1.0 - CAST(len(list_distinct(list_filter(
+                         regexp_split_to_array(text, '\s+'), x -> x <> '')))
+                       AS DOUBLE)
+                       / CAST(len(list_filter(regexp_split_to_array(text,
+                           '\s+'), x -> x <> '')) AS DOUBLE) END AS rep"""
+
+  /** Quality-screen thresholds, shared by q_quality_filter and
+    * q_curation_report on both the engine and oracle sides. */
+  private val QfMinTokens = 5L
+  private val QfMaxTokens = 2000L
+  private val QfMaxPunct = 0.3
+  private val QfMaxRep = 0.6
+
+  /** The curated banned-term list, shared by q_blocklist and
+    * q_curation_report on BOTH the engine and oracle sides — one
+    * source of truth so the two screens' "blocklisted" populations can
+    * never drift apart. */
+  private val blocklistTerms: Seq[String] = Seq("slow", "error", "leak")
+  /** SQL-literal rendering of the list, quote-escaped: a future term
+    * containing an apostrophe must render as a valid literal in both
+    * dialects, not inject broken SQL into the twins. */
+  private def blocklistTermsSql: String =
+    blocklistTerms.map(t => "'" + t.replace("'", "''") + "'").mkString(", ")
+
+  private def hash32SparkSql(x: String): String =
+    hash32SqlDialect(x, "div")
+
+  /** Subword piece vocabulary for q_tokenize — a few frequent digraphs/
+    * trigraphs plus every lowercase letter (full fallback coverage for
+    * this corpus's alphabetic tokens). Shared verbatim with the twin. */
+  private val subwordVocab: Seq[String] =
+    Seq("the", "ing", "er", "on", "ti", "an", "or", "en", "ar", "st") ++
+      ('a' to 'z').map(_.toString)
+
+  /** Shared DuckDB CTE prefix recomputing the full TextStats quality
+    * heuristic (tokenization, char/punct/stopword counts, ratios, quality
+    * score, language argmax) — ends at CTE `q`. Used by q_text_quality
+    * (adds the rolling-FNV fingerprint) and q_curate (adds per-source
+    * quality ranking). */
+  private val qualityCtes: String =
+    """WITH toks AS (
+           SELECT doc_id, text,
+             list_filter(regexp_split_to_array(text, '[ \t\n\v\f\r]+'),
+               x -> x <> '') AS tk
+           FROM documents),
+         base AS (
+           SELECT doc_id, text, tk,
+             CAST(length(text) AS BIGINT) AS n_chars,
+             CAST(len(tk) AS BIGINT) AS n_tokens,
+             CAST(length(regexp_replace(text, '[ \t\n\v\f\r]', '', 'g'))
+               AS BIGINT) AS n_nonws,
+             CAST(length(regexp_replace(text, '[^.,;:!?''"()\[\]{}-]', '', 'g'))
+               AS BIGINT) AS n_punct,
+             CAST(len(list_filter(tk, t -> lower(t) IN ('the','a','an','of',
+               'and','or','to','in','is','are','was','were','be','on','for',
+               'with','as','at','by','it','this','that'))) AS BIGINT) AS stop_hits,
+             CAST(len(list_filter(tk, t -> lower(t) IN ('der','die','das',
+               'und','ist','nicht','mit','ein','eine','zu','von'))) AS BIGINT) AS h_de,
+             CAST(len(list_filter(tk, t -> lower(t) IN ('the','and','is',
+               'of','to','in','that','it','with','for'))) AS BIGINT) AS h_en,
+             CAST(len(list_filter(tk, t -> lower(t) IN ('el','la','los',
+               'las','de','que','y','es','en','un','una','por'))) AS BIGINT) AS h_es,
+             CAST(len(list_filter(tk, t -> lower(t) IN ('le','la','les',
+               'de','et','est','que','dans','pour','une','des'))) AS BIGINT) AS h_fr,
+             CAST(length(regexp_replace(text, '[^\x{4e00}-\x{9fff}]', '', 'g'))
+               AS BIGINT) AS h_zh
+           FROM toks),
+         m AS (
+           SELECT *,
+             CASE WHEN n_tokens = 0 THEN 0.0
+               ELSE CAST(n_nonws AS DOUBLE) / n_tokens END AS mean_tok_len,
+             CASE WHEN n_chars = 0 THEN 0.0
+               ELSE CAST(n_punct AS DOUBLE) / n_chars END AS punct_ratio,
+             CASE WHEN n_tokens = 0 THEN 0.0
+               ELSE CAST(stop_hits AS DOUBLE) / n_tokens END AS stopword_ratio
+           FROM base),
+         q AS (
+           SELECT *,
+             (least(CAST(n_chars AS DOUBLE) / 200.0, 1.0) * 0.4
+              + least(stopword_ratio * 4.0, 1.0) * 0.3
+              + (CASE WHEN mean_tok_len >= 3.0 AND mean_tok_len <= 10.0
+                  THEN 1.0 ELSE 0.5 END) * 0.3)
+             * (CASE WHEN punct_ratio > 0.2 THEN 0.5 ELSE 1.0 END) AS quality,
+             CASE
+               WHEN greatest(h_de, h_en, h_es, h_fr, h_zh) = 0 THEN 'und'
+               WHEN h_de >= h_en AND h_de >= h_es AND h_de >= h_fr
+                 AND h_de >= h_zh THEN 'de'
+               WHEN h_en >= h_es AND h_en >= h_fr AND h_en >= h_zh THEN 'en'
+               WHEN h_es >= h_fr AND h_es >= h_zh THEN 'es'
+               WHEN h_fr >= h_zh THEN 'fr'
+               ELSE 'zh'
+             END AS lang_pred
+           FROM m)"""
+
+  val queries: Seq[ContractQuery] = Seq(
+    // corpus vocabulary building (tokenizer training's first pass): token →
+    // total frequency + document frequency, top 100. Explode+groupBy is
+    // map-side combined before its shuffle; the top-k plans as
+    // TakeOrderedAndProject (per-partition k, no global sort) — the shape
+    // that holds at a 100-TB corpus with a billion-term vocabulary.
+    ContractQuery("q_vocab", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
+        .groupBy("token")
+        .agg(count(lit(1)).as("n"), countDistinct(col("doc_id")).as("df"))
+        .orderBy(col("n").desc, col("token"))
+        .limit(100),
+      """WITH u AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
+           FROM documents)
+         SELECT token, count(*) AS n, count(DISTINCT doc_id) AS df
+         FROM u GROUP BY token
+         ORDER BY n DESC, token LIMIT 100"""),
+
+    // same curation result via the k-bounded TopK AGGREGATOR instead of a
+    // rank window: partial+final aggregation ships ≤ partitions×k rows per
+    // group — the shape that survives when one domain holds most of the
+    // corpus and a window would sort it all in one task. Shares q_curate's
+    // oracle (identical result; PlanSpec asserts the plan has no Window).
+    ContractQuery("q_curate_agg", (s, dir) => {
+      val sp = s; import sp.implicits._
+      val scored = t(s, dir, "documents")
+        .select(col("source"),
+          native.text_stats(col("text")).getField("quality").as("quality"),
+          col("doc_id"))
+        .as[(String, Double, Long)]
+        .map { case (src, q, id) => (src, graft.functions.Scored(q, id)) }
+      scored.groupByKey(_._1).mapValues(_._2)
+        .agg(new graft.functions.TopK(5).toColumn.name("top"))
+        .flatMap { case (src, tops) =>
+          tops.zipWithIndex.map { case (t, i) =>
+            (t.neighbor_id, src, t.cosine, (i + 1).toLong) } }
+        .toDF("doc_id", "source", "quality", "rank")
+        .orderBy("source", "rank")
+    },
+      // aggregator formulation — identical result, shared twin
+      (qualityCtes +
+      """,
+         sel AS (
+           SELECT q.doc_id, d.source, q.quality,
+             CAST(row_number() OVER (PARTITION BY d.source
+               ORDER BY q.quality DESC, q.doc_id) AS BIGINT) AS rank
+           FROM q JOIN documents d ON q.doc_id = d.doc_id)
+         SELECT doc_id, source, quality, rank FROM sel
+         WHERE rank <= 5 ORDER BY source, rank""")),
+
+    // subword tokenization: greedy longest-match segmentation of the 100
+    // most frequent corpus words against a fixed piece vocabulary (the
+    // APPLY side of the q_vocab build side); the DuckDB twin replays the
+    // greedy loop as a recursive CTE with a LATERAL longest-match probe
+    ContractQuery("q_tokenize", (s, dir) => {
+      val words = t(s, dir, "documents")
+        .select(explode(split(col("text"), " ")).as("word"))
+        .filter(col("word") =!= "")
+        .groupBy("word").agg(count(lit(1)).as("n"))
+        .orderBy(col("n").desc, col("word")).limit(100)
+      words.select(col("word"),
+          native.tokenize_greedy(col("word"), typedlit(subwordVocab))
+            .as("pieces"),
+          col("n"))
+        .orderBy(col("n").desc, col("word"))
+    },
+      s"""WITH RECURSIVE vocab(p) AS (
+            SELECT unnest([${subwordVocab.map(p => s"'$p'").mkString(",")}])),
+          tw AS (SELECT word, n FROM (
+             SELECT tok AS word, count(*) AS n FROM (
+               SELECT unnest(string_split(text, ' ')) AS tok
+               FROM documents) u
+             WHERE tok <> '' GROUP BY tok
+             ORDER BY n DESC, tok LIMIT 100) s),
+          seg AS (
+            SELECT word, CAST(1 AS INTEGER) AS pos,
+                   CAST('' AS VARCHAR) AS pieces FROM tw
+            UNION ALL
+            SELECT s.word, CAST(s.pos + coalesce(length(m.p), 1) AS INTEGER),
+                   s.pieces || CASE WHEN s.pieces = '' THEN '' ELSE ' ' END
+                     || coalesce(m.p, '?')
+            FROM seg s LEFT JOIN LATERAL (
+                SELECT p FROM vocab
+                WHERE p = substr(s.word, s.pos, length(p))
+                ORDER BY length(p) DESC LIMIT 1) m ON true
+            WHERE s.pos <= length(s.word)),
+          done AS (SELECT word, pieces FROM seg
+                   WHERE pos = length(word) + 1)
+          SELECT t.word, d.pieces, t.n FROM tw t JOIN done d USING (word)
+          ORDER BY t.n DESC, t.word"""),
+
+    // temperature-2 domain flattening: each source keeps sqrt(n_min/n_i)
+    // of its rows — heads downsampled toward the geometric mean, smallest
+    // domain kept whole; engine-exact because sqrt/division are correctly
+    // rounded and the threshold is floor-pinned (see Profile)
+    ContractQuery("q_mix_temperature", (s, dir) =>
+      graft.functions.Profile.temperatureFlatten(
+          t(s, dir, "documents"), "source", "doc_id")
+        .groupBy("source").agg(count(lit(1)).as("n_kept"))
+        .orderBy("source"),
+      """WITH c AS (SELECT source, count(*) AS n FROM documents
+                    GROUP BY source),
+         m AS (SELECT min(n) AS nmin FROM c),
+         keep AS (
+           SELECT d.doc_id, d.source
+           FROM documents d JOIN c ON d.source = c.source CROSS JOIN m
+           WHERE (
+             ((d.doc_id % 4294967296) % 65536) * 2654435761
+             + ((((d.doc_id % 4294967296) // 65536) * 2654435761)
+                % 65536) * 65536
+           ) % 4294967296
+           < CAST(floor(sqrt(CAST(m.nmin AS DOUBLE) / CAST(c.n AS DOUBLE))
+                        * 4294967296.0) AS BIGINT))
+         SELECT source, count(*) AS n_kept FROM keep
+         GROUP BY source ORDER BY source"""),
+
+    // overlapping character chunking (RAG / context-window prep): 200-char
+    // chunks, 40-char overlap — narrow generator, no shuffle; every chunk
+    // hash-checked including the short tail chunks
+    ContractQuery("q_chunk", (s, dir) =>
+      graft.functions.Text.chunk(t(s, dir, "documents"), size = 200,
+          overlap = 40)
+        .orderBy("doc_id", "chunk_idx"),
+      """SELECT doc_id, CAST(i AS BIGINT) AS chunk_idx,
+           CAST(i * 160 AS BIGINT) AS start_char,
+           substr(text, i * 160 + 1, 200) AS chunk_text
+         FROM documents,
+           unnest(generate_series(0,
+             greatest((length(text) - 1) // 160, 0))) AS g(i)
+         ORDER BY doc_id, chunk_idx"""),
+
+    // end-to-end pipeline composition: exact dedup -> quality filter ->
+    // deterministic train/eval split -> per-(source,split) report. Each
+    // stage is individually oracle-proven elsewhere; this query proves
+    // they COMPOSE (the library's real usage shape) with one twin
+    // replaying all four stages.
+    ContractQuery("q_pipeline", (s, dir) => {
+      val kept = Dedup.exactKept(t(s, dir, "documents"))
+      val scored = kept.withColumn("st", native.text_stats(col("text")))
+      val good = scored.filter(col("st.quality") >= 0.5)
+      val split = graft.functions.Profile.hashSplit(good, "doc_id")
+      split.groupBy(col("source"), col("split"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("st.n_tokens")).as("total_tokens"))
+        .orderBy("source", "split")
+    },
+      // four-stage pipeline twin: min-id dedup survivors, quality gate,
+      // the same width-safe two-limb Knuth hash split, per-cell report
+      (qualityCtes +
+      """,
+         kept AS (SELECT min(doc_id) AS doc_id FROM documents
+                  GROUP BY text),
+         good AS (SELECT q.doc_id, d.source, q.n_tokens
+                  FROM q JOIN kept k ON q.doc_id = k.doc_id
+                  JOIN documents d ON d.doc_id = q.doc_id
+                  WHERE q.quality >= 0.5),
+         sp AS (SELECT *, CASE WHEN (
+                  ((doc_id % 4294967296) % 65536) * 2654435761
+                  + ((((doc_id % 4294967296) // 65536) * 2654435761)
+                     % 65536) * 65536
+                ) % 4294967296 % 100 < 80
+                  THEN 'train' ELSE 'eval' END AS split
+                FROM good)
+         SELECT source, split, count(*) AS n_docs,
+           CAST(sum(n_tokens) AS BIGINT) AS total_tokens
+         FROM sp GROUP BY source, split ORDER BY source, split""")),
+
+    // corpus curation: per-source top-5 documents by quality score — the
+    // "keep the best K per domain" selection step after quality scoring.
+    // Partitioned window (never global); scores are engine-bit-identical
+    // so the ranking hash-checks.
+    ContractQuery("q_curate", (s, dir) => {
+      val scored = t(s, dir, "documents")
+        .select(col("doc_id"), col("source"),
+          native.text_stats(col("text")).getField("quality").as("quality"))
+      val w = Window.partitionBy("source")
+        .orderBy(col("quality").desc, col("doc_id"))
+      scored.withColumn("rank", row_number().over(w).cast("long"))
+        .filter(col("rank") <= 5)
+        .orderBy("source", "rank")
+    },
+      // top-quality curation: per-source top-5 docs by the TextStats quality
+      // score (ties broken by doc_id; scores are bit-identical across
+      // engines, so the ranking is too — same qualityCtes prefix)
+      (qualityCtes +
+      """,
+         sel AS (
+           SELECT q.doc_id, d.source, q.quality,
+             CAST(row_number() OVER (PARTITION BY d.source
+               ORDER BY q.quality DESC, q.doc_id) AS BIGINT) AS rank
+           FROM q JOIN documents d ON q.doc_id = d.doc_id)
+         SELECT doc_id, source, quality, rank FROM sel
+         WHERE rank <= 5 ORDER BY source, rank""")),
+
+    // CCNet-style LM fluency: bigram counts trained on the English slice,
+    // every doc scored by mean reference-bigram frequency (log-free →
+    // engine-exact; see Text.bigramFluency)
+    ContractQuery("q_lm_fluency", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      graft.functions.Text.bigramFluency(docs,
+          docs.filter(col("lang") === "en"))
+        .orderBy("doc_id")
+    },
+      """WITH d AS (SELECT doc_id, string_split(text, ' ') AS ws
+                    FROM documents),
+         bg AS (SELECT doc_id, ws[i] AS w1, ws[i+1] AS w2
+                FROM d, unnest(generate_series(1, len(ws) - 1)) AS t(i)),
+         ref AS (SELECT w1, w2, count(*) AS bg_n
+                 FROM bg JOIN documents USING (doc_id)
+                 WHERE lang = 'en' GROUP BY w1, w2),
+         sc AS (SELECT bg.doc_id,
+                  CAST(count(*) AS BIGINT) AS n_bigrams,
+                  CAST(sum(coalesce(ref.bg_n, 0)) AS BIGINT) AS bg_total
+                FROM bg LEFT JOIN ref USING (w1, w2)
+                GROUP BY bg.doc_id)
+         SELECT docs.doc_id,
+           coalesce(sc.n_bigrams, 0) AS n_bigrams,
+           CAST(sc.bg_total AS DOUBLE) / sc.n_bigrams AS fluency
+         FROM documents docs LEFT JOIN sc ON docs.doc_id = sc.doc_id
+         ORDER BY docs.doc_id"""),
+
+    // TF-IDF top term per document (log-free: cross-engine deterministic)
+    ContractQuery("q_tfidf", (s, dir) => {
+      val scored = graft.functions.Text.tfidf(t(s, dir, "documents"))
+      val w = Window.partitionBy("doc_id")
+        .orderBy(col("tfidf").desc, col("term").asc)
+      scored.withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("doc_id"), col("term").as("top_term"), col("tfidf"))
+        .orderBy("doc_id")
+    },
+      """WITH words AS (
+           SELECT doc_id,
+             unnest(regexp_split_to_array(lower(text), '\s+')) AS term
+           FROM documents),
+         tf AS (SELECT doc_id, term, count(*) AS n_term FROM words
+                WHERE term <> '' GROUP BY doc_id, term),
+         dl AS (SELECT doc_id, sum(n_term) AS n_doc_terms FROM tf
+                GROUP BY doc_id),
+         dfq AS (SELECT term, count(*) AS doc_freq FROM tf GROUP BY term),
+         nd AS (SELECT count(*) AS n_docs FROM dl),
+         scored AS (
+           SELECT tf.doc_id, tf.term,
+             (CAST(n_term AS DOUBLE) / n_doc_terms)
+               * (CAST(n_docs AS DOUBLE) / doc_freq) AS tfidf
+           FROM tf JOIN dl USING (doc_id) JOIN dfq USING (term) CROSS JOIN nd)
+         SELECT doc_id, term AS top_term, tfidf FROM (
+           SELECT *, row_number() OVER (PARTITION BY doc_id
+             ORDER BY tfidf DESC, term ASC) AS rn
+           FROM scored) r
+         WHERE rn = 1 ORDER BY doc_id"""),
+
+    // supervised term selection: chi-squared presence/class association,
+    // top-3 class-indicative terms per source — the feature-selection
+    // counterpart to unsupervised tfidf/PMI; all counts exact longs, one
+    // fixed-order double expression both engines replay bit-for-bit
+    ContractQuery("q_chi2_terms", (s, dir) =>
+      graft.functions.Text.chiSquaredTerms(t(s, dir, "documents"),
+          classCol = "source", topk = 3, minDf = 5)
+        .orderBy("source", "rn"),
+      // chi2 = n·(AD−BC)²/((A+B)(C+D)(A+C)(B+D)) with the SAME
+      // left-associated cast/multiply/divide chain as the Spark column —
+      // the four-way denominator product would overflow BIGINT, hence the
+      // stepwise double divisions on both sides
+      """WITH words AS (
+           SELECT DISTINCT source AS cls, doc_id,
+             unnest(regexp_split_to_array(lower(text), '\s+')) AS term
+           FROM documents),
+         tc AS (SELECT term, cls, count(*) AS a FROM words
+                WHERE term <> '' GROUP BY term, cls),
+         tt AS (SELECT term, sum(a) AS t_all FROM tc GROUP BY term),
+         ct AS (SELECT source AS cls, count(*) AS c_all FROM documents
+                GROUP BY source),
+         nd AS (SELECT count(*) AS n FROM documents),
+         cells AS (
+           SELECT ct.cls, tt.term, coalesce(tc.a, 0) AS a, t_all, c_all, n,
+             t_all - coalesce(tc.a, 0) AS b,
+             c_all - coalesce(tc.a, 0) AS c,
+             n - t_all - c_all + coalesce(tc.a, 0) AS d,
+             coalesce(tc.a, 0) * (n - t_all - c_all + coalesce(tc.a, 0))
+               - (t_all - coalesce(tc.a, 0)) * (c_all - coalesce(tc.a, 0))
+               AS adbc
+           FROM tt CROSS JOIN ct
+             LEFT JOIN tc ON tc.term = tt.term AND tc.cls = ct.cls
+             CROSS JOIN nd
+           WHERE t_all >= 5 AND t_all < n),
+         scored AS (
+           SELECT cls, term, a,
+             CAST(n AS DOUBLE) * CAST(adbc AS DOUBLE) * CAST(adbc AS DOUBLE)
+               / CAST(a + b AS DOUBLE) / CAST(c + d AS DOUBLE)
+               / CAST(a + c AS DOUBLE) / CAST(b + d AS DOUBLE) AS chi2
+           FROM cells)
+         SELECT cls AS source, term, CAST(a AS BIGINT) AS n_docs, chi2,
+           CAST(rn AS BIGINT) AS rn
+         FROM (SELECT *, row_number() OVER (PARTITION BY cls
+                 ORDER BY chi2 DESC, term ASC) AS rn FROM scored) r
+         WHERE rn <= 3 ORDER BY source, rn"""),
+
+    // per-source token-distribution Shannon entropy — the diversity
+    // metric mixture design reads next to raw counts; order-pinned fold
+    // so the float sum replays bit-for-bit (see Text.tokenEntropy)
+    ContractQuery("q_entropy", (s, dir) =>
+      graft.functions.Text.tokenEntropy(t(s, dir, "documents"))
+        .orderBy("source"),
+      // entropy twin: Σ c·ln(c) as ONE left fold over terms in ascending
+      // order (list_reduce over an ORDER BY list) — the exact fold order
+      // of the Spark side's sorted mapPartitions accumulator, so the
+      // order-dependent double sum is bit-identical
+      """WITH words AS (
+           SELECT source AS cls,
+             unnest(regexp_split_to_array(lower(text), '\s+')) AS term
+           FROM documents),
+         tc AS (SELECT cls, term, count(*) AS c FROM words
+                WHERE term <> '' GROUP BY cls, term),
+         agg AS (
+           SELECT cls,
+             list_reduce(
+               list(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))
+                    ORDER BY term),
+               (a, b) -> a + b) AS clnc,
+             sum(c) AS n, count(*) AS t
+           FROM tc GROUP BY cls)
+         SELECT cls AS source, CAST(t AS BIGINT) AS n_types,
+           CAST(n AS BIGINT) AS n_tokens,
+           ln(CAST(n AS DOUBLE)) - clnc / CAST(n AS DOUBLE) AS entropy
+         FROM agg ORDER BY source"""),
+
+    // deterministic hash-based train/eval split (reproducible sampling)
+    ContractQuery("q_split", (s, dir) =>
+      graft.functions.Profile.hashSplit(t(s, dir, "orders"), "o_orderkey", 80)
+        .groupBy("split").agg(count(lit(1)).as("n"))
+        .orderBy("split"),
+      // width-safe two-limb Knuth hash (see Profile.hashBucket100): every
+      // intermediate < 1.8e14, so no engine-dependent 64-bit wrap for any id
+      """SELECT CASE WHEN (
+             ((o_orderkey % 4294967296) % 65536) * 2654435761
+             + ((((o_orderkey % 4294967296) // 65536) * 2654435761) % 65536) * 65536
+           ) % 4294967296 % 100 < 80
+             THEN 'train' ELSE 'eval' END AS split,
+           count(*) AS n
+         FROM orders GROUP BY 1 ORDER BY split"""),
+
+    // text analysis: SQL-expressible per-doc stats (one-pass native
+    // TextStats struct; fields are regex-compatible with the oracle)
+    ContractQuery("q_text_stats", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"), native.text_stats(col("text")).as("st"))
+        .select(col("doc_id"),
+          col("st.n_chars").as("n_chars"),
+          col("st.n_tokens").as("n_tokens"),
+          col("st.n_subwords").as("n_subwords"),
+          col("st.mean_token_len").as("mean_token_len"),
+          col("st.punct_ratio").as("punct_ratio"))
+        .orderBy("doc_id"),
+      """SELECT doc_id,
+           CAST(length(text) AS BIGINT) AS n_chars,
+           CAST(length(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
+           CAST(length(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_subwords,
+           CASE WHEN length(regexp_extract_all(text, '\S+')) = 0 THEN 0.0
+                ELSE CAST(length(regexp_replace(text, '\s+', '', 'g')) AS DOUBLE)
+                     / CAST(length(regexp_extract_all(text, '\S+')) AS DOUBLE) END
+             AS mean_token_len,
+           CASE WHEN length(text) = 0 THEN 0.0
+                ELSE CAST(length(regexp_replace(text, '[^.,;:!?''"()\[\]{}-]', '', 'g')) AS DOUBLE)
+                     / CAST(length(text) AS DOUBLE) END AS punct_ratio
+         FROM documents ORDER BY doc_id"""),
+
+    // cross-document boilerplate removal (C4-style): tokens occurring in
+    // >= 100 distinct docs are corpus boilerplate, removed from every doc
+    // (order preserved). The boilerplate set is tiny by construction →
+    // broadcast anti-join; see functions.Text.removeBoilerplate.
+    ContractQuery("q_boilerplate", (s, dir) =>
+      graft.functions.Text.removeBoilerplate(
+          t(s, dir, "documents"), minDocs = 100, sep = " ")
+        .orderBy("doc_id"),
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS ls
+           FROM documents),
+         u AS (SELECT doc_id, ls[i] AS line, i AS ord
+           FROM t, unnest(generate_series(1, length(ls))) AS g(i)),
+         b AS (SELECT line FROM (
+                 SELECT line, count(DISTINCT doc_id) AS nd
+                 FROM u GROUP BY line) WHERE nd >= 100),
+         k AS (SELECT doc_id, line, ord FROM u
+               WHERE line NOT IN (SELECT line FROM b)),
+         r AS (SELECT doc_id,
+                 array_to_string(list(line ORDER BY ord), ' ') AS cleaned
+               FROM k GROUP BY doc_id)
+         SELECT d.doc_id, COALESCE(r.cleaned, '') AS cleaned
+         FROM documents d LEFT JOIN r ON d.doc_id = r.doc_id
+         ORDER BY d.doc_id"""),
+
+    // text normalization: accent-strip + casefold (dedup preprocessing);
+    // accents injected via translate so the normalization has real work
+    ContractQuery("q_normalize", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"),
+          native.strip_accents(
+            lower(translate(substring(col("text"), 1, 30), "ae", "\u00e4\u00e9")))
+            .as("normalized"))
+        .orderBy("doc_id"),
+      """SELECT doc_id,
+           strip_accents(lower(translate(substr(text, 1, 30), 'ae', '\u00e4\u00e9')))
+             AS normalized
+         FROM documents ORDER BY doc_id"""),
+
+    // text analysis: heuristic scores + fingerprint; the oracle
+    // recomputes the full heuristic (and the rolling FNV fingerprint in
+    // HUGEINT) in DuckDB
+    ContractQuery("q_text_quality", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"), native.text_stats(col("text")).as("st"))
+        .select(col("doc_id"),
+          col("st.quality").as("quality"),
+          col("st.lang_pred").as("lang_pred"),
+          col("st.stopword_ratio").as("stopword_ratio"),
+          col("st.fingerprint").as("fingerprint"))
+        .orderBy("doc_id"),
+      // the full TextStats heuristic recomputed in SQL: token/char class
+      // counts via regex twins of the kernel's char classes, the quality
+      // formula in the same operation order, the first-max-wins language
+      // argmax as an ordered CASE, and the rolling FNV-1a fingerprint in
+      // HUGEINT mod-2^64 arithmetic mapped back to signed BIGINT
+      (qualityCtes +
+      """,
+         fp AS (
+           SELECT doc_id,
+             list_reduce(
+               list_prepend(CAST(0 AS HUGEINT),
+                 list_transform(tk, t ->
+                   list_reduce(
+                     list_prepend(CAST('14695981039346656037' AS HUGEINT),
+                       list_transform(generate_series(1, length(t)),
+                         i -> CAST(ord(substr(t, i, 1)) AS HUGEINT))),
+                     (h, b) -> (xor(h, b) * CAST('1099511628211' AS HUGEINT))
+                       % CAST('18446744073709551616' AS HUGEINT)))),
+               (acc, f) -> (acc * 1000003 + f)
+                 % CAST('18446744073709551616' AS HUGEINT)) AS ufp
+           FROM toks)
+         SELECT q.doc_id, q.quality, q.lang_pred, q.stopword_ratio,
+           CAST(CASE WHEN fp.ufp >= CAST('9223372036854775808' AS HUGEINT)
+             THEN fp.ufp - CAST('18446744073709551616' AS HUGEINT)
+             ELSE fp.ufp END AS BIGINT) AS fingerprint
+         FROM q JOIN fp ON q.doc_id = fp.doc_id
+         ORDER BY q.doc_id""")),
+
+    // PII/noise redaction (emails → URLs → digit runs, in that order);
+    // patterns injected per-row so the scrubbing has real work
+    ContractQuery("q_redact", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"),
+          graft.functions.Text.redact(concat(
+            substring(col("text"), 1, 40),
+            lit(" contact bob"), col("doc_id").cast(StringType),
+            lit("@mail-example.com see https://ex.org/d/"),
+            col("doc_id").cast(StringType),
+            lit(" ref 4049100"), col("doc_id").cast(StringType)))
+            .as("redacted"))
+        .orderBy("doc_id"),
+      """SELECT doc_id,
+           regexp_replace(
+             regexp_replace(
+               regexp_replace(
+                 substr(text, 1, 40) || ' contact bob' || CAST(doc_id AS VARCHAR)
+                   || '@mail-example.com see https://ex.org/d/'
+                   || CAST(doc_id AS VARCHAR)
+                   || ' ref 4049100' || CAST(doc_id AS VARCHAR),
+                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+               'https?://[^ \t\n]+', '<URL>', 'g'),
+             '[0-9]{6,}', '<NUM>', 'g') AS redacted
+         FROM documents ORDER BY doc_id"""),
+
+    // corpus quality filter funnel: per-source doc counts before/after the
+    // standard token-count / punctuation / word-repetition thresholds
+    ContractQuery("q_quality_filter", (s, dir) => {
+      val st = native.text_stats(col("text"))
+      val keep = st.getField("n_tokens").between(QfMinTokens, QfMaxTokens) &&
+        st.getField("punct_ratio") < QfMaxPunct &&
+        graft.functions.Text.wordRepetitionRatio(col("text")) < QfMaxRep
+      t(s, dir, "documents")
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(when(keep, 1L).otherwise(0L)).as("n_kept"))
+        .orderBy("source")
+    },
+      s"""WITH scored AS (
+           SELECT source,
+             $qualitySignalsSql
+           FROM documents)
+         SELECT source, count(*) AS n_docs,
+           CAST(sum(CASE WHEN n_tokens BETWEEN $QfMinTokens AND $QfMaxTokens
+                          AND punct_ratio < $QfMaxPunct AND rep < $QfMaxRep
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
+         FROM scored GROUP BY source ORDER BY source"""),
+
+    // fill-in-the-middle (PSM order) on a deterministic half of the
+    // corpus: hash-chosen token cut points, prefix/suffix/middle
+    // re-emitted with sentinels — the code-model pretraining transform;
+    // the twin replays cuts and reassembly with list slices
+    ContractQuery("q_fim", (s, dir) =>
+      graft.functions.Text.fimTransform(t(s, dir, "documents"))
+        .orderBy("doc_id"),
+      // FIM twin (shared by the DataFrame path and the §2.6 front door)
+      fimTwinSql),
+
+    // the SAME FIM transform through the §2.6 SQL front door: hash coin
+    // + cut points + slice reassembly re-stated in Spark SQL, converging
+    // on q_fim's oracle
+    ContractQuery("q_sql_fim", (s, dir) => {
+      val ctx = Context.forSfDir(s, dir)
+      ctx.sql(s"""
+        WITH tk AS (SELECT doc_id, text, split(text, ' ') AS toks
+            FROM documents),
+        c AS (
+          SELECT doc_id, text, toks, size(toks) AS L,
+            (${hash32SparkSql("doc_id * 17 + 1")})
+              % (size(toks) + 1) AS h1,
+            (${hash32SparkSql("doc_id * 17 + 2")})
+              % (size(toks) + 1) AS h2,
+            (${hash32SparkSql("doc_id * 17")}) % 2 = 0 AS applied
+          FROM tk),
+        s AS (
+          SELECT doc_id, text, toks, L, applied,
+            CAST(least(h1, h2) AS INT) AS c1,
+            CAST(greatest(h1, h2) AS INT) AS c2
+          FROM c)
+        SELECT doc_id, applied AS fim_applied,
+          CASE WHEN applied THEN
+            concat('<PRE> ', array_join(slice(toks, 1, c1), ' '),
+              ' <SUF> ', array_join(slice(toks, c2 + 1, L - c2), ' '),
+              ' <MID> ', array_join(slice(toks, c1 + 1, c2 - c1), ' '))
+          ELSE text END AS transformed
+        FROM s ORDER BY doc_id""")
+    },
+      fimTwinSql),
+
+    // T5-style span corruption: deterministic hash-selected token masks,
+    // contiguous runs collapsed to numbered sentinels, target = the
+    // removed spans — the denoising-objective data prep. The twin
+    // replays the Knuth hash, the run islands (pos − row_number) and
+    // the ordered string reassembly, so input AND target hash-match
+    ContractQuery("q_span_corrupt", (s, dir) =>
+      graft.functions.Text.spanCorrupt(
+          t(s, dir, "documents"), maskEveryK = 5)
+        .orderBy("doc_id"),
+      // span-corruption twin (shared likewise)
+      spanCorruptTwinSql),
+
+    // the SAME span corruption through the §2.6 SQL front door: Knuth
+    // mask, run islands, dense-rank sentinels and the ordered
+    // array_sort/array_join reassembly re-stated in Spark SQL — a second
+    // independent implementation converging on q_span_corrupt's oracle
+    ContractQuery("q_sql_span_corrupt", (s, dir) => {
+      val ctx = Context.forSfDir(s, dir)
+      ctx.sql(s"""
+        WITH tok AS (
+          SELECT doc_id, t.pos, t.tok
+          FROM documents
+          LATERAL VIEW posexplode(split(text, ' ')) t AS pos, tok),
+        f AS (
+          SELECT doc_id, pos, tok,
+            (${hash32SparkSql("doc_id * 131 + pos")}) % 5 = 0 AS masked
+          FROM tok),
+        m AS (
+          SELECT doc_id, pos, tok,
+            pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
+              AS island
+          FROM f WHERE masked),
+        si AS (
+          SELECT doc_id, pos, tok, island,
+            dense_rank() OVER (PARTITION BY doc_id ORDER BY island) - 1
+              AS sid
+          FROM m),
+        st AS (
+          SELECT doc_id, min(pos) AS pos, 1 AS prio,
+            concat('<extra_id_', sid, '>') AS part
+          FROM si GROUP BY doc_id, island, sid),
+        up AS (SELECT doc_id, pos, 2 AS prio, tok AS part
+          FROM f WHERE NOT masked),
+        mp AS (SELECT doc_id, pos, 2 AS prio, tok AS part FROM si),
+        mt AS (
+          SELECT doc_id,
+            array_join(transform(
+              array_sort(collect_list(struct(pos, prio, part))),
+              x -> x.part), ' ') AS masked_text
+          FROM (SELECT * FROM up UNION ALL SELECT * FROM st)
+          GROUP BY doc_id),
+        tt AS (
+          SELECT doc_id,
+            array_join(transform(
+              array_sort(collect_list(struct(pos, prio, part))),
+              x -> x.part), ' ') AS target_text
+          FROM (SELECT * FROM mp UNION ALL SELECT * FROM st)
+          GROUP BY doc_id),
+        cn AS (
+          SELECT doc_id,
+            sum(CASE WHEN masked THEN 1L ELSE 0L END) AS n_masked
+          FROM f GROUP BY doc_id),
+        ns AS (
+          SELECT doc_id, count(DISTINCT island) AS n_spans
+          FROM m GROUP BY doc_id)
+        SELECT d.doc_id,
+          coalesce(mt.masked_text, '') AS masked_text,
+          coalesce(tt.target_text, '') AS target_text,
+          coalesce(cn.n_masked, 0L) AS n_masked,
+          coalesce(ns.n_spans, 0L) AS n_spans
+        FROM documents d
+          LEFT JOIN mt ON mt.doc_id = d.doc_id
+          LEFT JOIN tt ON tt.doc_id = d.doc_id
+          LEFT JOIN cn ON cn.doc_id = d.doc_id
+          LEFT JOIN ns ON ns.doc_id = d.doc_id
+        ORDER BY d.doc_id""")
+    },
+      spanCorruptTwinSql),
+
+    // C4-style banned-term screen: per doc the banned-token count, a
+    // flagged bit and the first banned token in document order — pure
+    // codegen'd higher-order functions, parquet-scan speed (the "drop
+    // pages containing a blocklist word" pass every web corpus runs)
+    ContractQuery("q_blocklist", (s, dir) =>
+      graft.functions.Text.blocklistStats(
+          t(s, dir, "documents"), blocklistTerms)
+        .orderBy("doc_id"),
+      // blocklist twin: list_filter preserves token order on both engines,
+      // so the hit count AND the first-hit audit column replay exactly
+      s"""WITH h AS (
+           SELECT doc_id,
+             list_filter(string_split(text, ' '),
+               t -> t IN ($blocklistTermsSql)) AS hits
+           FROM documents)
+         SELECT doc_id,
+           CAST(len(hits) AS BIGINT) AS n_banned,
+           len(hits) > 0 AS flagged,
+           CASE WHEN len(hits) > 0 THEN hits[1] END AS first_banned
+         FROM h ORDER BY doc_id"""),
+
+    // curation decision LOG: every doc gets the FIRST failing rule as
+    // a reason code (too_short → too_long → high_punct → repetitive →
+    // blocklisted → keep), aggregated per source — the auditable
+    // drop-accounting table a governed corpus ships with. One narrow
+    // pass over the corpus (all codegen'd kernels) + one hash agg
+    ContractQuery("q_curation_report", (s, dir) => {
+      val st = native.text_stats(col("text"))
+      val rep = graft.functions.Text.wordRepetitionRatio(col("text"))
+      val blocked = arrays_overlap(split(col("text"), " "),
+        lit(blocklistTerms.toArray))
+      val reason = when(st.getField("n_tokens") < QfMinTokens, "too_short")
+        .when(st.getField("n_tokens") > QfMaxTokens, "too_long")
+        .when(st.getField("punct_ratio") >= QfMaxPunct, "high_punct")
+        .when(rep >= QfMaxRep, "repetitive")
+        .when(blocked, "blocklisted")
+        .otherwise("keep")
+      t(s, dir, "documents")
+        .select(col("source"), reason.as("reason"))
+        .groupBy("source", "reason").agg(count(lit(1)).as("n_docs"))
+        .orderBy("source", "reason")
+    },
+      // curation-log twin: the q_quality_filter signal replays (token
+      // count, punct ratio, repetition) plus the blocklist probe, folded
+      // through the SAME first-failing-rule CASE order
+      s"""WITH scored AS (
+           SELECT doc_id, source,
+             $qualitySignalsSql,
+             len(list_filter(string_split(text, ' '),
+               t -> t IN ($blocklistTermsSql))) > 0 AS blocked
+           FROM documents),
+         r AS (
+           SELECT source,
+             CASE WHEN n_tokens < $QfMinTokens THEN 'too_short'
+                  WHEN n_tokens > $QfMaxTokens THEN 'too_long'
+                  WHEN punct_ratio >= $QfMaxPunct THEN 'high_punct'
+                  WHEN rep >= $QfMaxRep THEN 'repetitive'
+                  WHEN blocked THEN 'blocklisted'
+                  ELSE 'keep' END AS reason
+           FROM scored)
+         SELECT source, reason, CAST(count(*) AS BIGINT) AS n_docs
+         FROM r GROUP BY 1, 2 ORDER BY 1, 2"""),
+
+    // deterministic weighted per-domain sampling (domain reweighting:
+    // src0 upsampled to 60%, src1 to 30%, everything else 10%)
+    ContractQuery("q_mix_weighted", (s, dir) =>
+      graft.functions.Profile.weightedSample(
+          t(s, dir, "documents"), "source", "doc_id",
+          Map("src0" -> 60, "src1" -> 30), defaultPct = 10)
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_kept"), min("doc_id").as("min_id"))
+        .orderBy("source"),
+      """WITH h AS (
+           SELECT doc_id, source,
+             (((doc_id % 4294967296) % 65536) * 2654435761
+              + ((((doc_id % 4294967296) // 65536) * 2654435761) % 65536)
+                * 65536)
+             % 4294967296 % 100 AS bucket
+           FROM documents)
+         SELECT source, CAST(count(*) AS BIGINT) AS n_kept,
+           min(doc_id) AS min_id
+         FROM h
+         WHERE bucket < (CASE WHEN source = 'src0' THEN 60
+                              WHEN source = 'src1' THEN 30
+                              ELSE 10 END)
+         GROUP BY source ORDER BY source"""),
+
+    // deterministic per-stratum quota sample (data mixing: exact
+    // per-domain counts, hash-ordered so cross-engine reproducible)
+    ContractQuery("q_mix_quota", (s, dir) =>
+      graft.functions.Profile.quotaSample(
+          t(s, dir, "documents"), "source", "doc_id", quota = 10)
+        .select("doc_id", "source")
+        .orderBy("doc_id"),
+      """WITH h AS (
+           SELECT doc_id, source,
+             (((doc_id % 4294967296) % 65536) * 2654435761
+              + ((((doc_id % 4294967296) // 65536) * 2654435761) % 65536)
+                * 65536)
+             % 4294967296 AS hh
+           FROM documents),
+         r AS (
+           SELECT doc_id, source,
+             row_number() OVER (PARTITION BY source ORDER BY hh, doc_id)
+               AS rk
+           FROM h)
+         SELECT doc_id, source FROM r WHERE rk <= 10 ORDER BY doc_id"""),
+
+    // deterministic training-shard assignment (the writer's hash, per-row
+    // verifiable cross-engine; writeTrainingShards itself is SinksSpec'd)
+    ContractQuery("q_shards", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"),
+          graft.functions.Profile.shardOf(col("doc_id"), 8).as("shard"))
+        .groupBy("shard")
+        .agg(count(lit(1)).as("n_docs"),
+          min("doc_id").as("min_id"), max("doc_id").as("max_id"))
+        .orderBy("shard"),
+      """WITH h AS (
+           SELECT doc_id,
+             (((doc_id % 4294967296) % 65536) * 2654435761
+              + ((((doc_id % 4294967296) // 65536) * 2654435761) % 65536)
+                * 65536)
+             % 4294967296 % 8 AS shard
+           FROM documents)
+         SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
+           min(doc_id) AS min_id, max(doc_id) AS max_id
+         FROM h GROUP BY shard ORDER BY shard"""),
+
+    // rendezvous (highest-random-weight) sharding: argmax_j of
+    // hash32(hash32(key)+j) — resizing moves ONLY keys whose winning
+    // shard vanished (~1/n of data), vs ~everything under the modulo
+    // shard; the inner hash decorrelates keys so (k,j) never aliases
+    // (k+1,j-31); the twin replays the argmax as a row_number over the
+    // shard series
+    ContractQuery("q_rendezvous", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"),
+          graft.functions.Profile.rendezvousShard(col("doc_id"), 8)
+            .as("shard"))
+        .groupBy("shard")
+        .agg(count(lit(1)).as("n_docs"),
+          min("doc_id").as("min_id"), max("doc_id").as("max_id"))
+        .orderBy("shard"),
+      s"""WITH scored AS (
+           SELECT doc_id, j AS shard,
+             ${hash32Sql(s"(${hash32Sql("doc_id")}) + j")} AS h
+           FROM documents, unnest(generate_series(0, 7)) AS t(j)),
+         pick AS (SELECT doc_id, shard FROM (
+             SELECT doc_id, shard, row_number() OVER (PARTITION BY doc_id
+               ORDER BY h DESC, shard ASC) AS rn
+             FROM scored) WHERE rn = 1)
+         SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
+           min(doc_id) AS min_id, max(doc_id) AS max_id
+         FROM pick GROUP BY shard ORDER BY shard"""),
+
+    // deterministic sequence packing: concat-and-chunk the corpus into
+    // fixed token-budget training sequences in decorrelated hash order,
+    // via a distributed prefix sum (no unpartitioned window anywhere) —
+    // the step between a deduped corpus and the training dataloader
+    ContractQuery("q_pack", (s, dir) =>
+      graft.functions.Profile.packSequences(
+          t(s, dir, "documents").select(col("doc_id"),
+            native.text_stats(col("text")).getField("n_tokens").as("n_tokens")),
+          "doc_id", "n_tokens", budget = 2048L)
+        .orderBy("doc_id"),
+      // the twin replays the pack sequentially: same two-limb hash order,
+      // running token sum (HUGEINT window sum cast back), same div/mod
+      """WITH t AS (
+           SELECT doc_id,
+             CAST(length(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
+             (((doc_id % 4294967296) % 65536) * 2654435761
+              + ((((doc_id % 4294967296) // 65536) * 2654435761) % 65536)
+                * 65536)
+             % 4294967296 AS ord
+           FROM documents),
+         c AS (
+           SELECT doc_id, n_tokens,
+             CAST(COALESCE(sum(n_tokens) OVER (ORDER BY ord, doc_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+               AS BIGINT) AS s
+           FROM t)
+         SELECT doc_id, n_tokens,
+           s // 2048 AS seq_id,
+           s % 2048 AS seq_offset
+         FROM c ORDER BY doc_id"""),
+
+    // Gopher-style repetition quality filters (Rae et al. 2021): duplicate
+    // -word fraction, most-frequent-bigram coverage, duplicate-5-gram
+    // fraction — the signals that catch looping generations and scraped
+    // boilerplate. Narrow per-row array computations, no shuffle.
+    ContractQuery("q_repetition", (s, dir) =>
+      graft.functions.Text.repetitionStats(t(s, dir, "documents"))
+        .orderBy("doc_id"),
+      // Gopher repetition signals recomputed from scratch: per-doc word and
+      // n-gram multisets via unnest, the top bigram by (count DESC, gram
+      // ASC) — the same deterministic tie-break as the engine's struct sort
+      """WITH tk AS (SELECT doc_id, text,
+             list_filter(string_split(text, ' '), x -> x <> '') AS toks
+           FROM documents),
+         base AS (SELECT doc_id, text, toks, len(toks) AS n FROM tk),
+         g2 AS (SELECT doc_id, toks[i] || ' ' || toks[i + 1] AS g
+                FROM base, unnest(generate_series(1, n - 1)) AS t(i)
+                WHERE n >= 2),
+         t2 AS (SELECT doc_id, g, c FROM (
+                  SELECT doc_id, g, count(*) AS c,
+                    row_number() OVER (PARTITION BY doc_id
+                      ORDER BY count(*) DESC, g ASC) AS rn
+                  FROM g2 GROUP BY doc_id, g) WHERE rn = 1),
+         g5 AS (SELECT doc_id,
+                  toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' '
+                    || toks[i+3] || ' ' || toks[i+4] AS g
+                FROM base, unnest(generate_series(1, n - 4)) AS t(i)
+                WHERE n >= 5),
+         d5 AS (SELECT doc_id, count(*) AS total5,
+                  count(DISTINCT g) AS dist5
+                FROM g5 GROUP BY doc_id)
+         SELECT b.doc_id,
+           CAST(b.n AS BIGINT) AS n_words,
+           round(CASE WHEN b.n = 0 THEN 0.0
+                 ELSE 1.0 - CAST(len(list_distinct(b.toks)) AS DOUBLE)
+                      / CAST(b.n AS DOUBLE) END, 6) AS dup_word_frac,
+           coalesce(t2.g, '') AS top_bigram,
+           CAST(coalesce(t2.c, 0) AS BIGINT) AS top_bigram_n,
+           round(CASE WHEN b.n < 2 OR length(b.text) = 0 THEN 0.0
+                 ELSE CAST(t2.c * length(t2.g) AS DOUBLE)
+                      / CAST(length(b.text) AS DOUBLE) END, 6)
+             AS top_bigram_char_frac,
+           round(CASE WHEN coalesce(d5.total5, 0) = 0 THEN 0.0
+                 ELSE 1.0 - CAST(d5.dist5 AS DOUBLE)
+                      / CAST(d5.total5 AS DOUBLE) END, 6) AS dup_5gram_frac
+         FROM base b LEFT JOIN t2 USING (doc_id) LEFT JOIN d5 USING (doc_id)
+         ORDER BY doc_id"""),
+
+    // URL canonicalization + host extraction (crawl-dedup preprocessing):
+    // mixed-case scheme/host, a default port, utm_*/gclid tracking params
+    // and a fragment are injected per row so every normalization rule has
+    // real work to do
+    ContractQuery("q_url_canon", (s, dir) => {
+      val url = concat(
+        lit("HTTPS://WWW.Example"), (col("doc_id") % 7).cast(StringType),
+        lit(".COM:443/Docs/"), col("doc_id").cast(StringType),
+        lit("?utm_source=feed&utm_campaign=c"), col("doc_id").cast(StringType),
+        lit("&ref="), col("doc_id").cast(StringType),
+        lit("&gclid=g1#Sec"), col("doc_id").cast(StringType))
+      t(s, dir, "documents")
+        .select(col("doc_id"),
+          graft.functions.Text.canonicalizeUrl(url).as("url_canon"),
+          graft.functions.Text.urlHost(url).as("host"))
+        .orderBy("doc_id")
+    },
+      // the same regexp chain (Java/RE2-common subset) — DuckDB replaces
+      // only the first match by default, so every replace carries 'g'
+      """WITH u AS (SELECT doc_id,
+             'HTTPS://WWW.Example' || CAST(doc_id % 7 AS VARCHAR)
+               || '.COM:443/Docs/' || CAST(doc_id AS VARCHAR)
+               || '?utm_source=feed&utm_campaign=c' || CAST(doc_id AS VARCHAR)
+               || '&ref=' || CAST(doc_id AS VARCHAR)
+               || '&gclid=g1#Sec' || CAST(doc_id AS VARCHAR) AS url
+           FROM documents),
+         parts AS (SELECT doc_id,
+             lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))
+               AS scheme,
+             regexp_replace(lower(regexp_extract(url,
+                 '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)),
+               ':(80|443)$', '') AS host,
+             regexp_extract(url,
+               '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^#]*)', 1) AS rest
+           FROM u),
+         cleaned AS (SELECT doc_id, scheme, host,
+             regexp_replace(
+               regexp_replace(
+                 regexp_replace(
+                   regexp_replace(rest,
+                     '&(utm_[A-Za-z0-9_]*|gclid|fbclid)=[^&]*', '', 'g'),
+                   '\?(utm_[A-Za-z0-9_]*|gclid|fbclid)=[^&]*&', '?', 'g'),
+                 '\?(utm_[A-Za-z0-9_]*|gclid|fbclid)=[^&]*$', '', 'g'),
+               '\?$', '', 'g') AS pathq
+           FROM parts)
+         SELECT doc_id,
+           scheme || '://' || host ||
+             (CASE WHEN pathq = '/' THEN '' ELSE pathq END) AS url_canon,
+           host
+         FROM cleaned ORDER BY doc_id"""),
+
+    // per-site quota (crawl curation): canonical host as the grouping key,
+    // keep the 20 longest docs per host — rank inside a partitioned
+    // window, never a global sort; at 100 TB hosts shard naturally and
+    // the per-host cap bounds every partition's output
+    ContractQuery("q_host_quota", (s, dir) => {
+      val url = concat(lit("https://Host"), (col("doc_id") % 5).cast(StringType),
+        lit(".Example.COM/page/"), col("doc_id").cast(StringType))
+      val docs = t(s, dir, "documents").select(col("doc_id"),
+        graft.functions.Text.urlHost(url).as("host"),
+        length(col("text")).cast(LongType).as("n_chars"))
+      val w = Window.partitionBy("host")
+        .orderBy(col("n_chars").desc, col("doc_id").asc)
+      docs.select(col("doc_id"), col("host"), col("n_chars"),
+          row_number().over(w).cast(LongType).as("host_rank"))
+        .filter(col("host_rank") <= 20)
+        .orderBy("host", "host_rank")
+    },
+      """WITH d AS (SELECT doc_id,
+             regexp_replace(lower(regexp_extract(
+                 'https://Host' || CAST(doc_id % 5 AS VARCHAR)
+                   || '.Example.COM/page/' || CAST(doc_id AS VARCHAR),
+                 '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)),
+               ':(80|443)$', '') AS host,
+             length(text) AS n_chars
+           FROM documents),
+         ranked AS (SELECT doc_id, host, n_chars,
+             CAST(row_number() OVER (PARTITION BY host
+               ORDER BY n_chars DESC, doc_id ASC) AS BIGINT) AS host_rank
+           FROM d)
+         SELECT doc_id, host, n_chars, host_rank FROM ranked
+         WHERE host_rank <= 20 ORDER BY host, host_rank"""),
+
+    // BM25 keyword retrieval (Robertson-Zaragoza k1=1.2 b=0.75): query =
+    // the 2 globally most frequent terms, integer tf/df/dl aggregates,
+    // narrow scoring, sort+limit top-20 (TakeOrderedAndProject)
+    ContractQuery("q_bm25", (s, dir) =>
+      graft.functions.Text.bm25(t(s, dir, "documents"))
+        .orderBy(col("bm25").desc, col("doc_id").asc),
+      // BM25 twin — every double expression shaped EXACTLY like the engine's
+      // (idf * (tf*2.2)) / (tf + 1.2*(0.25 + 0.75*(dl/avgdl))); each doc
+      // sums at most 2 addends, so the sum is order-independent
+      """WITH toks AS (SELECT doc_id,
+             unnest(list_filter(string_split(text, ' '), x -> x <> ''))
+               AS term
+           FROM documents),
+         tf AS (SELECT doc_id, term, count(*) AS tf FROM toks
+                GROUP BY doc_id, term),
+         dl AS (SELECT doc_id,
+             CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+               AS BIGINT) AS dl
+           FROM documents),
+         stats AS (SELECT count(*) AS n_docs, sum(dl) AS sum_dl FROM dl),
+         dfc AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+         qt AS (SELECT term FROM (
+             SELECT term, sum(tf) AS total FROM tf GROUP BY term
+             ORDER BY total DESC, term ASC LIMIT 2)),
+         contrib AS (
+           SELECT tf.doc_id,
+             ln(1.0 + (CAST(s.n_docs AS DOUBLE) - d.df + 0.5)
+                      / (d.df + 0.5))
+               * (tf.tf * 2.2)
+               / (tf.tf + 1.2 * (0.25 + 0.75 *
+                   (CAST(dl.dl AS DOUBLE)
+                    / (CAST(s.sum_dl AS DOUBLE) / s.n_docs)))) AS c
+           FROM tf JOIN qt USING (term) JOIN dfc d USING (term)
+             JOIN dl USING (doc_id) CROSS JOIN stats s)
+         SELECT doc_id, round(sum(c), 6) AS bm25
+         FROM contrib GROUP BY doc_id
+         ORDER BY bm25 DESC, doc_id ASC LIMIT 20"""),
+
+    // per-doc keyword extraction: log-free TF-IDF ordering (tf desc,
+    // corpus df asc, term asc) — integer ranks, engine-independent
+    ContractQuery("q_keywords", (s, dir) =>
+      graft.functions.Text.topTerms(t(s, dir, "documents"), k = 3)
+        .orderBy("doc_id", "rnk"),
+      """WITH toks AS (SELECT doc_id,
+             unnest(list_filter(regexp_split_to_array(text, '[ \n\t\r]+'),
+               x -> x <> '')) AS term
+           FROM documents),
+         tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+         dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+         r AS (SELECT doc_id, term, tf, df,
+             row_number() OVER (PARTITION BY doc_id
+               ORDER BY tf DESC, df ASC, term ASC) AS rnk
+           FROM tf JOIN dfq USING (term))
+         SELECT doc_id, term, CAST(tf AS BIGINT) AS tf,
+           CAST(df AS BIGINT) AS df, CAST(rnk AS BIGINT) AS rnk
+         FROM r WHERE rnk <= 3 ORDER BY doc_id, rnk"""),
+
+    // language-ID confusion matrix: heuristic prediction vs the labeled
+    // lang, exact counts per (actual, predicted) cell — the eval that
+    // says where the n-gram heuristic misroutes documents
+    ContractQuery("q_lang_confusion", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("lang"),
+          native.text_stats(col("text")).getField("lang_pred")
+            .as("lang_pred"))
+        .groupBy("lang", "lang_pred").agg(count(lit(1)).as("n"))
+        .orderBy("lang", "lang_pred"),
+      // the q_text_quality heuristic CTEs + a 2-key count
+      (qualityCtes +
+      """
+         SELECT d.lang, q.lang_pred, CAST(count(*) AS BIGINT) AS n
+         FROM documents d JOIN q ON q.doc_id = d.doc_id
+         GROUP BY 1, 2 ORDER BY 1, 2""")),
+
+    // feature hashing (the Vowpal/Weinberger hashing trick): categorical
+    // (name=value) features land in a fixed 32-bucket space via the
+    // width-safe two-limb hash over an integer feature code, sign from
+    // the hash's low bit — fixed-dimension model input with no vocabulary
+    // pass. Exact ints end-to-end; twin replays the same hash.
+    ContractQuery("q_feature_hash", (s, dir) => {
+      val d = t(s, dir, "documents")
+      // integer feature codes: lang and source enumerations are encoded
+      // from their trailing digits/order so the hash input is a long on
+      // both engines (no string hashing needed)
+      val feats = d.select(col("doc_id"),
+          (lit(1000L) + when(col("lang") === "en", 0L)
+            .when(col("lang") === "de", 1L).when(col("lang") === "es", 2L)
+            .when(col("lang") === "fr", 3L).otherwise(4L)).as("code"))
+        .union(d.select(col("doc_id"),
+          (lit(2000L) +
+            regexp_extract(col("source"), "([0-9]+)$", 1).cast(LongType))
+            .as("code")))
+        .union(d.select(col("doc_id"),
+          (lit(3000L) + expr("n_chars div 100L")).as("code")))
+      val h = graft.functions.Profile.hash32(col("code"))
+      feats.select(col("doc_id"), col("code"),
+          pmod(h, lit(32L)).as("bucket"),
+          (lit(1L) - lit(2L) * pmod(h, lit(2L))).as("sign"))
+        .orderBy("doc_id", "code")
+    },
+      // the split twin's two-limb hash over integer feature codes
+      (s"""WITH f AS (
+           SELECT doc_id, 1000 + (CASE lang WHEN 'en' THEN 0
+             WHEN 'de' THEN 1 WHEN 'es' THEN 2 WHEN 'fr' THEN 3
+             ELSE 4 END) AS code
+           FROM documents
+           UNION ALL
+           SELECT doc_id,
+             2000 + CAST(regexp_extract(source, '([0-9]+)$$', 1) AS BIGINT)
+           FROM documents
+           UNION ALL
+           SELECT doc_id, 3000 + n_chars // 100 FROM documents)
+         SELECT doc_id, CAST(code AS BIGINT) AS code,
+           CAST(${hash32Sql("code")} % 32 AS BIGINT) AS bucket,
+           CAST(1 - 2 * (${hash32Sql("code")} % 2) AS BIGINT) AS sign
+         FROM f ORDER BY doc_id, code""")),
+
+    // split-balance audit: does the hash split preserve each stratum's
+    // share within +-5 percentage points of the global train rate? The
+    // gate is cross-multiplied longs (|train_s*n - train*n_s|*100 <=
+    // 5*n*n_s), so no engine's float rounding decides a boundary.
+    ContractQuery("q_split_balance", (s, dir) => {
+      val split = graft.functions.Profile.hashSplit(
+        t(s, dir, "documents"), "doc_id", trainPct = 80)
+      val per = split.groupBy("lang")
+        .agg(count(lit(1)).as("n_s"),
+          sum(when(col("split") === "train", 1L).otherwise(0L))
+            .as("train_s"))
+      val tot = per.agg(sum(col("n_s")).as("n"),
+        sum(col("train_s")).as("train"))
+      per.crossJoin(broadcast(tot))
+        .select(col("lang"), col("n_s"), col("train_s"),
+          col("n").cast(LongType).as("n"),
+          col("train").cast(LongType).as("train"),
+          (abs(col("train_s") * col("n") - col("train") * col("n_s")) *
+            lit(100L) <= lit(5L) * col("n") * col("n_s")).as("balanced"))
+        .orderBy("lang")
+    },
+      // cross-multiplied balance gate, same hash as the split twin
+      (s"""WITH s AS (
+           SELECT lang,
+             CASE WHEN ${hash32Sql("doc_id")} % 100 < 80
+               THEN 'train' ELSE 'eval' END AS split
+           FROM documents),
+         per AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_s,
+             CAST(sum(CASE WHEN split = 'train' THEN 1 ELSE 0 END)
+               AS BIGINT) AS train_s
+           FROM s GROUP BY lang),
+         tot AS (SELECT CAST(sum(n_s) AS BIGINT) AS n,
+             CAST(sum(train_s) AS BIGINT) AS train FROM per)
+         SELECT per.lang, per.n_s, per.train_s, tot.n, tot.train,
+           abs(per.train_s * tot.n - tot.train * per.n_s) * 100
+             <= 5 * tot.n * per.n_s AS balanced
+         FROM per, tot ORDER BY per.lang""")),
+
+    // token-budget data selection: best-scored documents until the
+    // running token total crosses the budget — the distributed prefix
+    // sum of q_pack walked in (n_chars desc, doc_id) quality order;
+    // every row reports its running total and keep/drop verdict
+    ContractQuery("q_budget_select", (s, dir) => {
+      val d = t(s, dir, "documents")
+        .withColumn("n_tokens", graft.functions.Text.tokenCount(col("text")))
+      graft.functions.Profile.budgetSelect(d, "doc_id", "n_tokens",
+          "n_chars", budget = 6000L)
+        .orderBy("doc_id")
+    },
+      // one global cumsum window in the same total order; kept gate on longs
+      """WITH d AS (SELECT doc_id, CAST(n_chars AS BIGINT) AS score,
+             CAST(length(regexp_extract_all(text, '\S+')) AS BIGINT)
+               AS n_tokens
+           FROM documents)
+         SELECT doc_id, score, n_tokens,
+           CAST(sum(n_tokens) OVER (ORDER BY score DESC, doc_id
+             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS running_tokens,
+           CAST(sum(n_tokens) OVER (ORDER BY score DESC, doc_id
+             ROWS UNBOUNDED PRECEDING) AS BIGINT) <= 6000 AS kept
+         FROM d ORDER BY doc_id"""),
+
+    // vocabulary coverage curve: share of all token OCCURRENCES covered
+    // by the top-k most frequent types, for k in {10, 50, 100} — the
+    // tokenizer-design metric behind vocab-size choices. Only ranks
+    // ≤ max(k)=100 are ever consumed, so the type table is top-k'd with
+    // orderBy+limit (plans as TakeOrderedAndProject: per-partition top-k,
+    // merged — NO global sort, no single-partition window even when the
+    // distinct-type table of a web corpus is billions of rows); ranks are
+    // then assigned by a 100×100 broadcast self-join count instead of an
+    // unpartitioned row_number window. Integer sums, one quotient per row.
+    ContractQuery("q_vocab_coverage", (s, dir) => {
+      import s.implicits._
+      val counts = t(s, dir, "documents")
+        .select(explode(split(col("text"), "\\s+")).as("tok"))
+        .filter(col("tok") =!= "")
+        .groupBy("tok").agg(count(lit(1)).as("n"))
+      val top = counts.orderBy(col("n").desc, col("tok").asc).limit(100)
+      // rnk = 1 + number of types strictly before (freq desc, tok asc) —
+      // bounded 100×100 comparisons on the already-top-k'd table
+      val ranked = top.as("a").join(broadcast(top.as("b")),
+          col("b.n") > col("a.n") ||
+            (col("b.n") === col("a.n") && col("b.tok") < col("a.tok")),
+          "left")
+        .groupBy(col("a.tok").as("tok"), col("a.n").as("n"))
+        .agg((count(col("b.tok")) + 1).as("rnk"))
+      val total = counts.agg(sum(col("n")).as("total"))
+      val ks = Seq(10, 50, 100).toDF("k")
+      ks.crossJoin(broadcast(total))
+        .join(ranked, col("rnk") <= col("k"))
+        .groupBy(col("k").cast(LongType).as("k"))
+        .agg(max(col("total")).cast(LongType).as("total_tokens"),
+          sum(col("n")).as("covered"))
+        .select(col("k"), col("total_tokens"),
+          col("covered").cast(LongType).as("covered"),
+          (col("covered").cast(DoubleType) /
+            col("total_tokens").cast(DoubleType)).as("coverage"))
+        .orderBy("k")
+    },
+      """WITH toks AS (SELECT unnest(list_filter(
+             regexp_split_to_array(text, '[ \n\t\r]+'), x -> x <> ''))
+             AS tok
+           FROM documents),
+         c AS (SELECT tok, count(*) AS n FROM toks GROUP BY 1),
+         r AS (SELECT tok, n,
+             row_number() OVER (ORDER BY n DESC, tok) AS rnk
+           FROM c),
+         t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM c),
+         ks AS (SELECT * FROM (VALUES (10), (50), (100)) AS v(k))
+         SELECT CAST(ks.k AS BIGINT) AS k, t.total AS total_tokens,
+           CAST(sum(r.n) AS BIGINT) AS covered,
+           CAST(sum(r.n) AS DOUBLE) / CAST(t.total AS DOUBLE) AS coverage
+         FROM ks CROSS JOIN t JOIN r ON r.rnk <= ks.k
+         GROUP BY 1, 2 ORDER BY k"""),
+
+    // packing-efficiency report at context lengths {512, 2048}: padding
+    // waste of naive one-doc-per-sequence (pad each doc to ceil(n/L)·L)
+    // vs concat-and-chunk packing (ceil(total/L) sequences) — the design
+    // table that justifies sequence packing. Integer ceilings via `div`,
+    // one double quotient per emitted fraction
+    ContractQuery("q_packing_efficiency", (s, dir) => {
+      import s.implicits._
+      val d = t(s, dir, "documents")
+        .select(graft.functions.Text.tokenCount(col("text")).as("n_tok"))
+      val ls = Seq(512L, 2048L).toDF("context_len")
+      ls.crossJoin(d)
+        .groupBy("context_len")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_tok")).cast(LongType).as("total_tokens"),
+          sum(expr("(n_tok + context_len - 1) div context_len"))
+            .cast(LongType).as("naive_seqs"))
+        .withColumn("packed_seqs",
+          expr("(total_tokens + context_len - 1) div context_len")
+            .cast(LongType))
+        .select(col("context_len"), col("n_docs"), col("total_tokens"),
+          col("naive_seqs"),
+          ((col("naive_seqs") * col("context_len") - col("total_tokens"))
+            .cast(DoubleType) /
+            (col("naive_seqs") * col("context_len")).cast(DoubleType))
+            .as("naive_pad_frac"),
+          col("packed_seqs"),
+          ((col("packed_seqs") * col("context_len") - col("total_tokens"))
+            .cast(DoubleType) /
+            (col("packed_seqs") * col("context_len")).cast(DoubleType))
+            .as("packed_pad_frac"))
+        .orderBy("context_len")
+    },
+      // integer ceilings via //, fractions as single double quotients
+      """WITH d AS (SELECT CAST(length(regexp_extract_all(text, '\S+'))
+             AS BIGINT) AS n_tok FROM documents),
+         ls AS (SELECT CAST(l AS BIGINT) AS context_len
+           FROM (VALUES (512), (2048)) v(l)),
+         a AS (SELECT context_len, CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(n_tok) AS BIGINT) AS total_tokens,
+             CAST(sum((n_tok + context_len - 1) // context_len) AS BIGINT)
+               AS naive_seqs
+           FROM ls CROSS JOIN d GROUP BY 1),
+         b AS (SELECT *,
+             CAST((total_tokens + context_len - 1) // context_len
+               AS BIGINT) AS packed_seqs
+           FROM a)
+         SELECT context_len, n_docs, total_tokens, naive_seqs,
+           CAST(naive_seqs * context_len - total_tokens AS DOUBLE) /
+             CAST(naive_seqs * context_len AS DOUBLE) AS naive_pad_frac,
+           packed_seqs,
+           CAST(packed_seqs * context_len - total_tokens AS DOUBLE) /
+             CAST(packed_seqs * context_len AS DOUBLE) AS packed_pad_frac
+         FROM b ORDER BY context_len"""),
+
+    // truncation-loss report at context lengths {64, 128, 256} tokens:
+    // docs over the limit, tokens lost to truncation, loss share — the
+    // packing/context-length design input. All integers, one quotient.
+    ContractQuery("q_truncation_report", (s, dir) => {
+      import s.implicits._
+      val d = t(s, dir, "documents")
+        .select(graft.functions.Text.tokenCount(col("text")).as("n_tok"))
+      val ls = Seq(64, 128, 256).toDF("context_len")
+      ls.crossJoin(d)
+        .groupBy(col("context_len").cast(LongType).as("context_len"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(when(col("n_tok") > col("context_len"), 1L).otherwise(0L))
+            .as("n_truncated"),
+          sum(col("n_tok")).as("tokens_total"),
+          sum(greatest(col("n_tok") - col("context_len"), lit(0L)))
+            .as("tokens_lost"))
+        .select(col("context_len"), col("n_docs"), col("n_truncated"),
+          col("tokens_total").cast(LongType).as("tokens_total"),
+          col("tokens_lost").cast(LongType).as("tokens_lost"),
+          (col("tokens_lost").cast(DoubleType) /
+            col("tokens_total").cast(DoubleType)).as("loss_share"))
+        .orderBy("context_len")
+    },
+      """WITH d AS (SELECT CAST(length(regexp_extract_all(text, '\S+'))
+             AS BIGINT) AS n_tok
+           FROM documents),
+         ls AS (SELECT * FROM (VALUES (64), (128), (256)) AS v(l))
+         SELECT CAST(l AS BIGINT) AS context_len,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           CAST(sum(CASE WHEN n_tok > l THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_truncated,
+           CAST(sum(n_tok) AS BIGINT) AS tokens_total,
+           CAST(sum(greatest(n_tok - l, 0)) AS BIGINT) AS tokens_lost,
+           CAST(sum(greatest(n_tok - l, 0)) AS DOUBLE)
+             / CAST(sum(n_tok) AS DOUBLE) AS loss_share
+         FROM ls CROSS JOIN d GROUP BY 1 ORDER BY 1"""),
+
+    // Cohen's kappa between the language heuristic and the labels:
+    // chance-corrected agreement from exact confusion counts — po and pe
+    // numerators stay integers (pe = Σ row_marginal·col_marginal), the
+    // kappa quotient is the only float
+    ContractQuery("q_kappa", (s, dir) => {
+      val cm = t(s, dir, "documents")
+        .select(col("lang"),
+          native.text_stats(col("text")).getField("lang_pred").as("pred"))
+        .groupBy("lang", "pred").agg(count(lit(1)).as("cnt"))
+      val n = cm.agg(sum(col("cnt")).as("n"))
+      val agree = cm.filter(col("lang") === col("pred"))
+        .agg(coalesce(sum(col("cnt")), lit(0L)).as("agree"))
+      val rowM = cm.groupBy("lang").agg(sum(col("cnt")).as("row_n"))
+      val colM = cm.groupBy("pred").agg(sum(col("cnt")).as("col_n"))
+      val pe = rowM.join(colM, col("lang") === col("pred"))
+        .agg(coalesce(sum(col("row_n") * col("col_n")), lit(0L))
+          .as("pe_num"))
+      n.crossJoin(agree).crossJoin(pe)
+        .select(col("n").cast(LongType).as("n"),
+          col("agree").cast(LongType).as("agree"),
+          col("pe_num").cast(LongType).as("pe_num"))
+        .withColumn("kappa",
+          (col("agree").cast(DoubleType) * col("n").cast(DoubleType) -
+            col("pe_num").cast(DoubleType)) /
+            (col("n").cast(DoubleType) * col("n").cast(DoubleType) -
+              col("pe_num").cast(DoubleType)))
+    },
+      // confusion counts from the quality CTEs; kappa =
+      // (agree·n − pe_num) / (n² − pe_num) with integer numerators
+      (qualityCtes +
+      """,
+         cm AS (SELECT d.lang, q.lang_pred AS pred, count(*) AS cnt
+           FROM documents d JOIN q ON q.doc_id = d.doc_id GROUP BY 1, 2),
+         t AS (SELECT CAST(sum(cnt) AS BIGINT) AS n FROM cm),
+         ag AS (SELECT CAST(coalesce(sum(cnt), 0) AS BIGINT) AS agree
+           FROM cm WHERE lang = pred),
+         rm AS (SELECT lang, sum(cnt) AS row_n FROM cm GROUP BY 1),
+         colm AS (SELECT pred, sum(cnt) AS col_n FROM cm GROUP BY 1),
+         pe AS (SELECT CAST(coalesce(sum(rm.row_n * colm.col_n), 0)
+             AS BIGINT) AS pe_num
+           FROM rm JOIN colm ON rm.lang = colm.pred)
+         SELECT t.n, ag.agree, pe.pe_num,
+           (CAST(ag.agree AS DOUBLE) * CAST(t.n AS DOUBLE)
+             - CAST(pe.pe_num AS DOUBLE))
+           / (CAST(t.n AS DOUBLE) * CAST(t.n AS DOUBLE)
+             - CAST(pe.pe_num AS DOUBLE)) AS kappa
+         FROM t, ag, pe""")),
+
+    // one-row dataset card: corpus size, token totals, language count,
+    // exact-dup rate, mean length, short-doc share — the summary a data
+    // release ships; every number an exact aggregate, quotients last
+    ContractQuery("q_dataset_card", (s, dir) => {
+      val d = t(s, dir, "documents")
+        .withColumn("n_tok", graft.functions.Text.tokenCount(col("text")))
+      val dups = d.select(col("doc_id"), md5(col("text")).as("h"))
+        .groupBy("h").agg(count(lit(1)).as("c"))
+        .agg(coalesce(sum(col("c") - 1), lit(0L)).as("n_dups"))
+      d.agg(count(lit(1)).as("n_docs"),
+          sum(col("n_tok")).cast(LongType).as("n_tokens"),
+          countDistinct(col("lang")).as("n_langs"),
+          countDistinct(col("source")).as("n_sources"),
+          sum(col("n_chars")).cast(LongType).as("n_chars"),
+          sum(when(col("n_tok") < 20, 1L).otherwise(0L)).as("n_short"))
+        .crossJoin(dups)
+        .select(col("n_docs"), col("n_tokens"), col("n_langs"),
+          col("n_sources"), col("n_chars"), col("n_short"),
+          col("n_dups").cast(LongType).as("n_dups"),
+          (col("n_chars").cast(DoubleType) / col("n_docs").cast(DoubleType))
+            .as("mean_chars"),
+          (col("n_dups").cast(DoubleType) / col("n_docs").cast(DoubleType))
+            .as("dup_rate"))
+    },
+      """WITH d AS (SELECT *, CAST(length(regexp_extract_all(text, '\S+'))
+             AS BIGINT) AS n_tok
+           FROM documents),
+         du AS (SELECT CAST(coalesce(sum(c - 1), 0) AS BIGINT) AS n_dups
+           FROM (SELECT count(*) AS c FROM documents GROUP BY text)),
+         a AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+             CAST(sum(n_tok) AS BIGINT) AS n_tokens,
+             CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
+             CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
+             CAST(sum(n_chars) AS BIGINT) AS n_chars,
+             CAST(sum(CASE WHEN n_tok < 20 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_short
+           FROM d)
+         SELECT a.n_docs, a.n_tokens, a.n_langs, a.n_sources, a.n_chars,
+           a.n_short, du.n_dups,
+           CAST(a.n_chars AS DOUBLE) / CAST(a.n_docs AS DOUBLE)
+             AS mean_chars,
+           CAST(du.n_dups AS DOUBLE) / CAST(a.n_docs AS DOUBLE) AS dup_rate
+         FROM a, du"""),
+
+    // proximity search: 'table' within 5 positions of 'join' — the IR
+    // operator between term lookup and exact phrase; posting-list join
+    // keyed on doc, band residual
+    ContractQuery("q_proximity_search", (s, dir) =>
+      graft.functions.Text.proximitySearch(t(s, dir, "documents"),
+          "table", "join", window = 5)
+        .orderBy("doc_id", "pos_a", "pos_b"),
+      // the phrase twin's position convention (filtered token list)
+      """WITH toks AS (
+           SELECT doc_id,
+             list_filter(regexp_split_to_array(text, '[ \n\t\r]+'),
+               x -> x <> '') AS t
+           FROM documents),
+         p AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos, t[i] AS term
+           FROM toks, unnest(generate_series(1, len(t))) AS g(i)),
+         a AS (SELECT doc_id, pos AS pos_a FROM p WHERE term = 'table'),
+         b AS (SELECT doc_id, pos AS pos_b FROM p WHERE term = 'join')
+         SELECT a.doc_id, a.pos_a, b.pos_b
+         FROM a JOIN b USING (doc_id)
+         WHERE abs(a.pos_a - b.pos_b) <= 5
+         ORDER BY doc_id, pos_a, pos_b"""),
+
+    // Gini concentration of per-source token contribution: how unequal
+    // the corpus mix is (0 = uniform, →1 = one feed dominates). The
+    // classic sorted-rank formula with integer numerators —
+    // G = (2·Σ i·x_i − (n+1)·Σx) / (n·Σx). Ranks come from the
+    // distributed globalRowNumber (range-buckets + prefix offsets) — a
+    // web corpus has millions of source domains, so an unpartitioned
+    // rank window here would funnel the totals table through one task
+    ContractQuery("q_gini", (s, dir) => {
+      val per = t(s, dir, "documents")
+        .groupBy("source")
+        .agg(sum(graft.functions.Text.tokenCount(col("text")))
+          .as("tokens"))
+      val ranked = graft.operators.Analytics.globalRowNumber(per,
+        Seq(col("tokens").asc, col("source").asc), "i")
+      ranked.agg(count(lit(1)).as("n_sources"),
+          sum(col("tokens")).cast(LongType).as("total_tokens"),
+          sum(col("i") * col("tokens")).cast(LongType).as("weighted"))
+        .select(col("n_sources"), col("total_tokens"),
+          ((lit(2.0) * col("weighted").cast(DoubleType) -
+            (col("n_sources") + 1).cast(DoubleType) *
+              col("total_tokens").cast(DoubleType)) /
+            (col("n_sources").cast(DoubleType) *
+              col("total_tokens").cast(DoubleType))).as("gini"))
+    },
+      // (2·Σ i·x − (n+1)·Σx) / (n·Σx), ranks ascending by (tokens, source)
+      """WITH per AS (SELECT source,
+             CAST(sum(length(regexp_extract_all(text, '\S+'))) AS BIGINT)
+               AS tokens
+           FROM documents GROUP BY 1),
+         r AS (SELECT tokens,
+             CAST(row_number() OVER (ORDER BY tokens ASC, source ASC)
+               AS BIGINT) AS i
+           FROM per),
+         a AS (SELECT CAST(count(*) AS BIGINT) AS n_sources,
+             CAST(sum(tokens) AS BIGINT) AS total_tokens,
+             CAST(sum(i * tokens) AS BIGINT) AS weighted
+           FROM r)
+         SELECT n_sources, total_tokens,
+           (CAST(2.0 AS DOUBLE) * CAST(weighted AS DOUBLE)
+             - CAST(n_sources + 1 AS DOUBLE) * CAST(total_tokens AS DOUBLE))
+           / (CAST(n_sources AS DOUBLE) * CAST(total_tokens AS DOUBLE))
+             AS gini
+         FROM a"""),
+
+    // curriculum ordering: rank docs within each source by length-proxy
+    // quality (token count desc), then interleave sources by taking every
+    // source's rank-1 doc first, then every rank-2, ... — the deterministic
+    // round-robin curriculum a mixture-trained run consumes. The global
+    // interleave position comes from globalRowNumber (range buckets +
+    // prefix offsets), NOT an unpartitioned window — a real corpus has
+    // billions of (rank, source) rows. All-integer ordering keys.
+    ContractQuery("q_curriculum", (s, dir) => {
+      val d = t(s, dir, "documents").select(col("doc_id"), col("source"),
+        graft.functions.Text.tokenCount(col("text")).as("n_tok"))
+      val w = Window.partitionBy(col("source"))
+        .orderBy(col("n_tok").desc, col("doc_id").asc)
+      val r = d.withColumn("rnk", row_number().over(w).cast(LongType))
+      graft.operators.Analytics.globalRowNumber(r,
+          Seq(col("rnk").asc, col("source").asc), "pos")
+        .filter(col("pos") <= 50)
+        .select(col("pos"), col("doc_id"), col("source"), col("rnk"),
+          col("n_tok"))
+        .orderBy("pos")
+    },
+      // per-source rank by (n_tok DESC, doc_id), interleaved by (rnk, source)
+      """WITH d AS (SELECT doc_id, source,
+             CAST(length(regexp_extract_all(text, '\S+')) AS BIGINT)
+               AS n_tok
+           FROM documents),
+         r AS (SELECT doc_id, source, n_tok,
+             CAST(row_number() OVER (PARTITION BY source
+               ORDER BY n_tok DESC, doc_id) AS BIGINT) AS rnk
+           FROM d),
+         g AS (SELECT doc_id, source, n_tok, rnk,
+             CAST(row_number() OVER (ORDER BY rnk, source) AS BIGINT)
+               AS pos
+           FROM r)
+         SELECT pos, doc_id, source, rnk, n_tok FROM g
+         WHERE pos <= 50 ORDER BY pos"""),
+
+    // domain-mixture reweighting: per-source sampling weight that moves
+    // the corpus token mix to a UNIFORM target (the static DoReMi-style
+    // reweight a mixture sampler consumes). weight = total/(S·tokens) —
+    // one multiply + one divide per row in a fixed tree so the oracle
+    // replays the exact double bits; repeat_factor is the integer
+    // ceil(weight) via cross-multiplied longs (no float in the decision)
+    ContractQuery("q_mixture_weights", (s, dir) => {
+      val per = t(s, dir, "documents")
+        .groupBy("source")
+        .agg(sum(graft.functions.Text.tokenCount(col("text")))
+          .cast(LongType).as("tokens"))
+      val totals = per.agg(sum(col("tokens")).cast(LongType).as("total"),
+        count(lit(1)).as("n_sources"))
+      per.crossJoin(broadcast(totals))
+        .select(col("source"), col("tokens"),
+          (col("tokens").cast(DoubleType) / col("total").cast(DoubleType))
+            .as("actual_share"),
+          (col("total").cast(DoubleType) /
+            (col("n_sources").cast(DoubleType) *
+              col("tokens").cast(DoubleType))).as("weight"),
+          expr("(total + n_sources * tokens - 1) div (n_sources * tokens)")
+            .cast(LongType).as("repeat_factor"))
+        .orderBy("source")
+    },
+      // weight = total/(S·tokens) with the identical double tree; the
+      // integer ceil uses // on positive BIGINTs (Spark `div` twin)
+      """WITH per AS (SELECT source,
+             CAST(sum(length(regexp_extract_all(text, '\S+'))) AS BIGINT)
+               AS tokens
+           FROM documents GROUP BY 1),
+         t AS (SELECT CAST(sum(tokens) AS BIGINT) AS total,
+             CAST(count(*) AS BIGINT) AS n_sources FROM per)
+         SELECT source, tokens,
+           CAST(tokens AS DOUBLE) / CAST(total AS DOUBLE) AS actual_share,
+           CAST(total AS DOUBLE) /
+             (CAST(n_sources AS DOUBLE) * CAST(tokens AS DOUBLE)) AS weight,
+           CAST((total + n_sources * tokens - 1) // (n_sources * tokens)
+             AS BIGINT) AS repeat_factor
+         FROM per, t ORDER BY source"""),
+
+    // SQL-front-door variants of two round-6 governance reports (VERDICT
+    // r6 #8): the same semantics routed through Context.sql so the §2.6
+    // entry point (catalog validation + Spark SQL grammar) stays exercised
+    // as the surface grows. Chosen because both are cleanly SQL-expressible
+    // without windows; the rank-selection queries (q_trimmed_mean et al.)
+    // are deliberately NOT given SQL twins — their natural SQL form is a
+    // per-group window whose O(rows-per-group) buffer is exactly what the
+    // rankedByGroup spine exists to avoid at 100 TB.
+    ContractQuery("q_sql_mixture_weights", (s, dir) => {
+      val ctx = Context.forSfDir(s, dir)
+      ctx.sql("""
+        WITH per AS (
+          SELECT source,
+                 CAST(sum(regexp_count(text, '\\S+')) AS BIGINT) AS tokens
+          FROM documents GROUP BY source),
+        t AS (
+          SELECT CAST(sum(tokens) AS BIGINT) AS total,
+                 CAST(count(*) AS BIGINT) AS n_sources
+          FROM per)
+        SELECT source, tokens,
+               CAST(tokens AS DOUBLE) / CAST(total AS DOUBLE) AS actual_share,
+               CAST(total AS DOUBLE) /
+                 (CAST(n_sources AS DOUBLE) * CAST(tokens AS DOUBLE)) AS weight,
+               CAST((total + n_sources * tokens - 1) div (n_sources * tokens)
+                 AS BIGINT) AS repeat_factor
+        FROM per CROSS JOIN t ORDER BY source""")
+    },
+      // SQL-front-door variants: same twins as their DataFrame originals
+      """WITH per AS (SELECT source,
+             CAST(sum(length(regexp_extract_all(text, '\S+'))) AS BIGINT)
+               AS tokens
+           FROM documents GROUP BY 1),
+         t AS (SELECT CAST(sum(tokens) AS BIGINT) AS total,
+             CAST(count(*) AS BIGINT) AS n_sources FROM per)
+         SELECT source, tokens,
+           CAST(tokens AS DOUBLE) / CAST(total AS DOUBLE) AS actual_share,
+           CAST(total AS DOUBLE) /
+             (CAST(n_sources AS DOUBLE) * CAST(tokens AS DOUBLE)) AS weight,
+           CAST((total + n_sources * tokens - 1) // (n_sources * tokens)
+             AS BIGINT) AS repeat_factor
+         FROM per, t ORDER BY source"""),
+
+    // §2.6 front-door parity for the Kneser–Ney table: the whole train
+    // pipeline is ANSI-expressible, so the same counts + one double
+    // expression run through Context.sql and converge on q_kn_lm's
+    // oracle (Spark SQL slice/zip_with are 1-based like the DF path)
+    ContractQuery("q_sql_kn_lm", (s, dir) => {
+      val ctx = Context.forSfDir(s, dir)
+      ctx.sql("""
+        WITH toks AS (SELECT filter(split(text, ' '), x -> x != '') AS tk
+            FROM documents),
+        bigrams AS (
+          SELECT bg.w1 AS w1, bg.w2 AS w2 FROM toks
+          LATERAL VIEW explode(zip_with(
+            slice(tk, 1, size(tk) - 1), slice(tk, 2, size(tk) - 1),
+            (a, b) -> struct(a AS w1, b AS w2))) t AS bg
+          WHERE size(tk) > 1),
+        bg AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12
+               FROM bigrams GROUP BY w1, w2),
+        ctx AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c_ctx,
+            CAST(count(*) AS BIGINT) AS n_follow FROM bg GROUP BY w1),
+        prec AS (SELECT w2, CAST(count(*) AS BIGINT) AS n_prec
+                 FROM bg GROUP BY w2),
+        types AS (SELECT CAST(count(*) AS BIGINT) AS b_types FROM bg)
+        SELECT bg.w1, bg.w2, bg.c12, ctx.c_ctx, ctx.n_follow, prec.n_prec,
+          round(greatest(CAST(bg.c12 AS DOUBLE) - CAST(0.75 AS DOUBLE),
+              CAST(0 AS DOUBLE)) / CAST(ctx.c_ctx AS DOUBLE)
+            + CAST(0.75 AS DOUBLE) * CAST(ctx.n_follow AS DOUBLE)
+              / CAST(ctx.c_ctx AS DOUBLE)
+              * (CAST(prec.n_prec AS DOUBLE) / CAST(types.b_types AS DOUBLE)),
+            6) AS p_kn,
+          types.b_types, CAST(0.75 AS DOUBLE) AS discount
+        FROM bg JOIN ctx USING (w1) JOIN prec USING (w2) CROSS JOIN types
+        WHERE bg.c12 >= 5
+        ORDER BY w1, w2""")
+    },
+      // same table through the §2.6 SQL front door -> same oracle
+      knLmTwinSql),
+
+    // pairwise vocabulary containment |A∩B|/|A| between sources — the
+    // cross-feed redundancy signal behind mixture design (two feeds with
+    // near-total vocabulary containment are near-substitutes). Postings
+    // join on the distinct (source, token) table: each token contributes
+    // at most |sources|² pair rows, so the join is vocabulary-bounded ×
+    // a small constant, never corpus-sized; sources are feeds (bounded
+    // cardinality), not an unbounded key
+    ContractQuery("q_vocab_overlap", (s, dir) => {
+      val toks = t(s, dir, "documents")
+        .select(col("source"),
+          explode(split(col("text"), "\\s+")).as("tok"))
+        .filter(col("tok") =!= "").distinct()
+      val sizes = toks.groupBy("source").agg(count(lit(1)).as("n_types_a"))
+      toks.select(col("source").as("src_a"), col("tok"))
+        .join(toks.select(col("source").as("src_b"), col("tok")), Seq("tok"))
+        .filter(col("src_a") =!= col("src_b"))
+        .groupBy("src_a", "src_b").agg(count(lit(1)).as("n_shared"))
+        .join(sizes.withColumnRenamed("source", "src_a"), Seq("src_a"))
+        .select(col("src_a"), col("src_b"), col("n_shared"),
+          col("n_types_a"),
+          (col("n_shared").cast(DoubleType) /
+            col("n_types_a").cast(DoubleType)).as("containment"))
+        .orderBy("src_a", "src_b")
+    },
+      // |A∩B|/|A| over distinct whitespace-token vocabularies per source
+      """WITH tk AS (SELECT DISTINCT source, tok FROM (
+             SELECT source, unnest(list_filter(
+               regexp_split_to_array(text, '[ \n\t\r]+'), x -> x <> ''))
+               AS tok
+             FROM documents)),
+         sz AS (SELECT source, CAST(count(*) AS BIGINT) AS n_types_a
+           FROM tk GROUP BY 1),
+         pr AS (SELECT a.source AS src_a, b.source AS src_b,
+             CAST(count(*) AS BIGINT) AS n_shared
+           FROM tk a JOIN tk b ON a.tok = b.tok AND a.source <> b.source
+           GROUP BY 1, 2)
+         SELECT pr.src_a, pr.src_b, pr.n_shared, sz.n_types_a,
+           CAST(pr.n_shared AS DOUBLE) / CAST(sz.n_types_a AS DOUBLE)
+             AS containment
+         FROM pr JOIN sz ON pr.src_a = sz.source
+         ORDER BY pr.src_a, pr.src_b"""),
+
+    // cluster labeling (c-TF-IDF-style "what is this cluster about"):
+    // top-3 terms per k-means cluster by exact count. The rank window is
+    // partitioned by cluster and runs over (cluster × vocab) count rows —
+    // bounded by vocabulary, never by corpus. Twin = the bit-deterministic
+    // k-means replay (q_semdedup's CTEs) + counts + rank.
+    ContractQuery("q_cluster_terms", (s, dir) => {
+      val emb = t(s, dir, "embeddings")
+      val docs = t(s, dir, "documents")
+      val cents = graft.similarity.Ivf.train(emb, k = 8, iters = 1)
+      val assign = graft.similarity.Ivf.assign(emb, cents)
+        .select(col("vec_id").as("doc_id"),
+          col("centroid_id").cast(IntegerType).as("cluster"))
+      val toks = docs.join(assign, "doc_id")
+        .select(col("cluster"), explode(split(col("text"), "\\s+")).as("term"))
+        .filter(col("term") =!= "")
+      val counts = toks.groupBy("cluster", "term").agg(count(lit(1)).as("n"))
+      val w = Window.partitionBy("cluster")
+        .orderBy(col("n").desc, col("term").asc)
+      counts.withColumn("rnk", row_number().over(w).cast(LongType))
+        .filter(col("rnk") <= 3)
+        .orderBy("cluster", "rnk")
+    },
+      // k-means replay CTEs (a1 = assignments after 1 Lloyd iteration) +
+      // per-cluster token counts + rank
+      (kmeansAssignCtes +
+      """,
+         asg AS (SELECT vec_id AS doc_id, cid AS cluster FROM a1),
+         tk AS (SELECT a.cluster,
+             unnest(list_filter(regexp_split_to_array(d.text, '[ \n\t\r]+'),
+               x -> x <> '')) AS term
+           FROM documents d JOIN asg a USING (doc_id)),
+         c AS (SELECT cluster, term, count(*) AS n FROM tk GROUP BY 1, 2),
+         r AS (SELECT cluster, term, n,
+             row_number() OVER (PARTITION BY cluster
+               ORDER BY n DESC, term) AS rnk
+           FROM c)
+         SELECT cluster, term, n, CAST(rnk AS BIGINT) AS rnk FROM r
+         WHERE rnk <= 3 ORDER BY cluster, rnk""")),
+
+    // corpus novelty rate: per-doc share of distinct word 3-grams whose
+    // FIRST corpus occurrence (min doc_id) is this doc — down-weights
+    // templated/spun recombinations during curation. Longs end-to-end
+    // (64-bit gram fingerprints); one quotient per row.
+    ContractQuery("q_novelty", (s, dir) =>
+      graft.functions.Text.noveltyRate(t(s, dir, "documents"), n = 3)
+        .orderBy("doc_id"),
+      // string grams mirror the fingerprint kernel's distinct word
+      // 3-grams; first-occurrence = min doc_id, one quotient per row
+      """WITH toks AS (
+           SELECT doc_id,
+             list_filter(regexp_split_to_array(text, '[ \n\t\r]+'),
+               x -> x <> '') AS tk
+           FROM documents),
+         grams AS (
+           SELECT doc_id, unnest(list_distinct(list_transform(
+               generate_series(1, greatest(len(tk) - 2, 0)),
+               i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))) AS gram
+           FROM toks),
+         f AS (SELECT gram, min(doc_id) AS first_doc FROM grams GROUP BY 1),
+         p AS (SELECT g.doc_id, count(*) AS total_grams,
+             sum(CASE WHEN f.first_doc = g.doc_id THEN 1 ELSE 0 END)
+               AS novel_grams
+           FROM grams g JOIN f USING (gram) GROUP BY 1)
+         SELECT d.doc_id,
+           CAST(coalesce(p.total_grams, 0) AS BIGINT) AS total_grams,
+           CAST(coalesce(p.novel_grams, 0) AS BIGINT) AS novel_grams,
+           CASE WHEN coalesce(p.total_grams, 0) = 0 THEN 0.0
+                ELSE CAST(p.novel_grams AS DOUBLE)
+                     / CAST(p.total_grams AS DOUBLE) END AS novelty
+         FROM documents d LEFT JOIN p USING (doc_id)
+         ORDER BY d.doc_id"""),
+
+    // Borda rank fusion of three integer quality signals (chars, tokens,
+    // chars-per-1000-tokens) stratified by language: rank windows
+    // partition by lang, ranks sum in longs, top-5 per stratum survive.
+    // No float enters any ordering — engine-independent by construction.
+    ContractQuery("q_rank_ensemble", (s, dir) => {
+      val d = t(s, dir, "documents")
+      graft.operators.Analytics.bordaFusion(
+        d.withColumn("n_tokens", graft.functions.Text.tokenCount(col("text"))),
+        groupCol = "lang", idCol = "doc_id",
+        signals = Seq(
+          "s_chars" -> col("n_chars"),
+          "s_tokens" -> col("n_tokens"),
+          "s_density" -> expr("n_chars * 1000L div greatest(n_tokens, 1L)")),
+        topk = 5)
+        .orderBy("lang", "final_rank")
+    },
+      // all-integer Borda fusion: per-lang row_number ranks (value DESC,
+      // doc_id ASC), integer-division density, top-5 by rank sum
+      """WITH base AS (
+           SELECT lang, doc_id,
+             CAST(n_chars AS BIGINT) AS s_chars,
+             CAST(length(regexp_extract_all(text, '\S+')) AS BIGINT)
+               AS s_tokens
+           FROM documents),
+         sig AS (
+           SELECT lang, doc_id, s_chars, s_tokens,
+             CAST(s_chars * 1000 // greatest(s_tokens, 1) AS BIGINT)
+               AS s_density
+           FROM base),
+         r AS (
+           SELECT lang, doc_id, s_chars, s_tokens, s_density,
+             CAST(row_number() OVER (PARTITION BY lang
+               ORDER BY s_chars DESC, doc_id) AS BIGINT) AS rank_s_chars,
+             CAST(row_number() OVER (PARTITION BY lang
+               ORDER BY s_tokens DESC, doc_id) AS BIGINT) AS rank_s_tokens,
+             CAST(row_number() OVER (PARTITION BY lang
+               ORDER BY s_density DESC, doc_id) AS BIGINT) AS rank_s_density
+           FROM sig),
+         b AS (
+           SELECT lang, doc_id, rank_s_chars, rank_s_tokens, rank_s_density,
+             rank_s_chars + rank_s_tokens + rank_s_density AS borda
+           FROM r),
+         t AS (
+           SELECT *, CAST(row_number() OVER (PARTITION BY lang
+             ORDER BY borda, doc_id) AS BIGINT) AS final_rank
+           FROM b)
+         SELECT lang, doc_id, rank_s_chars, rank_s_tokens, rank_s_density,
+           borda, final_rank
+         FROM t WHERE final_rank <= 5 ORDER BY lang, final_rank"""),
+
+    // HTML → text extraction (web-corpus ingestion): the corpus is plain
+    // text, so the query deterministically wraps it in markup — element
+    // drops (script/style), tag strips, entity decodes, an UNCLOSED
+    // script tag every 7th doc — then runs the native one-pass kernel.
+    // The twin replays the exact 4-stage regexp chain in DuckDB.
+    ContractQuery("q_html_extract", (s, dir) => {
+      val html = concat(
+        lit("<html><head><title>Doc "), col("doc_id"),
+        lit("</title><style type=\"text/css\">body { color: #fff; }" +
+          "</style></head><body><h1>Doc &amp; "), col("doc_id"),
+        lit("</h1><script>var x = 1 < 2 && 3 > 2;</script>" +
+          "<p class=\"main\">"), col("text"),
+        lit("</p><span>&lt;tag&gt; &quot;q&quot; &#39;s&#39;&nbsp;end" +
+          "</span>"),
+        when(col("doc_id") % 7 === 0, lit("<script>unclosed"))
+          .otherwise(lit("")),
+        lit("</body></html>"))
+      t(s, dir, "documents")
+        .select(col("doc_id"), native.html_extract_text(html).as("extracted"))
+        .orderBy("doc_id")
+    },
+      // the kernel's exact 4-stage chain: script/style elements, tags,
+      // entities (&amp; last), whitespace collapse
+      """WITH h AS (
+           SELECT doc_id,
+             '<html><head><title>Doc ' || CAST(doc_id AS VARCHAR) ||
+             '</title><style type="text/css">body { color: #fff; }' ||
+             '</style></head><body><h1>Doc &amp; ' ||
+             CAST(doc_id AS VARCHAR) ||
+             '</h1><script>var x = 1 < 2 && 3 > 2;</script>' ||
+             '<p class="main">' || text ||
+             '</p><span>&lt;tag&gt; &quot;q&quot; &#39;s&#39;&nbsp;end' ||
+             '</span>' ||
+             CASE WHEN doc_id % 7 = 0 THEN '<script>unclosed' ELSE '' END ||
+             '</body></html>' AS html
+           FROM documents),
+         s1 AS (SELECT doc_id, regexp_replace(html,
+             '<script[^>]*>.*?</script>', ' ', 'gis') AS x FROM h),
+         s2 AS (SELECT doc_id, regexp_replace(x,
+             '<style[^>]*>.*?</style>', ' ', 'gis') AS x FROM s1),
+         s3 AS (SELECT doc_id, regexp_replace(x, '<[^>]*>', ' ', 'g') AS x
+           FROM s2),
+         s4 AS (SELECT doc_id,
+             replace(replace(replace(replace(replace(replace(x,
+               '&lt;', '<'), '&gt;', '>'), '&quot;', '"'),
+               '&#39;', ''''), '&nbsp;', ' '), '&amp;', '&') AS x
+           FROM s3)
+         SELECT doc_id, trim(regexp_replace(x, '[ \n\t\r]+', ' ', 'g'))
+           AS extracted
+         FROM s4 ORDER BY doc_id"""),
+
+    // corpus-mixture reweighting: per-lang sampling weight that hits the
+    // literal target shares; exact long ratio + one double quotient
+    ContractQuery("q_mix_weights", (s, dir) =>
+      graft.functions.Profile.mixtureWeights(t(s, dir, "documents"), "lang",
+          Map("en" -> 40L, "de" -> 15L, "es" -> 15L, "fr" -> 15L,
+            "zh" -> 15L))
+        .orderBy("lang"),
+      // integer mixture weights: target_pct·total / (100·n) per stratum
+      """WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
+         t AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM c),
+         m AS (SELECT * FROM (VALUES ('en', 40), ('de', 15), ('es', 15),
+             ('fr', 15), ('zh', 15)) AS v(lang, pct))
+         SELECT c.lang, CAST(c.n AS BIGINT) AS n,
+           CAST(coalesce(m.pct, 0) AS BIGINT) AS target_pct,
+           CAST(coalesce(m.pct, 0) * t.total AS BIGINT) AS weight_num,
+           CAST(100 * c.n AS BIGINT) AS weight_den,
+           CAST(coalesce(m.pct, 0) * t.total AS DOUBLE)
+             / CAST(100 * c.n AS DOUBLE) AS weight
+         FROM c LEFT JOIN m USING (lang), t ORDER BY c.lang"""),
+
+    // positional inverted-index phrase search: three posting lists
+    // equi-joined on (doc, pos − offset) — token-exact (not substring),
+    // reads postings not the corpus. Twin replays the positional join.
+    ContractQuery("q_phrase_search", (s, dir) =>
+      graft.functions.Text.phraseSearch(t(s, dir, "documents"),
+          Seq("table", "part", "a"))
+        .orderBy("doc_id", "pos"),
+      // positional postings + n-way self-join at fixed offsets
+      """WITH toks AS (
+           SELECT doc_id,
+             list_filter(regexp_split_to_array(text, '[ \n\t\r]+'),
+               x -> x <> '') AS t
+           FROM documents),
+         p AS (SELECT doc_id, i - 1 AS pos, t[i] AS term
+           FROM toks, unnest(generate_series(1, len(t))) AS g(i))
+         SELECT a.doc_id, CAST(a.pos AS BIGINT) AS pos
+         FROM p a
+         JOIN p b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
+           AND b.term = 'part'
+         JOIN p c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
+           AND c.term = 'a'
+         WHERE a.term = 'table'
+         ORDER BY a.doc_id, pos"""),
+
+    // BPE merge training: k rounds of count-adjacent-pairs → merge the
+    // most frequent pair, run on the BOUNDED word-frequency table (one
+    // corpus scan; iteration cost independent of corpus size). The twin
+    // replays all k rounds as unrolled CTEs — replace() is left-to-right
+    // non-overlapping in both engines, which IS the BPE merge rule.
+    ContractQuery("q_bpe_train", (s, dir) =>
+      graft.functions.Text.bpeTrainMerges(t(s, dir, "documents"), k = 6)
+        .orderBy("merge_rank"),
+      bpeTwin(6)),
+
+    // BPE ENCODE: per-doc token counts under the 6-merge tokenizer the
+    // corpus itself trains — the train→encode loop that budgets corpora
+    // in "our tokens", not whitespace tokens. Application is a k-deep
+    // chain of builtin replace() on the spaced word form (narrow,
+    // codegen'd); merges are k bounded driver rows.
+    ContractQuery("q_bpe_encode", (s, dir) =>
+      graft.functions.Text.bpeEncode(t(s, dir, "documents"), k = 6)
+        .orderBy("doc_id"),
+      bpeEncodeTwin(6)),
+
+    // batch perceptron training for a language/quality filter: integer
+    // features (bias, tokens, chars, digits), label ±1 on lang='en',
+    // 3 batch rounds w += Σ_miscl y·x — the weight trajectory is pure
+    // 64-bit integer arithmetic, replayed exactly by the unrolled twin
+    ContractQuery("q_perceptron_train", (s, dir) =>
+      graft.functions.Text.perceptronTrain(t(s, dir, "documents"),
+          iters = 3)
+        .orderBy("iter"),
+      perceptronTwin(3)),
+
+    // classifier reliability table over the quality-filter stack (train:
+    // q_perceptron_train, apply: q_classify): linearScore clamped into
+    // 10 equal-width bins over [-1,1] with the q_histogram clamp+floor
+    // expression, per-bin positive rate for lang='en' — integer counts
+    // + one exact division, so the curve hash-checks cross-engine
+    ContractQuery("q_calibration", (s, dir) =>
+      graft.operators.Analytics.calibration(
+        t(s, dir, "documents").select(
+          graft.functions.Text.linearScore(col("text")).as("score"),
+          when(col("lang") === "en", 1L).otherwise(0L).as("label")),
+        "score", "label", lo = -1.0, hi = 1.0, buckets = 10),
+      """WITH toks AS (
+           SELECT doc_id, unnest(list_filter(
+             regexp_split_to_array(text, '[ \n\t\r]+'), x -> x <> '')) AS tok
+           FROM documents),
+         th AS (
+           SELECT doc_id,
+             list_reduce(
+               list_prepend(CAST('14695981039346656037' AS HUGEINT),
+                 list_transform(generate_series(1, length(tok)),
+                   i -> CAST(ord(substr(tok, i, 1)) AS HUGEINT))),
+               (h, b) -> (xor(h, b) * CAST('1099511628211' AS HUGEINT))
+                 % CAST('18446744073709551616' AS HUGEINT)) AS h
+           FROM toks),
+         tw AS (SELECT doc_id,
+             ((CAST(h % 256 AS BIGINT) * 2654435761 + 12345) % 2001) - 1000
+               AS w
+           FROM th),
+         agg AS (SELECT doc_id, sum(w) AS s, count(*) AS n
+           FROM tw GROUP BY doc_id),
+         sc AS (SELECT d.doc_id,
+             CAST(coalesce(a.s, 0) AS DOUBLE)
+               / (CAST(1000.0 AS DOUBLE)
+                  * CAST(greatest(coalesce(a.n, 0), 1) AS DOUBLE)) AS score,
+             CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS y
+           FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
+           WHERE d.text IS NOT NULL),
+         b AS (SELECT least(greatest(
+             CAST(floor((score - CAST(-1.0 AS DOUBLE))
+               / CAST(0.2 AS DOUBLE)) AS BIGINT), 0), 9) AS bucket, y
+           FROM sc)
+         SELECT bucket,
+           CAST(-1.0 AS DOUBLE) + CAST(bucket AS DOUBLE)
+             * CAST(0.2 AS DOUBLE) AS lo_edge,
+           CAST(count(*) AS BIGINT) AS n,
+           CAST(sum(y) AS BIGINT) AS positives,
+           CAST(sum(y) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS pos_rate
+         FROM b GROUP BY bucket ORDER BY bucket"""),
+
+    // hashed-bag-of-words linear classifier (fastText-shaped quality
+    // model APPLY): narrow per-row fold over the token array — runs at
+    // parquet-scan speed, no shuffle/explode/UDF
+    ContractQuery("q_classify", (s, dir) =>
+      t(s, dir, "documents")
+        .select(col("doc_id"),
+          graft.functions.Text.linearScore(col("text")).as("score"))
+        .withColumn("keep", col("score") > lit(0.0))
+        .orderBy("doc_id"),
+      // per-token FNV-1a replayed in HUGEINT mod-2^64 (the simhash twin's
+      // hash), bucket = low 8 bits, integer weights, one double division
+      // q_classify's score chain + the q_histogram clamp+floor binning
+      """WITH toks AS (
+           SELECT doc_id, unnest(list_filter(
+             regexp_split_to_array(text, '[ \n\t\r]+'), x -> x <> '')) AS tok
+           FROM documents),
+         th AS (
+           SELECT doc_id,
+             list_reduce(
+               list_prepend(CAST('14695981039346656037' AS HUGEINT),
+                 list_transform(generate_series(1, length(tok)),
+                   i -> CAST(ord(substr(tok, i, 1)) AS HUGEINT))),
+               (h, b) -> (xor(h, b) * CAST('1099511628211' AS HUGEINT))
+                 % CAST('18446744073709551616' AS HUGEINT)) AS h
+           FROM toks),
+         tw AS (SELECT doc_id,
+             ((CAST(h % 256 AS BIGINT) * 2654435761 + 12345) % 2001) - 1000
+               AS w
+           FROM th),
+         agg AS (SELECT doc_id, sum(w) AS s, count(*) AS n
+           FROM tw GROUP BY doc_id)
+         SELECT d.doc_id,
+           CAST(coalesce(a.s, 0) AS DOUBLE)
+             / (CAST(1000.0 AS DOUBLE)
+                * CAST(greatest(coalesce(a.n, 0), 1) AS DOUBLE)) AS score,
+           (CAST(coalesce(a.s, 0) AS DOUBLE)
+             / (CAST(1000.0 AS DOUBLE)
+                * CAST(greatest(coalesce(a.n, 0), 1) AS DOUBLE))) > 0.0
+             AS keep
+         FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
+         ORDER BY d.doc_id"""),
+
+    // PMI collocation mining (phrase/merge-candidate signal): adjacent
+    // bigrams vs the unigram model, long tail dropped BEFORE the
+    // vocabulary joins
+    ContractQuery("q_pmi", (s, dir) =>
+      graft.functions.Text.pmiCollocations(
+        t(s, dir, "documents"), minCount = 5, topk = 20),
+      // PMI over adjacent-token bigrams with the identical one-expression
+      // double shape ln((c_xy*T*T) / (B*c_x*c_y))
+      """WITH toks AS (SELECT list_filter(string_split(text, ' '),
+             x -> x <> '') AS tk FROM documents),
+         bigrams AS (
+           SELECT tk[i] AS w1, tk[i + 1] AS w2
+           FROM toks, unnest(generate_series(1, len(tk) - 1)) AS t(i)
+           WHERE len(tk) > 1),
+         unic AS (SELECT w, count(*) AS c FROM (
+             SELECT unnest(tk) AS w FROM toks) GROUP BY w),
+         bg AS (SELECT w1, w2, count(*) AS c_xy FROM bigrams
+                GROUP BY w1, w2 HAVING count(*) >= 5),
+         totals AS (SELECT CAST(sum(len(tk)) AS BIGINT) AS t_uni,
+             CAST(sum(greatest(len(tk) - 1, 0)) AS BIGINT) AS b_tot
+           FROM toks)
+         SELECT bg.w1, bg.w2, bg.c_xy,
+           round(ln((CAST(bg.c_xy AS DOUBLE) * t.t_uni * t.t_uni)
+                  / (CAST(t.b_tot AS DOUBLE) * u1.c * u2.c)), 6) AS pmi
+         FROM bg JOIN unic u1 ON bg.w1 = u1.w
+           JOIN unic u2 ON bg.w2 = u2.w
+           CROSS JOIN totals t
+         ORDER BY pmi DESC, w1 ASC, w2 ASC LIMIT 20"""),
+
+    // Kneser–Ney bigram LM (the train side of an n-gram perplexity
+    // filter): all denominators counted over ALL bigrams, output filtered
+    // to the c12 >= 5 head; the smoothed probability is one per-row
+    // double expression over exact integers, mirrored shape-for-shape in
+    // the twin
+    ContractQuery("q_kn_lm", (s, dir) =>
+      graft.functions.Text.kneserNeyBigrams(
+          t(s, dir, "documents"), discount = 0.75, minCount = 5)
+        .orderBy("w1", "w2"),
+      // Kneser–Ney bigram table: every probability input is an exact
+      // integer count; the one double expression mirrors Spark's
+      // cast/precedence shape term for term (CAST literals to DOUBLE —
+      // bare 0.75 is DECIMAL in DuckDB)
+      knLmTwinSql),
+
+    // one order up: interpolated trigram KN with continuation counts at
+    // both lower levels (the textbook recursion) — exact integer
+    // type-counts, one nested double expression mirrored in the twin
+    ContractQuery("q_kn_trigram", (s, dir) =>
+      graft.functions.Text.kneserNeyTrigrams(
+          t(s, dir, "documents"), discount = 0.75, minCount = 5)
+        .orderBy("w1", "w2", "w3"),
+      // trigram KN twin: the same nested interpolation over trigram-type
+      // continuation counts, shape-mirrored casts throughout
+      """WITH toks AS (SELECT list_filter(string_split(text, ' '),
+             x -> x <> '') AS tk FROM documents),
+         trigrams AS (
+           SELECT tk[i] AS w1, tk[i + 1] AS w2, tk[i + 2] AS w3
+           FROM toks, unnest(generate_series(1, len(tk) - 2)) AS t(i)
+           WHERE len(tk) > 2),
+         tg AS (SELECT w1, w2, w3, CAST(count(*) AS BIGINT) AS c123
+                FROM trigrams GROUP BY w1, w2, w3),
+         ctx12 AS (SELECT w1, w2, CAST(sum(c123) AS BIGINT) AS c12,
+             CAST(count(*) AS BIGINT) AS nf12 FROM tg GROUP BY w1, w2),
+         cont23 AS (SELECT w2, w3, CAST(count(*) AS BIGINT) AS cont23
+                    FROM tg GROUP BY w2, w3),
+         ctx2 AS (SELECT w2, CAST(sum(cont23) AS BIGINT) AS cont2,
+             CAST(count(*) AS BIGINT) AS nf2 FROM cont23 GROUP BY w2),
+         cont3 AS (SELECT w3, CAST(count(*) AS BIGINT) AS cont3
+                   FROM cont23 GROUP BY w3),
+         btot AS (SELECT CAST(count(*) AS BIGINT) AS b23 FROM cont23)
+         SELECT tg.w1, tg.w2, tg.w3, tg.c123, ctx12.c12, ctx12.nf12,
+           cont23.cont23, ctx2.cont2, ctx2.nf2, cont3.cont3,
+           round(greatest(CAST(tg.c123 AS DOUBLE) - CAST(0.75 AS DOUBLE),
+               CAST(0 AS DOUBLE)) / CAST(ctx12.c12 AS DOUBLE)
+             + CAST(0.75 AS DOUBLE) * CAST(ctx12.nf12 AS DOUBLE)
+               / CAST(ctx12.c12 AS DOUBLE)
+               * (greatest(CAST(cont23.cont23 AS DOUBLE)
+                     - CAST(0.75 AS DOUBLE), CAST(0 AS DOUBLE))
+                   / CAST(ctx2.cont2 AS DOUBLE)
+                 + CAST(0.75 AS DOUBLE) * CAST(ctx2.nf2 AS DOUBLE)
+                   / CAST(ctx2.cont2 AS DOUBLE)
+                   * (CAST(cont3.cont3 AS DOUBLE)
+                     / CAST(btot.b23 AS DOUBLE))), 6) AS p_kn,
+           btot.b23, CAST(0.75 AS DOUBLE) AS discount
+         FROM tg JOIN ctx12 USING (w1, w2) JOIN cont23 USING (w2, w3)
+           JOIN ctx2 USING (w2) JOIN cont3 USING (w3) CROSS JOIN btot
+         WHERE tg.c123 >= 5
+         ORDER BY w1, w2, w3"""),
+
+    // trigram scorer: train the trigram KN on non-src1 (minCount=1) and
+    // score src1 with the full backoff chain — seen triple / reserved
+    // context mass / mid-level model / continuation base / OOV floor
+    ContractQuery("q_kn_trigram_ppl", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      // parts-mode scoring (bit-identical at minCount=1): the scorer
+      // consumes the trainer's slim aggregate tables directly instead of
+      // materializing the fat model and re-deriving them with four
+      // distinct() shuffles per call (guide §2.4/§1.2)
+      val parts = graft.functions.Text.kneserNeyTrigramsParts(
+        docs.filter(col("source") =!= "src1"), minCount = 1)
+      graft.functions.Text.knTrigramPerplexityFromTables(
+          docs.filter(col("source") === "src1"), parts.head, parts.ctx12,
+          parts.mid, parts.ctx2, parts.c3, parts.consts)
+        .orderBy("doc_id")
+    },
+      // deeper-backoff trigram scorer twin (shared P2 snippet keeps the
+      // two CASE branches textually identical)
+      knTrigramPplTwinSql),
+
+    // the score side of the perplexity filter: train interpolated KN on
+    // the non-src1 corpus, score src1 docs — cross-corpus, so the seen /
+    // context-backoff / OOV-floor paths are all genuinely exercised.
+    // Per-bigram log-probs accumulate as DECIMAL (exact under any
+    // partitioning); only the final per-doc division/exp is double
+    ContractQuery("q_kn_perplexity", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      // parts-mode scoring, the q_kn_trigram_ppl rationale one order down
+      val parts = graft.functions.Text.kneserNeyBigramsParts(
+        docs.filter(col("source") =!= "src1"), minCount = 1)
+      graft.functions.Text.knPerplexityFromTables(
+          docs.filter(col("source") === "src1"), parts.head, parts.ctx,
+          parts.prec, parts.consts)
+        .orderBy("doc_id")
+    },
+      // KN scorer twin: model CTE at minCount=1 (same rounded p_kn), then
+      // the seen / context-backoff / OOV-floor chain per scored bigram;
+      // DECIMAL(28,6) log-prob sums keep the fold order-independent
+      knPerplexityTwinSql),
+
+    // STORED-model scoring — the shape a 100 TB pipeline actually runs
+    // (train the LM nightly, score shards from the stored table, never
+    // retrain per batch): the trained bigram model is written to parquet
+    // (Sinks.writeParquet), re-read as an independent table, and scored.
+    // Works because the model is SELF-DESCRIBING (b_types + discount
+    // ride along) and parquet round-trips every column exactly (longs;
+    // p_kn pre-rounded to 6dp) — the twin is therefore q_kn_perplexity's
+    // verbatim. Fixed path overwritten per run (bounded disk, the
+    // q_cdc_stream pattern): the scorer reads the files LAZILY, so the
+    // path must outlive the query's consumption
+    ContractQuery("q_kn_score_stored", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val modelPath = scratch("kn_model")
+      val parts = graft.functions.Text.kneserNeyBigramsParts(
+        docs.filter(col("source") =!= "src1"), minCount = 1)
+      // the nightly train ALSO stores the slim backoff tables next to the
+      // model (they are tiny aggregates of the already-persisted bigram
+      // table), so every stored-model scoring call reads them directly
+      // instead of re-deriving them from the fat model with one full
+      // model shuffle per table per call (guide §1.2: fix the pass
+      // count). The seen-pair join still reads the STORED model, pruned
+      // to (w1, w2, c12); the scorer recomputes the trainer's rounded
+      // p_kn from those exact longs — bit-identical to the stored column.
+      // All four artifacts are independent reads of the same persisted
+      // bigram table — overlap the writes (guide §2.6, the
+      // Ivf.buildVersionDirAt pattern) instead of paying four serial
+      // job barriers.
+      val tbl = scratch("kn_model_tables")
+      graft.engine.Par.run(Seq[() => Unit](
+        () => graft.sources.Sinks.writeParquet(parts.model, modelPath),
+        () => graft.sources.Sinks.writeParquet(parts.ctx, s"$tbl/ctx"),
+        () => graft.sources.Sinks.writeParquet(parts.prec, s"$tbl/prec"),
+        () => graft.sources.Sinks.writeParquet(parts.consts, s"$tbl/consts")))
+      graft.functions.Text.knPerplexityFromTables(
+          docs.filter(col("source") === "src1"),
+          s.read.parquet(modelPath).select(col("w1"), col("w2"), col("c12")),
+          s.read.parquet(s"$tbl/ctx"), s.read.parquet(s"$tbl/prec"),
+          s.read.parquet(s"$tbl/consts"))
+        .orderBy("doc_id")
+    },
+      // stored-model scoring: parquet round-trips every model column
+      // exactly (longs; p_kn already rounded to 6dp before the write), so
+      // scoring FROM the stored table is value-identical to scoring the
+      // in-memory model — one twin serves both
+      knPerplexityTwinSql),
+
+    // the TRIGRAM stored-model path (same trade as q_kn_score_stored one
+    // order up): the deeper model's extra columns (c123..cont3, b23,
+    // discount) are longs and pre-rounded/literal doubles — all parquet-
+    // exact — so scoring from the stored table equals the in-memory
+    // q_kn_trigram_ppl bit-for-bit and the twin is shared verbatim
+    ContractQuery("q_kn_trigram_score_stored", (s, dir) => {
+      val docs = t(s, dir, "documents")
+      val modelPath = scratch("kn_tri_model")
+      val parts = graft.functions.Text.kneserNeyTrigramsParts(
+        docs.filter(col("source") =!= "src1"), minCount = 1)
+      // store the slim backoff tables at train time (q_kn_score_stored
+      // rationale one order up): serve-side loses the fat-model
+      // materialization + four distinct() shuffles per scoring call.
+      // Independent artifacts of the same persisted trigram table —
+      // overlapped writes (guide §2.6), not six serial job barriers.
+      val tbl = scratch("kn_tri_model_tables")
+      graft.engine.Par.run(Seq[() => Unit](
+        () => graft.sources.Sinks.writeParquet(parts.model, modelPath),
+        () => graft.sources.Sinks.writeParquet(parts.ctx12, s"$tbl/ctx12"),
+        () => graft.sources.Sinks.writeParquet(parts.mid, s"$tbl/mid"),
+        () => graft.sources.Sinks.writeParquet(parts.ctx2, s"$tbl/ctx2"),
+        () => graft.sources.Sinks.writeParquet(parts.c3, s"$tbl/c3"),
+        () => graft.sources.Sinks.writeParquet(parts.consts, s"$tbl/consts")))
+      graft.functions.Text.knTrigramPerplexityFromTables(
+          docs.filter(col("source") === "src1"),
+          s.read.parquet(modelPath)
+            .select(col("w1"), col("w2"), col("w3"), col("c123")),
+          s.read.parquet(s"$tbl/ctx12"), s.read.parquet(s"$tbl/mid"),
+          s.read.parquet(s"$tbl/ctx2"), s.read.parquet(s"$tbl/c3"),
+          s.read.parquet(s"$tbl/consts"))
+        .orderBy("doc_id")
+    },
+      // same stored-model argument one order up: the trigram model's
+      // extra columns are longs + literal doubles, all parquet-exact
+      knTrigramPplTwinSql)
+  )
+}

@@ -96,7 +96,7 @@ object SpillStress {
         failures ::= s"$n: no spill recorded — thresholds lost their teeth"
       println(f"$n%-20s $wall%8.2f $rows%9d ${mem / 1e6}%13.1f ${disk / 1e6}%14.1f $nStages%14d")
     }
-    graft.Verify.writeOracleSql(outDir)
+    graft.Verify.writeOracleSql(outDir, names.toSet)
     spark.stop()
     if (failures.nonEmpty) {
       failures.foreach(f => System.err.println(s"[spillstress] FAIL $f"))

@@ -6,8 +6,8 @@ import graft.engine.Tables
 
 /** Error-bound assertions for the two sketch aggregates — the right
   * verification shape for approximate structures whose internals are
-  * engine-specific (their contract queries are rows-only by design; this
-  * is where their accuracy is actually pinned). */
+  * engine-specific (their contract twins check only the in-query
+  * within-bound flag; this is where their accuracy is actually pinned). */
 class SketchSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
 

@@ -3,10 +3,12 @@
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 
-Reads each <outDir>/<query>/ parquet written by graft.Verify, runs the
-matching oracle SQL from <outDir>/oracle_sql.json in DuckDB against the
-same sf tables, sorts columns by name, and compares values exactly
-(floats bit-exact; also reports near-miss stats to triage).
+Scores every query named in <outDir>/oracle_sql.json: reads the
+<outDir>/<query>/ parquet written by graft.Verify, runs the query's oracle
+SQL in DuckDB against the same sf tables, sorts columns by name, and
+compares values exactly (floats bit-exact; also reports near-miss stats to
+triage). A query with no output dir (its Verify write threw) is MISSING;
+an output dir with no oracle is NO-ORACLE. Both are failures.
 """
 import json, sys, glob, os
 import duckdb
@@ -46,15 +48,17 @@ def main(sf_dir, out_dir):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     results = {}
-    for qdir in sorted(glob.glob(f"{out_dir}/*/")):
-        name = os.path.basename(qdir.rstrip("/"))
+    dirs = {os.path.basename(d.rstrip("/")) for d in glob.glob(f"{out_dir}/*/")}
+    for name in sorted(dirs - oracle.keys()):
+        results[name] = "NO-ORACLE"
+    for name in sorted(oracle):
+        if name not in dirs:
+            results[name] = "MISSING (no output dir: the query failed in graft.Verify)"
+            continue
         try:
-            mine = pd.read_parquet(qdir)
+            mine = pd.read_parquet(f"{out_dir}/{name}")
         except Exception as e:
             results[name] = f"READ-FAIL {e}"
-            continue
-        if name not in oracle:
-            results[name] = f"rows-only ({len(mine)} rows)" if len(mine) > 0 else "rows-only EMPTY!"
             continue
         try:
             ref = con.sql(oracle[name]).df()
@@ -93,7 +97,7 @@ def main(sf_dir, out_dir):
                          f"first@{first[0]}: mine={first[1]} ref={first[2]}; "
                          f"maxFloatDelta={max_float_delta:.3e}")
     width = max(len(k) for k in results)
-    n_ok = sum(1 for v in results.values() if v.startswith(("OK", "rows-only (")))
+    n_ok = sum(1 for v in results.values() if v.startswith("OK"))
     for k in sorted(results):
         print(f"{k:<{width}}  {results[k]}")
     print(f"\n{n_ok}/{len(results)} pass")
