@@ -2,7 +2,7 @@ package graft
 
 import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.engine.Context
+import graft.engine.{Context, Stages}
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric","value","unit","queries","sf"}.
@@ -14,29 +14,32 @@ object Bench {
   type Query = (SparkSession, String) => DataFrame
 
   /** One measured sweep: per query the min of two runs (the successful
-    * run's time if only one succeeded, -1 if neither did), and the queries
-    * with at least one failed run. */
-  final case class Sweep(times: Seq[(String, Double)], failed: Seq[String]) {
+    * run's time if only one succeeded, -1 if neither did), the queries
+    * with at least one failed run, and the stage record of the run whose
+    * time is reported (none for a query that never succeeded). */
+  final case class Sweep(times: Seq[(String, Double)], failed: Seq[String],
+      records: Map[String, Stages.Record]) {
     /** Queries without a successful run add nothing — the formula of every
       * past round, kept so totals stay comparable; `failed` is what makes a
       * crash visible. */
     def total: Double = times.map(_._2).filter(_ >= 0).sum
   }
 
-  /** Time one noop write of `fn`'s result, then isolate (untimed).
-    * -1 when the query fails. */
+  /** Time one noop write of `fn`'s result and record its stages (read
+    * after the clock stops), then isolate (untimed). None when the query
+    * fails. */
   private def timeOnce(spark: SparkSession, sfDir: String, name: String,
-      fn: Query): Double = {
-    val t0 = System.nanoTime()
-    val elapsed =
-      try {
+      fn: Query): Option[(Double, Stages.Record)] = {
+    val run =
+      try Some(Stages.record(spark) {
+        val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
-      } catch { case NonFatal(e) =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0
+      }) catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
       }
     Context.isolate(spark)
-    elapsed
+    run
   }
 
   /** Min of two measured runs per query, in name order: the second run
@@ -45,13 +48,27 @@ object Bench {
   def sweep(spark: SparkSession, sfDir: String,
       queries: Map[String, Query]): Sweep = {
     val runs = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      (name, timeOnce(spark, sfDir, name, fn), timeOnce(spark, sfDir, name, fn))
+      (name, Seq(timeOnce(spark, sfDir, name, fn), timeOnce(spark, sfDir, name, fn)))
     }
+    val best = runs.flatMap { case (name, rs) =>
+      rs.flatten.minByOption(_._1).map(name -> _) }.toMap
     Sweep(
-      runs.map { case (name, a, b) =>
-        name -> (if (a < 0 || b < 0) math.max(a, b) else math.min(a, b))
-      },
-      runs.collect { case (name, a, b) if a < 0 || b < 0 => name })
+      runs.map { case (name, _) => name -> best.get(name).fold(-1.0)(_._1) },
+      runs.collect { case (name, rs) if rs.exists(_.isEmpty) => name },
+      best.map { case (name, (_, rec)) => name -> rec })
+  }
+
+  /** Per-query jobs, stages that ran (a stage skipped through shuffle
+    * reuse runs nothing), successful tasks, shuffle read and spill — the
+    * BENCH_LOCAL.json `records` object. */
+  def recordsJson(s: Sweep): String = {
+    def mb(bytes: Long) =
+      BigDecimal(bytes / 1e6).setScale(3, BigDecimal.RoundingMode.HALF_UP)
+    s.records.toSeq.sortBy(_._1).map { case (name, r) =>
+      s""""$name":{"jobs":${r.jobs.size},"stages":${r.stages.count(_.tasks.nonEmpty)},""" +
+        s""""tasks":${r.tasks},"shuffle_read_mb":${mb(r.shuffleReadBytes)},""" +
+        s""""spill_mb":${mb(r.spillBytes)}}"""
+    }.mkString("{", ",", "}")
   }
 
   /** The compact headline line (the first line Bench prints). */
@@ -129,12 +146,12 @@ object Bench {
       val out = java.nio.file.Paths.get(repoRoot, "BENCH_LOCAL.json")
       // ADVICE r12: carry the environment alongside the numbers so
       // cross-round comparisons of this artifact are like-for-like
-      // (cpus, heap, gc isolation), plus the names of failed queries.
-      // Extra keys in the SIDE artifact only; the stdout full line keeps
-      // its exact shape.
+      // (cpus, heap, gc isolation), plus the names of failed queries and
+      // each query's stage record. Extra keys in the SIDE artifact only;
+      // the stdout full line keeps its exact shape.
       val failed = results.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       val envLine = fullLine.dropRight(1) +
-        s""","cpus":$cpus,"heap_max_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},"gc_between":true,"failed":$failed}"""
+        s""","cpus":$cpus,"heap_max_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},"gc_between":true,"failed":$failed,"records":${recordsJson(results)}}"""
       java.nio.file.Files.writeString(out, envLine + "\n")
       System.err.println(s"[bench] wrote $out")
     } catch { case NonFatal(e) =>

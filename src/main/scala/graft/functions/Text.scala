@@ -1250,7 +1250,7 @@ object Text {
     * one-merge-per-round training (FunctionsSpec differential-tests this
     * against an independent driver-side trainer at k=60) — while driver
     * round trips drop from k to the batch count. The bound, measured
-    * (tools/BpeProfile, SCALE.md): exact BPE stays Θ(k) ROUNDS in the
+    * (SCALE.md, BPE train cost-curve table): exact BPE stays Θ(k) ROUNDS in the
     * worst case (count ties between adjacent pairs force batch stops),
     * with a ~2.6-2.9x constant-factor win in practice — k=1000 trains in
     * 389 rounds / 173 s on a 200k-doc high-entropy corpus, k=100 in 35
@@ -1272,14 +1272,7 @@ object Text {
     * the merges). Pair counts weight by word frequency and count every
     * adjacent index (standard trainer counting). */
   def bpeTrainMerges(docs: DataFrame, textCol: String = "text",
-      k: Int = 6): DataFrame =
-    bpeTrainMergesCounted(docs, textCol, k)._1
-
-  /** [[bpeTrainMerges]] plus the number of batched rounds it took — the
-    * driver-round-trip count tools/BpeProfile records in SCALE.md's
-    * train-side cost curve. */
-  private[graft] def bpeTrainMergesCounted(docs: DataFrame,
-      textCol: String = "text", k: Int = 6): (DataFrame, Int) = {
+      k: Int = 6): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val words = docs
@@ -1307,9 +1300,7 @@ object Text {
       .filter(col("c") =!= "").distinct()
       .collect().map(_.getString(0))
     var exhausted = false
-    var rounds = 0
     while (merges.size < k && !exhausted) {
-      rounds += 1
       val toks = vocab.select(col("freq"), split(trim(col("s")), " ").as("t"))
         .filter(size(col("t")) >= 2) // sequence(0,-1) would count DOWN
       val top = toks.select(col("freq"), explode(expr(
@@ -1376,10 +1367,9 @@ object Text {
           .localCheckpoint(true) // lineage cut per round, see above
       }
     }
-    (merges.toSeq.toDF("merge_rank", "lhs", "rhs", "freq")
+    merges.toSeq.toDF("merge_rank", "lhs", "rhs", "freq")
       .select(col("merge_rank"), col("lhs"), col("rhs"),
-        concat(col("lhs"), col("rhs")).as("merged"), col("freq")),
-      rounds)
+        concat(col("lhs"), col("rhs")).as("merged"), col("freq"))
   }
 
   /** [[bpeTrainMerges]] batching knobs: per round, collect this many

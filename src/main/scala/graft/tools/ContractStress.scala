@@ -1,8 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import scala.collection.mutable
+import graft.engine.Stages
 
 /** sf1-equivalent spot-run of the most expensive CONTRACT queries
   * (VERDICT r5 item 7): derives a 10x stress copy of EVERY driver table
@@ -84,73 +83,26 @@ object ContractStress {
       println(s"[stress] built ${factor}x table set at $outDir")
     }
 
-    // per task: (duration ms, GC ms, shuffle-read records, input records)
-    // — shuffle and file-scan records kept SEPARATE because they gate
-    // differently (see StageSkew)
-    val byStage = new mutable.HashMap[Int, mutable.ArrayBuffer[(Long, Long, Long, Long)]]()
-    val stageNames = new mutable.HashMap[Int, String]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        // only SUCCESSFUL attempts: a failed/killed attempt carries null
-        // metrics and would register as a 0-record task, deflating the
-        // record median and turning a balanced stage into a spurious
-        // "47000x record skew" gate failure under retry churn
-        if (e.taskInfo != null && e.taskInfo.successful &&
-            e.taskMetrics != null) byStage.synchronized {
-          byStage.getOrElseUpdate(e.stageId, mutable.ArrayBuffer.empty)
-            .append((e.taskInfo.duration, e.taskMetrics.jvmGCTime,
-              e.taskMetrics.shuffleReadMetrics.recordsRead,
-              e.taskMetrics.inputMetrics.recordsRead))
-        }
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        byStage.synchronized {
-          stageNames(e.stageInfo.stageId) = e.stageInfo.name
-        }
-    })
-    // GRAFT_STRESS_VERBOSE=1 → per-stage table (every stage >= 2s total)
-    // for diagnosing a failed skew gate: which stage, which shape
-    val verbose = sys.env.get("GRAFT_STRESS_VERBOSE").contains("1")
-
-    // task-end events arrive on the ASYNC listener bus — count() returns
-    // at job end, not event-drain end. Poll until the captured task count
-    // stops moving so the snapshot has every task (including the slowest,
-    // which is the one the skew gate exists to see) and late events can't
-    // bleed into the next query's cleared map.
-    def drainTaskEvents(): Unit = {
-      var prev = -1
-      var cur = byStage.synchronized(byStage.valuesIterator.map(_.size).sum)
-      var rounds = 0
-      while (cur != prev && rounds < 50) {
-        Thread.sleep(100)
-        prev = cur
-        cur = byStage.synchronized(byStage.valuesIterator.map(_.size).sum)
-        rounds += 1
-      }
-    }
-
     var failures = List.empty[String]
     println(f"${"query"}%-22s ${"wall_s"}%8s ${"rows"}%9s ${"tasks"}%7s ${"worst-stage max/med (ms, tasks)"}")
     for (n <- names) {
-      byStage.synchronized(byStage.clear())
       // time CONSTRUCTION + execution: stored-path queries (q_kn_*_stored,
       // q_ann_stored_*, q_stream_*) run their train/write actions eagerly
       // while the frame is built — timing only the final count() would
       // undersell them vs their in-memory siblings (VERDICT r9 item 6).
-      // Their stages also land in the listener map, so the skew gates see
-      // the whole query, not just the serving read.
-      val t0 = System.nanoTime()
-      val df = graft.SparkEntry.queries(n)(spark, outDir)
-      val rows = df.count()
-      val wall = (System.nanoTime() - t0) / 1e9
+      // Their stages also land in the record, so the skew gates see the
+      // whole query, not just the serving read.
+      val ((df, rows, wall), rec) = Stages.record(spark) {
+        val t0 = System.nanoTime()
+        val df = graft.SparkEntry.queries(n)(spark, outDir)
+        val rows = df.count()
+        (df, rows, (System.nanoTime() - t0) / 1e9)
+      }
       val sp = PlanAudit.singlePartitionViolations(PlanAudit.physicalPlan(df))
       if (sp.nonEmpty) failures ::= s"$n: ${sp.mkString("; ")}"
       graft.engine.Context.isolate(spark)
       if (rows == 0) failures ::= s"$n: zero rows at ${factor}x"
-      drainTaskEvents()
-      val stages = byStage.synchronized(byStage.view.mapValues(_.toSeq).toMap)
-      val nTasks = stages.valuesIterator.map(_.size).sum
-      val heavy = stages.filter(_._2.map(_._1).sum >= 2000)
+      val heavy = rec.stages.filter(_.tasks.map(_.durationMs).sum >= 2000)
       // Two skew measures per stage. RECORD skew (max/median task input
       // rows) is the 100 TB signal — it is what grows with data and what
       // salting/capping exist to bound. DURATION skew alone misfires on
@@ -181,8 +133,13 @@ object ContractStress {
       // rows that cost nothing extra to hold in one task at contract
       // scale will be re-split by the scanner at the scale where they
       // would start to cost.
-      case class StageSkew(sid: Int, n: Int, durs: Seq[Long],
-          shufRecs: Seq[Long], inRecs: Seq[Long], gcs: Seq[Long]) {
+      case class StageSkew(stage: Stages.Stage) {
+        val sid = stage.id
+        val n = stage.tasks.size
+        val durs = stage.tasks.map(_.durationMs).sorted
+        val shufRecs = stage.tasks.map(_.shuffleReadRecords).sorted
+        val inRecs = stage.tasks.map(_.inputRecords).sorted
+        val gcs = stage.tasks.map(_.gcMs).sorted
         val dMed = math.max(1L, durs(durs.size / 2))
         val dSkew = durs.last.toDouble / dMed
         private def skewOf(rs: Seq[Long]) =
@@ -207,10 +164,7 @@ object ContractStress {
         def computeSkewed: Boolean = (dMed >= 200 && dSkew > 4.0) ||
           (durs.last >= 5000 && dSkew > 20.0)
       }
-      val skews = heavy.toSeq.map { case (sid, ts) =>
-        StageSkew(sid, ts.size, ts.map(_._1).sorted, ts.map(_._3).sorted,
-          ts.map(_._4).sorted, ts.map(_._2).sorted)
-      }
+      val skews = heavy.map(StageSkew(_))
       for (s <- skews.filter(_.dataSkewed).sortBy(-_.gatingSkew).headOption)
         failures ::= f"$n: stage ${s.sid} ${s.gatingKind} record skew " +
           f"${s.gatingSkew}%.2fx (max ${s.gatingRecs.last} / med " +
@@ -223,17 +177,14 @@ object ContractStress {
         f"rec ${s.rSkew}%5.2fx dur ${s.dSkew}%5.2fx  " +
           f"(max ${s.durs.last}%6d / med ${s.dMed}%5d ms over ${s.n}%4d tasks)"
       }.getOrElse("no stage >= 2s")
-      println(f"$n%-22s $wall%8.2f $rows%9d $nTasks%7d  $w")
-      if (verbose) {
-        val names0 = byStage.synchronized(stageNames.toMap)
-        skews.sortBy(_.sid).foreach { s =>
-          println(f"  stage ${s.sid}%4d ${s.n}%4d tasks  sum ${s.durs.sum}%7d ms" +
-            f"  dur max ${s.durs.last}%6d med ${s.dMed}%5d (${s.dSkew}%5.2fx)" +
-            f"  rec max ${s.recs.last}%9d med ${s.rMed}%9d (${s.rSkew}%5.2fx)" +
-            f"  gc max ${s.gcs.last}%5d" +
-            s"  ${names0.getOrElse(s.sid, "?").take(60)}")
-        }
-      }
+      println(f"$n%-22s $wall%8.2f $rows%9d ${rec.tasks}%7d  $w")
+      // a fired skew gate names its stages, so the log diagnoses it
+      for (s <- skews.filter(s => s.dataSkewed || s.computeSkewed))
+        println(f"  [gate] stage ${s.sid}%4d ${s.n}%4d tasks" +
+          f"  dur max ${s.durs.last}%6d med ${s.dMed}%5d (${s.dSkew}%5.2fx)" +
+          f"  rec max ${s.recs.last}%9d med ${s.rMed}%9d (${s.rSkew}%5.2fx)" +
+          f"  gc max ${s.gcs.last}%5d" +
+          s"  ${s.stage.name.takeWhile(_ != '\n').take(60)}")
     }
     spark.stop()
     if (failures.nonEmpty) {

@@ -143,8 +143,9 @@ object PlanAudit {
 
     // Per-query cost annotations that must survive PLANS.md regeneration.
     val costNotes = Map(
-      "q_from_json" -> ("cost note (r7, JsonCost tool): isolated timings at " +
-        "sf0.1/local[32] — from_json(schema).k 0.29 s ≈ get_json_object 0.30 s; " +
+      "q_from_json" -> ("cost note (r7, JsonCost tool, last in commit " +
+        "c4e3c19): isolated timings at sf0.1/local[32] — " +
+        "from_json(schema).k 0.29 s ≈ get_json_object 0.30 s; " +
         "FAILFAST, full-struct-out and 2-field struct reuse all within noise; " +
         "contract query (with orderBy) 0.85 s. The 5.09 s in BENCH_r06 was " +
         "sweep-context interference, not the parse: JsonToStructs IS " +

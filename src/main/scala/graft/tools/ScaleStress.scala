@@ -2,8 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import scala.collection.mutable
+import graft.engine.Stages
 
 /** sf1-scale skew stress for the dedup spine (VERDICT r4 item 5).
   *
@@ -20,7 +19,8 @@ import scala.collection.mutable
   * bucket caps) — the contract queries deliberately uncap
   * (maxBucketSize=100000, maxDocFreq=200-uncapped) so their O(n²) DuckDB
   * twins stay exact, which is the oracle trade, not the production one.
-  * Reported per query: wall seconds, rows, task count, and the
+  * Reported per query (successful tasks only, from `Stages.record`):
+  * wall seconds, rows, task count, spill, and the
   * worst-stage skew = max/median task runtime within the heaviest
   * stages (stages with >= 2 s of total task time; tiny-task stages say
   * nothing about skew). SCALE.md gate: worst-stage max <= 4x median.
@@ -119,27 +119,6 @@ object ScaleStress {
         s"($repCap-member clusters x $nShards shards)")
     }
 
-    // (stageId -> task durations) per measured query, plus spill totals
-    val byStage = new mutable.HashMap[Int, mutable.ArrayBuffer[Long]]()
-    val stageName = new mutable.HashMap[Int, String]()
-    val spill = new Array[Long](2) // (memoryBytesSpilled, diskBytesSpilled)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskInfo != null) byStage.synchronized {
-          byStage.getOrElseUpdate(e.stageId, mutable.ArrayBuffer.empty)
-            .append(e.taskInfo.duration)
-          if (e.taskMetrics != null) {
-            spill(0) += e.taskMetrics.memoryBytesSpilled
-            spill(1) += e.taskMetrics.diskBytesSpilled
-          }
-        }
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        byStage.synchronized {
-          stageName(e.stageInfo.stageId) = e.stageInfo.name
-        }
-    })
-
     import graft.dedup.Dedup
     // lazy: an ANN-only run (docsNeeded=false) must not read the
     // documents stress corpus, which may not exist
@@ -152,7 +131,8 @@ object ScaleStress {
       // base corpus's naturally-hot minhash bands (boilerplate-like docs
       // sharing whole bands) ~100x, so in-bucket pair volume grows
       // quadratically — 2.83e9 raw / 3.7e8 under the default cap of
-      // 1000 (BucketProbe, 2026-08-15), whose verify join moves
+      // 1000 (2026-08-15; `Dedup.estimateMinhashCandidates` computes the
+      // capped figure), whose verify join moves
       // Θ(pairs x shingle bytes) ≈ 0.5 TB: fine spread over a cluster,
       // past one node's disk. The scale knob is the hot-bucket cap —
       // 64 keeps every true 10-member clique bucket intact while
@@ -189,47 +169,32 @@ object ScaleStress {
 
     def measure(name: String, mk: () => DataFrame): Unit = {
       if (!only.forall(_.contains(name))) return
-      byStage.synchronized { byStage.clear(); spill(0) = 0L; spill(1) = 0L }
-      val t0 = System.nanoTime()
-      val rows = mk().count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      graft.engine.Context.isolate(spark)
-      // task-end events arrive on the async listener bus after the job
-      // returns — poll until the captured count stops moving so the
-      // slowest task can't be missed and late events can't bleed into
-      // the next pipeline's cleared map
-      var prevN = -1
-      var curN = byStage.synchronized(byStage.valuesIterator.map(_.size).sum)
-      var drainRounds = 0
-      while (curN != prevN && drainRounds < 50) {
-        Thread.sleep(100)
-        prevN = curN
-        curN = byStage.synchronized(byStage.valuesIterator.map(_.size).sum)
-        drainRounds += 1
+      val ((rows, wall), rec) = Stages.record(spark) {
+        val t0 = System.nanoTime()
+        val rows = mk().count()
+        (rows, (System.nanoTime() - t0) / 1e9)
       }
-      val stages = byStage.synchronized(byStage.map { case (k, v) =>
-        (k, v.toSeq.sorted) }.toMap)
-      val names = byStage.synchronized(stageName.toMap)
-      val nTasks = stages.valuesIterator.map(_.size).sum
+      graft.engine.Context.isolate(spark)
       // stages with >= 2 s total task time carry the real work; report
       // the worst max/median ratio among them
-      val heavy = stages.filter(_._2.sum >= 2000)
-      val ranked = heavy.map { case (sid, ds) =>
-        val med = math.max(1L, ds(ds.size / 2))
-        (ds.last.toDouble / med, ds.last, med, ds.size, sid)
-      }.toSeq.sortBy(-_._1)
+      val ranked = rec.stages.map(st => (st, st.tasks.map(_.durationMs).sorted))
+        .filter(_._2.sum >= 2000).map { case (st, ds) =>
+          val med = math.max(1L, ds(ds.size / 2))
+          (ds.last.toDouble / med, ds.last, med, ds.size, st)
+        }.sortBy(-_._1)
       val w = ranked.headOption.map { case (r, mx, md, nt, _) =>
         f"$r%6.2fx  (max $mx%6d / med $md%5d over $nt%4d tasks)"
       }.getOrElse("no stage >= 2s")
-      val (sm, sd) = byStage.synchronized((spill(0), spill(1)))
-      println(f"$name%-18s $wall%8.2f $rows%9d $nTasks%7d ${sm / 1e6}%9.1f ${sd / 1e6}%9.1f  $w")
+      val sm = rec.stages.map(_.memorySpilled).sum
+      val sd = rec.stages.map(_.diskSpilled).sum
+      println(f"$name%-18s $wall%8.2f $rows%9d ${rec.tasks}%7d ${sm / 1e6}%9.1f ${sd / 1e6}%9.1f  $w")
       // attribution for anything past the 4x gate: name the offending
-      // stages (StageInfo.name carries the callsite) so a flagged ratio
+      // stages (the stage name carries the callsite) so a flagged ratio
       // is diagnosable from the log instead of needing a re-run
       ranked.takeWhile(_._1 > 4.0).take(3).foreach {
-        case (r, mx, md, nt, sid) =>
-          val nm = names.getOrElse(sid, "?").linesIterator.next().take(90)
-          println(f"  [skew>4x] stage $sid: $r%5.2fx max=$mx%6d med=$md%5d " +
+        case (r, mx, md, nt, st) =>
+          val nm = st.name.takeWhile(_ != '\n').take(90)
+          println(f"  [skew>4x] stage ${st.id}: $r%5.2fx max=$mx%6d med=$md%5d " +
             f"tasks=$nt%4d  $nm")
       }
     }

@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import scala.collection.mutable
-import graft.engine.Context
+import graft.engine.{Context, Stages}
 
 /** Drives the SPILL paths — the one 100 TB behavior a 128 GiB local run
   * never exercises naturally: at scale, sort/window/join buffers and
@@ -20,9 +18,9 @@ import graft.engine.Context
   *   - spark.sql.objectHashAggregate.sortBased.fallbackThreshold → ObjectHashAgg
   *     falls back to the spilling sort path after 128 distinct keys
   *
-  * Per query it reports wall, rows, and the measured memory/disk spill
-  * bytes from task metrics (gate: EVERY query here must actually spill —
-  * a zero means the experiment lost its teeth), then dumps each result
+  * Per query it reports wall, rows, and the memory/disk spill bytes of
+  * its successful tasks (gate: EVERY query here must actually spill — a
+  * zero means the experiment lost its teeth), then dumps each result
   * to parquet + oracle_sql.json so tools/check.py can prove the DuckDB
   * hashes are IDENTICAL under forced spilling.
   *
@@ -53,45 +51,20 @@ object SpillStress {
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"))
     new java.io.File(outDir).mkdirs()
 
-    case class Spill(var mem: Long = 0L, var disk: Long = 0L)
-    val byStage = new mutable.HashMap[Int, Spill]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) byStage.synchronized {
-          val s = byStage.getOrElseUpdate(e.stageId, Spill())
-          s.mem += e.taskMetrics.memoryBytesSpilled
-          s.disk += e.taskMetrics.diskBytesSpilled
-        }
-    })
-    def drain(): Unit = { // async listener bus: wait for the totals to settle
-      var prev = (-1L, -1L)
-      var cur = byStage.synchronized(
-        (byStage.valuesIterator.map(_.mem).sum, byStage.valuesIterator.map(_.disk).sum))
-      var rounds = 0
-      while (cur != prev && rounds < 50) {
-        Thread.sleep(100); prev = cur
-        cur = byStage.synchronized(
-          (byStage.valuesIterator.map(_.mem).sum, byStage.valuesIterator.map(_.disk).sum))
-        rounds += 1
-      }
-    }
-
     var failures = List.empty[String]
     println(f"${"query"}%-20s ${"wall_s"}%8s ${"rows"}%9s ${"spill_mem_MB"}%13s ${"spill_disk_MB"}%14s ${"spilled_stages"}%14s")
     for (n <- names) {
-      byStage.synchronized(byStage.clear())
-      val df = graft.SparkEntry.queries(n)(spark, sfDir)
-      val t0 = System.nanoTime()
-      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$n")
-      val wall = (System.nanoTime() - t0) / 1e9
+      val (wall, rec) = Stages.record(spark) {
+        val df = graft.SparkEntry.queries(n)(spark, sfDir)
+        val t0 = System.nanoTime()
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$n")
+        (System.nanoTime() - t0) / 1e9
+      }
       val rows = spark.read.parquet(s"$outDir/$n").count()
       Context.isolate(spark)
-      drain()
-      val (mem, disk, nStages) = byStage.synchronized {
-        (byStage.valuesIterator.map(_.mem).sum,
-          byStage.valuesIterator.map(_.disk).sum,
-          byStage.valuesIterator.count(s => s.mem + s.disk > 0))
-      }
+      val mem = rec.stages.map(_.memorySpilled).sum
+      val disk = rec.stages.map(_.diskSpilled).sum
+      val nStages = rec.stages.count(s => s.memorySpilled + s.diskSpilled > 0)
       if (mem + disk == 0L)
         failures ::= s"$n: no spill recorded — thresholds lost their teeth"
       println(f"$n%-20s $wall%8.2f $rows%9d ${mem / 1e6}%13.1f ${disk / 1e6}%14.1f $nStages%14d")

@@ -20,5 +20,11 @@ class BenchSpec extends AnyFunSuite {
     val line = Bench.shortLine(sweep, SparkFixture.sfDir)
     assert(line.contains("\"n_failed\":1"))
     assert(line.contains("\"n_queries\":2"))
+    // the stage record: the timed run's jobs for q_ok, nothing for q_boom
+    assert(sweep.records("q_ok").jobs.size >= 1)
+    assert(!sweep.records.contains("q_boom"))
+    val json = Bench.recordsJson(sweep)
+    assert(json.startsWith("{\"q_ok\":{\"jobs\":"))
+    assert(json.contains("\"spill_mb\":") && !json.contains("q_boom"))
   }
 }
