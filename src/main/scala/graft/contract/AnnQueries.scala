@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.dedup.Dedup
+import graft.engine.Context.scratch
 import graft.functions.native
 import graft.similarity.Ann
 

@@ -4,7 +4,7 @@ package contract
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.engine.Context
+import graft.engine.{Context, Fixpoint}
 
 import Shared._
 
@@ -207,12 +207,11 @@ object EvalQueries {
         .localCheckpoint())
       ctx.register("bt_mm", ctx.sql(
         "SELECT CAST(count(*) AS DOUBLE) AS m FROM bt_wtot"))
-      var prev = ctx.sql(
+      val init = ctx.sql(
         "SELECT i AS item, CAST(1.0 AS DOUBLE) AS strength FROM bt_wtot")
-        .localCheckpoint()
-      for (_ <- 1 to 3) {
+      val fitted = Fixpoint.iterate("sql_bradley_terry", init, 3) { (prev, _) =>
         ctx.register("bt_w", prev)
-        prev = ctx.sql("""
+        ctx.sql("""
           WITH d AS (
             SELECT nt.i,
               aggregate(sort_array(collect_list(named_struct(
@@ -233,9 +232,8 @@ object EvalQueries {
             FROM raw)
           SELECT item, raw * mm.m / t.t AS strength
           FROM raw CROSS JOIN t CROSS JOIN bt_mm mm""")
-          .localCheckpoint()
-      }
-      ctx.register("bt_final", prev)
+      }._1
+      ctx.register("bt_final", fitted)
       ctx.sql("""SELECT item, round(strength, 6) AS strength
         FROM bt_final ORDER BY item""")
     },

@@ -14,35 +14,6 @@ object Shared {
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** Per-PROCESS scratch root for queries that stage intermediate
-    * stores/models on local disk (stored-index probes, stored LM models,
-    * sink round trips). Suffixing with the JVM pid keeps two sweeps
-    * running concurrently on one host from overwriting each other's
-    * stores mid-probe; within a process the overwrite-per-run semantics
-    * (bounded disk across repeated sweeps) are unchanged. A shutdown
-    * hook deletes the root so repeated processes don't accumulate dead
-    * scratch trees. */
-  private lazy val scratchRoot: String = {
-    val d = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_scratch_${ProcessHandle.current().pid()}")
-    d.mkdirs()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(d.toPath)))
-    d.getAbsolutePath
-  }
-
-  private[graft] def scratch(name: String): String = s"$scratchRoot/$name"
-
-  /** Best-effort recursive delete, deepest paths first: a failure to clean
-    * must never fail the query that succeeded. NonFatal only: a VM error
-    * or interrupt in cleanup must propagate (ADVICE r9 / VERDICT r10). */
-  private[graft] def deleteTree(root: java.nio.file.Path): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    } catch { case scala.util.control.NonFatal(_) => () }
-
   /** Exact decimal view of a 2-dp monetary/quantity double. */
   private[graft] def dec2(c: Column): Column = c.cast(DecimalType(12, 2))
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.engine.Context
+import graft.engine.Context.scratch
 import graft.functions.native
 
 import Shared._

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.engine.Context.{deleteTree, scratch}
 import graft.functions.native
 import graft.similarity.Ann
 
@@ -19,7 +20,7 @@ object StreamingQueries {
     * memory sink — see Streams.runToMemoryPhased): a bench/verify sweep
     * runs hundreds of these per JVM and must not leak one full table
     * copy of disk per stream query per sweep. Deletion is best-effort
-    * ([[Shared.deleteTree]]). */
+    * ([[graft.engine.Context.deleteTree]]). */
   private def withTempFeed(prefix: String)(body: String => DataFrame): DataFrame = {
     val feed = java.nio.file.Files.createTempDirectory(prefix)
     try body(feed.toString)

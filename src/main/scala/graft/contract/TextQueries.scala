@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.dedup.Dedup
 import graft.engine.Context
+import graft.engine.Context.scratch
 import graft.functions.native
 
 import Shared._

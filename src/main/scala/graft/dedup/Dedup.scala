@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Context
 import graft.functions.native
 
 /** Distributed deduplication for training-data pipelines: exact, MinHash+LSH,
@@ -225,22 +226,6 @@ object Dedup {
     chooseBucketCap(docs, textCol, idCol, numHashes, bands, shingle,
       pairBudget = Long.MaxValue, capLadder = Seq(maxBucketSize))._2
 
-  /** The banded bucket-size table both the estimator and the chooser
-    * price: ONE place owns the zero-shingle exclusion and the banding,
-    * so the budgeted join is always the join [[minhashVerifiedPairs]]
-    * actually runs. */
-  private def bandedBucketSizes(docs: DataFrame, textCol: String,
-      idCol: String, numHashes: Int, bands: Int, shingle: Int): DataFrame =
-    docs
-      // same zero-shingle exclusion as the pipeline (such docs never
-      // reach its banding, so they must not inflate the estimate)
-      .filter(size(native.char_shingle_hashes(col(textCol), shingle)) > 0)
-      .select(col(idCol).as("id"),
-        posexplode(native.minhash_bands(
-          minhashSignature(col(textCol), numHashes, shingle), bands))
-          .as(Seq("band_id", "band_hash")))
-      .groupBy("band_id", "band_hash").agg(count(lit(1)).as("n"))
-
   /** Corpus-aware bucket-cap chooser: evaluates the capped candidate-pair
     * ceiling ([[estimateMinhashCandidates]]) for every rung of a cap
     * ladder in ONE aggregate pass and returns the largest cap whose
@@ -259,12 +244,27 @@ object Dedup {
   def chooseBucketCap(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", numHashes: Int = 64, bands: Int = 16,
       shingle: Int = 5, pairBudget: Long = 100000000L,
-      capLadder: Seq[Int] = Seq(16, 64, 256, 1000, 4000)): (Int, Long) = {
+      capLadder: Seq[Int] = Seq(16, 64, 256, 1000, 4000)): (Int, Long) =
+    pickBucketCap(
+      minhashFeatures(docs, textCol, idCol, numHashes, bands, shingle),
+      pairBudget, capLadder)
+
+  /** The ladder evaluation over a [[minhashFeatures]] table — the same
+    * zero-shingle exclusion and banding as the pipeline, so the budgeted
+    * join is always the join [[minhashVerifiedPairs]] actually runs: the
+    * largest rung whose candidate-pair ceiling fits `pairBudget`, with
+    * that ceiling, or the smallest rung with its over-budget ceiling. */
+  private def pickBucketCap(feat: DataFrame, pairBudget: Long,
+      capLadder: Seq[Int]): (Int, Long) = {
     require(capLadder.nonEmpty, "capLadder must not be empty")
     require(capLadder == capLadder.sorted && capLadder.distinct == capLadder,
       s"capLadder must be strictly increasing, got $capLadder")
     require(pairBudget > 0, s"pairBudget must be positive, got $pairBudget")
-    val sizes = bandedBucketSizes(docs, textCol, idCol, numHashes, bands, shingle)
+    // only (band, hash) keys travel: signatures and shingle arrays are
+    // pruned before the bucket-size shuffle
+    val sizes = feat
+      .select(posexplode(col("bh")).as(Seq("band_id", "band_hash")))
+      .groupBy("band_id", "band_hash").agg(count(lit(1)).as("n"))
     // one wide aggregate row: Σ n(n−1)/2 over buckets surviving each rung
     val rungCols = capLadder.map(c =>
       coalesce(sum(when(col("n") <= c, col("n") * (col("n") - 1) / 2)),
@@ -290,41 +290,24 @@ object Dedup {
       shingle: Int = 5, threshold: Double = 0.7,
       pairBudget: Long = 100000000L,
       capLadder: Seq[Int] = Seq(16, 64, 256, 1000, 4000)): DataFrame = {
-    require(capLadder.nonEmpty, "capLadder must not be empty")
-    require(capLadder == capLadder.sorted && capLadder.distinct == capLadder,
-      s"capLadder must be strictly increasing, got $capLadder")
-    require(pairBudget > 0, s"pairBudget must be positive, got $pairBudget")
     // ONE kernel pass for pre-flight AND pipeline: the ladder is priced
     // over the same persisted feature table the verified pipeline then
-    // reads — previously chooseBucketCap ran the minhash + shingle
-    // kernels over the corpus a second time just to size the buckets
-    // (guide §1.2: don't compute things twice). The bucket-size table is
-    // identical to bandedBucketSizes' by construction (same zero-shingle
-    // exclusion, same banding), so the chosen rung — and therefore the
-    // emitted pair set — is unchanged.
+    // reads (guide §1.2: don't compute things twice)
     val feat = minhashFeatures(docs, textCol, idCol, numHashes, bands, shingle)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = feat
-      .select(posexplode(col("bh")).as(Seq("band_id", "band_hash")))
-      .groupBy("band_id", "band_hash").agg(count(lit(1)).as("n"))
-    val rungCols = capLadder.map(c =>
-      coalesce(sum(when(col("n") <= c, col("n") * (col("n") - 1) / 2)),
-        lit(0L)).cast(org.apache.spark.sql.types.LongType).as(s"cap_$c"))
-    val row = sizes.agg(rungCols.head, rungCols.tail: _*).head()
-    val ceilings = capLadder.indices.map(i => capLadder(i) -> row.getLong(i))
-    val (cap, ceiling) =
-      ceilings.reverse.find(_._2 <= pairBudget).getOrElse(ceilings.head)
-    if (ceiling > pairBudget) {
-      // the refusal path must not leak the cached features (the
-      // knnGraphAuto unpersist-before-throw rule)
+    // a refusal (bad ladder or budget, or over budget) must not leak the
+    // cached features (the knnGraphAuto unpersist-before-throw rule)
+    try {
+      val (cap, ceiling) = pickBucketCap(feat, pairBudget, capLadder)
+      require(ceiling <= pairBudget, s"even the smallest bucket cap " +
+        s"${capLadder.head} admits $ceiling candidate pairs (> budget " +
+        s"$pairBudget): run exact dedup on the boilerplate first or " +
+        "raise the budget explicitly")
+      verifiedPairsOfFeatures(feat, threshold, cap)
+    } catch { case e: IllegalArgumentException =>
       feat.unpersist(blocking = false)
-      throw new IllegalArgumentException(
-        s"requirement failed: even the smallest bucket cap " +
-          s"${capLadder.head} admits $ceiling candidate pairs (> budget " +
-          s"$pairBudget): run exact dedup on the boilerplate first or " +
-          "raise the budget explicitly")
+      throw e
     }
-    verifiedPairsOfFeatures(feat, threshold, cap)
   }
 
   // ---------------------------------------------------------------- SimHash
@@ -757,8 +740,9 @@ object Dedup {
     * iteration — an executor loss late in the loop would recompute from the
     * adjacency shuffle. So every `checkpointEvery` rounds the new labels
     * RDD is reliably checkpointed (cutting the chain at that round); the
-    * checkpoint dir defaults to a session-scoped temp dir if the context
-    * has none set. Pass checkpointEvery = 0 to disable.
+    * checkpoint dir defaults to a dir under the per-process scratch root
+    * (deleted at JVM exit) if the context has none set. Pass
+    * checkpointEvery = 0 to disable.
     *
     * `nodes`: one column `id`. `edges`: columns `src`, `dst` (undirected;
     * both orientations are derived internally). Output: (id, component).
@@ -768,8 +752,7 @@ object Dedup {
     val spark = nodes.sparkSession
     import spark.implicits._
     if (checkpointEvery > 0 && spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString)
+      spark.sparkContext.setCheckpointDir(Context.scratch("cc_ckpt"))
     val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Partition width sized by the DATA, not the core count: the loop's
     // two shuffles per round run over the label table, whose volume

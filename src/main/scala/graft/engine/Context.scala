@@ -176,9 +176,9 @@ object Context {
   }
 
   /** Per-query state isolation; callers run it after a query's timing
-    * ends, never inside it. clearCache drops DataFrame persists; iterative
-    * operators (BFS/CC/PageRank) also leave RDD persists and
-    * localCheckpoint blocks behind — across a 300-query sweep those
+    * ends, never inside it. clearCache drops DataFrame persists; CC's RDD
+    * persists, each [[Fixpoint]] loop's last round and loop-input
+    * localCheckpoints stay behind — across a 300-query sweep those
     * accumulate into block-manager memory pressure that taxes every later
     * query (dedup family measured 2x slower in-session than isolated
     * without this). The explicit GC then lets ContextCleaner's
@@ -193,6 +193,35 @@ object Context {
     System.gc()
     Thread.sleep(50)
   }
+
+  /** Per-PROCESS scratch root for queries that stage intermediate
+    * stores/models on local disk (stored-index probes, stored LM models,
+    * sink round trips, connectedComponents' checkpoints). Suffixing with the JVM pid keeps two sweeps
+    * running concurrently on one host from overwriting each other's
+    * stores mid-probe; within a process the overwrite-per-run semantics
+    * (bounded disk across repeated sweeps) are unchanged. A shutdown
+    * hook deletes the root so repeated processes don't accumulate dead
+    * scratch trees. */
+  private lazy val scratchRoot: String = {
+    val d = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_scratch_${ProcessHandle.current().pid()}")
+    d.mkdirs()
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(d.toPath)))
+    d.getAbsolutePath
+  }
+
+  private[graft] def scratch(name: String): String = s"$scratchRoot/$name"
+
+  /** Best-effort recursive delete, deepest paths first: a failure to clean
+    * must never fail the query that succeeded. NonFatal only: a VM error
+    * or interrupt in cleanup must propagate (ADVICE r9 / VERDICT r10). */
+  private[graft] def deleteTree(root: java.nio.file.Path): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(root).iterator().asScala.toSeq
+        .sortBy(-_.getNameCount)
+        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    } catch { case scala.util.control.NonFatal(_) => () }
 
   /** One Context per session (weak keys — sessions are not retained). Temp
     * views are session-global, so two Contexts per session could silently

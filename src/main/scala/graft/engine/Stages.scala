@@ -28,9 +28,10 @@ object Stages {
       shuffleReadBytes: Long, shuffleWriteBytes: Long,
       memorySpilled: Long, diskSpilled: Long, tasks: Seq[Task])
 
-  /** A job with its call-site name; start and end in epoch ms (-1 if
-    * unknown). */
-  final case class Job(id: Int, name: String, start: Long, end: Long)
+  /** A job with its call-site name and its `setJobDescription` label
+    * (e.g. "sssp round 3"); start and end in epoch ms (-1 if unknown). */
+  final case class Job(id: Int, name: String, description: Option[String],
+      start: Long, end: Long)
 
   final case class Record(jobs: Seq[Job], stages: Seq[Stage]) {
     def tasks: Int = stages.map(_.tasks.size).sum
@@ -49,7 +50,8 @@ object Stages {
     Bridge.waitUntilEmpty(sc)
     def ms(d: Option[java.util.Date]) = d.fold(-1L)(_.getTime)
     val jobs = Bridge.jobs(sc).filter(_.jobId > jobMark).sortBy(_.jobId)
-      .map(j => Job(j.jobId, j.name, ms(j.submissionTime), ms(j.completionTime)))
+      .map(j => Job(j.jobId, j.name, j.description,
+        ms(j.submissionTime), ms(j.completionTime)))
     val stages = Bridge.stages(sc).filter(_.stageId > stageMark)
       .groupBy(_.stageId).toSeq.sortBy(_._1).map { case (id, attempts) =>
         val done = attempts.flatMap(Bridge.successfulTasks(sc, _))

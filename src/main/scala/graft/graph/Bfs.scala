@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Multi-source breadth-first search over a directed link graph — hop
   * distance from a seed set. The crawl-pipeline use is seed-distance
@@ -12,49 +11,20 @@ import org.apache.spark.sql.types.LongType
   * (its relational surface ends at joins — src/plan/logical/join.rs), so
   * this is a pure extension.
   *
-  * Algorithm: level-synchronous BFS. `visited` holds (node_id, hop) with
-  * the FIRST (= minimum) hop each node was reached at; each round joins
-  * the previous frontier to the edge list, anti-joins the visited set,
-  * and unions the survivors in at hop i. Every join is an equi-join on a
-  * node id — hash-partitioned, no cartesian — and the frontier is the
-  * only thing shuffled per round, so a round costs O(|frontier| +
-  * out-edges(frontier)) regardless of graph size.
-  *
-  * Scale shape: at web scale the frontier saturates within ~6 rounds on
-  * an expander-ish link graph, so `maxHops` bounds both work and state.
-  * Lineage is cut with a localCheckpoint on each round's frontier (the
-  * visited union otherwise stacks maxHops plans deep), mirroring the
-  * reliable-checkpoint treatment in Dedup.connectedComponents. */
+  * Algorithm: level-synchronous BFS is [[Sssp]] with unit weights: the
+  * nodes whose cost dropped in a round are exactly those first reached in
+  * it (the frontier), so round i joins the frontier to the edge list and
+  * keeps the FIRST (= minimum) hop per node; the loop (jobs labelled
+  * `sssp round <i>`) stops after a round that reached no new node. At
+  * web scale the frontier saturates within ~6 rounds on an expander-ish
+  * link graph, so `maxHops` bounds both work and state. */
 object Bfs {
 
   /** Hop distance from `sources` (a (node_id) frame, hop 0) along
     * directed edges (src, dst), capped at `maxHops`. Returns
     * (node_id, hop) for every reached node; unreached nodes are absent.
     * Seeds reachable from other seeds keep hop 0 — min semantics. */
-  def hops(edges: DataFrame, sources: DataFrame, maxHops: Int): DataFrame = {
-    require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).persist(level)
-    var visited = sources.select(col("node_id"))
-      .distinct().withColumn("hop", lit(0L)).persist(level)
-    var frontier = visited
-    var i = 1
-    var done = false
-    while (i <= maxHops && !done) {
-      val next = frontier
-        .join(e, frontier("node_id") === e("src"))
-        .select(col("dst").as("node_id")).distinct()
-        .join(visited, Seq("node_id"), "left_anti")
-        .withColumn("hop", lit(i.toLong).cast(LongType))
-        .localCheckpoint(true) // cut lineage; materializes the frontier
-      if (next.isEmpty) done = true // frontier exhausted before the cap
-      else {
-        visited = visited.union(next).persist(level)
-        frontier = next
-      }
-      i += 1
-    }
-    e.unpersist(blocking = false)
-    visited
-  }
+  def hops(edges: DataFrame, sources: DataFrame, maxHops: Int): DataFrame =
+    Sssp.cheapestPaths(edges.withColumn("w", lit(1L)), sources, maxHops)
+      .select(col("node_id"), col("cost").as("hop"))
 }

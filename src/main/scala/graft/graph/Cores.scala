@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.Fixpoint
 
 /** Bounded-round k-core peeling: repeatedly remove nodes whose degree in
   * the SURVIVING subgraph is below k. The fixpoint of this process is the
@@ -12,8 +13,8 @@ import org.apache.spark.sql.functions._
   * reproducible by an unrolled oracle (no data-dependent recursion), so
   * the contract query stays hash-checkable.
   *
-  * The loop body is DataFrame with a `localCheckpoint` lineage cut per
-  * round (the BPE-trainer round idiom): the cut is what makes a DF loop
+  * The loop body is DataFrame, one [[graft.engine.Fixpoint]] round per
+  * peel, and the round's `localCheckpoint` cut is what makes a DF loop
   * viable — without it the unrolled logical tree replicates the upstream
   * edge build ~4^rounds times and analysis/codegen dominates (the
   * r4-era measurement that originally forced this loop onto RDDs). The
@@ -24,7 +25,10 @@ import org.apache.spark.sql.functions._
   * two semi-joins whose keep side AQE broadcasts (zero edge shuffles on
   * the surviving-set side, Tungsten rows instead of boxed pairs) — and
   * at cluster scale a too-big keep set degrades gracefully to a shuffle
-  * join instead of OOMing a broadcast.
+  * join instead of OOMing a broadcast. A round's state is the degree
+  * table of the surviving subgraph (a peeled node never returns, so each
+  * round peels the canonical edges by the last table); once no node in
+  * it is below k it is the k-core, and the loop stops.
   *
   * Returns (node_id, deg) for nodes surviving `rounds` peels, with their
   * degree in the final surviving subgraph. */
@@ -33,11 +37,11 @@ object Cores {
   def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
     // canonical undirected edges, materialized ONCE (eager checkpoint):
-    // every round's degree count and both semi-join legs read the cached
-    // blocks, never the upstream edge build
+    // every round's semi-joins read the cached blocks, never the upstream
+    // edge build
     // long casts match the former RDD loop's as[(Long, Long)] encoder, so
     // the output schema is identical for any integral edge column type
-    var cur = edges
+    val canon = edges
       .select(least(col("src"), col("dst")).cast("long").as("a"),
         greatest(col("src"), col("dst")).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
@@ -46,14 +50,12 @@ object Cores {
     def degrees(df: DataFrame): DataFrame =
       df.select(explode(array(col("a"), col("b"))).as("node_id"))
         .groupBy("node_id").agg(count(lit(1)).as("deg"))
-    for (_ <- 1 to rounds) {
-      val keep = degrees(cur).filter(col("deg") >= k).select("node_id")
-      cur = cur
+    Fixpoint.iterate("kcore", degrees(canon), rounds,
+        changed = col("deg") < k) { (deg, _) =>
+      val keep = deg.filter(col("deg") >= k).select("node_id")
+      degrees(canon
         .join(keep.select(col("node_id").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("node_id").as("b")), Seq("b"), "left_semi")
-        .select("a", "b")
-        .localCheckpoint(true) // lineage cut per round, see above
-    }
-    degrees(cur).filter(col("deg") >= k)
+        .join(keep.select(col("node_id").as("b")), Seq("b"), "left_semi"))
+    }._1.filter(col("deg") >= k)
   }
 }

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.Fixpoint
 
 /** Synchronous label propagation for community detection (Raghavan,
   * Albert & Kumara 2007): every node starts labeled with its own id;
@@ -16,8 +17,8 @@ import org.apache.spark.sql.functions._
   * the src id) + two hash aggregates — the per-(node,label) count, then
   * the per-node argmax as `max(struct(count, -label))` (no window, no
   * sort; partial/final aggregation applies). Rounds are fixed and small
-  * (label prop converges in a handful of sweeps); each round's labels
-  * are localCheckpointed, cutting lineage exactly like [[Bfs.hops]].
+  * (label prop converges in a handful of sweeps); each is one
+  * [[graft.engine.Fixpoint]] round, like [[Bfs.hops]]'s.
   * The reference engine has no graph surface — pure extension. */
 object LabelProp {
 
@@ -30,20 +31,18 @@ object LabelProp {
     val sym = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .persist(level)
-    var labels = nodes.select(col("id"), col("id").as("lab"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
+    val init = nodes.select(col("id"), col("id").as("lab"))
+    val labeled = Fixpoint.iterate("label_prop", init, iters) { (labels, _) =>
       val cnt = sym.join(labels, sym("src") === labels("id"))
         .groupBy(col("dst"), col("lab")).agg(count(lit(1)).as("c"))
       // argmax with smallest-label tie: max of (count, -label) lexicographic
       val pick = cnt.groupBy(col("dst"))
         .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
         .select(col("dst").as("pid"), (-col("m.nl")).as("plab"))
-      labels = labels.join(pick, labels("id") === pick("pid"), "left")
+      labels.join(pick, labels("id") === pick("pid"), "left")
         .select(col("id"), coalesce(col("plab"), col("lab")).as("lab"))
-        .localCheckpoint(true)
-    }
+    }._1
     sym.unpersist(blocking = false)
-    labels.select(col("id"), col("lab").as("label"))
+    labeled.select(col("id"), col("lab").as("label"))
   }
 }

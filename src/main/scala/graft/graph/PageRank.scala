@@ -20,9 +20,9 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: each iteration is one co-keyed join (edges x ranks on
   * src — AQE picks SMJ/broadcast by size), one shuffle to group by dst,
-  * and one left join back to the node list; lineage is cut with a
-  * localCheckpoint every `checkpointEvery` rounds exactly like
-  * connectedComponents (ref has no graph ops at all —
+  * and one left join back to the node list. Nothing is materialized
+  * between rounds: callers run few (the contract queries run 3), so the
+  * whole power iteration stays one lazy plan (ref has no graph ops at all —
   * src/io/reader/listing/table.rs is its whole storage story). */
 object PageRank {
 
@@ -31,11 +31,11 @@ object PageRank {
     * (their mass is NOT redistributed — matches the oracle twin), nodes
     * with no in-edges keep the base term. Returns (node_id, rank). */
   def run(nodes: DataFrame, edges: DataFrame, nNodes: Long, iters: Int,
-      d: Double = 0.85, checkpointEvery: Int = 8): DataFrame = {
+      d: Double = 0.85): DataFrame = {
     val base = lit((1.0 - d) / nNodes)
     val init = lit(1.0 / nNodes)
     iterate(nodes.select(col("node_id"), base.as("base"), init.as("init")),
-      edges, iters, d, checkpointEvery)
+      edges, iters, d)
   }
 
   /** Personalized PageRank / TrustRank (Gyöngyi et al. 2004): the teleport
@@ -48,8 +48,7 @@ object PageRank {
     * list as a precomputed base column, so the loop stays two equi-join
     * shuffles per round. */
   def personalizedRun(nodes: DataFrame, edges: DataFrame, seeds: DataFrame,
-      nSeeds: Long, iters: Int, d: Double = 0.85,
-      checkpointEvery: Int = 8): DataFrame = {
+      nSeeds: Long, iters: Int, d: Double = 0.85): DataFrame = {
     val withSeed = nodes.join(
       seeds.select(col("node_id"), lit(true).as("is_seed")),
       Seq("node_id"), "left")
@@ -58,19 +57,18 @@ object PageRank {
         .otherwise(lit(0.0)).as("base"),
       when(col("is_seed"), lit(1.0 / nSeeds))
         .otherwise(lit(0.0)).as("init"))
-    iterate(nb, edges, iters, d, checkpointEvery)
+    iterate(nb, edges, iters, d)
   }
 
   /** Shared power-iteration loop over (node_id, base, init): one co-keyed
     * join edges×ranks on src, one ordered-fold sum grouped by dst, one
-    * left join back to the node list per round; lineage cut every
-    * `checkpointEvery` rounds. */
+    * left join back to the node list per round. */
   private def iterate(nodesWithBase: DataFrame, edges: DataFrame,
-      iters: Int, d: Double, checkpointEvery: Int): DataFrame = {
+      iters: Int, d: Double): DataFrame = {
     val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
     val withDeg = edges.join(outdeg, "src")
-    var ranks = nodesWithBase.select(col("node_id"), col("init").as("rank"))
-    for (i <- 1 to iters) {
+    val init = nodesWithBase.select(col("node_id"), col("init").as("rank"))
+    (1 to iters).foldLeft(init) { (ranks, _) =>
       val contribs = withDeg
         .join(ranks, withDeg("src") === ranks("node_id"))
         .select(col("dst"), col("src"),
@@ -79,13 +77,10 @@ object PageRank {
         .agg(aggregate(
           sort_array(collect_list(struct(col("src"), col("c")))),
           lit(0.0), (acc, x) => acc + x.getField("c")).as("s"))
-      ranks = nodesWithBase
+      nodesWithBase
         .join(summed, nodesWithBase("node_id") === summed("dst"), "left")
         .select(nodesWithBase("node_id"),
           (col("base") + lit(d) * coalesce(col("s"), lit(0.0))).as("rank"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-        ranks = ranks.localCheckpoint()
     }
-    ranks
   }
 }

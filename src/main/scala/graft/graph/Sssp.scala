@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.engine.Fixpoint
 
 /** Bounded-hop single/multi-source cheapest paths (Bellman-Ford rounds)
   * over a weighted directed graph — the weighted completion of [[Bfs]]:
@@ -11,17 +12,21 @@ import org.apache.spark.sql.types.LongType
   * cross-host hops) for trust/priority priors.
   *
   * Algorithm: `maxHops` level-synchronous relax rounds. Round i joins the
-  * current best-cost table to the edge list (equi-join on the node id —
-  * hash-partitioned, never cartesian) and keeps the per-node min of the
-  * old and relaxed costs; after k rounds the table holds EXACTLY
-  * min-cost-over-paths-with-≤k-hops per reached node, which is what the
-  * recursive-CTE oracle computes. With non-negative weights and
-  * maxHops ≥ |V|−1 this is full SSSP; the cap bounds work and state the
-  * same way BFS's does.
+  * nodes whose cost dropped in round i−1 (the seeds in round 1) to the
+  * edge list (equi-join on the node id — hash-partitioned, never
+  * cartesian) and keeps the per-node min of the old and relaxed costs. A
+  * node whose cost did not drop was already relaxed at that cost, so
+  * after k rounds the table holds EXACTLY min-cost-over-paths-with-≤k-hops
+  * per reached node, which is what the recursive-CTE oracle computes.
+  * With non-negative weights and maxHops ≥ |V|−1 this is full SSSP; the
+  * cap bounds work and state.
   *
-  * Scale shape: per round one shuffle of (reached nodes × out-edges),
-  * one min-aggregate; lineage cut per round with localCheckpoint like
-  * Bfs/connectedComponents. */
+  * Scale shape: per round one shuffle of (dropped nodes × out-edges) and
+  * one min-aggregate over the reached nodes. Rounds run through
+  * [[graft.engine.Fixpoint]]: each is one action, and the loop stops
+  * after a round in which no cost dropped — the table is then the full
+  * fixpoint, so later rounds (and the oracle's remaining hops) could not
+  * change it. */
 object Sssp {
 
   /** Cheapest ≤`maxHops`-hop cost from `sources` (node_id rows, cost 0)
@@ -31,31 +36,26 @@ object Sssp {
   def cheapestPaths(edges: DataFrame, sources: DataFrame,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val e = edges.select(col("src"), col("dst"), col("w").cast(LongType))
-      .persist(level)
-    var best = sources.select(col("node_id")).distinct()
-      .withColumn("cost", lit(0L)).persist(level)
-    // MEASURED AND REJECTED (r13): cutting lineage every OTHER round
-    // (skipped cuts double the round subtree — `best` rides both the
-    // relax join and the union — with exchange reuse deduping at
-    // execution) was supposed to halve the driver barriers. JobProfile
-    // at sf0.1/local[32]: 22 → 26 jobs (the uncut round's extra
-    // shuffles surface as MORE AQE stage-jobs at the next cut), wall
-    // 1.09 → 1.04 s isolated min-of-3 — a wash with added complexity,
-    // so the one-cut-per-round shape stays.
-    var i = 1
-    while (i <= maxHops) {
-      val relaxed = best.join(e, best("node_id") === e("src"))
-        .select(col("dst").as("node_id"), (col("cost") + col("w")).as("cost"))
-      val next = best.unionByName(relaxed)
-        .groupBy("node_id").agg(min(col("cost")).as("cost"))
-        .localCheckpoint(true) // cut lineage; materializes the round
-      best.unpersist(blocking = false)
-      best = next
-      i += 1
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val seeds = sources.select(col("node_id")).distinct()
+      .select(col("node_id"), lit(0L).as("cost"), lit(true).as("dropped"))
+    val (cheapest, _) = Fixpoint.iterate("sssp", seeds, maxHops,
+        changed = col("dropped")) { (best, _) =>
+      val relaxed = best.filter(col("dropped"))
+        .join(e, col("node_id") === e("src"))
+        .select(col("dst").as("node_id"), (col("cost") + col("w")).as("cost"),
+          lit(null).cast(LongType).as("old"))
+      // `old` carries the round-start cost, so the min-aggregate also
+      // tells which nodes are new or got cheaper
+      best.select(col("node_id"), col("cost"), col("cost").as("old"))
+        .unionByName(relaxed)
+        .groupBy("node_id")
+        .agg(min(col("cost")).as("cost"), min(col("old")).as("old"))
+        .select(col("node_id"), col("cost"),
+          (col("old").isNull || col("cost") < col("old")).as("dropped"))
     }
     e.unpersist(blocking = false)
-    best
+    cheapest.select(col("node_id"), col("cost"))
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.engine.Fixpoint
 
 /** Model-evaluation estimators a training pipeline runs over its eval
   * logs: the unbiased pass@k estimator (Chen et al. 2021, "Evaluating
@@ -72,7 +73,9 @@ object Evaluation {
     *
     * Scale shape per round: two broadcast-sized joins of the pair table
     * against the m-row weight table and one hash aggregate; the raw
-    * event log is never touched again after the win table is built. */
+    * event log is never touched again after the win table is built. Each
+    * round is one [[graft.engine.Fixpoint]] round: the next reads its
+    * m-row weights twice (wi, wj), so uncut lineage would quadruple. */
   def bradleyTerry(wins: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     // symmetrize: per unordered pair both directions carry the total
@@ -102,9 +105,8 @@ object Evaluation {
     val m = winTotals.count() // item-vocabulary size: aggregate-level
     require(m > 0, "bradleyTerry: no comparable items in the win table")
 
-    var weights = winTotals.select(col("i").as("item"),
-      lit(1.0).as("strength"))
-    for (_ <- 1 to iters) {
+    val init = winTotals.select(col("i").as("item"), lit(1.0).as("strength"))
+    Fixpoint.iterate("bradley_terry", init, iters) { (weights, _) =>
       val denom = nTotC
         .join(weights.select(col("item").as("i"), col("strength").as("wi")),
           Seq("i"))
@@ -116,24 +118,17 @@ object Evaluation {
         .agg(aggregate(
           sort_array(collect_list(struct(col("j"), col("d")))),
           lit(0.0), (acc, x) => acc + x.getField("d")).as("denom"))
-      // checkpoint the m-row round result: `raw` is referenced twice
-      // (rescale numerator + its own sum) and `weights` twice next round
-      // (wi + wj), so an unbroken lineage QUADRUPLES per round — the
-      // analyzer, not the executors, becomes the bottleneck. Cutting at
-      // the m-row table keeps the per-round plan constant-size.
       val raw = winTotals.join(denom, Seq("i"))
         .select(col("i").as("item"),
           (col("w_total").cast(DoubleType) / col("denom")).as("raw"))
-        .localCheckpoint()
       // rescale to Σ strength = m, with an ordered fold over the m items
       val total = raw
         .agg(aggregate(
           sort_array(collect_list(struct(col("item"), col("raw")))),
           lit(0.0), (acc, x) => acc + x.getField("raw")).as("t"))
-      weights = raw.crossJoin(total)
+      raw.crossJoin(total)
         .select(col("item"),
           (col("raw") * lit(m.toDouble) / col("t")).as("strength"))
-    }
-    weights
+    }._1
   }
 }

@@ -7,7 +7,7 @@ import graft.engine.{Context, Stages}
   * session (the Bench.scala execution shape, minus the full sweep) — a
   * warm-up, then `runs` timed noop writes each — and read each run's
   * `Stages.record`. Prints every run, the best run, and the last run's
-  * jobs and stages sorted by cost.
+  * jobs (by description, else call site) and stages sorted by cost.
   * Answers "where do the seconds of a multi-action query actually go"
   * (train vs store write vs audit vs probe) — the Spark-UI stage view,
   * reduced to a terminal, for sessions where the UI is disabled — and
@@ -56,14 +56,14 @@ object JobProfile {
         val done = rec.jobs.filter(j => j.start > 0 && j.end > 0)
         val total = done.map(j => j.end - j.start).sum / 1e3
         println(f"[jobprofile] job wall sum ${total}%.3f s over ${done.size} jobs (gaps = driver time)")
-        val bySite = done.groupBy(_.name).map { case (s, js) =>
+        val byLabel = done.groupBy(j => j.description.getOrElse(j.name)).map { case (s, js) =>
           (s, js.map(j => j.end - j.start).sum / 1e3, js.size)
         }.toSeq.sortBy(-_._2)
-        bySite.take(30).foreach { case (s, sec, n) =>
+        byLabel.take(30).foreach { case (s, sec, n) =>
           println(f"[jobprofile]   ${sec}%8.3f s  $n%4d jobs  $s")
         }
         done.sortBy(j => -(j.end - j.start)).take(15).foreach { j =>
-          println(f"[jobprofile]   job ${j.id}%4d  ${(j.end - j.start) / 1e3}%8.3f s  ${j.name}")
+          println(f"[jobprofile]   job ${j.id}%4d  ${(j.end - j.start) / 1e3}%8.3f s  ${j.description.getOrElse(j.name)}")
         }
       }
       if (timed.nonEmpty) println(f"[jobprofile] $name best ${timed.map(_._1).min}%.3f s")

@@ -2,10 +2,12 @@ package org.apache.spark.sql.graftx
 
 import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{Column, SparkSessionExtensions}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.status.api.v1.{JobData, StageData, TaskData, TaskSorting, TaskStatus}
 
 /** Minimal bridge into `private[spark]` Spark 4 internals: converting between
@@ -25,6 +27,11 @@ object Bridge {
     ext.registerFunctions(reg)
     ()
   }
+
+  /** The RDD under a checkpointed frame (one `LogicalRDD`): unpersisting
+    * it frees the blocks, which `Dataset.unpersist` does not. */
+  def checkpointRdd(df: DataFrame): RDD[_] =
+    df.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
 
   /** Block until every listener has seen every event posted so far, so the
     * status store below is complete up to this point. */

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+import graft.engine.Stages
 import graft.graph.{PageRank, Sssp}
 
 /** PageRank semantics on small hand-checkable graphs. */
@@ -49,21 +51,6 @@ class GraphSpec extends AnyFunSuite {
     nodes.foreach { i =>
       assert(java.lang.Double.doubleToLongBits(a(i)) ==
         java.lang.Double.doubleToLongBits(b(i)))
-    }
-  }
-
-  test("checkpointing every round does not change values") {
-    val nodes = (0L until 20L)
-    val edges = nodes.map(i => (i, (i + 1) % 20)) ++ nodes.map(i => (i, (i * 3 + 1) % 20))
-    val n = nodes.toDF("node_id")
-    val e = edges.toDF("src", "dst")
-    val plain = PageRank.run(n, e, 20L, 5, checkpointEvery = 0)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val ckpt = PageRank.run(n, e, 20L, 5, checkpointEvery = 1)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    nodes.foreach { i =>
-      assert(java.lang.Double.doubleToLongBits(plain(i)) ==
-        java.lang.Double.doubleToLongBits(ckpt(i)))
     }
   }
 
@@ -301,5 +288,43 @@ class GraphSpec extends AnyFunSuite {
     assert(got(1L) == ((2L, 1L, 1.0)))
     assert(got(2L) == ((2L, 1L, 1.0)))
     assert(got(3L) == ((1L, 0L, 0.0))) // deg 1: no pairs, defined as 0
+  }
+
+  /** An early-exit operator on a graph that converges in `r` rounds: cap
+    * r - 1 still differs, caps r and r + 10 give the same rows, and the
+    * cap-(r + 10) run labels at most r + 1 rounds (the last one unchanged). */
+  private def exitsEarly(name: String, r: Int)(run: Int => DataFrame): Unit = {
+    def rows(cap: Int) = run(cap).collect().map(_.toSeq).toSet
+    val (long, rec) = Stages.record(spark)(rows(r + 10))
+    assert(rows(r) == long)
+    assert(rows(r - 1) != long)
+    val rounds = rec.jobs.flatMap(_.description)
+      .filter(_.startsWith(s"$name round ")).distinct
+    assert(rounds.nonEmpty && rounds.size <= r + 1, rounds)
+  }
+
+  test("bfs: a drained frontier ends the loop; cap r and r + 10 agree") {
+    val chain = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("src", "dst")
+    exitsEarly("sssp", 3)(graft.graph.Bfs.hops(chain, Seq(0L).toDF("node_id"), _))
+  }
+
+  test("sssp: a round with no cheaper cost ends the loop and frees earlier rounds") {
+    // costs settle after round 3: 1 via the detour (2), then 3 via 1 (7)
+    val edges = Seq((0L, 1L, 10L), (0L, 2L, 1L), (2L, 1L, 1L),
+      (1L, 3L, 5L)).toDF("src", "dst", "w")
+    val sources = Seq(0L).toDF("node_id")
+    exitsEarly("sssp", 3)(Sssp.cheapestPaths(edges, sources, _))
+    // only the last round's checkpoint stays persisted
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Sssp.cheapestPaths(edges, sources, 13).collect()
+    assert((sc.getPersistentRDDs.keySet -- before).size == 1)
+  }
+
+  test("k-core peel: the loop ends once no node is below k") {
+    // 4-clique plus chain 3-4-5 at k = 2: peels 5, then 4, then stops
+    val edges = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L), (1L, 3L),
+      (2L, 3L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
+    exitsEarly("kcore", 2)(graft.graph.Cores.peel(edges, k = 2, _))
   }
 }
