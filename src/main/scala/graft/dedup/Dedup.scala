@@ -3,7 +3,6 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.engine.Context
 import graft.functions.native
 
 /** Distributed deduplication for training-data pipelines: exact, MinHash+LSH,
@@ -718,41 +717,47 @@ object Dedup {
     * turns near-dup PAIRS into dedup GROUPS (each doc labeled with the
     * minimum id of its component, the canonical survivor).
     *
-    * Algorithm: iterative min-label propagation with pointer jumping
-    * (label(x) ← label(label(x)) each round), so convergence is
-    * O(log diameter) rounds instead of O(diameter) — a long chain of
-    * near-dups converges in ~log2(n) rounds, with early exit on a
-    * converged round.
+    * Nodes and the adjacency list are hash-partitioned ONCE by one pinned
+    * HashPartitioner — the case the RDD escape hatch exists for (GraphX is
+    * built the same way): every later join is co-partitioned.
     *
-    * The loop body deliberately runs on RDDs with ONE pinned
-    * HashPartitioner — the case the RDD escape hatch exists for (GraphX
-    * is built the same way): a DataFrame loop re-analyzes a growing
-    * unrolled join chain every round, while here the adjacency list is
-    * shuffled once and every per-round join is co-partitioned, leaving
-    * two shuffles per round (the neighbor-min reduce and the pointer-jump
-    * re-key) and ONE action per round that both materializes the round's
-    * labels and counts changes for convergence — the round-start label
-    * rides the jump shuffle so the check needs no separate pass over the
-    * label set. The public surface stays DataFrames.
+    * Local seed first: one zipPartitions pass runs a union-find over the
+    * edges whose two endpoints are nodes of the same partition, labels
+    * each node with the minimum id of its local component, and flags each
+    * node with an edge to an id hashed into another partition. One
+    * `foreach` materializes the seed and counts the flagged nodes. With
+    * none flagged every component lies inside one partition: the seed is
+    * the answer and no round runs (one job; a one-partition node input,
+    * as at bench scale, always ends here).
     *
-    * Lineage truncation: persisting each round bounds recomputation on the
-    * happy path, but the dependency chain still grows one round deeper per
-    * iteration — an executor loss late in the loop would recompute from the
-    * adjacency shuffle. So every `checkpointEvery` rounds the new labels
-    * RDD is reliably checkpointed (cutting the chain at that round); the
-    * checkpoint dir defaults to a dir under the per-process scratch root
-    * (deleted at JVM exit) if the context has none set. Pass
-    * checkpointEvery = 0 to disable.
+    * Rounds run only while labels can still move: min-label propagation
+    * with pointer jumping (label(x) ← label(label(x))), O(log diameter)
+    * rounds from the seed, stopping at the first round that changes no
+    * label. That test is exact because every label is the id of a node in
+    * the same component, ≤ the node's own id, and the component minimum
+    * labels itself: true of the seed and kept by every round. A round is
+    * two shuffles (the neighbor-min reduce and the pointer-jump re-key)
+    * and ONE action that materializes its labels and counts changes (the
+    * round-start label rides the jump shuffle). Hash partitioning scatters
+    * consecutive-id chains, so a wide node input still runs rounds:
+    * q_connected_components' nodes forced to 3 partitions keep their
+    * 4 rounds at sf0.1, with the same labels.
+    *
+    * Lineage: each round's labels are persisted and locally checkpointed
+    * by its action, then the previous round's blocks are freed, as in
+    * [[graft.engine.Fixpoint]]. The jobs carry the descriptions "cc seed"
+    * and "cc round <i>"; the caller's description is restored afterwards.
+    * Reaching `maxIter` rounds without a round of no change throws.
     *
     * `nodes`: one column `id`. `edges`: columns `src`, `dst` (undirected;
-    * both orientations are derived internally). Output: (id, component).
+    * an edge with an endpoint missing from `nodes` carries no label).
+    * Output: (id, component).
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
-      maxIter: Int = 16, checkpointEvery: Int = 4): DataFrame = {
+      maxIter: Int = 16): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    if (checkpointEvery > 0 && spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(Context.scratch("cc_ckpt"))
+    val sc = spark.sparkContext
     val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Partition width sized by the DATA, not the core count: the loop's
     // two shuffles per round run over the label table, whose volume
@@ -773,75 +778,100 @@ object Dedup {
       .flatMap { case (a, b) => Iterator((a, b), (b, a)) }
       .map { case (src, dst) => (dst, src) }
       .partitionBy(part).persist(level)
-    var labels = nodes.select(col("id")).as[Long].rdd
-      .map(x => (x, x)).partitionBy(part).persist(level)
-    // the PERSISTED RDD backing `labels` (labels itself becomes a narrow
-    // mapValues view of each round's persisted pair RDD below)
-    var labelsStore: org.apache.spark.rdd.RDD[_] = labels
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // 1) pull: deliver each node's label to its neighbors, keep the min
-      val nbrMin = byDst.join(labels) // co-partitioned: no shuffle
-        .map { case (_, (src, lab)) => (src, lab) }
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b)) // shuffle 1
-      // pulled carries (newLabel, roundStartLabel): the old label rides
-      // the jump shuffle (+8 bytes/row) so the convergence check below
-      // can be fused into the round's materializing action instead of a
-      // separate full pass re-reading and hash-joining the label set.
-      val pulled = labels.leftOuterJoin(nbrMin).mapValues {
-        case (own, nb) => (math.min(own, nb.getOrElse(own)), own)
+    // (id, (seed label, has an edge into another partition))
+    val seed = nodes.select(col("id")).as[Long].rdd.map(x => (x, ()))
+      .partitionBy(part)
+      .zipPartitions(byDst, preservesPartitioning = true)(localComponents(part))
+      .persist(level)
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    try {
+      sc.setJobDescription("cc seed")
+      // CORRECTNESS GUARD: accumulators are exactly-once only for ACTIONS
+      // (`foreach`) — Spark re-applies updates from resubmitted result
+      // tasks idempotently. Counting in a TRANSFORMATION (e.g. a mapValues
+      // tap materialized by some later action) would double-count under
+      // task retry. Both counts below stay on a foreach.
+      val crossing = sc.longAccumulator("cc_crossing")
+      seed.foreach { case (_, (_, cross)) => if (cross) crossing.add(1L) }
+      var labels = seed.mapValues(_._1) // narrow view of the persist
+      var store: org.apache.spark.rdd.RDD[_] = seed // the persist behind `labels`
+      var moving = crossing.value > 0L
+      var i = 0
+      while (moving) {
+        if (i == maxIter) throw new IllegalStateException(
+          s"connectedComponents: labels still changing after $maxIter rounds")
+        i += 1
+        sc.setJobDescription(s"cc round $i")
+        // 1) pull: deliver each node's label to its neighbors, keep the min
+        val nbrMin = byDst.join(labels) // co-partitioned: no shuffle
+          .map { case (_, (src, lab)) => (src, lab) }
+          .reduceByKey(part, (a: Long, b: Long) => math.min(a, b)) // shuffle 1
+        // (newLabel, roundStartLabel): the old label rides the jump shuffle
+        // (+8 bytes/row) so the change count needs no pass of its own
+        val pulled = labels.leftOuterJoin(nbrMin).mapValues {
+          case (own, nb) => (math.min(own, nb.getOrElse(own)), own)
+        }
+        val pulledNew = pulled.mapValues(_._1) // co-partitioned view
+        // 2) jump: follow the label to ITS label (doubles reach per round).
+        // A double jump (one more slim shuffle per round to halve the
+        // rounds) was measured and rejected: near-dup graphs converge in
+        // 1-2 rounds, so the extra shuffle is pure overhead.
+        val byLabel = pulled.map { case (id, (lab, old)) => (lab, (id, old)) }
+          .partitionBy(part) // shuffle 2
+        val jumped = byLabel.leftOuterJoin(pulledNew) // co-partitioned
+          .map { case (lab, ((id, old), ll)) => (id, (ll.getOrElse(lab), old)) }
+          .partitionBy(part).persist(level)
+        jumped.localCheckpoint() // cut by the action below, from the persist
+        val changed = sc.longAccumulator("cc_changed")
+        jumped.foreach { case (_, (nl, ol)) => if (nl != ol) changed.add(1L) }
+        store.unpersist(blocking = false)
+        store = jumped
+        labels = jumped.mapValues(_._1)
+        moving = changed.value > 0L
       }
-      val pulledNew = pulled.mapValues(_._1) // co-partitioned view
-      // 2) jump: follow the label to ITS label (doubles reach per round).
-      // A double-jump variant (squares the pointer graph, halves rounds/
-      // barriers for one extra slim shuffle per round) was measured and
-      // REJECTED: near-dup graphs converge in 1-2 rounds so the extra
-      // shuffle is pure overhead (survivors 3.11 → 3.47 s, best 3.15 →
-      // 3.70 isolated min-of-3), and long-chain geometries are already
-      // O(log d) with the single jump.
-      val byLabel = pulled.map { case (id, (lab, old)) => (lab, (id, old)) }
-        .partitionBy(part) // shuffle 2
-      val jumped = byLabel.leftOuterJoin(pulledNew) // co-partitioned
-        .map { case (lab, ((id, old), ll)) => (id, (ll.getOrElse(lab), old)) }
-        .partitionBy(part).persist(level)
-      val next = jumped.mapValues(_._1) // narrow view of the persist
-      // Reliable checkpoint every few rounds: materialized right after the
-      // convergence action below computes `jumped` (served from the
-      // persist, not recomputed), after which lineage restarts here.
-      if (checkpointEvery > 0 && (i + 1) % checkpointEvery == 0)
-        jumped.checkpoint()
-      val changed = spark.sparkContext.longAccumulator("cc_changed")
-      // the round's one action: materializes the persist AND counts label
-      // changes vs the round-start label carried in the value — the same
-      // comparison the former next.join(labels) pass computed, minus the
-      // per-round re-read + hash join of the whole label set.
-      // CORRECTNESS GUARD: accumulators are exactly-once only for
-      // ACTIONS (`foreach`) — Spark re-applies updates from resubmitted
-      // result tasks idempotently. Moving this count into a
-      // TRANSFORMATION (e.g. a mapValues tap materialized by some later
-      // action) would double-count under task retry and could stall or
-      // truncate convergence. Keep it on a foreach.
-      jumped.foreach { case (_, (nl, ol)) =>
-        if (nl != ol) changed.add(1L)
-      }
-      labelsStore.unpersist(blocking = false)
-      labelsStore = jumped
-      labels = next
-      converged = changed.value == 0L
-      i += 1
+      // DELIBERATE: the last persist (`store`) stays cached — the result is
+      // a lazy view over it. ContextCleaner reclaims it once the result is
+      // unreachable, and the bench's per-query isolate() clears it.
+      labels.toDF("id", "component")
+    } finally {
+      byDst.unpersist(blocking = false)
+      sc.setJobDescription(callerDescription)
     }
-    byDst.unpersist(blocking = false)
-    // DELIBERATE: the final round's persisted `jumped` RDD (labelsStore)
-    // stays in the cache — the returned DataFrame is a lazy view over it,
-    // and unpersisting here would force the caller's first action to
-    // recompute the whole loop from the adjacency shuffle. The blocks are
-    // reclaimed by ContextCleaner once the result DataFrame is
-    // unreachable (and the bench's per-query isolate() clears them
-    // explicitly); a caller holding many results in one session should
-    // materialize and drop them promptly. (ADVICE r12: documented
-    // intentional leak, not an oversight.)
-    labels.toDF("id", "component")
+  }
+
+  /** One partition's local components for [[connectedComponents]]'s seed:
+    * a union-find over the adjacency rows (dst, src) whose two endpoints
+    * are nodes of this partition, each set rooted at its minimum id. A row
+    * whose src hashes into another partition flags its dst (the edge may
+    * join two partitions' components); a row whose src hashes here but is
+    * no node carries nothing. One output row per input node row. */
+  private def localComponents(part: org.apache.spark.Partitioner)(
+      own: Iterator[(Long, Unit)],
+      adj: Iterator[(Long, Long)]): Iterator[(Long, (Long, Boolean))] = {
+    val rows = own.map(_._1).toArray
+    val slot = new scala.collection.mutable.LongMap[Int]
+    rows.foreach(x => slot.getOrElseUpdate(x, slot.size))
+    val id = new Array[Long](slot.size)
+    slot.foreach { case (x, i) => id(i) = x }
+    val up = Array.range(0, id.length)
+    val cross = new Array[Boolean](id.length)
+    def root(i: Int): Int = {
+      var r = i
+      while (up(r) != r) r = up(r)
+      var j = i // path compression
+      while (up(j) != r) { val n = up(j); up(j) = r; j = n }
+      r
+    }
+    adj.foreach { case (dst, src) =>
+      slot.get(dst).foreach { d =>
+        if (part.getPartition(src) != part.getPartition(dst)) cross(d) = true
+        else slot.get(src).foreach { s =>
+          val (a, b) = (root(d), root(s))
+          if (id(a) < id(b)) up(b) = a else up(a) = b
+        }
+      }
+    }
+    rows.iterator.map { x => val i = slot(x); (x, (id(root(i)), cross(i))) }
   }
 
   /** End-to-end near-dup dedup: given candidate PAIRS (from any of the

@@ -176,11 +176,11 @@ object Context {
   }
 
   /** Per-query state isolation; callers run it after a query's timing
-    * ends, never inside it. clearCache drops DataFrame persists; CC's RDD
-    * persists, each [[Fixpoint]] loop's last round and loop-input
-    * localCheckpoints stay behind — across a 300-query sweep those
-    * accumulate into block-manager memory pressure that taxes every later
-    * query (dedup family measured 2x slower in-session than isolated
+    * ends, never inside it. clearCache drops DataFrame persists; the last
+    * round of connectedComponents' RDD loop and of each [[Fixpoint]] loop
+    * and the loop-input localCheckpoints stay behind — across a 300-query
+    * sweep those accumulate into block-manager memory pressure that taxes
+    * every later query (dedup family measured 2x slower in-session than isolated
     * without this). The explicit GC then lets ContextCleaner's
     * reference-queue pass reclaim dropped shuffle files and broadcast
     * blocks before the next query (r7 saw 4-5x in-sweep outliers from
@@ -196,9 +196,9 @@ object Context {
 
   /** Per-PROCESS scratch root for queries that stage intermediate
     * stores/models on local disk (stored-index probes, stored LM models,
-    * sink round trips, connectedComponents' checkpoints). Suffixing with the JVM pid keeps two sweeps
-    * running concurrently on one host from overwriting each other's
-    * stores mid-probe; within a process the overwrite-per-run semantics
+    * sink round trips, the test suites' temp dirs). Suffixing with the JVM
+    * pid keeps two sweeps running concurrently on one host from
+    * overwriting each other's stores mid-probe; within a process the overwrite-per-run semantics
     * (bounded disk across repeated sweeps) are unchanged. A shutdown
     * hook deletes the root so repeated processes don't accumulate dead
     * scratch trees. */

@@ -41,7 +41,7 @@ class ContextSpec extends AnyFunSuite {
   }
 
   test("csv reader: header + inference, and explicit schema override") {
-    val dir = java.nio.file.Files.createTempDirectory("graftcsv").toFile
+    val dir = SparkFixture.tempDir("graftcsv").toFile
     val f = new java.io.File(dir, "simple.csv")
     // the reference's simple.csv shape (ref: testdata/csv/simple.csv)
     val w = new java.io.PrintWriter(f)
@@ -61,7 +61,7 @@ class ContextSpec extends AnyFunSuite {
   }
 
   test("csv malformed-row policy: permissive null-fills, dropmalformed skips") {
-    val dir = java.nio.file.Files.createTempDirectory("graftcsvbad").toFile
+    val dir = SparkFixture.tempDir("graftcsvbad").toFile
     val f = new java.io.File(dir, "bad.csv")
     val w = new java.io.PrintWriter(f)
     w.write("c1,c2\na,1\nb,not_a_number\nc,3\n"); w.close()

@@ -95,6 +95,37 @@ class DedupSpec extends AnyFunSuite {
     assert(m((0L, 2L)) > 0.4 && m((0L, 2L)) < 1.0)
   }
 
+  /** Driver-side oracle: union-find over the subgraph induced by `nodes`,
+    * each node labeled with its component's minimum id. */
+  private def ccOracle(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val up = scala.collection.mutable.Map(nodes.map(x => x -> x): _*)
+    def root(x: Long): Long = if (up(x) == x) x else root(up(x))
+    for ((a, b) <- edges if up.contains(a) && up.contains(b)) {
+      val (ra, rb) = (root(a), root(b))
+      up(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    nodes.map(x => x -> root(x)).toMap
+  }
+
+  /** A small random graph with every shape the local seed must handle:
+    * isolated nodes, a chain, self-loops, duplicate edges in both
+    * orientations and edges to ids missing from the node set. */
+  private def randomGraph(seed: Long): (Seq[Long], Seq[(Long, Long)]) = {
+    val rnd = new scala.util.Random(seed)
+    val nodes = (0L until 60L).filter(_ => rnd.nextInt(6) != 0)
+    def anyId = rnd.nextInt(70).toLong // ids 60..69 and the gaps are no nodes
+    val random = Seq.fill(30)((anyId, anyId))
+    val chain = (20L until 36L).map(i => (i, i + 1))
+    val edges = random ++ chain ++ random.take(6).map(_.swap) ++
+      random.take(3) ++ nodes.take(3).map(x => (x, x))
+    (nodes, rnd.shuffle(edges))
+  }
+
+  private def ccAt(width: Int, nodes: Seq[Long], edges: Seq[(Long, Long)],
+      maxIter: Int = 16) =
+    Dedup.connectedComponents(nodes.toDF("id").repartition(width),
+      edges.toDF("src", "dst"), maxIter)
+
   test("connectedComponents labels chains, cliques, and singletons") {
     val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L).toDF("id")
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
@@ -105,52 +136,59 @@ class DedupSpec extends AnyFunSuite {
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L))
   }
 
-  test("connectedComponents checkpoints: lineage truncated, labels unchanged") {
-    // A long path graph forces many pointer-jumping rounds (O(log n) — here
-    // ~6 for a 64-node chain), enough to cross several checkpoint cadences.
-    val n = 64
-    val nodes = (0L until n).toDF("id")
-    val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
-    val withCkpt = Dedup.connectedComponents(nodes, edges, checkpointEvery = 2)
-      .as[(Long, Long)].collect().toMap
-    val without = Dedup.connectedComponents(nodes, edges, checkpointEvery = 0)
-      .as[(Long, Long)].collect().toMap
-    assert(withCkpt == without)
-    assert(withCkpt.values.forall(_ == 0L)) // one component, min label 0
-    // the checkpoint actually materialized: the dir holds rdd checkpoints
-    val dir = spark.sparkContext.getCheckpointDir
-    assert(dir.isDefined)
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(
-        new java.net.URI(dir.get).getPath))
-      .filter(p => p.getFileName.toString.startsWith("part-")).count()
-    assert(files > 0, "no checkpoint files written")
+  test("connectedComponents equals a union-find oracle at node widths 1, 3 and 8") {
+    for (seed <- 1L to 4L; width <- Seq(1, 3, 8)) {
+      val (nodes, edges) = randomGraph(seed)
+      val got = ccAt(width, nodes, edges).as[(Long, Long)].collect()
+      assert(got.length == nodes.size, s"seed $seed, width $width")
+      assert(got.toMap == ccOracle(nodes, edges), s"seed $seed, width $width")
+    }
+  }
+
+  test("connectedComponents at node width 1: one seed job, no round") {
+    val (nodes, edges) = randomGraph(7L)
+    val (got, rec) = graft.engine.Stages.record(spark) {
+      ccAt(1, nodes, edges).as[(Long, Long)].collect()
+    }
+    // the collect runs under the restored (empty) description
+    val labels = rec.jobs.flatMap(_.description)
+    assert(labels.count(_ == "cc seed") == 1, labels)
+    assert(!labels.exists(_.startsWith("cc round")), labels)
+    assert(got.toMap == ccOracle(nodes, edges))
+  }
+
+  test("connectedComponents on a chain over 3 partitions runs rounds from the seed") {
+    val nodes = 0L until 40L
+    val edges = (0L until 39L).map(i => (i, i + 1))
+    val (got, rec) = graft.engine.Stages.record(spark) {
+      ccAt(3, nodes, edges).as[(Long, Long)].collect()
+    }
+    val labels = rec.jobs.flatMap(_.description)
+    assert(labels.count(_ == "cc seed") == 1, labels)
+    assert(labels.exists(_.startsWith("cc round")), labels)
+    assert(got.toMap == ccOracle(nodes, edges))
   }
 
   test("connectedComponents fused convergence: maxIter honored, early exit converged") {
     // The convergence check rides the jump shuffle (fused into the round's
     // one action); this pins the loop's round semantics around that fusion.
     val n = 32
-    val nodes = (0L until n).toDF("id")
-    val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
-    // one round of pull+jump cannot collapse a 32-chain: maxIter=1 must
-    // return a partially-propagated labeling (NOT all zeros)
-    val oneRound = Dedup.connectedComponents(nodes, edges, maxIter = 1)
-      .as[(Long, Long)].collect().toMap
-    assert(oneRound.values.exists(_ != 0L),
-      "maxIter=1 fully collapsed a 32-chain — round semantics changed")
+    val ids = 0L until n
+    val chain = (0L until n - 1).map(i => (i, i + 1))
+    // a chain hashed over 4 partitions: the seed cannot collapse it, and a
+    // single round cannot both move labels and confirm the fixpoint, so
+    // maxIter=1 must throw rather than return partial labels
+    val e = intercept[IllegalStateException](ccAt(4, ids, chain, maxIter = 1))
+    assert(e.getMessage.contains("after 1 rounds"), e.getMessage)
     // with headroom the loop early-exits at the fixpoint: all labels 0,
     // and a generous maxIter gives the same answer as a tight one
-    val full = Dedup.connectedComponents(nodes, edges, maxIter = 16)
-      .as[(Long, Long)].collect().toMap
+    val full = ccAt(4, ids, chain).as[(Long, Long)].collect().toMap
     assert(full.values.forall(_ == 0L))
-    val tight = Dedup.connectedComponents(nodes, edges, maxIter = 8)
-      .as[(Long, Long)].collect().toMap
+    val tight = ccAt(4, ids, chain, maxIter = 8).as[(Long, Long)].collect().toMap
     assert(tight == full)
     // an edgeless graph converges immediately: every node keeps its own id
-    val iso = Dedup.connectedComponents(nodes,
-        Seq.empty[(Long, Long)].toDF("src", "dst"))
-      .as[(Long, Long)].collect().toMap
-    assert(iso == (0L until n).map(i => i -> i).toMap)
+    val iso = ccAt(4, ids, Seq.empty).as[(Long, Long)].collect().toMap
+    assert(iso == ids.map(i => i -> i).toMap)
   }
 
   test("nearDupSurvivors keeps one canonical doc per component plus untouched docs") {

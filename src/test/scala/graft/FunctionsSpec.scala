@@ -567,7 +567,7 @@ class FunctionsSpec extends AnyFunSuite {
     val score = Seq(
       (10L, "the cat sat"), (11L, "a dog on the mat"),
       (12L, "unseen words entirely"), (13L, "x")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_knstore")
+    val dir = SparkFixture.tempDir("graft_knstore")
     try {
       val bg = Text.kneserNeyBigrams(train, minCount = 1)
       bg.write.mode("overwrite").parquet(s"$dir/bg")

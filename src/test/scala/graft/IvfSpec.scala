@@ -71,8 +71,8 @@ class IvfSpec extends AnyFunSuite {
     val batch = corpus.filter(pmod(col("vec_id"), lit(4)) === 0)
     // centroids trained on the BASE only, then frozen
     val cents = Ivf.train(base, k = 4, iters = 1, dim = 16)
-    val incr = java.nio.file.Files.createTempDirectory("ivf_incr").toString
-    val full = java.nio.file.Files.createTempDirectory("ivf_full").toString
+    val incr = SparkFixture.tempDir("ivf_incr").toString
+    val full = SparkFixture.tempDir("ivf_full").toString
     Ivf.writeAssignedStore(base, cents, incr)
     Ivf.appendToStore(batch, cents, incr) // incremental: no retrain
     Ivf.writeAssignedStore(corpus, cents, full) // rebuild on the union
@@ -128,7 +128,7 @@ class IvfSpec extends AnyFunSuite {
 
   test("stored centroids round-trip: parquet-read centroids probe identically") {
     val cents = Ivf.train(corpus, k = 4, iters = 1, dim = 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_cents").toString
+    val dir = SparkFixture.tempDir("graft_ivf_cents").toString
     graft.sources.Sinks.writeParquet(cents, dir)
     val stored = spark.read.parquet(dir)
     val qs = corpus.filter($"vec_id" < 5)
@@ -197,8 +197,7 @@ class IvfSpec extends AnyFunSuite {
     val resident = (3 until 23)
       .map(i => (i.toLong, unit(if (i % 2 == 1) 0 else 1, i)))
       .toDF("vec_id", "embedding")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_reindex").toString + "/idx"
+    val root = SparkFixture.tempDir("graft_reindex").toString + "/idx"
     val v1 = Ivf.writeVersionedIndex(resident, k = 2, root)
     assert(v1 == 1L && Ivf.indexVersion(spark, root) == 1L)
     // healthy audit: resident queries, their neighbors in their own cell
@@ -235,7 +234,7 @@ class IvfSpec extends AnyFunSuite {
     val cArr = cents.collect()
     val local = spark.createDataFrame(
       java.util.Arrays.asList(cArr: _*), cents.schema)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val tmp = SparkFixture.tempDir("graft_compact").toString
     val store = s"$tmp/store"; val compacted = s"$tmp/compacted"
     Ivf.writeIngestStore(corpus.filter($"vec_id" < 40), local, store)
     // three streamed-batch layers
@@ -350,8 +349,7 @@ class IvfSpec extends AnyFunSuite {
     val resident = (3 until 23)
       .map(i => (i.toLong, unit(if (i % 2 == 1) 0 else 1, i)))
       .toDF("vec_id", "embedding")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_sampaudit").toString + "/idx"
+    val root = SparkFixture.tempDir("graft_sampaudit").toString + "/idx"
     val v1 = Ivf.writeVersionedIndex(resident, k = 2, root)
     val healthyQs = resident.filter($"vec_id" < 9)
       .select($"vec_id".as("query_id"), $"embedding".as("query_vec"))
@@ -432,8 +430,7 @@ class IvfSpec extends AnyFunSuite {
   }
 
   test("manifest publish: uncommitted builds are invisible; crash retry converges") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_manifest").toString + "/idx"
+    val root = SparkFixture.tempDir("graft_manifest").toString + "/idx"
     val resident = corpus.filter($"vec_id" < 40)
     val qs = Ann.selfQueries(corpus, 5)
     def probe(r: String) =
@@ -459,16 +456,14 @@ class IvfSpec extends AnyFunSuite {
     val v2 = Ivf.writeVersionedIndex(corpus, k = 3, root)
     assert(v2 == 2L && Ivf.indexVersion(spark, root) == 2L)
     val after = probe(root)
-    val clean = java.nio.file.Files
-      .createTempDirectory("graft_manifest2").toString + "/idx"
+    val clean = SparkFixture.tempDir("graft_manifest2").toString + "/idx"
     Ivf.writeVersionedIndex(resident, k = 3, clean)
     Ivf.writeVersionedIndex(corpus, k = 3, clean)
     assert(probe(clean) == after)
   }
 
   test("vacuumVersions: newest keepN survive, probers keep serving, builders untouched") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_vacuum").toString + "/idx"
+    val root = SparkFixture.tempDir("graft_vacuum").toString + "/idx"
     Ivf.writeVersionedIndex(corpus.filter($"vec_id" < 20), k = 2, root)
     Ivf.writeVersionedIndex(corpus.filter($"vec_id" < 40), k = 3, root)
     Ivf.writeVersionedIndex(corpus, k = 3, root)
@@ -496,8 +491,7 @@ class IvfSpec extends AnyFunSuite {
   }
 
   test("compactVersion: layers fold into v+1 via the manifest, probes identical") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_compactv").toString + "/idx"
+    val root = SparkFixture.tempDir("graft_compactv").toString + "/idx"
     val v1 = Ivf.writeVersionedIndex(corpus.filter($"vec_id" < 40), k = 3, root)
     val cents = spark.read.parquet(s"$root/v=$v1/centroids")
     for ((lo, hi, b) <- Seq((40, 47, 0), (47, 54, 1), (54, 60, 2)))
@@ -525,8 +519,7 @@ class IvfSpec extends AnyFunSuite {
 
   test("conditional commit: two-writer race — loser refuses in both interleavings, retry converges, marker kept") {
     import graft.similarity.ConcurrentPublishException
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_race").toString + "/idx"
+    val root = SparkFixture.tempDir("graft_race").toString + "/idx"
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val resident = corpus.filter($"vec_id" < 40)
@@ -575,8 +568,7 @@ class IvfSpec extends AnyFunSuite {
   }
 
   test("bootstrap: a crashed FIRST publish cannot wedge the root; a lost manifest still refuses") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_boot").toString + "/idx"
+    val root = SparkFixture.tempDir("graft_boot").toString + "/idx"
     // the publish path bootstraps manifest=0 BEFORE the first build...
     assert(Ivf.ensureBootstrapped(spark, root) == 0L)
     assert(Ivf.indexVersion(spark, root) == 0L)
@@ -600,8 +592,7 @@ class IvfSpec extends AnyFunSuite {
 
   test("versioned IVFADC triple: publish, append, retrain, compact, vacuum") {
     import graft.similarity.{Pq, PqSpec}
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_vpq").toString + "/idx"
+    val root = SparkFixture.tempDir("graft_vpq").toString + "/idx"
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val resident = corpus.filter($"vec_id" < 40)
@@ -672,8 +663,7 @@ class IvfSpec extends AnyFunSuite {
   }
 
   test("vacuumVersions minAge: a burst of publishes cannot retire a young version") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_minage").toString + "/idx"
+    val root = SparkFixture.tempDir("graft_minage").toString + "/idx"
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     Ivf.writeVersionedIndex(corpus.filter($"vec_id" < 20), k = 2, root)
@@ -713,8 +703,7 @@ class IvfSpec extends AnyFunSuite {
     assert(Ivf.autoSamplePct(2000L, minSampleRows = 2000L) == 100)
     intercept[IllegalArgumentException] { Ivf.autoSamplePct(10L, 0L) }
     // AUTO on a store below the floor reads the FULL audit
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_autopct").toString + "/idx"
+    val root = SparkFixture.tempDir("graft_autopct").toString + "/idx"
     Ivf.writeVersionedIndex(corpus, k = 3, root)
     val qs = Ann.selfQueries(corpus, 5)
     val auto = Ivf.sampledAudit(spark, root, qs, k = 3, nprobe = 2,
@@ -727,8 +716,7 @@ class IvfSpec extends AnyFunSuite {
   }
 
   test("vacuumQueryLog bounds the serving-query log to the newest epochs") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_logvac").toString + "/idx"
+    val root = SparkFixture.tempDir("graft_logvac").toString + "/idx"
     Ivf.writeVersionedIndex(corpus, k = 3, root)
     // no log yet: a no-op, never an error
     assert(Ivf.vacuumQueryLog(spark, root, keepEpochs = 1) == Seq.empty)
@@ -768,7 +756,7 @@ class IvfSpec extends AnyFunSuite {
     AdversarialFileSystem.reset()
     val renamedNames = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     AdversarialFileSystem.windowHook = dst => { renamedNames.add(dst.getName); () }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_advfs").toString
+    val tmp = SparkFixture.tempDir("graft_advfs").toString
     val root = s"advfs://$tmp/idx"
     try {
       val qs = Ann.selfQueries(corpus, 5)
@@ -788,8 +776,7 @@ class IvfSpec extends AnyFunSuite {
       assert(v2 == 2L)
       // content-determinism across stores: the same publishes on POSIX
       // serve byte-identical results
-      val local = java.nio.file.Files
-        .createTempDirectory("graft_advfs_twin").toString + "/idx"
+      val local = SparkFixture.tempDir("graft_advfs_twin").toString + "/idx"
       Ivf.writeVersionedIndex(corpus.filter($"vec_id" < 40), k = 3, local)
       Ivf.writeVersionedIndex(corpus, k = 3, local)
       assert(probe(root) == probe(local))

@@ -102,7 +102,7 @@ class PqSpec extends AnyFunSuite {
     val qs = Ann.selfQueries(corpus, 3)
     val mem = Pq.ivfAdcTopK(corpus, qs, cents, cbs, k = 5, nprobe = 2)
       .as[(Long, Long, Long, Double)].collect().toSeq.sorted
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pqstore").toString
+    val tmp = SparkFixture.tempDir("graft_pqstore").toString
     graft.sources.Sinks.writeParquet(cents, s"$tmp/cents")
     Pq.writeCodebooks(spark, cbs, s"$tmp/cbs")
     Pq.writeIvfAdcStore(corpus, cents, cbs, s"$tmp/codes")

@@ -10,7 +10,7 @@ class SinksSpec extends AnyFunSuite {
   lazy val spark = SparkFixture.spark
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graftsink").toString
+    SparkFixture.tempDir("graftsink").toString
 
   test("parquet round-trip with hive partitioning prunes on re-read") {
     val nation = Tables.load(spark, SparkFixture.sfDir, "nation")
@@ -183,7 +183,7 @@ class SinksSpec extends AnyFunSuite {
   test("manifest skip: range read opens fewer files, result stays exact") {
     import spark.implicits._
     val df = (1L to 800L).map(i => (i, i * 10L)).toDF("id", "v")
-    val out = "/tmp/graft_test_manifest"
+    val out = tmp() + "/manifest"
     Sinks.writeWithManifest(df, out, "v", nFiles = 8)
     val (pruned, nRead, nTotal) = Sinks.readPruned(spark, out, "v",
       1000L, 1500L)

@@ -8,4 +8,12 @@ import graft.engine.Context
 object SparkFixture {
   lazy val spark: SparkSession = Context.session("local[4]", 4)
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A fresh dir under the per-process scratch root, whose shutdown hook
+    * deletes it when the test JVM exits. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val root = java.nio.file.Paths.get(Context.scratch("tests"))
+    java.nio.file.Files.createDirectories(root)
+    java.nio.file.Files.createTempDirectory(root, prefix)
+  }
 }

@@ -351,7 +351,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("checkpointed file source + idempotent foreachBatch sink resumes exactly-once") {
-    val root = java.nio.file.Files.createTempDirectory("graft_eo").toString
+    val root = SparkFixture.tempDir("graft_eo").toString
     val (srcDir, ckpt, outDir) = (s"$root/src", s"$root/ckpt", s"$root/out")
     new java.io.File(srcDir).mkdirs()
     val schema = "event_id LONG, user_id LONG, value DOUBLE"
@@ -436,7 +436,7 @@ class StreamingSpec extends AnyFunSuite {
     val cRows = trained.collect()
     val cents = spark.createDataFrame(
       java.util.Arrays.asList(cRows: _*), trained.schema)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sidx").toString
+    val tmp = SparkFixture.tempDir("graft_sidx").toString
     val (streamStore, batchStore) = (s"$tmp/stream", s"$tmp/batch")
     graft.similarity.Ivf.writeIngestStore(base, cents, streamStore)
     graft.similarity.Ivf.writeAssignedStore(base, cents, batchStore)
@@ -476,7 +476,7 @@ class StreamingSpec extends AnyFunSuite {
     val trained = graft.similarity.Ivf.train(base, k = 3, iters = 1, dim = 8)
     val cents = spark.createDataFrame(
       java.util.Arrays.asList(trained.collect(): _*), trained.schema)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sidxr").toString
+    val tmp = SparkFixture.tempDir("graft_sidxr").toString
     val store = s"$tmp/store"
     graft.similarity.Ivf.writeIngestStore(base, cents, store)
     val mem = MemoryStream[(Long, Array[Float])]
@@ -520,7 +520,7 @@ class StreamingSpec extends AnyFunSuite {
     val resident = (3 until 23)
       .map(i => (i.toLong, unit(if (i % 2 == 1) 0 else 1, i)))
       .toDF("vec_id", "embedding")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sauid").toString
+    val tmp = SparkFixture.tempDir("graft_sauid").toString
     val root = s"$tmp/idx"
     val v1 = Ivf.writeVersionedIndex(resident, k = 2, root)
     assert(v1 == 1L)
@@ -567,7 +567,7 @@ class StreamingSpec extends AnyFunSuite {
     val resident = (3 until 23)
       .map(i => (i.toLong, unit(if (i % 2 == 1) 0 else 1, i)))
       .toDF("vec_id", "embedding")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_replay").toString
+    val tmp = SparkFixture.tempDir("graft_replay").toString
     val root = s"$tmp/idx"
     Ivf.writeVersionedIndex(resident, k = 2, root)
     def process(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
@@ -628,7 +628,7 @@ class StreamingSpec extends AnyFunSuite {
     val resident = (3 until 23)
       .map(i => (i.toLong, unit(if (i % 2 == 1) 0 else 1, i)))
       .toDF("vec_id", "embedding")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_creplay").toString
+    val tmp = SparkFixture.tempDir("graft_creplay").toString
     val root = s"$tmp/idx"
     Ivf.writeVersionedIndex(resident, k = 2, root)
     def process(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
@@ -674,7 +674,7 @@ class StreamingSpec extends AnyFunSuite {
     val resident = (3 until 23)
       .map(i => (i.toLong, unit(if (i % 2 == 1) 0 else 1, i)))
       .toDF("vec_id", "embedding")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sconf").toString
+    val tmp = SparkFixture.tempDir("graft_sconf").toString
     val root = s"$tmp/idx"
     Ivf.writeVersionedIndex(resident, k = 2, root)
     // auditEvery is huge: the RECALL audit never runs in this stream —
@@ -718,7 +718,7 @@ class StreamingSpec extends AnyFunSuite {
     val resident = (3 until 23)
       .map(i => (i.toLong, unit(if (i % 2 == 1) 0 else 1, i)))
       .toDF("vec_id", "embedding")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_nreplay").toString
+    val tmp = SparkFixture.tempDir("graft_nreplay").toString
     val root = s"$tmp/idx"
     Ivf.writeVersionedIndex(resident, k = 2, root)
     def process(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
@@ -766,7 +766,7 @@ class StreamingSpec extends AnyFunSuite {
     val resident = (3 until 23)
       .map(i => (i.toLong, unit(if (i % 2 == 1) 0 else 1, i)))
       .toDF("vec_id", "embedding")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_wload").toString
+    val tmp = SparkFixture.tempDir("graft_wload").toString
     val root = s"$tmp/idx"
     Ivf.writeVersionedIndex(resident, k = 2, root)
     // epoch 0 of the serving-query log: the workload the index was built
@@ -839,7 +839,7 @@ class StreamingSpec extends AnyFunSuite {
     val resident = (3 until 23)
       .map(i => (i.toLong, unit(if (i % 2 == 1) 0 else 1, i)))
       .toDF("vec_id", "embedding")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dfloor").toString
+    val tmp = SparkFixture.tempDir("graft_dfloor").toString
     val root = s"$tmp/idx"
     Ivf.writeVersionedIndex(resident, k = 2, root)
     // the publish CALIBRATED a floor from the resident corpus's own
@@ -875,7 +875,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("cdcApply maintains a versioned keyed snapshot across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_cdc").toString
+    val root = SparkFixture.tempDir("graft_cdc").toString
     val (snapDir, ckpt) = (s"$root/snap", s"$root/ckpt")
     val mem = MemoryStream[(Long, Double, Long, Boolean)]
     val changes = mem.toDS().toDF("id", "bal", "seq", "is_del")
