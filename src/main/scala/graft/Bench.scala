@@ -77,8 +77,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Context.session(s"local[$cpus]", cpus.toInt)
+    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus)
 
     // Warm-up: run every query once at the smallest scale factor so the
     // measured pass reports steady-state (codegen classes compiled, JIT
@@ -151,7 +150,7 @@ object Bench {
       // the stdout full line keeps its exact shape.
       val failed = results.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       val envLine = fullLine.dropRight(1) +
-        s""","cpus":$cpus,"heap_max_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},"gc_between":true,"failed":$failed,"records":${recordsJson(results)}}"""
+        s""","cpus":${Context.cpus},"heap_max_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},"gc_between":true,"failed":$failed,"records":${recordsJson(results)}}"""
       java.nio.file.Files.writeString(out, envLine + "\n")
       System.err.println(s"[bench] wrote $out")
     } catch { case NonFatal(e) =>

@@ -8,7 +8,7 @@ import graft.engine.Context
   * it sees. Usage: runMain graft.Smoke */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = Context.session("local[8]", 8)
+    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus)
     val e = SparkEntry.entry(spark)
     println("=== entry() schema ===")
     e.printSchema()

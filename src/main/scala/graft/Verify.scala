@@ -15,7 +15,6 @@ object Verify {
     val unknown = names -- SparkEntry.queries.keySet
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_NO_BROADCAST=1: verify under the CLUSTER-SCALE join
     // plan. At 100 TB no fact-table side fits a broadcast, so the plans
     // that actually run there are sort-merge/shuffled-hash — locally AQE
@@ -27,7 +26,8 @@ object Verify {
         Map("spark.sql.autoBroadcastJoinThreshold" -> "-1",
           "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
       else Map.empty[String, String]
-    val spark = Context.session(s"local[$cpus]", cpus.toInt, noBroadcast)
+    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus,
+      noBroadcast)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => names(name) }

@@ -2545,13 +2545,11 @@ object TextQueries {
     // context mass / mid-level model / continuation base / OOV floor
     ContractQuery("q_kn_trigram_ppl", (s, dir) => {
       val docs = t(s, dir, "documents")
-      // parts-mode scoring (bit-identical at minCount=1): the scorer
-      // consumes the trainer's slim aggregate tables directly instead of
-      // materializing the fat model and re-deriving them with four
-      // distinct() shuffles per call (guide §2.4/§1.2)
+      // the scorer consumes the trainer's slim aggregate tables directly
+      // instead of materializing the fat model
       val parts = graft.functions.Text.kneserNeyTrigramsParts(
         docs.filter(col("source") =!= "src1"), minCount = 1)
-      graft.functions.Text.knTrigramPerplexityFromTables(
+      graft.functions.Text.knTrigramPerplexity(
           docs.filter(col("source") === "src1"), parts.head, parts.ctx12,
           parts.mid, parts.ctx2, parts.c3, parts.consts)
         .orderBy("doc_id")
@@ -2567,10 +2565,10 @@ object TextQueries {
     // partitioning); only the final per-doc division/exp is double
     ContractQuery("q_kn_perplexity", (s, dir) => {
       val docs = t(s, dir, "documents")
-      // parts-mode scoring, the q_kn_trigram_ppl rationale one order down
+      // scored from the trainer's tables, as q_kn_trigram_ppl one order down
       val parts = graft.functions.Text.kneserNeyBigramsParts(
         docs.filter(col("source") =!= "src1"), minCount = 1)
-      graft.functions.Text.knPerplexityFromTables(
+      graft.functions.Text.knPerplexity(
           docs.filter(col("source") === "src1"), parts.head, parts.ctx,
           parts.prec, parts.consts)
         .orderBy("doc_id")
@@ -2613,7 +2611,7 @@ object TextQueries {
         () => graft.sources.Sinks.writeParquet(parts.ctx, s"$tbl/ctx"),
         () => graft.sources.Sinks.writeParquet(parts.prec, s"$tbl/prec"),
         () => graft.sources.Sinks.writeParquet(parts.consts, s"$tbl/consts")))
-      graft.functions.Text.knPerplexityFromTables(
+      graft.functions.Text.knPerplexity(
           docs.filter(col("source") === "src1"),
           s.read.parquet(modelPath).select(col("w1"), col("w2"), col("c12")),
           s.read.parquet(s"$tbl/ctx"), s.read.parquet(s"$tbl/prec"),
@@ -2649,7 +2647,7 @@ object TextQueries {
         () => graft.sources.Sinks.writeParquet(parts.ctx2, s"$tbl/ctx2"),
         () => graft.sources.Sinks.writeParquet(parts.c3, s"$tbl/c3"),
         () => graft.sources.Sinks.writeParquet(parts.consts, s"$tbl/consts")))
-      graft.functions.Text.knTrigramPerplexityFromTables(
+      graft.functions.Text.knTrigramPerplexity(
           docs.filter(col("source") === "src1"),
           s.read.parquet(modelPath)
             .select(col("w1"), col("w2"), col("w3"), col("c123")),

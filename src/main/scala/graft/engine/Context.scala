@@ -141,6 +141,11 @@ case class CsvOptions(
     mode: String = "PERMISSIVE")
 
 object Context {
+  /** Local-mode width of every main (`session(s"local[$cpus]", cpus)`):
+    * `SPARK_GRAFT_CPUS` if set, else this host's cores. */
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** The one session builder of this engine — every main and the test
     * fixture come through here, so they all run the same engine config.
     * AQE on (runtime re-planning, skew-join splitting), shuffle partitions

@@ -405,8 +405,7 @@ object Text {
     val vocabLit = typedlit(vocab)
     docs.select(col(idCol),
       array_join(
-        transform(
-          filter(split(col(textCol), " "), w => w =!= ""),
+        transform(wsTokens(col(textCol)),
           w => graft.functions.native.tokenize_greedy(w, vocabLit)),
         " ").as("subwords"))
   }
@@ -585,12 +584,10 @@ object Text {
   def bm25(docs: DataFrame, nTerms: Int = 2, topk: Int = 20,
       textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(nTerms <= 2, "score determinism relies on <= 2 addends per doc")
-    val toks = docs.select(col(idCol),
-      explode(filter(split(col(textCol), " "), t => t =!= "")).as("term"))
+    val toks = docs.select(col(idCol), explode(wsTokens(col(textCol))).as("term"))
     val tf = toks.groupBy(idCol, "term").agg(count(lit(1)).as("tf"))
     val dl = docs.select(col(idCol),
-      size(filter(split(col(textCol), " "), t => t =!= ""))
-        .cast(LongType).as("dl"))
+      size(wsTokens(col(textCol))).cast(LongType).as("dl"))
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val dfc = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val qt = tf.groupBy("term").agg(sum(col("tf")).as("total"))
@@ -615,6 +612,29 @@ object Text {
       .orderBy(col("bm25").desc, col(idCol).asc).limit(topk)
   }
 
+  /** Whitespace tokens of `text`: split on single spaces, empty tokens
+    * dropped. */
+  private def wsTokens(text: Column): Column =
+    filter(split(text, " "), t => t =!= "")
+
+  /** The adjacent `n`-token windows of each row's `tk` token array as
+    * columns w1..wn, carrying `carry` columns through. ONE extractor feeds
+    * PMI and both Kneser–Ney orders, train and score side alike — a
+    * scorer's lookup joins only hit if both sides window the tokens
+    * identically. A narrow per-row explode of the `n` shifted slices
+    * zipped together (codegen'd, no lambda): no self-join. */
+  private def ngrams(toks: DataFrame, n: Int,
+      carry: Seq[String] = Nil): DataFrame = {
+    val tk = col("tk")
+    val windows = size(tk) - (n - 1)
+    // arrays_zip names the fields of unnamed inputs "0", "1", ...
+    toks.filter(size(tk) >= n)
+      .select(carry.map(col) :+ explode(arrays_zip(
+        (1 to n).map(k => slice(tk, lit(k), windows)): _*)).as("g"): _*)
+      .select(carry.map(col) ++
+        (1 to n).map(k => col("g").getField(s"${k - 1}").as(s"w$k")): _*)
+  }
+
   /** PMI collocation mining (Church & Hanks 1990): adjacent-token bigrams
     * scored by pointwise mutual information against the unigram model —
     * the phrase-mining signal a corpus pipeline uses to build tokenizer
@@ -624,25 +644,18 @@ object Text {
     * factor is an exact integer-valued double and the mul/div order is
     * pinned to match the oracle twin.
     *
-    * Scale shape: bigram generation is a narrow zip of each token array
-    * with its own tail (no self-join); counting is two map-side-combined
-    * groupBys; the two unigram lookups join on the FILTERED bigram set
-    * (c_xy >= minCount), so the heavy vocabulary join happens after the
-    * long tail is dropped; the totals row is a 1-row broadcast. */
+    * Scale shape: bigram generation is a narrow [[ngrams]] explode (no
+    * self-join); counting is two map-side-combined groupBys; the two
+    * unigram lookups join on the FILTERED bigram set (c_xy >= minCount),
+    * so the heavy vocabulary join happens after the long tail is dropped;
+    * the totals row is a 1-row broadcast. */
   def pmiCollocations(docs: DataFrame, minCount: Long = 5, topk: Int = 20,
       textCol: String = "text"): DataFrame = {
-    val toks = docs.select(
-      filter(split(col(textCol), " "), t => t =!= "").as("tk"))
+    val toks = docs.select(wsTokens(col(textCol)).as("tk"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bigrams = toks.filter(size(col("tk")) > 1)
-      .select(explode(zip_with(
-        slice(col("tk"), lit(1), size(col("tk")) - 1),
-        slice(col("tk"), lit(2), size(col("tk")) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"))
-      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
     val uni = toks.select(explode(col("tk")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
-    val bg = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("c_xy"))
+    val bg = ngrams(toks, 2).groupBy("w1", "w2").agg(count(lit(1)).as("c_xy"))
       .filter(col("c_xy") >= minCount)
     val totals = toks.agg(
       sum(size(col("tk"))).cast(LongType).as("t_uni"),
@@ -657,11 +670,49 @@ object Text {
       .orderBy(col("pmi").desc, col("w1").asc, col("w2").asc).limit(topk)
   }
 
+  /** λ·lower: the mass a context with count `ctxCount` and `nFollow`
+    * follower types reserves by discounting each follower by `d`, spread
+    * by the lower-order probability `lower`. */
+  private def knBackoff(d: Column, ctxCount: Column, nFollow: Column,
+      lower: Column): Column =
+    d * nFollow.cast(DoubleType) / ctxCount.cast(DoubleType) * lower
+
+  /** One interpolated Kneser–Ney level: max(count − D, 0)/ctxCount + λ·lower. */
+  private def knInterp(d: Column, count: Column, ctxCount: Column,
+      nFollow: Column, lower: Column): Column =
+    greatest(count.cast(DoubleType) - d, lit(0.0)) /
+      ctxCount.cast(DoubleType) + knBackoff(d, ctxCount, nFollow, lower)
+
+  /** P_kn(w2|w1) of a counted bigram over the trainer's exact integers
+    * (c12, c_ctx, n_follow, n_prec, b_types): the trainer's `p_kn` column
+    * and the scorer's seen branch are this one expression, so a score is
+    * bit-identical to the stored model's probability. */
+  private def knBigramSeen(d: Column): Column =
+    knInterp(d, col("c12"), col("c_ctx"), col("n_follow"),
+      col("n_prec").cast(DoubleType) / col("b_types").cast(DoubleType))
+
+  /** P(w3|w1,w2) of a counted trigram (see [[kneserNeyTrigrams]]): the
+    * trainer's `p_kn` column and the scorer's seen branch. */
+  private def knTrigramSeen(d: Column): Column =
+    knInterp(d, col("c123"), col("c12"), col("nf12"),
+      knInterp(d, col("cont23"), col("cont2"), col("nf2"),
+        col("cont3").cast(DoubleType) / col("b23").cast(DoubleType)))
+
+  /** `table` restricted to the `keys` the minCount-filtered `head`
+    * carries (a left-semi join), so the backoff tables describe the same
+    * model the head does: a tail-only context or successor falls further
+    * down the backoff chain instead of lending mass the stored model
+    * never kept. At minCount = 1 the head holds every key and the table
+    * (and its plan) is returned as is. */
+  private def onHead(table: DataFrame, head: DataFrame, minCount: Long,
+      keys: String*): DataFrame =
+    if (minCount > 1) table.join(head, keys, "left_semi") else table
+
   /** Interpolated Kneser–Ney bigram model (single absolute discount D) —
     * the classic smoothing behind n-gram-LM perplexity filters for corpus
     * quality scoring (CCNet-style): train the LM on a reference corpus,
-    * score candidate documents, drop the tail. This is the TRAIN side:
-    * the full smoothed conditional table
+    * score candidate documents ([[knPerplexity]]), drop the tail. This is
+    * the TRAIN side: the full smoothed conditional table
     *
     *   P_kn(w2|w1) = max(c(w1,w2) − D, 0) / c(w1·)
     *               + (D · N1+(w1,·) / c(w1·)) · N1+(·,w2) / B
@@ -674,53 +725,35 @@ object Text {
     * Exactness: every input to the probability is an exact integer count;
     * the probability itself is ONE per-row double expression over them,
     * so the result is bit-exact under any partitioning/evaluation order.
-    * Scale shape: bigram generation is a narrow zip of each token array
-    * with its own tail (no self-join); all four count tables derive from
-    * ONE persisted bigram aggregate (map-side combined); the context and
-    * continuation joins run on the minCount-FILTERED output set so the
-    * heavy vocabulary joins happen after the long tail is dropped, while
-    * the counts themselves are computed over ALL bigrams (filtering
-    * before counting would corrupt the denominators); the type total is
-    * a 1-row broadcast. */
-  /** Adjacent whitespace-token bigrams of `textCol`, carrying `carry`
-    * columns through. ONE implementation feeds both the KN train and
-    * score sides — the model join only hits if both sides tokenize
-    * identically, so the extraction must not be duplicated. */
-  private def wsBigrams(df: DataFrame, textCol: String,
-      carry: Seq[String]): DataFrame = {
-    val toks = df.select(carry.map(col) :+
-      filter(split(col(textCol), " "), t => t =!= "").as("tk"): _*)
-    toks.filter(size(col("tk")) > 1)
-      .select(carry.map(col) :+ explode(zip_with(
-        slice(col("tk"), lit(1), size(col("tk")) - 1),
-        slice(col("tk"), lit(2), size(col("tk")) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("bg"): _*)
-      .select(carry.map(col) :+ col("bg.w1").as("w1") :+ col("bg.w2").as("w2"): _*)
-  }
-
+    * Scale shape: bigram generation is a narrow [[ngrams]] explode (no
+    * self-join); all four count tables derive from ONE persisted bigram
+    * aggregate (map-side combined); the context and continuation joins
+    * run on the minCount-FILTERED output set so the heavy vocabulary
+    * joins happen after the long tail is dropped, while the counts
+    * themselves are computed over ALL bigrams (filtering before counting
+    * would corrupt the denominators); the type total is a 1-row
+    * broadcast. */
   def kneserNeyBigrams(docs: DataFrame, textCol: String = "text",
       discount: Double = 0.75, minCount: Long = 5): DataFrame =
     kneserNeyBigramsParts(docs, textCol, discount, minCount).model
 
-  /** The trainer's own aggregates, exposed for scorers: the denormalized
-    * `model` is the public artifact (unchanged), but every column of it
-    * is a join of these slim tables — a scorer that takes the tables
-    * directly skips re-deriving them from the fat model with one full
-    * model shuffle per table ([[knPerplexityFromTables]]). `ctx`/`prec`
-    * are the FULL (pre-minCount) tables, exactly what the model's
-    * denormalized columns carry for every surviving row; on a
-    * minCount=1 model they also cover precisely the keys a model-derived
-    * scorer would see, so the two scoring paths are bit-identical there
-    * (the contract scoring queries all train at minCount=1). */
-  private[graft] final case class KnBigramParts(head: DataFrame,
+  /** The trainer's own tables next to its denormalized `model`: `head`
+    * (w1, w2, c12) holds the minCount-filtered counted pairs, `ctx`
+    * (w1, c_ctx, n_follow) and `prec` (w2, n_prec) the backoff counts of
+    * the head's keys, `consts` (b_types, discount) the pre-filter type
+    * total and the discount. Every `model` column is a join of these, so
+    * [[knPerplexity]] scores from them directly — from memory or from a
+    * store that wrote them at train time — with no re-derivation from the
+    * fat model. */
+  final case class KnBigramParts(head: DataFrame,
       ctx: DataFrame, prec: DataFrame, consts: DataFrame, model: DataFrame)
 
-  private[graft] def kneserNeyBigramsParts(docs: DataFrame,
+  def kneserNeyBigramsParts(docs: DataFrame,
       textCol: String = "text", discount: Double = 0.75,
       minCount: Long = 5): KnBigramParts = {
     require(discount > 0 && discount < 1, s"discount in (0,1), got $discount")
-    val bigrams = wsBigrams(docs, textCol, Nil)
-    val bg = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
+    val bg = ngrams(docs.select(wsTokens(col(textCol)).as("tk")), 2)
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // pin the cache before ctx/prec/types/the filtered head scan it in
     // one action (the kneserNeyTrigrams rationale, one order down)
@@ -730,12 +763,6 @@ object Text {
         count(lit(1)).as("n_follow"))
     val prec = bg.groupBy("w2").agg(count(lit(1)).as("n_prec"))
     val types = bg.agg(count(lit(1)).as("b_types"))
-    val d = lit(discount)
-    val pKn =
-      greatest(col("c12").cast(DoubleType) - d, lit(0.0)) /
-        col("c_ctx").cast(DoubleType) +
-      d * col("n_follow").cast(DoubleType) / col("c_ctx").cast(DoubleType) *
-        (col("n_prec").cast(DoubleType) / col("b_types").cast(DoubleType))
     // b_types and discount ride along so the model is SELF-DESCRIBING:
     // the scorer needs the true pre-filter type total (deriving it from
     // the filtered rows would inflate continuation probabilities past 1
@@ -746,9 +773,11 @@ object Text {
       .join(ctx, "w1").join(prec, "w2")
       .crossJoin(broadcast(types))
       .select(col("w1"), col("w2"), col("c12"), col("c_ctx"),
-        col("n_follow"), col("n_prec"), round(pKn, 6).as("p_kn"),
+        col("n_follow"), col("n_prec"),
+        round(knBigramSeen(lit(discount)), 6).as("p_kn"),
         col("b_types"), lit(discount).as("discount"))
-    KnBigramParts(head.select(col("w1"), col("w2"), col("c12")), ctx, prec,
+    KnBigramParts(head.select(col("w1"), col("w2"), col("c12")),
+      onHead(ctx, head, minCount, "w1"), onHead(prec, head, minCount, "w2"),
       types.select(col("b_types"), lit(discount).as("discount")), model)
   }
 
@@ -769,33 +798,25 @@ object Text {
     * aggregates; the heavy joins run on the minCount-filtered head while
     * denominators count all types; the type total is a 1-row broadcast.
     * Like the bigram model, the output is self-describing (b23 +
-    * discount columns) for a future trigram scorer. */
+    * discount columns); [[knTrigramPerplexity]] scores under it. */
   def kneserNeyTrigrams(docs: DataFrame, textCol: String = "text",
       discount: Double = 0.75, minCount: Long = 5): DataFrame =
     kneserNeyTrigramsParts(docs, textCol, discount, minCount).model
 
-  /** Trigram analog of [[KnBigramParts]]: the trainer's slim aggregate
-    * tables next to the denormalized model. Same coverage note — the
-    * tables are pre-minCount FULL aggregates, bit-identical to a
-    * model-derived scorer only on a minCount=1 model. */
-  private[graft] final case class KnTrigramParts(head: DataFrame,
+  /** Trigram analog of [[KnBigramParts]]: `head` (w1, w2, w3, c123), the
+    * backoff tables `ctx12` (w1, w2, c12, nf12), `mid` (w2, w3, cont23),
+    * `ctx2` (w2, cont2, nf2) and `c3` (w3, cont3) over the head's keys,
+    * and `consts` (b23, discount). */
+  final case class KnTrigramParts(head: DataFrame,
       ctx12: DataFrame, mid: DataFrame, ctx2: DataFrame, c3: DataFrame,
       consts: DataFrame, model: DataFrame)
 
-  private[graft] def kneserNeyTrigramsParts(docs: DataFrame,
+  def kneserNeyTrigramsParts(docs: DataFrame,
       textCol: String = "text", discount: Double = 0.75,
       minCount: Long = 5): KnTrigramParts = {
     require(discount > 0 && discount < 1, s"discount in (0,1), got $discount")
-    val toks = docs.select(
-      filter(split(col(textCol), " "), t => t =!= "").as("tk"))
-    val tri = toks.filter(size(col("tk")) > 2)
-      .select(explode(transform(
-        sequence(lit(1), size(col("tk")) - 2),
-        i => struct(element_at(col("tk"), i).as("w1"),
-          element_at(col("tk"), i + 1).as("w2"),
-          element_at(col("tk"), i + 2).as("w3")))).as("tg"))
-      .select(col("tg.w1").as("w1"), col("tg.w2").as("w2"), col("tg.w3").as("w3"))
-    val tg = tri.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c123"))
+    val tg = ngrams(docs.select(wsTokens(col(textCol)).as("tk")), 3)
+      .groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c123"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // pin the cache BEFORE the multi-branch plan below runs: four
     // branches (ctx12, cont23, the filtered head, and cont23's own
@@ -818,16 +839,6 @@ object Text {
         count(lit(1)).as("nf2"))
     val cont3 = cont23.groupBy("w3").agg(count(lit(1)).as("cont3"))
     val btot = cont23.agg(count(lit(1)).as("b23"))
-    val d = lit(discount)
-    val p2 =
-      greatest(col("cont23").cast(DoubleType) - d, lit(0.0)) /
-        col("cont2").cast(DoubleType) +
-      d * col("nf2").cast(DoubleType) / col("cont2").cast(DoubleType) *
-        (col("cont3").cast(DoubleType) / col("b23").cast(DoubleType))
-    val pKn =
-      greatest(col("c123").cast(DoubleType) - d, lit(0.0)) /
-        col("c12").cast(DoubleType) +
-      d * col("nf12").cast(DoubleType) / col("c12").cast(DoubleType) * p2
     val head = tg.filter(col("c123") >= minCount)
     val model = head
       .join(ctx12, Seq("w1", "w2")).join(cont23, Seq("w2", "w3"))
@@ -835,163 +846,84 @@ object Text {
       .crossJoin(broadcast(btot))
       .select(col("w1"), col("w2"), col("w3"), col("c123"), col("c12"),
         col("nf12"), col("cont23"), col("cont2"), col("nf2"), col("cont3"),
-        round(pKn, 6).as("p_kn"), col("b23"), lit(discount).as("discount"))
+        round(knTrigramSeen(lit(discount)), 6).as("p_kn"), col("b23"),
+        lit(discount).as("discount"))
     KnTrigramParts(
       head.select(col("w1"), col("w2"), col("w3"), col("c123")),
-      ctx12, cont23, ctx2, cont3,
+      onHead(ctx12, head, minCount, "w1", "w2"),
+      onHead(cont23, head, minCount, "w2", "w3"),
+      onHead(ctx2, head, minCount, "w2"), onHead(cont3, head, minCount, "w3"),
       btot.select(col("b23"), lit(discount).as("discount")), model)
   }
 
-  /** Trigram perplexity under a trained [[kneserNeyTrigrams]] model —
-    * the deeper-backoff score side. Chain per scored trigram:
-    * seen triple → the model's p_kn; unseen triple but seen (w1,w2)
-    * context → its reserved mass λ12·P2(w3|w2); unseen context → the
-    * mid-level model P2(w3|w2) alone (an uninformative context adds
-    * nothing); unknown w2 → the continuation base Pc(w3); unknown w3 →
-    * 0, caught by the `pOov` floor. Discount and the b23 type total
-    * come from the model's self-describing columns; on a
-    * minCount-filtered model, tail entries are absent from the derived
-    * backoff tables and degrade DOWN the chain (never inflating).
-    * Documents with fewer than three tokens emit n_trigrams = 0 and a
-    * NULL perplexity. Same exactness discipline as [[knPerplexity]]:
-    * rounded per-trigram log-probs summed as DECIMAL. */
-  def knTrigramPerplexity(docs: DataFrame, model: DataFrame,
-      textCol: String = "text", idCol: String = "doc_id",
-      pOov: Double = 1e-7): DataFrame = {
-    require(pOov > 0, s"pOov must be positive, got $pOov")
-    val tri = docs.select(col(idCol),
-        filter(split(col(textCol), " "), t => t =!= "").as("tk"))
-      .filter(size(col("tk")) > 2)
-      .select(col(idCol), explode(transform(
-        sequence(lit(1), size(col("tk")) - 2),
-        i => struct(element_at(col("tk"), i).as("w1"),
-          element_at(col("tk"), i + 1).as("w2"),
-          element_at(col("tk"), i + 2).as("w3")))).as("tg"))
-      .select(col(idCol), col("tg.w1").as("w1"), col("tg.w2").as("w2"),
-        col("tg.w3").as("w3"))
-    val m = model.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the model cache NOW: five scorer branches scan m in
-    // one action, and for an in-memory model the lineage is the whole
-    // training build — racing branches against an unpinned cache cost
-    // more than a parquet round trip of the same model (measured)
-    m.count()
-    val ctx12 = m.select(col("w1"), col("w2"), col("c12"), col("nf12")).distinct()
-    val mid = m.select(col("w2"), col("w3"), col("cont23")).distinct()
-    val ctx2 = m.select(col("w2"), col("cont2"), col("nf2")).distinct()
-    val c3 = m.select(col("w3"), col("cont3")).distinct()
-    val consts = m.agg(max(col("b23")).as("b23"),
-      max(col("discount")).as("discount"))
-    val d = col("discount")
-    val pc = coalesce(col("cont3"), lit(0L)).cast(DoubleType) /
-      col("b23").cast(DoubleType)
-    val p2 = when(col("cont2").isNotNull,
-        greatest(coalesce(col("cont23"), lit(0L)).cast(DoubleType) - d,
-          lit(0.0)) / col("cont2").cast(DoubleType) +
-        d * col("nf2").cast(DoubleType) / col("cont2").cast(DoubleType) * pc)
-      .otherwise(pc)
-    val p = greatest(
-      when(col("p_kn").isNotNull, col("p_kn"))
-        .when(col("c12").isNotNull,
-          d * col("nf12").cast(DoubleType) / col("c12").cast(DoubleType) * p2)
-        .otherwise(p2),
-      lit(pOov))
-    val scored = tri
-      .join(m.select(col("w1"), col("w2"), col("w3"), col("p_kn")),
-        Seq("w1", "w2", "w3"), "left")
-      .join(ctx12, Seq("w1", "w2"), "left")
-      .join(mid, Seq("w2", "w3"), "left")
-      .join(ctx2, Seq("w2"), "left")
-      .join(c3, Seq("w3"), "left")
-      .crossJoin(broadcast(consts))
-      .select(col(idCol),
-        round(log(p), 6).cast(DecimalType(28, 6)).as("lp"))
+  /** Per-document perplexity from per-n-gram probabilities `p` over
+    * `grams` (one row per scored n-gram, keyed by `idCol`): log-probs are
+    * rounded to 6 decimals and summed as DECIMAL — exact and
+    * order-independent under any partitioning — and only the final
+    * per-doc division/exp returns to double. Every document of `docs` is
+    * emitted; one without n-grams gets `nCol` = 0 and a NULL perplexity,
+    * so a downstream threshold filter sees it explicitly instead of
+    * silently losing it. */
+  private def perplexityByDoc(docs: DataFrame, idCol: String,
+      grams: DataFrame, p: Column, nCol: String): DataFrame = {
+    val scored = grams
+      .select(col(idCol), round(log(p), 6).cast(DecimalType(28, 6)).as("lp"))
       .groupBy(idCol)
-      .agg(count(lit(1)).as("nt"), sum(col("lp")).as("s"))
+      .agg(count(lit(1)).as("n"), sum(col("lp")).as("s"))
     docs.select(col(idCol)).join(scored, Seq(idCol), "left")
       .select(col(idCol),
-        coalesce(col("nt"), lit(0L)).as("n_trigrams"),
+        coalesce(col("n"), lit(0L)).as(nCol),
         round(exp(-(col("s").cast(DoubleType) /
-          col("nt").cast(DoubleType))), 6).as("perplexity"))
+          col("n").cast(DoubleType))), 6).as("perplexity"))
   }
 
-  /** [[knTrigramPerplexity]] scored from the trainer's SLIM tables
-    * instead of the denormalized model: the model-based scorer pays a
-    * full materialization of the fat 13-column model plus FOUR
-    * `distinct()` re-derivations of tables that are pure functions of
-    * the training aggregates — at 100 TB that is four extra full model
-    * shuffles per scoring call, every call. Here the lookup tables come
-    * in directly (from [[kneserNeyTrigramsParts]], or read back from a
-    * store that persisted them at train time) and the seen-triple
-    * probability is recomputed from the SAME exact integer inputs with
-    * the trainer's verbatim expression, so it is bit-identical to the
-    * model's stored `p_kn`. Coverage caveat: the slim tables are FULL
-    * (pre-minCount) aggregates — on a minCount>1 model the model-derived
-    * backoff tables are head-restricted subsets, so this path only
-    * replaces the model scorer bit-for-bit at minCount=1 (all contract
-    * scoring queries). Expressions below mirror [[knTrigramPerplexity]]
-    * and [[kneserNeyTrigramsParts]] clause for clause — keep in sync. */
-  private[graft] def knTrigramPerplexityFromTables(docs: DataFrame,
+  /** Trigram perplexity under a trained [[kneserNeyTrigrams]] model,
+    * scored from its [[KnTrigramParts]] tables (in memory, or read back
+    * from a store that wrote them at train time). Chain per scored
+    * trigram: seen triple → the trainer's p_kn ([[knTrigramSeen]] over
+    * the same exact integers); unseen triple but seen (w1,w2) context →
+    * its reserved mass λ12·P2(w3|w2); unseen context → the mid-level
+    * model P2(w3|w2) alone (an uninformative context adds nothing);
+    * unknown w2 → the continuation base Pc(w3); unknown w3 → 0, caught by
+    * the `pOov` floor. On a minCount-filtered model, tail entries are
+    * absent from the backoff tables and degrade DOWN the chain (never
+    * inflating). Documents with fewer than three tokens emit
+    * n_trigrams = 0 and a NULL perplexity ([[perplexityByDoc]]). */
+  def knTrigramPerplexity(docs: DataFrame,
       head: DataFrame, ctx12: DataFrame, mid: DataFrame, ctx2: DataFrame,
       c3: DataFrame, consts: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", pOov: Double = 1e-7): DataFrame = {
     require(pOov > 0, s"pOov must be positive, got $pOov")
-    val tri = docs.select(col(idCol),
-        filter(split(col(textCol), " "), t => t =!= "").as("tk"))
-      .filter(size(col("tk")) > 2)
-      .select(col(idCol), explode(transform(
-        sequence(lit(1), size(col("tk")) - 2),
-        i => struct(element_at(col("tk"), i).as("w1"),
-          element_at(col("tk"), i + 1).as("w2"),
-          element_at(col("tk"), i + 2).as("w3")))).as("tg"))
-      .select(col(idCol), col("tg.w1").as("w1"), col("tg.w2").as("w2"),
-        col("tg.w3").as("w3"))
     val d = col("discount")
     val pc = coalesce(col("cont3"), lit(0L)).cast(DoubleType) /
       col("b23").cast(DoubleType)
     val p2 = when(col("cont2").isNotNull,
-        greatest(coalesce(col("cont23"), lit(0L)).cast(DoubleType) - d,
-          lit(0.0)) / col("cont2").cast(DoubleType) +
-        d * col("nf2").cast(DoubleType) / col("cont2").cast(DoubleType) * pc)
+        knInterp(d, coalesce(col("cont23"), lit(0L)), col("cont2"),
+          col("nf2"), pc))
       .otherwise(pc)
-    // the trainer's p2/pKn verbatim (no coalesce — every input is
-    // non-null for a surviving head triple)
-    val p2Seen =
-      greatest(col("cont23").cast(DoubleType) - d, lit(0.0)) /
-        col("cont2").cast(DoubleType) +
-      d * col("nf2").cast(DoubleType) / col("cont2").cast(DoubleType) *
-        (col("cont3").cast(DoubleType) / col("b23").cast(DoubleType))
-    val pKnSeen =
-      greatest(col("c123").cast(DoubleType) - d, lit(0.0)) /
-        col("c12").cast(DoubleType) +
-      d * col("nf12").cast(DoubleType) / col("c12").cast(DoubleType) * p2Seen
     val p = greatest(
-      when(col("c123").isNotNull, round(pKnSeen, 6))
-        .when(col("c12").isNotNull,
-          d * col("nf12").cast(DoubleType) / col("c12").cast(DoubleType) * p2)
+      when(col("c123").isNotNull, round(knTrigramSeen(d), 6))
+        .when(col("c12").isNotNull, knBackoff(d, col("c12"), col("nf12"), p2))
         .otherwise(p2),
       lit(pOov))
-    val scored = tri
+    val grams = ngrams(docs.select(col(idCol), wsTokens(col(textCol)).as("tk")),
+        3, Seq(idCol))
       .join(head, Seq("w1", "w2", "w3"), "left")
       .join(ctx12, Seq("w1", "w2"), "left")
       .join(mid, Seq("w2", "w3"), "left")
       .join(ctx2, Seq("w2"), "left")
       .join(c3, Seq("w3"), "left")
       .crossJoin(broadcast(consts))
-      .select(col(idCol),
-        round(log(p), 6).cast(DecimalType(28, 6)).as("lp"))
-      .groupBy(idCol)
-      .agg(count(lit(1)).as("nt"), sum(col("lp")).as("s"))
-    docs.select(col(idCol)).join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("nt"), lit(0L)).as("n_trigrams"),
-        round(exp(-(col("s").cast(DoubleType) /
-          col("nt").cast(DoubleType))), 6).as("perplexity"))
+    perplexityByDoc(docs, idCol, grams, p, "n_trigrams")
   }
 
   /** The SCORE side of the n-gram perplexity filter: per-document bigram
     * perplexity under a trained [[kneserNeyBigrams]] model (train on a
     * clean reference corpus, score candidates, drop the high-perplexity
-    * tail — the CCNet recipe). Backoff chain for bigrams the model has
+    * tail — the CCNet recipe), scored from its [[KnBigramParts]] tables
+    * (in memory, or read back from a store that wrote them at train
+    * time). A seen pair scores the trainer's p_kn ([[knBigramSeen]] over
+    * the same exact integers). Backoff chain for bigrams the model has
     * not seen: a seen context w1 contributes its reserved mass
     * λ(w1)·P_cont(w2) (zero P_cont for unseen w2); a wholly unseen
     * context falls to the explicit OOV floor `pOov`, which also floors
@@ -999,105 +931,39 @@ object Text {
     * simplification of full KN unigram backoff — deterministic,
     * engine-replayable, and standard practice in filtering pipelines
     * where the tail ranking (not the exact tail value) is what matters.
-    * The discount and the true bigram-type total come FROM THE MODEL
-    * (it is self-describing): mixing a different discount than the seen
-    * rows reserved, or deriving the type total from a minCount-filtered
-    * head, would push per-context mass past 1. On a filtered model,
-    * tail-only contexts/successors are absent from the backoff tables
-    * and fall to the floor — a conservative (never inflating) miss.
+    * The discount and the true bigram-type total come from `consts`:
+    * mixing a different discount than the seen rows reserved, or
+    * deriving the type total from a minCount-filtered head, would push
+    * per-context mass past 1. On a filtered model, tail-only
+    * contexts/successors are absent from the backoff tables and fall to
+    * the floor — a conservative (never inflating) miss. Documents with
+    * fewer than two tokens emit n_bigrams = 0 and a NULL perplexity
+    * ([[perplexityByDoc]]).
     *
-    * Documents with fewer than two tokens have no bigrams and no defined
-    * perplexity: they are still emitted, with n_bigrams = 0 and a NULL
-    * perplexity, so a downstream threshold filter sees them explicitly
-    * instead of silently losing them.
-    *
-    * Exactness under any partitioning: per-bigram log-probs are rounded
-    * to 6 decimals and summed as DECIMAL (exact, order-independent);
-    * only the final per-doc division/exp returns to double.
-    * Scale shape: one hash join of doc-bigrams against the model on
-    * (w1, w2) plus two slim backoff joins on the miss side's keys; the
-    * type total is a 1-row broadcast; no windows, no driver state. */
-  def knPerplexity(docs: DataFrame, model: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", pOov: Double = 1e-7): DataFrame = {
-    require(pOov > 0, s"pOov must be positive, got $pOov")
-    val bigrams = wsBigrams(docs, textCol, Seq(idCol))
-    // backoff tables derived from the model itself (c_ctx/n_follow repeat
-    // per context; n_prec per successor) — train once, score many. The
-    // model is persisted here because FOUR branches read it (pair join,
-    // ctx, prec, consts): without the persist each branch replays the
-    // whole training lineage, quadrupling the plan (measured 48 → 17
-    // exchanges at sf0.1)
-    val m = model.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    m.count() // pin the cache before the four scorer branches scan it
-    val ctx = m.select(col("w1"), col("c_ctx"), col("n_follow")).distinct()
-    val prec = m.select(col("w2"), col("n_prec")).distinct()
-    val consts = m.agg(max(col("b_types")).as("b_types"),
-      max(col("discount")).as("discount"))
-    val pBackoff = col("discount") * col("n_follow").cast(DoubleType) /
-      col("c_ctx").cast(DoubleType) *
-      (coalesce(col("n_prec"), lit(0L)).cast(DoubleType) /
-        col("b_types").cast(DoubleType))
-    val p = greatest(
-      coalesce(col("p_kn"),
-        when(col("c_ctx").isNotNull, pBackoff).otherwise(lit(0.0))),
-      lit(pOov))
-    val scored = bigrams
-      .join(m.select(col("w1"), col("w2"), col("p_kn")), Seq("w1", "w2"), "left")
-      .join(ctx, Seq("w1"), "left")
-      .join(prec, Seq("w2"), "left")
-      .crossJoin(broadcast(consts))
-      .select(col(idCol),
-        round(log(p), 6).cast(DecimalType(28, 6)).as("lp"))
-      .groupBy(idCol)
-      .agg(count(lit(1)).as("nb"), sum(col("lp")).as("s"))
-    docs.select(col(idCol)).join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("nb"), lit(0L)).as("n_bigrams"),
-        round(exp(-(col("s").cast(DoubleType) /
-          col("nb").cast(DoubleType))), 6).as("perplexity"))
-  }
-
-  /** [[knPerplexity]] scored from the trainer's SLIM tables — the bigram
-    * analog of [[knTrigramPerplexityFromTables]]: no fat-model
-    * materialization, no serve-side `distinct()` re-derivations; the
-    * seen-pair probability is the trainer's verbatim expression over the
-    * same exact integers (bit-identical to the model's `p_kn`). Same
-    * minCount=1 coverage caveat; same keep-in-sync discipline with
-    * [[knPerplexity]] / [[kneserNeyBigramsParts]]. */
-  private[graft] def knPerplexityFromTables(docs: DataFrame,
+    * Scale shape: one hash join of doc-bigrams against the head on
+    * (w1, w2) plus two slim backoff joins; the constants are a 1-row
+    * broadcast; no windows, no driver state. */
+  def knPerplexity(docs: DataFrame,
       head: DataFrame, ctx: DataFrame, prec: DataFrame, consts: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
       pOov: Double = 1e-7): DataFrame = {
     require(pOov > 0, s"pOov must be positive, got $pOov")
-    val bigrams = wsBigrams(docs, textCol, Seq(idCol))
     val d = col("discount")
-    val pKnSeen =
-      greatest(col("c12").cast(DoubleType) - d, lit(0.0)) /
-        col("c_ctx").cast(DoubleType) +
-      d * col("n_follow").cast(DoubleType) / col("c_ctx").cast(DoubleType) *
-        (col("n_prec").cast(DoubleType) / col("b_types").cast(DoubleType))
-    val pBackoff = d * col("n_follow").cast(DoubleType) /
-      col("c_ctx").cast(DoubleType) *
-      (coalesce(col("n_prec"), lit(0L)).cast(DoubleType) /
-        col("b_types").cast(DoubleType))
+    val pc = coalesce(col("n_prec"), lit(0L)).cast(DoubleType) /
+      col("b_types").cast(DoubleType)
     val p = greatest(
-      coalesce(when(col("c12").isNotNull, round(pKnSeen, 6)),
-        when(col("c_ctx").isNotNull, pBackoff).otherwise(lit(0.0))),
+      coalesce(when(col("c12").isNotNull, round(knBigramSeen(d), 6)),
+        when(col("c_ctx").isNotNull,
+          knBackoff(d, col("c_ctx"), col("n_follow"), pc))
+          .otherwise(lit(0.0))),
       lit(pOov))
-    val scored = bigrams
+    val grams = ngrams(docs.select(col(idCol), wsTokens(col(textCol)).as("tk")),
+        2, Seq(idCol))
       .join(head, Seq("w1", "w2"), "left")
       .join(ctx, Seq("w1"), "left")
       .join(prec, Seq("w2"), "left")
       .crossJoin(broadcast(consts))
-      .select(col(idCol),
-        round(log(p), 6).cast(DecimalType(28, 6)).as("lp"))
-      .groupBy(idCol)
-      .agg(count(lit(1)).as("nb"), sum(col("lp")).as("s"))
-    docs.select(col(idCol)).join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("nb"), lit(0L)).as("n_bigrams"),
-        round(exp(-(col("s").cast(DoubleType) /
-          col("nb").cast(DoubleType))), 6).as("perplexity"))
+    perplexityByDoc(docs, idCol, grams, p, "n_bigrams")
   }
 
   /** FastText-shaped linear classifier APPLY: hashed bag-of-words
@@ -1122,22 +988,6 @@ object Text {
     val acc = aggregate(toks, lit(0L), (a, tok) => a + weight(tok))
     acc.cast(DoubleType) /
       (lit(1000.0) * greatest(size(toks), lit(1)).cast(DoubleType))
-  }
-
-  /** Full per-document stats projection over a documents table. */
-  def documentStats(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    docs.select(
-      col("doc_id"),
-      charCount(t).as("n_chars"),
-      tokenCount(t).as("n_tokens"),
-      subwordCount(t).as("n_subwords"),
-      round(punctRatio(t), 6).as("punct_ratio"),
-      round(stopwordRatio(t), 6).as("stopword_ratio"),
-      round(meanTokenLen(t), 6).as("mean_token_len"),
-      qualityScore(t).as("quality"),
-      langId(t).as("lang_pred"),
-      fingerprint(t).as("fingerprint"))
   }
 
   /** Exact phrase search over a positional inverted index — the
@@ -1379,20 +1229,6 @@ object Text {
   private val BpeHorizon = 256
   private val BpeMaxBatch = 64
 
-  /** Per-document keyword extraction by TF-rarity rank: a document's top
-    * terms are those it repeats most (tf desc) among terms the corpus
-    * uses least (document frequency asc, then term asc — a total order).
-    * This is the log-free integer form of TF-IDF term ranking: for a
-    * FIXED document, ordering by (tf, −df) selects the same leaders as
-    * tf·log(N/df) whenever tf dominates, and unlike the float score it
-    * is reproducible bit-for-bit on any engine, which makes keyword sets
-    * diffable across pipeline runs. Returns (doc_id, term, tf, df, rnk)
-    * with rnk ≤ k.
-    *
-    * Scale shape: tf is a map-side-combinable (doc, term) groupBy, df a
-    * second combinable groupBy over the tf rows (already one row per
-    * doc-term), and the rank window partitions by doc — bounded by a
-    * document's own vocabulary, never the corpus. */
   /** Batch perceptron trainer for a quality/language filter (the
     * trainABLE counterpart to [[linearScore]]'s fixed weights): features
     * are INTEGER text statistics (bias, \S+ token count, char count,
@@ -1488,6 +1324,20 @@ object Text {
         coalesce(col("n_words"), lit(0L)).as("n_words"))
   }
 
+  /** Per-document keyword extraction by TF-rarity rank: a document's top
+    * terms are those it repeats most (tf desc) among terms the corpus
+    * uses least (document frequency asc, then term asc — a total order).
+    * This is the log-free integer form of TF-IDF term ranking: for a
+    * FIXED document, ordering by (tf, −df) selects the same leaders as
+    * tf·log(N/df) whenever tf dominates, and unlike the float score it
+    * is reproducible bit-for-bit on any engine, which makes keyword sets
+    * diffable across pipeline runs. Returns (doc_id, term, tf, df, rnk)
+    * with rnk ≤ k.
+    *
+    * Scale shape: tf is a map-side-combinable (doc, term) groupBy, df a
+    * second combinable groupBy over the tf rows (already one row per
+    * doc-term), and the rank window partitions by doc — bounded by a
+    * document's own vocabulary, never the corpus. */
   def topTerms(docs: DataFrame, k: Int = 3, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     val toks = docs.select(col(idCol).as("doc_id"),

@@ -895,9 +895,7 @@ object Ivf {
       val staging = stagingPath(root, v, newToken())
       val marker = supersededFoldMarker(spark, root, committed)
       buildVersionDirAt(corpus, k, staging, iters, idCol, vecCol, pq)
-      marker.foreach(b => writeSmall(fsOf(spark, root),
-        new org.apache.hadoop.fs.Path(s"$staging/_folded_through"),
-        b.toString))
+      marker.foreach(writeFoldedThrough(spark, staging, _))
       try {
         promoteAndCommit(spark, root, v, staging)
         return v
@@ -935,9 +933,7 @@ object Ivf {
         .select(col(idCol), col(vecCol))
       buildVersionDirAt(corpus, kCents, staging, iters, idCol, vecCol,
         pq = readPqSpec(spark, root, v))
-      marker.foreach(b => writeSmall(fsOf(spark, root),
-        new org.apache.hadoop.fs.Path(s"$staging/_folded_through"),
-        b.toString))
+      marker.foreach(writeFoldedThrough(spark, staging, _))
       try {
         promoteAndCommit(spark, root, next, staging)
         return next
@@ -1092,9 +1088,7 @@ object Ivf {
       () => counts.set(compactIngestStore(spark,
         s"$root/v=$v/store", s"$staging/store", idCol))) ++ pqFoldTask)
     val (before, after) = counts.get()
-    marker.foreach(b => writeSmall(fs,
-      new org.apache.hadoop.fs.Path(s"$staging/_folded_through"),
-      b.toString))
+    marker.foreach(writeFoldedThrough(spark, staging, _))
     promoteAndCommit(spark, root, next, staging)
     (next, before, after)
   }
@@ -1102,9 +1096,10 @@ object Ivf {
   /** The `_folded_through` replay marker of version `v` — the highest
     * streamed batchId whose rows live in this version's BASE (folded by
     * a retrain or a compaction) rather than under a replayable
-    * `ingest=b*` key. ONE read/write pair for the protocol (used by
-    * [[compactVersion]] and the streaming lifecycle) so the format can
-    * never drift between sites. */
+    * `ingest=b*` key. ONE read/write pair for the protocol (written by
+    * [[writeVersionedIndex]], [[retrainFromStore]] and [[compactVersion]],
+    * read by them and the streaming lifecycle) so the format can never
+    * drift between sites. */
   private[graft] def readFoldedThrough(
       spark: org.apache.spark.sql.SparkSession, root: String,
       v: Long): Option[Long] =
@@ -1112,14 +1107,14 @@ object Ivf {
         new org.apache.hadoop.fs.Path(s"$root/v=$v/_folded_through"))
       .map(_.toLong)
 
-  /** Write version `v`'s `_folded_through` marker (see
-    * [[readFoldedThrough]]). Call BEFORE the commit — the uncommitted
-    * directory keeps marker and version atomic together. */
-  private[graft] def writeFoldedThrough(
-      spark: org.apache.spark.sql.SparkSession, root: String, v: Long,
-      batchId: Long): Unit =
-    writeSmall(fsOf(spark, root),
-      new org.apache.hadoop.fs.Path(s"$root/v=$v/_folded_through"),
+  /** Write the `_folded_through` marker (see [[readFoldedThrough]]) into
+    * a version directory — the staging directory of the version being
+    * built. Call BEFORE the commit — the uncommitted directory keeps
+    * marker and version atomic together. */
+  private def writeFoldedThrough(spark: org.apache.spark.sql.SparkSession,
+      versionDir: String, batchId: Long): Unit =
+    writeSmall(fsOf(spark, versionDir),
+      new org.apache.hadoop.fs.Path(s"$versionDir/_folded_through"),
       batchId.toString)
 
   /** Number of `ingest=*` layers in version `v`'s store — the

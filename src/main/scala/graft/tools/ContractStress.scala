@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.engine.Stages
+import graft.engine.{Context, Stages}
 
 /** sf1-equivalent spot-run of the most expensive CONTRACT queries
   * (VERDICT r5 item 7): derives a 10x stress copy of EVERY driver table
@@ -32,7 +32,7 @@ object ContractStress {
         "q_dedup_minhash", "q_sessionize", "q_bm25")
     val srcDir = "/root/testdata/sf0.1"
     val outDir = "/tmp/graft_contractstress"
-    val spark = graft.engine.Context.session("local[32]", 32)
+    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     val marker = new java.io.File(s"$outDir/.factor_$factor")

@@ -21,8 +21,7 @@ object JobProfile {
     val sfDir = if (args.length > 1) args(1) else
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = Context.session(s"local[$cpus]", cpus)
+    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus)
 
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)
@@ -44,7 +43,8 @@ object JobProfile {
       val timed = (1 to runs).flatMap { i =>
         val t = once()
         t.foreach { case (s, rec) =>
-          println(f"[jobprofile] $name run$i ${s}%.3f s, ${rec.jobs.size} jobs") }
+          println(f"[jobprofile] $name run$i ${s}%.3f s, ${rec.jobs.size} jobs, " +
+            f"${rec.stages.size} stages") }
         t
       }
       // the last run's breakdown

@@ -131,7 +131,7 @@ object PlanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = Context.session("local[8]", 8)
+    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val all = args.contains("--all")
     val names =

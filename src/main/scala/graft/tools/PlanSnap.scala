@@ -15,8 +15,7 @@ object PlanSnap {
     val tag = args(1)
     val names = args(2).split(",")
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
-    val spark = Context.session(s"local[$cpus]", cpus)
+    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.Stages
+import graft.engine.{Context, Stages}
 
 /** sf1-scale skew stress for the dedup spine (VERDICT r4 item 5).
   *
@@ -62,7 +62,7 @@ object ScaleStress {
       s"factor $factor must be a multiple of repCap $repCap")
     val srcDir = "/root/testdata/sf0.1"
     val outDir = "/tmp/graft_sfstress"
-    val spark = graft.engine.Context.session("local[32]", 32)
+    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // ANN pipelines run on a separately-built embeddings stress corpus:

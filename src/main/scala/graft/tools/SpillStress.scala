@@ -35,7 +35,7 @@ object SpillStress {
         "q_array_funcs", "q_dedup_minhash")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = "/tmp/graft_spillstress"
-    val spark = Context.session("local[32]", 32, Map(
+    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus, Map(
       // force the spill paths (see scaladoc)
       "spark.shuffle.spill.numElementsForceSpillThreshold" -> "5000",
       "spark.sql.windowExec.buffer.in.memory.threshold" -> "1024",

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.engine.Context
 
 /** Second-decade (100x) stress for the STREAMING spines (VERDICT r9
   * item 5) — the dedup/ANN decades, mirrored onto the always-on paths.
@@ -38,7 +39,7 @@ object StreamStress {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val srcDir = "/root/testdata/sf0.1"
     val outDir = "/tmp/graft_streamstress"
-    val spark = graft.engine.Context.session("local[32]", 32)
+    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus)
     spark.sparkContext.setLogLevel("WARN")
     val fs = org.apache.hadoop.fs.FileSystem.get(
       spark.sparkContext.hadoopConfiguration)

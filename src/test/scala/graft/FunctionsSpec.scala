@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{native, HashKernels, Text}
@@ -371,9 +372,33 @@ class FunctionsSpec extends AnyFunSuite {
     assert(abc._11 + got(("a", "b", "d"))._11 < 1.0)
   }
 
+  private def r6(x: Double) =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  /** Perplexity of a one-n-gram document scored at probability `p`:
+    * the log-prob and the result each rounded to 6 decimals. */
+  private def ppl1(p: Double) = r6(math.exp(-r6(math.log(p))))
+
+  private def trigramPpl(ref: DataFrame, docs: DataFrame,
+      minCount: Long): Map[Long, (Long, Option[Double])] = {
+    val tp = Text.kneserNeyTrigramsParts(ref, minCount = minCount)
+    Text.knTrigramPerplexity(docs, tp.head, tp.ctx12, tp.mid, tp.ctx2,
+        tp.c3, tp.consts)
+      .select("doc_id", "n_trigrams", "perplexity")
+      .as[(Long, Long, Option[Double])].collect()
+      .map(t => t._1 -> (t._2, t._3)).toMap
+  }
+
+  private def bigramPpl(ref: DataFrame, docs: DataFrame,
+      minCount: Long): Map[Long, (Long, Option[Double])] = {
+    val bp = Text.kneserNeyBigramsParts(ref, minCount = minCount)
+    Text.knPerplexity(docs, bp.head, bp.ctx, bp.prec, bp.consts)
+      .select("doc_id", "n_bigrams", "perplexity")
+      .as[(Long, Long, Option[Double])].collect()
+      .map(t => t._1 -> (t._2, t._3)).toMap
+  }
+
   test("knTrigramPerplexity: every branch of the backoff chain") {
     val ref = Seq((10L, "a b c a b c a b d")).toDF("doc_id", "text")
-    val model = Text.kneserNeyTrigrams(ref, minCount = 1)
     val docs = Seq(
       (1L, "a b c"), // seen triple -> model p_kn = 0.572917
       (2L, "c b c"), // unseen ctx (c,b) -> P2(c|b) = 0.3125
@@ -381,81 +406,58 @@ class FunctionsSpec extends AnyFunSuite {
       (4L, "x y z"), // nothing known -> OOV floor
       (5L, "hi"))    // sub-trigram -> n=0, NULL
       .toDF("doc_id", "text")
-    val got = Text.knTrigramPerplexity(docs, model)
-      .select("doc_id", "n_trigrams", "perplexity")
-      .as[(Long, Long, Option[Double])].collect()
-      .map(t => t._1 -> (t._2, t._3)).toMap
-    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    def ppl1(p: Double) = r6(math.exp(-r6(math.log(p))))
+    val got = trigramPpl(ref, docs, minCount = 1)
     assert(got(1L) == ((1L, Some(ppl1(0.572917)))))
     assert(got(2L) == ((1L, Some(ppl1(0.3125)))))
     assert(got(3L) == ((1L, Some(ppl1(0.09375)))))
     assert(got(4L) == ((1L, Some(ppl1(1e-7)))))
     assert(got(5L) == ((0L, None)))
+    // minCount=2 drops (a,b,d): its mid pair (b,d) and successor d are
+    // tail-only, so they leave the backoff tables too -> p2 = 0 -> floor
+    // (with the full tables: 0.5*(0.25/2 + 0.75*(1/4)) = 0.15625); the
+    // kept triple's probability keeps its pre-filter denominators
+    val filt = trigramPpl(ref,
+      Seq((6L, "a b d"), (7L, "a b c")).toDF("doc_id", "text"), minCount = 2)
+    assert(filt == Map(6L -> (1L, Some(ppl1(1e-7))),
+      7L -> (1L, Some(ppl1(0.572917)))))
   }
 
   test("knPerplexity: seen / context-backoff / OOV-floor paths") {
     // ref bigrams: (a,b)x2, (b,a)x1 -> B=2; p(b|a)=0.8125, p(a|b)=0.625
     val ref = Seq((10L, "a b a b")).toDF("doc_id", "text")
-    val model = Text.kneserNeyBigrams(ref, minCount = 1)
     // scored doc: (a,b) seen; (b,z) seen ctx, unseen successor -> backoff
     // mass 0 -> floor; (z,q) and (q,a) unseen ctx -> floor
     val docs = Seq((1L, "a b z q a")).toDF("doc_id", "text")
-    val got = Text.knPerplexity(docs, model)
-      .select("doc_id", "n_bigrams", "perplexity")
-      .as[(Long, Long, Double)].collect().head
-    assert((got._1, got._2) == (1L, 4L))
-    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val got = bigramPpl(ref, docs, minCount = 1)(1L)
+    assert(got._1 == 4L)
     val lpSum = r6(math.log(0.8125)) + 3 * r6(math.log(1e-7))
-    assert(math.abs(got._3 - r6(math.exp(-lpSum / 4))) < 1e-6)
+    assert(math.abs(got._2.get - r6(math.exp(-lpSum / 4))) < 1e-6)
     // self-scoring the training corpus: all bigrams seen, low perplexity
-    val self = Text.knPerplexity(ref, model)
-      .select("n_bigrams", "perplexity").as[(Long, Double)].collect().head
+    val self = bigramPpl(ref, ref, minCount = 1)(10L)
     assert(self._1 == 3L)
     val selfSum = 2 * r6(math.log(0.8125)) + r6(math.log(0.625))
-    assert(math.abs(self._2 - r6(math.exp(-selfSum / 3))) < 1e-6)
-    assert(self._2 < got._3) // the filter signal: unseen text scores worse
+    assert(math.abs(self._2.get - r6(math.exp(-selfSum / 3))) < 1e-6)
+    assert(self._2.get < got._2.get) // the filter signal: unseen text scores worse
+    // non-zero context backoff: (b,b) unseen, ctx b (c=1, 1 follower),
+    // successor b has 1 predecessor type -> 0.75 * 1/1 * 1/2 = 0.375
+    val bb = bigramPpl(ref, Seq((2L, "b b")).toDF("doc_id", "text"), 1)
+    assert(bb == Map(2L -> (1L, Some(ppl1(0.375)))))
     // sub-bigram docs are emitted explicitly: n_bigrams=0, NULL perplexity
     val shorts = Seq((7L, "solo"), (8L, "")).toDF("doc_id", "text")
-    val sgot = Text.knPerplexity(shorts, model)
-      .select("doc_id", "n_bigrams", "perplexity")
-      .as[(Long, Long, Option[Double])].collect()
-      .map(t => t._1 -> (t._2, t._3)).toMap
-    assert(sgot == Map(7L -> (0L, None), 8L -> (0L, None)))
-    // a minCount-FILTERED model stays conservative: b_types/discount come
-    // from the model columns (true pre-filter values), and tail-only
-    // contexts fall to the floor instead of inflating p past 1
+    assert(bigramPpl(ref, shorts, minCount = 1) ==
+      Map(7L -> (0L, None), 8L -> (0L, None)))
+    // a minCount-FILTERED model stays conservative: b_types/discount are
+    // the true pre-filter values, and contexts/successors only the
+    // dropped tail carries leave the backoff tables, so their pairs fall
+    // to the floor instead of borrowing mass (full tables would give
+    // (b,a) and (b,b) 0.375, (a,a) 0.75 * 1/2 * 1/2 = 0.1875)
     val filt = Text.kneserNeyBigrams(ref, minCount = 2)
     assert(filt.select("b_types").as[Long].collect().forall(_ == 2L))
-    val fscore = Text.knPerplexity(Seq((9L, "b a")).toDF("doc_id", "text"), filt)
-      .select("perplexity").as[Double].collect().head
-    assert(fscore > 1.0) // floored (b,a) miss -> high perplexity, not < 1
-  }
-
-  test("KN parts-mode scoring is bit-identical to model-mode at minCount=1") {
-    // exercises every backoff branch (seen / mid / context / OOV / short)
-    // through BOTH scorers: the parts path recomputes the trainer's
-    // rounded p_kn inline from the slim tables, which must equal the
-    // model column bit for bit
-    val ref = Seq((10L, "a b c a b c a b d"), (11L, "a b a b"))
+    val fdocs = Seq((9L, "b a"), (11L, "b b"), (12L, "a a"), (13L, "a b"))
       .toDF("doc_id", "text")
-    val docs = Seq((1L, "a b c"), (2L, "c b c"), (3L, "a b a"),
-      (4L, "x y z"), (5L, "hi"), (6L, "a b z q a"))
-      .toDF("doc_id", "text")
-    val tp = Text.kneserNeyTrigramsParts(ref, minCount = 1)
-    val tModel = Text.knTrigramPerplexity(docs, tp.model)
-      .orderBy("doc_id").collect().toSeq
-    val tParts = Text.knTrigramPerplexityFromTables(docs, tp.head,
-      tp.ctx12, tp.mid, tp.ctx2, tp.c3, tp.consts)
-      .orderBy("doc_id").collect().toSeq
-    assert(tParts == tModel)
-    val bp = Text.kneserNeyBigramsParts(ref, minCount = 1)
-    val bModel = Text.knPerplexity(docs, bp.model)
-      .orderBy("doc_id").collect().toSeq
-    val bParts = Text.knPerplexityFromTables(docs, bp.head, bp.ctx,
-      bp.prec, bp.consts)
-      .orderBy("doc_id").collect().toSeq
-    assert(bParts == bModel)
+    val floor = (1L, Some(ppl1(1e-7)))
+    assert(bigramPpl(ref, fdocs, minCount = 2) == Map(9L -> floor,
+      11L -> floor, 12L -> floor, 13L -> (1L, Some(ppl1(0.8125)))))
   }
 
   test("linearScore: hand-computed hashed-bag-of-words score") {
@@ -559,7 +561,8 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("KN stored-model scoring equals in-memory scoring (bigram + trigram)") {
     // the train-once/score-many contract: a parquet round-trip of the
-    // self-describing model must not change a single score
+    // self-describing model and its backoff tables must not change a
+    // single score
     val train = Seq(
       (1L, "the cat sat on the mat"), (2L, "the dog sat on the rug"),
       (3L, "a cat and a dog sat"), (4L, "the cat and the dog"),
@@ -568,17 +571,29 @@ class FunctionsSpec extends AnyFunSuite {
       (10L, "the cat sat"), (11L, "a dog on the mat"),
       (12L, "unseen words entirely"), (13L, "x")).toDF("doc_id", "text")
     val dir = SparkFixture.tempDir("graft_knstore")
+    def stored(name: String, df: DataFrame): DataFrame = {
+      df.write.mode("overwrite").parquet(s"$dir/$name")
+      spark.read.parquet(s"$dir/$name")
+    }
     try {
-      val bg = Text.kneserNeyBigrams(train, minCount = 1)
-      bg.write.mode("overwrite").parquet(s"$dir/bg")
-      val memB = Text.knPerplexity(score, bg).orderBy("doc_id").collect().toSeq
-      val stoB = Text.knPerplexity(score, spark.read.parquet(s"$dir/bg"))
+      val bp = Text.kneserNeyBigramsParts(train, minCount = 1)
+      val memB = Text.knPerplexity(score, bp.head, bp.ctx, bp.prec, bp.consts)
+        .orderBy("doc_id").collect().toSeq
+      val stoB = Text.knPerplexity(score,
+          stored("bg", bp.model).select("w1", "w2", "c12"),
+          stored("bg_ctx", bp.ctx), stored("bg_prec", bp.prec),
+          stored("bg_consts", bp.consts))
         .orderBy("doc_id").collect().toSeq
       assert(memB == stoB)
-      val tg = Text.kneserNeyTrigrams(train, minCount = 1)
-      tg.write.mode("overwrite").parquet(s"$dir/tg")
-      val memT = Text.knTrigramPerplexity(score, tg).orderBy("doc_id").collect().toSeq
-      val stoT = Text.knTrigramPerplexity(score, spark.read.parquet(s"$dir/tg"))
+      val tp = Text.kneserNeyTrigramsParts(train, minCount = 1)
+      val memT = Text.knTrigramPerplexity(score, tp.head, tp.ctx12, tp.mid,
+          tp.ctx2, tp.c3, tp.consts)
+        .orderBy("doc_id").collect().toSeq
+      val stoT = Text.knTrigramPerplexity(score,
+          stored("tg", tp.model).select("w1", "w2", "w3", "c123"),
+          stored("tg_ctx12", tp.ctx12), stored("tg_mid", tp.mid),
+          stored("tg_ctx2", tp.ctx2), stored("tg_c3", tp.c3),
+          stored("tg_consts", tp.consts))
         .orderBy("doc_id").collect().toSeq
       assert(memT == stoT)
       assert(memB.nonEmpty && memT.nonEmpty)
