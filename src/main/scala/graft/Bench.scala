@@ -42,9 +42,11 @@ object Bench {
     run
   }
 
-  /** Min of two measured runs per query, in name order: the second run
-    * reuses compiled codegen classes, so the min reflects steady-state
-    * execution rather than JIT noise. */
+  /** Min of two measured runs per query, in name order. The second run
+    * can reuse the first run's generated classes only while the session's
+    * codegen cache still holds them (`Context.session` sizes it; a
+    * query's record counts its `codegenCompiles`), so the min reflects
+    * steady-state execution rather than compilation and JIT noise. */
   def sweep(spark: SparkSession, sfDir: String,
       queries: Map[String, Query]): Sweep = {
     val runs = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -59,15 +61,15 @@ object Bench {
   }
 
   /** Per-query jobs, stages that ran (a stage skipped through shuffle
-    * reuse runs nothing), successful tasks, shuffle read and spill — the
-    * BENCH_LOCAL.json `records` object. */
+    * reuse runs nothing), successful tasks, shuffle read, spill and
+    * codegen compiles — the BENCH_LOCAL.json `records` object. */
   def recordsJson(s: Sweep): String = {
     def mb(bytes: Long) =
       BigDecimal(bytes / 1e6).setScale(3, BigDecimal.RoundingMode.HALF_UP)
     s.records.toSeq.sortBy(_._1).map { case (name, r) =>
       s""""$name":{"jobs":${r.jobs.size},"stages":${r.stages.count(_.tasks.nonEmpty)},""" +
         s""""tasks":${r.tasks},"shuffle_read_mb":${mb(r.shuffleReadBytes)},""" +
-        s""""spill_mb":${mb(r.spillBytes)}}"""
+        s""""spill_mb":${mb(r.spillBytes)},"codegen_compiles":${r.codegenCompiles}}"""
     }.mkString("{", ",", "}")
   }
 

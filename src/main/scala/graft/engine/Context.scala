@@ -170,6 +170,25 @@ object Context {
       // persist-heavy KN/dedup families at sf0.1; neutral elsewhere.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
+      // Keep every generated class of a repeated query set compiled.
+      // Spark's default of 100 entries is smaller than one pass of the 8
+      // perfbench tpch queries (116–126 distinct classes), so each steady
+      // pass in a fixed query order recompiled 60–113 of them with Janino
+      // and ran them interpreted until the JIT caught up again. A pass
+      // over all 22 TPC-H queries makes ~323 classes; at sf0.1 its steady
+      // passes compiled 212–241 at 300 entries and 0–3 at 400, 500 and
+      // 1000. 500 leaves ~50% headroom. JVM-wide and static: a process's
+      // first session fixes it.
+      .config("spark.sql.codegen.cache.maxEntries", "500")
+      // Scale file sizes up by 4 when estimating a scan's in-memory size.
+      // A column-pruned parquet scan is estimated at its share of the
+      // compressed file: lineitem's pruned q3/q5 scans at sf0.1 read
+      // 3.73 MB of a 10.8 MB file but broadcast as 34.75 MB hash
+      // relations (~9x). At factor 1 they fell under the 10 MB broadcast
+      // threshold and the driver collected and hashed 424k-600k fact
+      // rows; at 4 the orders side (9k-46k rows) is broadcast instead.
+      // 4 stays conservative.
+      .config("spark.sql.sources.fileCompressionFactor", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.engine.GraftExtensions")

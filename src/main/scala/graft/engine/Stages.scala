@@ -1,5 +1,6 @@
 package graft.engine
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftx.Bridge
 import org.apache.spark.status.api.v1.TaskMetrics
@@ -33,7 +34,12 @@ object Stages {
   final case class Job(id: Int, name: String, description: Option[String],
       start: Long, end: Long)
 
-  final case class Record(jobs: Seq[Job], stages: Seq[Stage]) {
+  /** `codegenCompiles`: the generated classes Janino compiled while the
+    * body ran, i.e. the codegen cache's misses. The counter is JVM-wide,
+    * so it also counts other threads' compiles in that window. A repeated
+    * query that compiles again means the cache is evicting its classes. */
+  final case class Record(jobs: Seq[Job], stages: Seq[Stage],
+      codegenCompiles: Long) {
     def tasks: Int = stages.map(_.tasks.size).sum
     def shuffleReadBytes: Long = stages.map(_.shuffleReadBytes).sum
     def spillBytes: Long = stages.map(s => s.memorySpilled + s.diskSpilled).sum
@@ -46,7 +52,10 @@ object Stages {
     Bridge.waitUntilEmpty(sc)
     val jobMark = (-1 +: Bridge.jobs(sc).map(_.jobId)).max
     val stageMark = (-1 +: Bridge.stages(sc).map(_.stageId)).max
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileMark = compiles
     val out = body
+    val compiled = compiles - compileMark
     Bridge.waitUntilEmpty(sc)
     def ms(d: Option[java.util.Date]) = d.fold(-1L)(_.getTime)
     val jobs = Bridge.jobs(sc).filter(_.jobId > jobMark).sortBy(_.jobId)
@@ -68,6 +77,6 @@ object Stages {
           done.map { case (d, m) => Task(d, m.jvmGcTime,
             m.shuffleReadMetrics.recordsRead, m.inputMetrics.recordsRead) })
       }
-    (out, Record(jobs, stages))
+    (out, Record(jobs, stages, compiled))
   }
 }

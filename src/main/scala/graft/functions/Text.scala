@@ -419,24 +419,21 @@ object Text {
     * is an integer sum divided once in IEEE double, so it is bit-identical
     * across engines (a true log-perplexity would pull in libm).
     *
-    * Scale shape: bigram enumeration is a narrow transform (one struct
-    * array per doc, no shuffle); the reference count table is a map-side-
-    * combinable aggregate; scoring is ONE shuffle join on (w1, w2) + one
-    * aggregate back to doc id. Natural-language bigram frequency is Zipf —
-    * the few head bigrams are exactly what AQE skew-split handles, and the
-    * `maxRefCount` cap (clamp, not drop, so no doc loses mass) bounds any
-    * single key's contribution to a document's score (default unbounded).
+    * Scale shape: bigram enumeration is a narrow [[ngrams]] explode over
+    * the space-split tokens, empty ones kept (no shuffle); the reference
+    * count table is a map-side-combinable aggregate; scoring is ONE
+    * shuffle join on (w1, w2) + one aggregate back to doc id.
+    * Natural-language bigram frequency is Zipf — the few head bigrams are
+    * exactly what AQE skew-split handles, and the `maxRefCount` cap
+    * (clamp, not drop, so no doc loses mass) bounds any single key's
+    * contribution to a document's score (default unbounded).
     * Docs with < 2 tokens score NULL. */
   def bigramFluency(docs: DataFrame, ref: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
       maxRefCount: Long = Long.MaxValue): DataFrame = {
     def bigrams(df: DataFrame): DataFrame =
-      df.select(col(idCol), split(col(textCol), " ").as("ws"))
-        .filter(size(col("ws")) >= 2)
-        .select(col(idCol), explode(expr(
-          "transform(sequence(1, size(ws)-1)," +
-            " i -> struct(ws[i-1] AS w1, ws[i] AS w2))")).as("b"))
-        .select(col(idCol), col("b.w1").as("w1"), col("b.w2").as("w2"))
+      ngrams(df.select(col(idCol), split(col(textCol), " ").as("tk")), 2,
+        Seq(idCol))
     val counts = bigrams(ref).groupBy("w1", "w2")
       .agg(least(count(lit(1)), lit(maxRefCount)).as("bg_n"))
     val scored = bigrams(docs)
@@ -619,10 +616,11 @@ object Text {
 
   /** The adjacent `n`-token windows of each row's `tk` token array as
     * columns w1..wn, carrying `carry` columns through. ONE extractor feeds
-    * PMI and both Kneser–Ney orders, train and score side alike — a
-    * scorer's lookup joins only hit if both sides window the tokens
-    * identically. A narrow per-row explode of the `n` shifted slices
-    * zipped together (codegen'd, no lambda): no self-join. */
+    * PMI, both Kneser–Ney orders (train and score side alike — a scorer's
+    * lookup joins only hit if both sides window the tokens identically),
+    * bigramFluency and each BPE round's pair count. Rows with fewer than
+    * `n` tokens yield none. A narrow per-row explode of the `n` shifted
+    * slices zipped together (codegen'd, no lambda): no self-join. */
   private def ngrams(toks: DataFrame, n: Int,
       carry: Seq[String] = Nil): DataFrame = {
     val tk = col("tk")
@@ -1151,11 +1149,9 @@ object Text {
       .collect().map(_.getString(0))
     var exhausted = false
     while (merges.size < k && !exhausted) {
-      val toks = vocab.select(col("freq"), split(trim(col("s")), " ").as("t"))
-        .filter(size(col("t")) >= 2) // sequence(0,-1) would count DOWN
-      val top = toks.select(col("freq"), explode(expr(
-          "transform(sequence(0, size(t)-2), i -> struct(t[i] AS l, t[i+1] AS r))")).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+      val toks = vocab.select(col("freq"), split(trim(col("s")), " ").as("tk"))
+      val top = ngrams(toks, 2, Seq("freq"))
+        .groupBy(col("w1").as("l"), col("w2").as("r"))
         .agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
         .limit(BpeHorizon)

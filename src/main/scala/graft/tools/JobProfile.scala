@@ -39,12 +39,13 @@ object JobProfile {
         t
       }
       once() // JIT/codegen warm-up
-        .foreach(w => println(f"[jobprofile] $name warm-up ${w._1}%.3f s"))
+        .foreach(w => println(f"[jobprofile] $name warm-up ${w._1}%.3f s, " +
+          f"${w._2.codegenCompiles} codegen compiles"))
       val timed = (1 to runs).flatMap { i =>
         val t = once()
         t.foreach { case (s, rec) =>
           println(f"[jobprofile] $name run$i ${s}%.3f s, ${rec.jobs.size} jobs, " +
-            f"${rec.stages.size} stages") }
+            f"${rec.stages.size} stages, ${rec.codegenCompiles} codegen compiles") }
         t
       }
       // the last run's breakdown

@@ -26,5 +26,6 @@ class BenchSpec extends AnyFunSuite {
     val json = Bench.recordsJson(sweep)
     assert(json.startsWith("{\"q_ok\":{\"jobs\":"))
     assert(json.contains("\"spill_mb\":") && !json.contains("q_boom"))
+    assert(json.contains("\"codegen_compiles\":"))
   }
 }

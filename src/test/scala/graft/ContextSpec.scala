@@ -89,6 +89,8 @@ class ContextSpec extends AnyFunSuite {
       .contains("graft.engine.GraftExtensions"))
     assert(conf.get("spark.sql.session.timeZone") == "UTC")
     assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "500")
+    assert(conf.get("spark.sql.sources.fileCompressionFactor") == "4")
   }
 
   test("events table canonicalizes nanos to TimestampType") {

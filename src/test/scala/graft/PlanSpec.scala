@@ -368,4 +368,34 @@ class PlanSpec extends org.scalatest.funsuite.AnyFunSuite {
       .singlePartitionViolations(physPlan(vc)).isEmpty,
       "q_vocab_coverage must stay free of unbounded single-partition exchanges")
   }
+
+  test("a column-pruned lineitem scan is never the broadcast build side at sf0.1") {
+    // Spark estimates a scan's size from its share of the compressed file;
+    // lineitem's pruned q3/q5 scans decode to ~9x that estimate, and at the
+    // default factor of 1 they fell under the broadcast threshold. At
+    // sf0.001 broadcasting lineitem is the right plan, hence sf0.1.
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val big = java.nio.file.Paths.get(dir).resolveSibling("sf0.1").toString
+    try {
+      // registering the tables reads their schemas with a job; planning
+      // the queries must not start another
+      graft.engine.Context.forSfDir(spark, big)
+      val (plans, rec) = graft.engine.Stages.record(spark) {
+        Seq("q_tpch_q3", "q_tpch_q5").map(q =>
+          q -> physPlan(SparkEntry.queries(q)(spark, big)))
+      }
+      assert(rec.jobs.isEmpty, "planning must not run jobs")
+      for ((q, p) <- plans) {
+        val builds = p.collect { case b: BroadcastExchangeExec => b }
+        assert(builds.nonEmpty, s"$q broadcasts no dimension at all")
+        val scansLineitem = builds.filter(_.exists {
+          case scan: FileSourceScanExec =>
+            scan.relation.location.rootPaths.exists(_.getName == "lineitem.parquet")
+          case _ => false
+        })
+        assert(scansLineitem.isEmpty, s"$q broadcasts lineitem:\n$p")
+      }
+    } finally graft.engine.Context.forSfDir(spark, dir)
+  }
 }

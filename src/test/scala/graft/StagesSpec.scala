@@ -75,4 +75,17 @@ class StagesSpec extends AnyFunSuite {
     assert(skipped.size == 1 && skipped.head.shuffleWriteBytes == 0L)
     assert(ran.head.tasks.size == 3 && rec.tasks == 3)
   }
+
+  test("a query's second back-to-back run compiles no generated code") {
+    // a literal no earlier suite used: codegen inlines it, so the first
+    // run must compile a class the cache cannot already hold
+    val k = 1000003L + System.nanoTime() % 1000003L
+    def q() = spark.range(0, 1000, 1, 2).select((col("id") * k).as("x"))
+      .groupBy(col("x") % 7).count()
+      .write.format("noop").mode("overwrite").save()
+    val (_, first) = Stages.record(spark)(q())
+    val (_, second) = Stages.record(spark)(q())
+    assert(first.codegenCompiles > 0)
+    assert(second.codegenCompiles == 0)
+  }
 }
