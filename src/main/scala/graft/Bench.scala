@@ -73,13 +73,24 @@ object Bench {
     }.mkString("{", ",", "}")
   }
 
+  /** The session every main runs on, with the sf tables registered:
+    * `Context.session` + `Context.forSfDir`, and the seconds they took
+    * (the side artifact's `setup_s`; perfbench's `setup_s` times the same
+    * two calls). */
+  def setUp(sfDir: String): (SparkSession, Double) = {
+    val t0 = System.nanoTime()
+    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus)
+    Context.forSfDir(spark, sfDir)
+    (spark, (System.nanoTime() - t0) / 1e9)
+  }
+
   /** The compact headline line (the first line Bench prints). */
   def shortLine(s: Sweep, sfDir: String): String =
     s"""{"metric":"total","value":${s.total},"unit":"sec","n_queries":${s.times.size},"n_failed":${s.failed.size},"sf":"$sfDir"}"""
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus)
+    val (spark, setupS) = setUp(sfDir)
 
     // Warm-up: run every query once at the smallest scale factor so the
     // measured pass reports steady-state (codegen classes compiled, JIT
@@ -147,12 +158,13 @@ object Bench {
       val out = java.nio.file.Paths.get(repoRoot, "BENCH_LOCAL.json")
       // ADVICE r12: carry the environment alongside the numbers so
       // cross-round comparisons of this artifact are like-for-like
-      // (cpus, heap, gc isolation), plus the names of failed queries and
-      // each query's stage record. Extra keys in the SIDE artifact only;
-      // the stdout full line keeps its exact shape.
+      // (cpus, heap, gc isolation), plus the session set-up seconds, the
+      // names of failed queries and each query's stage record. Extra keys
+      // in the SIDE artifact only; the stdout full line keeps its exact
+      // shape.
       val failed = results.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       val envLine = fullLine.dropRight(1) +
-        s""","cpus":${Context.cpus},"heap_max_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},"gc_between":true,"failed":$failed,"records":${recordsJson(results)}}"""
+        s""","cpus":${Context.cpus},"heap_max_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},"gc_between":true,"setup_s":${fmt(setupS)},"failed":$failed,"records":${recordsJson(results)}}"""
       java.nio.file.Files.writeString(out, envLine + "\n")
       System.err.println(s"[bench] wrote $out")
     } catch { case NonFatal(e) =>

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.engine.Context.{deleteTree, scratch}
+import graft.engine.Tables
 import graft.functions.native
 import graft.similarity.Ann
 
@@ -57,7 +58,7 @@ object StreamingQueries {
     phase(batch.filter(col("vec_id") % 10 === 0)) // lands before start
     val ss = s.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "4")
-    val src = ss.readStream.schema(ss.read.parquet(in).schema).parquet(in)
+    val src = ss.readStream.schema(Tables.parquet(ss, in).schema).parquet(in)
     val q = graft.streaming.Streams.indexAppend(src, cents, store,
       s"$feed/ckpt")
     try {
@@ -130,7 +131,7 @@ object StreamingQueries {
       // at production volume this same knob is what you RAISE.
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
-      val src = ss.readStream.schema(ss.read.parquet(feed).schema)
+      val src = ss.readStream.schema(Tables.parquet(ss, feed).schema)
         .parquet(feed)
       val streamed = graft.streaming.Streams.streamingDedup(
         src, Seq("user_id", "event_type"), watermark = "1 hour")
@@ -172,7 +173,7 @@ object StreamingQueries {
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       def src(p: String) = ss.readStream
-        .schema(ss.read.parquet(p).schema).parquet(p)
+        .schema(Tables.parquet(ss, p).schema).parquet(p)
       val joined = graft.streaming.Streams.intervalJoin(
         src(s"$feed/clicks"), src(s"$feed/views"), "10 minutes")
       val name = "sjoin_" +
@@ -206,7 +207,7 @@ object StreamingQueries {
         .coalesce(4).write.mode("overwrite").parquet(feed)
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
-      val src = ss.readStream.schema(ss.read.parquet(feed).schema)
+      val src = ss.readStream.schema(Tables.parquet(ss, feed).schema)
         .parquet(feed)
       val chunkVals = array((0 until 4).map(i =>
         shiftrightunsigned(col("sh"), i * 16)
@@ -319,7 +320,7 @@ object StreamingQueries {
         .coalesce(1).write.mode("append").parquet(feed)
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
-      val src = ss.readStream.schema(ss.read.parquet(feed).schema)
+      val src = ss.readStream.schema(Tables.parquet(ss, feed).schema)
         .parquet(feed)
       val name = "slate_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
@@ -479,7 +480,7 @@ object StreamingQueries {
       phase(w1) // lands before start -> one deterministic first batch
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
-      val src = ss.readStream.schema(ss.read.parquet(in).schema).parquet(in)
+      val src = ss.readStream.schema(Tables.parquet(ss, in).schema).parquet(in)
       val q = graft.streaming.Streams.indexAppendAudited(src, root,
         s"$feed/ckpt", auditEvery = 1, floor = 0.8, k = 5, nprobe = 2,
         kCents = 8)
@@ -557,7 +558,7 @@ object StreamingQueries {
       phase(w1a) // lands before start -> one deterministic first batch
       val ss = s.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "4")
-      val src = ss.readStream.schema(ss.read.parquet(in).schema).parquet(in)
+      val src = ss.readStream.schema(Tables.parquet(ss, in).schema).parquet(in)
       val q = graft.streaming.Streams.indexAppendAudited(src, root,
         s"$feed/ckpt", auditEvery = 1, floor = 0.8, k = 5, nprobe = 2,
         kCents = 8, compactEvery = 2, keepVersions = 2)

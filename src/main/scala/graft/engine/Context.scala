@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
+import org.apache.spark.sql.execution.datasources.parquet.graftx.Footers
 import org.apache.spark.sql.types.StructType
 
 /** Session/catalog front door — the Spark-native analog of the reference's
@@ -43,7 +44,7 @@ class Context(val spark: SparkSession) {
   /** Parquet twin (the reference is CSV-only; Parquet is our primary format
     * because at 100 TB a row-text format is never the right scan source). */
   def registerParquet(name: String, path: String): Unit =
-    register(name, spark.read.parquet(path))
+    register(name, readParquet(path))
 
   /** Analog of `SessionContext::read_csv` (ref: context.rs:44-50).
     * Schema is either supplied (CsvReadOptions::with_schema,
@@ -65,7 +66,9 @@ class Context(val spark: SparkSession) {
     r.csv(path)
   }
 
-  def readParquet(path: String): DataFrame = spark.read.parquet(path)
+  /** `spark.read.parquet` with its schema read on the driver
+    * ([[Tables.parquet]]): no Spark job. */
+  def readParquet(path: String): DataFrame = Tables.parquet(spark, path)
   def readJson(path: String): DataFrame = spark.read.json(path)
   def readOrc(path: String): DataFrame = spark.read.orc(path)
   /** Line-oriented text: one `value` string column per line. */
@@ -189,6 +192,18 @@ object Context {
       // rows; at 4 the orders side (9k-46k rows) is broadcast instead.
       // 4 stays conservative.
       .config("spark.sql.sources.fileCompressionFactor", "4")
+      // Compile each generated class once per process, not once per
+      // session or stream start. Spark keys its codegen cache on the
+      // compiling thread's class loader as well as on the source, and
+      // with artifact isolation on (Spark's default) every new session
+      // and every stream start compiles under a fresh loader, so
+      // identical source misses the cache: the streaming contract
+      // queries compiled 21–70 classes on every steady run, 0 with it
+      // off, and q_tpch_q1 compiled 9 again in a fresh `newSession()`,
+      // 0 with it off. The engine adds no artifacts (no `addArtifact`
+      // or `addJar`), so isolation buys it nothing. Fixed when a
+      // session is created.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.engine.GraftExtensions")
@@ -255,17 +270,20 @@ object Context {
     new java.util.WeakHashMap[SparkSession, (Context, String)]()
 
   /** A Context with the driver's star-schema tables registered from an
-    * sf directory (TESTDATA.md layout). Memoized per session: registration
-    * reads 10 parquet footers for schemas, which is pure overhead when
-    * repeated per query. Switching dirs within a session re-registers the
-    * views on the SAME Context, so every outstanding handle follows the
-    * switch instead of mixing data from two directories. */
+    * sf directory (TESTDATA.md layout). Registration lists the 10 files
+    * and reads their footers on the driver in one call
+    * ([[Tables.loadAll]]); it starts no Spark job. Memoized per session,
+    * so a query never repeats even the listing. Switching dirs within a
+    * session re-registers the views on the SAME Context, so every
+    * outstanding handle follows the switch instead of mixing data from
+    * two directories. */
   def forSfDir(spark: SparkSession, sfDir: String): Context = synchronized {
     Option(sessionCtx.get(spark)) match {
       case Some((ctx, dir)) if dir == sfDir => ctx
       case prev =>
         val ctx = prev.map(_._1).getOrElse(new Context(spark))
-        Tables.all.foreach(t => ctx.register(t, Tables.load(spark, sfDir, t)))
+        Tables.all.zip(Tables.loadAll(spark, sfDir))
+          .foreach { case (t, df) => ctx.register(t, df) }
         sessionCtx.put(spark, (ctx, sfDir))
         ctx
     }
@@ -286,39 +304,35 @@ object Tables {
     * cast is value-preserving because every session pins
     * spark.sql.session.timeZone=UTC. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    loadCache.synchronized {
-      Option(loadCache.get(spark)).flatMap(m => m.get(sfDir -> name))
-        .getOrElse {
-          val df = loadUncached(spark, sfDir, name)
-          val m = Option(loadCache.get(spark)).getOrElse {
-            val fresh = scala.collection.mutable.Map
-              .empty[(String, String), DataFrame]
-            loadCache.put(spark, fresh)
-            fresh
-          }
-          m.put(sfDir -> name, df)
-          df
-        }
-    }
+    loadAll(spark, sfDir, Seq(name)).head
 
-  /** PLAN memo, not a data cache: `spark.read.parquet` pays a driver
-    * file-listing + footer schema read per call, and every query builder
-    * calls [[load]] for each table it touches — across a 319-query sweep
-    * that is thousands of redundant footer reads of the SAME immutable
-    * sf tables (the registered-view path in [[Context.forSfDir]] already
-    * memoizes for exactly this reason; this extends it to the DataFrame
-    * path). The memoized object is a lazy logical plan over the parquet
-    * files — every action still reads the data from disk, so nothing
-    * about results or caching semantics changes; entries die with their
+  /** [[load]] for several tables. The ones not yet memoized for this
+    * session are read through [[parquet]] together, so their footers are
+    * read in one call and no Spark job runs. */
+  def loadAll(spark: SparkSession, sfDir: String,
+      names: Seq[String] = all): Seq[DataFrame] = loadCache.synchronized {
+    val m = loadCache.computeIfAbsent(spark,
+      _ => mutable.Map.empty[(String, String), DataFrame])
+    val missing = names.filterNot(n => m.contains(sfDir -> n))
+    missing.zip(parquet(spark, missing.map(n => s"$sfDir/$n.parquet")))
+      .foreach { case (n, df) => m.put(sfDir -> n, canonical(n, df)) }
+    names.map(n => m(sfDir -> n))
+  }
+
+  /** PLAN memo, not a data cache: a parquet read pays a driver file
+    * listing and a footer read per call, and every query builder calls
+    * [[load]] for each table it touches — across a 319-query sweep that
+    * is thousands of redundant reads of the SAME immutable sf tables. The
+    * memoized object is a lazy logical plan over the parquet files —
+    * every action still reads the data from disk, so nothing about
+    * results or caching semantics changes; entries die with their
     * session (weak keys). Scratch/derived paths never go through here —
     * only the driver's immutable sf tables. */
   private val loadCache = new java.util.WeakHashMap[
-    SparkSession, scala.collection.mutable.Map[(String, String), DataFrame]]()
+    SparkSession, mutable.Map[(String, String), DataFrame]]()
 
-  private def loadUncached(spark: SparkSession, sfDir: String,
-      name: String): DataFrame = {
+  private def canonical(name: String, df: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
     if (name != "events") df
     else df.schema("ts").dataType match {
       case LongType => df.withColumn("ts",
@@ -328,6 +342,25 @@ object Tables {
       case _ => df
     }
   }
+
+  /** `spark.read.parquet(path)` for each path, without the Spark job its
+    * schema inference runs (`SchemaMergeUtils.mergeSchemasInParallel`
+    * launches one even for one file: 65–130 ms per table at sf0.1, 4
+    * cores). The schema is read from the same footer on the driver by
+    * Spark's own converter ([[Footers.schemas]], every footer in one
+    * call) and handed to `spark.read.schema`, so the plan, the file
+    * listing and the size estimates are those of `spark.read.parquet`.
+    * A path whose schema Spark would not take from one footer (missing,
+    * empty, a streaming sink's output, schema merging on) goes to
+    * `spark.read.parquet` itself. */
+  def parquet(spark: SparkSession, paths: Seq[String]): Seq[DataFrame] =
+    paths.zip(Footers.schemas(spark, paths)).map {
+      case (p, Some(schema)) => spark.read.schema(schema).parquet(p)
+      case (p, None) => spark.read.parquet(p)
+    }
+
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    parquet(spark, Seq(path)).head
 
   /** Spread a KERNEL-BOUND operator input to the session's parallelism —
     * guide §2.5's "one huge unsplittable file" fix, applied at OPERATOR

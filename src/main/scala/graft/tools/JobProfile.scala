@@ -6,8 +6,9 @@ import graft.engine.{Context, Stages}
 /** The query runner for local iteration: run named contract queries in ONE
   * session (the Bench.scala execution shape, minus the full sweep) — a
   * warm-up, then `runs` timed noop writes each — and read each run's
-  * `Stages.record`. Prints every run, the best run, and the last run's
-  * jobs (by description, else call site) and stages sorted by cost.
+  * `Stages.record`. Prints the session set-up seconds, every run, the
+  * best run, and the last run's jobs (by description, else call site)
+  * and stages sorted by cost.
   * Answers "where do the seconds of a multi-action query actually go"
   * (train vs store write vs audit vs probe) — the Spark-UI stage view,
   * reduced to a terminal, for sessions where the UI is disabled — and
@@ -21,7 +22,8 @@ object JobProfile {
     val sfDir = if (args.length > 1) args(1) else
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = if (args.length > 2) args(2).toInt else 2
-    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus)
+    val (spark, setupS) = graft.Bench.setUp(sfDir)
+    println(f"[jobprofile] set-up $setupS%.3f s (session + sf table registration)")
 
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.engine.Context
+import graft.engine.{Context, Tables}
 
 /** Second-decade (100x) stress for the STREAMING spines (VERDICT r9
   * item 5) — the dedup/ANN decades, mirrored onto the always-on paths.
@@ -106,7 +106,7 @@ object StreamStress {
           .coalesce(4).write.mode("append").parquet(feed)
       }
       writePhase(0)
-      val src = ss.readStream.schema(ss.read.parquet(feed).schema)
+      val src = ss.readStream.schema(Tables.parquet(ss, feed).schema)
         .parquet(feed)
       val outRows = new java.util.concurrent.atomic.AtomicLong
       val q = mk(src).writeStream
@@ -232,7 +232,7 @@ object StreamStress {
       phase(0)
       val ss = spark.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "32")
-      val src = ss.readStream.schema(ss.read.parquet(feed).schema)
+      val src = ss.readStream.schema(Tables.parquet(ss, feed).schema)
         .parquet(feed)
       val t1 = System.nanoTime()
       val q = graft.streaming.Streams.indexAppend(src, cents, store, ckpt)

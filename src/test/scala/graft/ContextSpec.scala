@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{Context, CsvOptions, Tables}
+import graft.engine.{Context, CsvOptions, Stages, Tables}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Catalog + SQL front door + CSV source behavior
@@ -91,11 +92,64 @@ class ContextSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(conf.get("spark.sql.codegen.cache.maxEntries") == "500")
     assert(conf.get("spark.sql.sources.fileCompressionFactor") == "4")
+    assert(conf.get("spark.sql.artifact.isolation.enabled") == "false")
   }
 
   test("events table canonicalizes nanos to TimestampType") {
     val ev = Tables.load(spark, SparkFixture.sfDir, "events")
     assert(ev.schema("ts").dataType == TimestampType)
     assert(ev.count() > 0)
+  }
+
+  test("the driver-read footer schema equals spark.read.parquet's at every sf") {
+    for (sf <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val dir = java.nio.file.Paths.get(SparkFixture.sfDir).resolveSibling(sf)
+      val paths = Tables.all.map(t => s"$dir/$t.parquet")
+      for ((p, df) <- paths.zip(Tables.parquet(spark, paths))) {
+        val inferred = spark.read.parquet(p)
+        assert(df.schema == inferred.schema, p)
+        assert(df.sameSemantics(inferred), p)
+        // same file-size estimate, so the same join strategies
+        assert(df.queryExecution.optimizedPlan.stats.sizeInBytes ==
+          inferred.queryExecution.optimizedPlan.stats.sizeInBytes, p)
+      }
+    }
+  }
+
+  test("the driver-read footer schema equals spark.read.parquet's on a Spark-written dir") {
+    val dir = SparkFixture.tempDir("graftfooter").resolve("t").toString
+    spark.range(0, 40, 1, 4).select(
+        col("id"), (col("id") % 3).as("k"),
+        timestamp_micros(col("id") * 1000003L).as("ts"),
+        (col("id") / 7).cast(DecimalType(12, 2)).as("amount"),
+        struct(col("id").cast("int").as("a"),
+          col("id").cast("string").as("b")).as("s"),
+        array(col("id"), col("id") + 1).as("xs"))
+      .write.partitionBy("k").parquet(dir)
+    val df = Tables.parquet(spark, dir)
+    val inferred = spark.read.parquet(dir)
+    assert(df.schema == inferred.schema)
+    assert(df.schema.fieldNames.toSeq == Seq("id", "ts", "amount", "s", "xs", "k"))
+    assert(df.sameSemantics(inferred))
+    assert(df.count() == 40)
+    val ctx = new Context(spark)
+    assert(ctx.readParquet(dir).schema == inferred.schema)
+
+    // with schema merging on, Spark reads every footer; so does the helper
+    val wide = SparkFixture.tempDir("graftmerge").resolve("t").toString
+    spark.range(3).toDF("a").write.parquet(s"$wide/p=1")
+    spark.range(3).select(col("id").as("a"), col("id").as("b"))
+      .write.parquet(s"$wide/p=2")
+    val merging = spark.newSession()
+    merging.conf.set("spark.sql.parquet.mergeSchema", "true")
+    assert(Tables.parquet(merging, wide).schema.fieldNames.toSeq == Seq("a", "b", "p"))
+    assert(Tables.parquet(merging, wide).schema == merging.read.parquet(wide).schema)
+  }
+
+  test("sf table registration runs no Spark job") {
+    val (_, rec) = Stages.record(spark) {
+      Context.forSfDir(spark.newSession(), SparkFixture.sfDir)
+    }
+    assert(rec.jobs.isEmpty, rec.jobs.map(_.name))
   }
 }
