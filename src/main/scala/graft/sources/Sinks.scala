@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.col
+import graft.engine.Tables
 
 /** Output sinks. The reference has NO write path at all
   * (ref: src/io/writer/mod.rs is empty, 0 lines; output surface is
@@ -103,7 +104,7 @@ object Sinks {
     val before = parts(srcPath)
     val totalBytes = before.map(_.getLen).sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val df = spark.read.parquet(srcPath)
+    val df = Tables.parquet(spark, srcPath)
     val out = clusterCol match {
       case Some(c) => df.repartitionByRange(n, col(c)).sortWithinPartitions(c)
       case None    => df.repartition(n)
@@ -185,7 +186,7 @@ object Sinks {
       .sortWithinPartitions(rangeCol)
       .write.mode(SaveMode.Overwrite).parquet(path)
     val s = df.sparkSession
-    s.read.parquet(path)
+    Tables.parquet(s, path)
       .select(org.apache.spark.sql.functions.input_file_name().as("file"),
         col(rangeCol))
       .groupBy("file")
@@ -204,7 +205,7 @@ object Sinks {
   def readPruned(spark: org.apache.spark.sql.SparkSession, path: String,
       rangeCol: String, from: Any, to: Any):
       (DataFrame, Int, Int) = {
-    val manifest = spark.read.parquet(path + "_manifest")
+    val manifest = Tables.parquet(spark, path + "_manifest")
     val total = manifest.count().toInt
     val files = manifest
       .filter(col("hi") >= org.apache.spark.sql.functions.lit(from) &&
@@ -212,7 +213,9 @@ object Sinks {
       .select("file").collect().map(_.getString(0))
     val df =
       if (files.isEmpty)
-        spark.read.parquet(path).filter(org.apache.spark.sql.functions.lit(false))
+        Tables.parquet(spark, path).filter(org.apache.spark.sql.functions.lit(false))
+      // one relation over the chosen files: Tables.parquet gives one frame
+      // per path, and a union of k single-file scans would plan k scans
       else spark.read.parquet(files.toIndexedSeq: _*)
         .filter(col(rangeCol).between(
           org.apache.spark.sql.functions.lit(from),

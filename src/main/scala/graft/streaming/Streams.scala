@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
+import graft.engine.Tables
 
 /** Structured Streaming operators over the `events` table shape
   * (event_id, ts, user_id, event_type, value, props).
@@ -338,7 +339,7 @@ object Streams {
         // snapshot (v=N below the first version id) may carry columns
         // that never appear in the change feed (partial-update CDC)
         val base =
-          if (prev.nonEmpty) s.read.parquet(s"$snapshotDir/v=${prev.max}")
+          if (prev.nonEmpty) Tables.parquet(s, s"$snapshotDir/v=${prev.max}")
           else {
             val schema = StructType(cols.map(c => batch.schema(c)))
             s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -495,7 +496,7 @@ object Streams {
         "silently drop data; resume the original checkpoint or publish " +
         "a fresh root")
       def loadCents(): DataFrame = graft.similarity.Ivf.localizeCentroids(
-        s.read.parquet(s"$root/v=$v/centroids"))
+        Tables.parquet(s, s"$root/v=$v/centroids"))
       val cents =
         if (centCache == null) loadCents()
         else {

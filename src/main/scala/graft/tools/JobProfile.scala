@@ -13,6 +13,9 @@ import graft.engine.{Context, Stages}
   * (train vs store write vs audit vs probe) — the Spark-UI stage view,
   * reduced to a terminal, for sessions where the UI is disabled — and
   * catches in-session re-run failures and JIT-vs-steady-state deltas.
+  * Each run also prints the OS processes it started, grouped by command
+  * ([[ProcessStarts]]): a forked helper per file operation shows there
+  * and in no Spark metric.
   *
   * Usage: runMain graft.tools.JobProfile <q1,q2,...> [sfDir] [runs]
   */
@@ -28,30 +31,39 @@ object JobProfile {
     for (name <- names) {
       val fn = graft.SparkEntry.queries(name)
       // times the write alone; isolation runs after the clock stops
-      def once(): Option[(Double, Stages.Record)] = {
+      def once(): Option[(Double, Stages.Record, Seq[String])] = {
         val t =
-          try Some(Stages.record(spark) {
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }) catch { case NonFatal(e) =>
+          try {
+            val ((s, rec), procs) = ProcessStarts.record(Stages.record(spark) {
+              val t0 = System.nanoTime()
+              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+              (System.nanoTime() - t0) / 1e9
+            })
+            Some((s, rec, procs))
+          } catch { case NonFatal(e) =>
             println(s"[jobprofile] $name FAILED: ${e.getMessage}"); None
           }
         Context.isolate(spark)
         t
       }
+      def processes(procs: Seq[String]): String =
+        s"${procs.size} processes" + (if (procs.isEmpty) "" else
+          ProcessStarts.grouped(procs).map { case (c, n) => s"$n $c" }
+            .mkString(" (", ", ", ")"))
       once() // JIT/codegen warm-up
-        .foreach(w => println(f"[jobprofile] $name warm-up ${w._1}%.3f s, " +
-          f"${w._2.codegenCompiles} codegen compiles"))
+        .foreach { case (s, rec, procs) =>
+          println(f"[jobprofile] $name warm-up $s%.3f s, " +
+            f"${rec.codegenCompiles} codegen compiles, ${processes(procs)}") }
       val timed = (1 to runs).flatMap { i =>
         val t = once()
-        t.foreach { case (s, rec) =>
+        t.foreach { case (s, rec, procs) =>
           println(f"[jobprofile] $name run$i ${s}%.3f s, ${rec.jobs.size} jobs, " +
-            f"${rec.stages.size} stages, ${rec.codegenCompiles} codegen compiles") }
+            f"${rec.stages.size} stages, ${rec.codegenCompiles} codegen compiles, " +
+            processes(procs)) }
         t
       }
       // the last run's breakdown
-      for ((_, rec) <- timed.lastOption) {
+      for ((_, rec, _) <- timed.lastOption) {
         for (st <- rec.stages.filter(_.wallMs > 150).sortBy(-_.wallMs))
           println(f"[jobprofile]   stage ${st.id}%4d ${st.wallMs / 1e3}%7.3f s " +
             f"${st.tasks.size}%4d tasks  sr=${st.shuffleReadBytes / 1e6}%.1f MB " +

@@ -1,14 +1,18 @@
 package graft
 
+import java.net.URI
+import org.apache.hadoop.fs.{FileContext, FileSystem}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{Context, CsvOptions, Stages, Tables}
+import graft.engine.{Context, CsvOptions, ForkFreeLocalFileSystem, ForkFreeLocalFs, Stages, Tables}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Catalog + SQL front door + CSV source behavior
   * (ref: src/execution/context.rs:111-136 tests). */
 class ContextSpec extends AnyFunSuite {
-  lazy val spark = SparkFixture.spark
+  // a def: one case below stops the session and starts the next
+  def spark = SparkFixture.spark
 
   test("register + table + sql round-trip") {
     val ctx = Context.forSfDir(spark, SparkFixture.sfDir)
@@ -93,6 +97,24 @@ class ContextSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.codegen.cache.maxEntries") == "500")
     assert(conf.get("spark.sql.sources.fileCompressionFactor") == "4")
     assert(conf.get("spark.sql.artifact.isolation.enabled") == "false")
+    assert(conf.get("spark.hadoop.fs.file.impl") ==
+      classOf[ForkFreeLocalFileSystem].getName)
+    assert(conf.get("spark.hadoop.fs.AbstractFileSystem.file.impl") ==
+      classOf[ForkFreeLocalFs].getName)
+  }
+
+  test("local paths resolve to the fork-free filesystem, also after a session restart") {
+    def check(s: SparkSession): Unit = {
+      val hadoopConf = s.sparkContext.hadoopConfiguration
+      assert(FileSystem.get(URI.create("file:///"), hadoopConf)
+        .isInstanceOf[ForkFreeLocalFileSystem])
+      assert(FileContext.getLocalFSFileContext(hadoopConf).getDefaultFileSystem
+        .isInstanceOf[ForkFreeLocalFs])
+    }
+    check(spark)
+    // the perfbench set-up path: stop, then a second Context.session
+    spark.stop()
+    check(Context.session("local[4]", 4))
   }
 
   test("events table canonicalizes nanos to TimestampType") {
