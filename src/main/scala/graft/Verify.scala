@@ -12,9 +12,7 @@ object Verify {
     val names: Set[String] =
       if (args.length > 2) args(2).split(",").toSet
       else SparkEntry.queries.keySet
-    val unknown = names -- SparkEntry.queries.keySet
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    requireKnown(names, SparkEntry.queries.keySet)
     // SPARK_GRAFT_NO_BROADCAST=1: verify under the CLUSTER-SCALE join
     // plan. At 100 TB no fact-table side fits a broadcast, so the plans
     // that actually run there are sort-merge/shuffled-hash — locally AQE
@@ -41,6 +39,14 @@ object Verify {
     }
     writeOracleSql(outDir, names)
     spark.stop()
+  }
+
+  /** Reject names that are not in `known`: an unknown name is an error,
+    * not a silently empty run. */
+  def requireKnown(names: Set[String], known: Set[String]): Unit = {
+    val unknown = names -- known
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
   }
 
   /** Write the DuckDB twins of `names` (the queries that ran) to

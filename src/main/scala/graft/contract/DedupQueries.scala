@@ -241,7 +241,7 @@ winnowTwinSql),
     // (4000 > the 273-doc max bucket) caps nothing, so the SAME full
     // O(n²) exact-Jaccard twin proves the auto-gated path end to end;
     // DedupSpec pins the tight-budget rung selection the twin can't see.
-    // The budget survives the 10x ContractStress corpus (~7M capped
+    // The budget survives the 10x Stress corpus (~7M capped
     // pairs); at 100k it was observed REFUSING that corpus (smallest
     // rung 16 already admits 904,335 pairs) — the guard behaving as
     // designed on a hot corpus

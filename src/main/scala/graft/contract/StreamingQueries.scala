@@ -466,7 +466,7 @@ object StreamingQueries {
       // the wave from the trained quantizer AND from itself, so the
       // audit scatters on ANY corpus geometry (reversed near-dup
       // FAMILIES co-locate and never trip the gate on the densified
-      // 10x ContractStress corpus; masked vectors have no family
+      // 10x Stress corpus; masked vectors have no family
       // structure to hide in)
       val w2 = emb.filter(pmod(col("vec_id"), lit(10)) === 5)
         .select((col("vec_id") + 200000L).as("vec_id"),

@@ -8,8 +8,8 @@ import org.apache.spark.status.api.v1.TaskMetrics
 /** What a block of code ran on the cluster: the jobs and stages it
   * created, read from Spark's own status store (kept by the always-on
   * `AppStatusListener`, also with the UI disabled) instead of a private
-  * listener. The one per-query record that JobProfile, ContractStress,
-  * ScaleStress, SpillStress and Bench read.
+  * listener. The one per-query record that JobProfile, Stress and Bench
+  * read.
   *
   * Every task figure counts SUCCESSFUL attempts only: a failed or killed
   * attempt carries partial metrics and would register as a near-empty
@@ -19,7 +19,7 @@ import org.apache.spark.status.api.v1.TaskMetrics
 object Stages {
   /** One successful task: wall and JVM GC ms, and the records it read from
     * shuffle and from files (apart: they gate differently, see
-    * ContractStress). */
+    * `tools.Stress.gates`). */
   final case class Task(durationMs: Long, gcMs: Long,
       shuffleReadRecords: Long, inputRecords: Long)
 

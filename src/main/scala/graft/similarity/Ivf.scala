@@ -210,7 +210,7 @@ object Ivf {
     * RANGE-based on (centroid_id, id), not hash-on-centroid alone:
     * hash clustering writes exactly one file per cell, which makes
     * probe-read task granularity equal CELL SIZE and turns cell-size
-    * imbalance directly into record skew (the 10× ContractStress gate
+    * imbalance directly into record skew (the 10× Stress gate
     * caught 7.7× on the incremental-store probe); the range partitioner's
     * weighted sampling gives oversized cells several balanced files and
     * lets small cells share write tasks, while directory-level pruning —
@@ -1149,7 +1149,7 @@ object Ivf {
     * [[writeVersionedIndex]]'s pure function of it. IvfSpec drives both
     * branches (healthy → version kept; a dimension-reversed appended
     * wave → retrain fires AND the new version's recall recovers);
-    * ScaleStress's ann_drift_gate is the same audit at 30×/100×. */
+    * Stress's ann_drift_gate is the same audit at 30×/100×. */
   def reindexIfDrifted(spark: org.apache.spark.sql.SparkSession,
       root: String, queries: DataFrame, k: Int, nprobe: Int = 2,
       floor: Double = 0.8, kCents: Int = 8, iters: Int = 1,

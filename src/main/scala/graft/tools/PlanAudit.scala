@@ -175,7 +175,7 @@ object PlanAudit {
     // the query's cost under-states it (q_stream_lifecycle's three
     // trains + audited stream + compaction + vacuum audit as 3
     // exchanges). The eager work's scale behavior is driven and measured
-    // by ContractStress / StreamStress / ScaleStress instead.
+    // by `tools.Stress` instead.
     val eagerQueries = Set("q_ann_reindex", "q_ann_vacuum",
       "q_ann_compact_version", "q_ann_drift_sampled", "q_ann_commit_race",
       "q_ann_pq_versioned", "q_ann_workload", "q_ann_stored_index",
@@ -185,7 +185,7 @@ object PlanAudit {
       "work EAGERLY while building (publishes/streams/audits/compactions); " +
       "the plan above covers only the returned probe frame. Do not read " +
       "the exchange count as the query's cost — the eager phases are " +
-      "stress-measured by ContractStress/StreamStress/ScaleStress " +
+      "stress-measured by graft.tools.Stress " +
       "(SCALE.md), and their store writes are the range-clustered " +
       "partitioned layouts audited under q_ann_ivf_pruned."
 
