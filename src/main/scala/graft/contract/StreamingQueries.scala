@@ -3,27 +3,33 @@ package contract
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 
 import graft.engine.Context.{deleteTree, scratch}
 import graft.engine.Tables
 import graft.functions.native
 import graft.similarity.Ann
+import graft.streaming.Streams
 
 import Shared._
 
 /** Structured Streaming queries. */
 object StreamingQueries {
 
-  /** Run `body` against a fresh temp feed directory, then delete the
-    * directory. Only for bodies whose RESULT is feed-independent (the
-    * streaming contract queries return a detached LocalRelation from the
-    * memory sink — see Streams.runToMemoryPhased): a bench/verify sweep
-    * runs hundreds of these per JVM and must not leak one full table
-    * copy of disk per stream query per sweep. Deletion is best-effort
-    * ([[graft.engine.Context.deleteTree]]). */
+  /** Run `body` against a fresh feed directory under the per-process
+    * scratch root, then delete the directory. Only for bodies whose
+    * RESULT is feed-independent (the streaming contract queries return a
+    * detached LocalRelation from the memory sink — see
+    * Streams.runToMemory): a bench/verify sweep runs hundreds of these
+    * per JVM and must not leak one full table copy of disk per stream
+    * query per sweep. Deletion is best-effort
+    * ([[graft.engine.Context.deleteTree]]); a JVM stopped by SIGTERM
+    * skips the `finally`, and the scratch root's shutdown hook deletes
+    * the feed instead. */
   private def withTempFeed(prefix: String)(body: String => DataFrame): DataFrame = {
-    val feed = java.nio.file.Files.createTempDirectory(prefix)
+    val feed = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(scratch("")), prefix)
     try body(feed.toString)
     finally deleteTree(feed)
   }
@@ -56,16 +62,9 @@ object StreamingQueries {
     def phase(p: DataFrame): Unit =
       p.coalesce(1).write.mode("append").parquet(in)
     phase(batch.filter(col("vec_id") % 10 === 0)) // lands before start
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    val src = ss.readStream.schema(Tables.parquet(ss, in).schema).parquet(in)
-    val q = graft.streaming.Streams.indexAppend(src, cents, store,
-      s"$feed/ckpt")
-    try {
-      q.processAllAvailable()
-      phase(batch.filter(col("vec_id") % 10 =!= 0))
-      q.processAllAvailable()
-    } finally q.stop()
+    Streams.drive(Streams.indexAppend(Streams.fileStreams(s, 4, in).head,
+        cents, store, s"$feed/ckpt"),
+      Seq(() => (), () => phase(batch.filter(col("vec_id") % 10 =!= 0))))
     (store, cents)
   }
 
@@ -122,23 +121,9 @@ object StreamingQueries {
       t(s, dir, "events").select(col("ts"), col("user_id"),
           col("event_type"))
         .write.mode("overwrite").parquet(feed)
-      // state width = the stream session's shuffle partitions (one state
-      // store per partition per batch) — the q_stream_join idiom: a
-      // session CLONE right-sizes it to the bounded feed without touching
-      // the shared session. This was the worst anti-scaler in the r12
-      // driver data (32-core run 4.5x SLOWER than 8-core: 32 state-store
-      // tasks per micro-batch on a tiny batch is pure per-task overhead);
-      // at production volume this same knob is what you RAISE.
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      val src = ss.readStream.schema(Tables.parquet(ss, feed).schema)
-        .parquet(feed)
-      val streamed = graft.streaming.Streams.streamingDedup(
-        src, Seq("user_id", "event_type"), watermark = "1 hour")
-      val name = "sdedup_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.streaming.Streams.runToMemory(streamed, name,
-          org.apache.spark.sql.streaming.OutputMode.Append())
+      val streamed = Streams.streamingDedup(Streams.fileStreams(s, 4, feed).head,
+        Seq("user_id", "event_type"), watermark = "1 hour")
+      Streams.runToMemory(streamed, OutputMode.Append())
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_keys"))
         .orderBy("event_type")
@@ -166,20 +151,10 @@ object StreamingQueries {
         .write.mode("overwrite").parquet(s"$feed/clicks")
       ev.filter(col("event_type") === "view").coalesce(4)
         .write.mode("overwrite").parquet(s"$feed/views")
-      // state width = the stream session's shuffle partitions (one state
-      // store per partition per batch). A session CLONE right-sizes it to
-      // the bounded feed without touching the shared session — at
-      // production volume this same knob is what you RAISE.
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      def src(p: String) = ss.readStream
-        .schema(Tables.parquet(ss, p).schema).parquet(p)
-      val joined = graft.streaming.Streams.intervalJoin(
-        src(s"$feed/clicks"), src(s"$feed/views"), "10 minutes")
-      val name = "sjoin_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.streaming.Streams.runToMemory(joined, name,
-          org.apache.spark.sql.streaming.OutputMode.Append())
+      val Seq(clicks, views) =
+        Streams.fileStreams(s, 4, s"$feed/clicks", s"$feed/views")
+      Streams.runToMemory(Streams.intervalJoin(clicks, views, "10 minutes"),
+          OutputMode.Append())
         .agg(count(lit(1)).as("n_pairs"),
           countDistinct(col("user_id")).as("n_users"))
     },
@@ -205,10 +180,7 @@ object StreamingQueries {
     ContractQuery("q_stream_neardup", (s, dir) => withTempFeed("graft_sneardup") { feed =>
       t(s, dir, "documents").select(col("doc_id"), col("text"))
         .coalesce(4).write.mode("overwrite").parquet(feed)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      val src = ss.readStream.schema(Tables.parquet(ss, feed).schema)
-        .parquet(feed)
+      val src = Streams.fileStreams(s, 4, feed).head
       val chunkVals = array((0 until 4).map(i =>
         shiftrightunsigned(col("sh"), i * 16)
           .bitwiseAND(lit(0xffffL))): _*)
@@ -217,10 +189,7 @@ object StreamingQueries {
         .select(col("doc_id"), posexplode(chunkVals)
           .as(Seq("chunk_id", "chunk_val")))
         .groupBy("chunk_id", "chunk_val").agg(count(lit(1)).as("c"))
-      val name = "sneardup_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      graft.streaming.Streams.runToMemory(buckets, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete())
+      Streams.runToMemory(buckets, OutputMode.Complete())
         .filter(col("c") > 1L)
         .agg(count(lit(1)).as("n_hot_buckets"),
           sum(col("c") * (col("c") - lit(1L))).as("p2"))
@@ -318,18 +287,12 @@ object StreamingQueries {
       // first batch; later phases are single atomically-renamed files
       ev.filter(col("user_id") % 2 === 0 && col("ts") < h4)
         .coalesce(1).write.mode("append").parquet(feed)
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      val src = ss.readStream.schema(Tables.parquet(ss, feed).schema)
-        .parquet(feed)
-      val name = "slate_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
       val late = ev.filter(
         (col("user_id") % 2 === 1 && col("ts") < h4) ||
           (col("ts") >= h4 && col("ts") < h6))
-      graft.streaming.Streams.runToMemoryPhased(
-          graft.streaming.Streams.windowedCounts(src),
-          name, org.apache.spark.sql.streaming.OutputMode.Append(),
+      Streams.runToMemory(
+          Streams.windowedCounts(Streams.fileStreams(s, 4, feed).head),
+          OutputMode.Append(),
           Seq(() => (),
             () => late.coalesce(1).write.mode("append").parquet(feed)))
         .select(col("window.start").as("window_start"),
@@ -402,26 +365,21 @@ object StreamingQueries {
         col("o_orderdate") >= lit("1998-01-01").cast(TimestampType) &&
           col("o_orderdate") < lit("2000-01-01").cast(TimestampType),
         col("o_orderdate") >= lit("2000-01-01").cast(TimestampType))
-      // the q_stream_join idiom: per-batch merge work runs at a
-      // feed-sized shuffle width on a session clone (at 32 the three
-      // micro-batch merges are mostly per-task overhead); raise at volume
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      cuts.zipWithIndex.foreach { case (cut, i) =>
-        val feed = s"$root/feed$i"
+      val feeds = cuts.indices.map(i => s"$root/feed$i")
+      cuts.zip(feeds).foreach { case (cut, feed) =>
         changes.filter(cut).write.mode("overwrite").parquet(feed)
-        val q = graft.streaming.Streams.cdcApply(
-          ss.readStream.schema(changes.schema).parquet(feed),
-          s"$root/snap", s"$root/ckpt$i", "c_custkey",
-          versionCols = Seq("o_orderdate", "o_orderkey"), partial = true,
-          deleteCol = Some("_is_del"), epoch = (i + 1) * 1000000L)
-        q.processAllAvailable()
-        q.stop()
+      }
+      // the epochs chain onto one snapshot store, so they run in order
+      Streams.fileStreams(s, 4, feeds: _*).zipWithIndex.foreach { case (src, i) =>
+        Streams.drive(Streams.cdcApply(src, s"$root/snap", s"$root/ckpt$i",
+          "c_custkey", versionCols = Seq("o_orderdate", "o_orderkey"),
+          partial = true, deleteCol = Some("_is_del"),
+          epoch = (i + 1) * 1000000L))
       }
       val newest = hfs.listStatus(new org.apache.hadoop.fs.Path(s"$root/snap"))
         .map(_.getPath.getName).filter(_.startsWith("v="))
         .map(_.drop(2).toLong).max
-      s.read.parquet(s"$root/snap/v=$newest").orderBy("c_custkey")
+      Tables.parquet(s, s"$root/snap/v=$newest").orderBy("c_custkey")
     },
       // the twin REPLAYS the three epochs sequentially — true CDC history
       // semantics differ from the one-shot merge: a key deleted in an early
@@ -478,19 +436,14 @@ object StreamingQueries {
       def phase(p: DataFrame): Unit =
         p.coalesce(1).write.mode("append").parquet(in)
       phase(w1) // lands before start -> one deterministic first batch
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      val src = ss.readStream.schema(Tables.parquet(ss, in).schema).parquet(in)
-      val q = graft.streaming.Streams.indexAppendAudited(src, root,
-        s"$feed/ckpt", auditEvery = 1, floor = 0.8, k = 5, nprobe = 2,
-        kCents = 8)
-      try {
-        q.processAllAvailable()
-        require(graft.similarity.Ivf.indexVersion(s, root) == v1,
-          "the in-distribution wave must not trigger a retrain")
-        phase(w2)
-        q.processAllAvailable()
-      } finally q.stop()
+      Streams.drive(Streams.indexAppendAudited(Streams.fileStreams(s, 4, in).head,
+          root, s"$feed/ckpt", auditEvery = 1, floor = 0.8, k = 5, nprobe = 2,
+          kCents = 8),
+        Seq(() => (), () => {
+          require(graft.similarity.Ivf.indexVersion(s, root) == v1,
+            "the in-distribution wave must not trigger a retrain")
+          phase(w2)
+        }))
       val v2 = graft.similarity.Ivf.indexVersion(s, root)
       require(v2 == v1 + 1,
         s"the shifted wave must advance the version exactly once: $v1 -> $v2")
@@ -556,32 +509,27 @@ object StreamingQueries {
       def phase(p: DataFrame): Unit =
         p.coalesce(1).write.mode("append").parquet(in)
       phase(w1a) // lands before start -> one deterministic first batch
-      val ss = s.newSession()
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
-      val src = ss.readStream.schema(Tables.parquet(ss, in).schema).parquet(in)
-      val q = graft.streaming.Streams.indexAppendAudited(src, root,
-        s"$feed/ckpt", auditEvery = 1, floor = 0.8, k = 5, nprobe = 2,
-        kCents = 8, compactEvery = 2, keepVersions = 2)
-      try {
-        q.processAllAvailable()
-        require(graft.similarity.Ivf.indexVersion(s, root) == v1,
-          "the first in-distribution wave must hold the version")
-        val filesV1 = fs.globStatus(new org.apache.hadoop.fs.Path(
-          s"$root/v=$v1/store/ingest=*/centroid_id=*/part-*")).length
-        phase(w1b)
-        q.processAllAvailable()
-        val vC = graft.similarity.Ivf.indexVersion(s, root)
-        require(vC == v1 + 1,
-          s"the compaction cadence must publish v=${v1 + 1}: got $vC")
-        require(graft.similarity.Ivf.ingestLayerCount(s, root, vC) == 1,
-          "the compacted version must be single-base")
-        val filesVC = fs.globStatus(new org.apache.hadoop.fs.Path(
-          s"$root/v=$vC/store/ingest=*/centroid_id=*/part-*")).length
-        require(filesVC < filesV1,
-          s"compaction must shrink the store: $filesV1 -> $filesVC files")
-        phase(w2)
-        q.processAllAvailable()
-      } finally q.stop()
+      def files(v: Long) = fs.globStatus(new org.apache.hadoop.fs.Path(
+        s"$root/v=$v/store/ingest=*/centroid_id=*/part-*")).length
+      var filesV1 = 0 // v1's store as the first drain left it
+      Streams.drive(Streams.indexAppendAudited(Streams.fileStreams(s, 4, in).head,
+          root, s"$feed/ckpt", auditEvery = 1, floor = 0.8, k = 5, nprobe = 2,
+          kCents = 8, compactEvery = 2, keepVersions = 2),
+        Seq(() => (), () => {
+          require(graft.similarity.Ivf.indexVersion(s, root) == v1,
+            "the first in-distribution wave must hold the version")
+          filesV1 = files(v1)
+          phase(w1b)
+        }, () => {
+          val vC = graft.similarity.Ivf.indexVersion(s, root)
+          require(vC == v1 + 1,
+            s"the compaction cadence must publish v=${v1 + 1}: got $vC")
+          require(graft.similarity.Ivf.ingestLayerCount(s, root, vC) == 1,
+            "the compacted version must be single-base")
+          require(files(vC) < filesV1,
+            s"compaction must shrink the store: $filesV1 -> ${files(vC)} files")
+          phase(w2)
+        }))
       val v3 = graft.similarity.Ivf.indexVersion(s, root)
       require(v3 == v1 + 2,
         s"the re-encoded wave must retrain exactly once: got v=$v3")

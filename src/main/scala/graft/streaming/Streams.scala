@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, StreamingQueryProgress, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
 import graft.engine.Tables
@@ -281,7 +281,7 @@ object Streams {
     * file sinks driven through foreachBatch; downstream readers see the
     * result as an ordinary hive-partitioned dataset. */
   def parquetSinkExactlyOnce(streamed: DataFrame, outDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+      checkpointDir: String): StreamingQuery =
     streamed.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -317,7 +317,7 @@ object Streams {
       key: String, versionCols: Seq[String], partial: Boolean = false,
       deleteCol: Option[String] = None,
       baseCols: Seq[String] = Nil,
-      epoch: Long = 0L): org.apache.spark.sql.streaming.StreamingQuery = {
+      epoch: Long = 0L): StreamingQuery = {
     val cols =
       if (baseCols.nonEmpty) baseCols
       else changes.columns.toSeq.diff(versionCols ++ deleteCol)
@@ -372,8 +372,7 @@ object Streams {
     * re-run the training lineage. */
   def indexAppend(newVectors: DataFrame, centroids: DataFrame,
       storeDir: String, checkpointDir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding")
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      idCol: String = "vec_id", vecCol: String = "embedding"): StreamingQuery =
     newVectors.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -430,8 +429,7 @@ object Streams {
       kCents: Int = 8, iters: Int = 1, confidenceFloor: Double = -1.0,
       samplePct: Int = 100, compactEvery: Int = 0, keepVersions: Int = 0,
       workloadEvery: Int = 0, keepLogEpochs: Int = 0,
-      idCol: String = "vec_id", vecCol: String = "embedding")
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): StreamingQuery = {
     require(auditEvery >= 1, s"audit cadence must be >= 1: $auditEvery")
     // Per-STREAM cache of each version's driver-localized centroids (k
     // rows per entry, bounded by the retrain count): a committed
@@ -620,7 +618,7 @@ object Streams {
     * end and its state is evicted — the bounded-state contract that
     * lets this run forever on an unbounded feed. Input rows arriving
     * after their window's state was evicted are DROPPED by the engine;
-    * [[runToMemoryPhased]] + q_stream_late make that drop rule a
+    * [[drive]] + q_stream_late make that drop rule a
     * hash-checked contract rather than a doc claim. */
   def windowedCounts(events: DataFrame, length: String = "1 hour",
       watermark: String = "30 minutes"): DataFrame =
@@ -628,26 +626,64 @@ object Streams {
       .groupBy(window(col("ts"), length), col("event_type"))
       .agg(count(lit(1)).as("n"))
 
-  /** Drive a streaming query through EXPLICIT feed phases: each phase
-    * callback lands more files in the source directory, then the query
+  /** File-source streams over `feeds`, all on ONE session clone whose
+    * shuffle width is `width`. State width = the clone's shuffle
+    * partitions (one state store per partition per batch), so the clone
+    * right-sizes it to a bounded feed without touching the caller's
+    * session. At 32 partitions on a tiny feed a micro-batch is mostly
+    * per-task overhead (q_stream_dedup on 32 cores ran 4.5x slower than
+    * on 8 in the r12 driver data); at production volume this same knob is
+    * what you RAISE. Sources that join or chain share the one clone. Each
+    * schema is read from the feed's parquet footer ([[Tables.parquet]]),
+    * so a feed must hold at least one file before its stream is opened. */
+  def fileStreams(spark: SparkSession, width: Int, feeds: String*): Seq[DataFrame] = {
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", width.toString)
+    Tables.parquet(ss, feeds).zip(feeds).map { case (df, feed) =>
+      ss.readStream.schema(df.schema).parquet(feed)
+    }
+  }
+
+  /** The one way a started stream runs: each phase callback lands more
+    * input (or checks the state the previous drain left), then the query
     * drains (`processAllAvailable`, which also runs the no-new-data
-    * batches that advance the watermark and flush evictions). The phase
-    * boundary is what makes watermark semantics DETERMINISTIC: within a
-    * drain the watermark only moves at batch boundaries, so "what was
-    * on time when this batch arrived" is fixed by the phase sequence,
-    * not by file-listing races. Callers keep each phase's write to ONE
-    * atomically-renamed file (coalesce(1)) so a phase can't straddle
-    * two micro-batches. */
-  def runToMemoryPhased(streamed: DataFrame, name: String,
-      mode: OutputMode, phases: Seq[() => Unit]): DataFrame = {
+    * batches that advance the watermark and flush evictions). The query
+    * is stopped in a `finally`: a failed phase or a rethrown stream error
+    * must not leak a RUNNING query into a session that hosts hundreds.
+    *
+    * The phase boundary is what makes watermark semantics DETERMINISTIC:
+    * within a drain the watermark only moves at batch boundaries, so
+    * "what was on time when this batch arrived" is fixed by the phase
+    * sequence, not by file-listing races. Callers keep each phase's write
+    * to ONE atomically-renamed file (coalesce(1)) so a phase can't
+    * straddle two micro-batches.
+    *
+    * Returns the progress of every batch the query ran, in batch order.
+    * `recentProgress` is a bounded ring buffer (100 entries), so it is
+    * read after every drain; an idle trigger reports the id of the batch
+    * it did not run, so the last report per id (the run's own) wins. */
+  def drive(q: StreamingQuery, phases: Seq[() => Unit] = Seq(() => ()))
+      : Seq[StreamingQueryProgress] = {
+    val byId = scala.collection.mutable.TreeMap.empty[Long, StreamingQueryProgress]
+    try phases.foreach { phase =>
+      phase()
+      q.processAllAvailable()
+      q.recentProgress.foreach(p => byId(p.batchId) = p)
+    } finally q.stop()
+    byId.values.toSeq
+  }
+
+  private val sinkIds = new java.util.concurrent.atomic.AtomicLong
+
+  /** [[drive]] `streamed` into a memory sink and return the materialized
+    * result. */
+  def runToMemory(streamed: DataFrame, mode: OutputMode,
+      phases: Seq[() => Unit] = Seq(() => ())): DataFrame = {
     val spark = streamed.sparkSession
-    val q = streamed.writeStream.outputMode(mode)
-      .format("memory").queryName(name).start()
+    val name = s"graft_sink_${sinkIds.incrementAndGet()}"
     try {
-      // always stop: a failed phase write or a rethrown stream error must
-      // not leak a RUNNING query (this JVM hosts hundreds of queries)
-      try phases.foreach { feed => feed(); q.processAllAvailable() }
-      finally q.stop()
+      val _ = drive(streamed.writeStream.outputMode(mode)
+        .format("memory").queryName(name).start(), phases)
       // Detach the result from the memory sink: the sink's rows live on
       // the DRIVER for as long as its temp view stays registered, so a
       // long-lived session running many stream queries (a bench sweep
@@ -661,20 +697,14 @@ object Streams {
       spark.createDataFrame(
         java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
-      // in the outer finally, not after the collect: a throwing phase or
-      // drain must ALSO free the sink's temp view + driver buffer, or a
-      // sweep retrying flaky stream queries accumulates orphaned sinks —
-      // the exact leak the detach exists to prevent
+      // in the finally, not after the collect: a throwing phase or drain
+      // must ALSO free the sink's temp view + driver buffer, or a sweep
+      // retrying flaky stream queries accumulates orphaned sinks — the
+      // exact leak the detach exists to prevent
       // NonFatal only: swallowing a VM error or a thread interrupt here
       // would mask the real failure / lose the interrupt (ADVICE r9)
       try spark.catalog.dropTempView(name)
       catch { case scala.util.control.NonFatal(_) => () }
     }
   }
-
-  /** Run a streaming query over a bounded source into a memory sink and
-    * return the materialized result — used by tests to drive the streaming
-    * path end-to-end with deterministic content. */
-  def runToMemory(streamed: DataFrame, name: String, mode: OutputMode): DataFrame =
-    runToMemoryPhased(streamed, name, mode, Seq(() => ()))
 }

@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{Context, Stages, Tables}
+import graft.streaming.Streams
 
 /** The engine's scale layer: runs named entries over a `factor`x copy of
   * the driver tables and fails the run if any entry breaks a gate that
@@ -305,31 +306,18 @@ object Stress {
     def writePhase(i: Int): Unit =
       ms.filter(col("ts_ms") >= bounds(i)._1 && col("ts_ms") < bounds(i)._2)
         .drop("ts_ms").coalesce(4).write.mode("append").parquet(feed)
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "32")
     val t0 = System.nanoTime()
     writePhase(0)
     val outRows = new java.util.concurrent.atomic.AtomicLong
-    val q = mk(ss.readStream.schema(Tables.parquet(ss, feed).schema).parquet(feed))
+    val progress = Streams.drive(mk(Streams.fileStreams(spark, 32, feed).head)
       .writeStream.option("checkpointLocation", ckpt)
       .foreachBatch { (b: Dataset[Row], _: Long) => outRows.addAndGet(b.count()); () }
-      .start()
-    var peak = 0L; var last = 0L; var dropped = 0L
-    // recentProgress is a bounded ring buffer (100 entries): fold it after
-    // every drain (one phase is far fewer batches), de-duplicated by batch
-    // id, or a long run under-reports its early peak
-    val seen = scala.collection.mutable.Set.empty[Long]
-    def fold(): Unit =
-      for (p <- q.recentProgress if seen.add(p.batchId) && p.stateOperators.nonEmpty) {
-        last = p.stateOperators.map(_.numRowsTotal).sum
-        peak = math.max(peak, p.stateOperators.map(_.numRowsTotal).max)
-        dropped += p.stateOperators.map(_.numRowsDroppedByWatermark).sum
-      }
-    try {
-      q.processAllAvailable(); fold()
-      for (i <- 1 until phases) { writePhase(i); q.processAllAvailable(); fold() }
-    } finally q.stop()
+      .start(), (() => ()) +: (1 until phases).map(i => () => writePhase(i)))
     rm(spark, feed, ckpt)
+    val states = progress.map(_.stateOperators).filter(_.nonEmpty)
+    val peak = states.flatten.map(_.numRowsTotal).maxOption.getOrElse(0L)
+    val last = states.lastOption.fold(0L)(_.map(_.numRowsTotal).sum)
+    val dropped = states.flatten.map(_.numRowsDroppedByWatermark).sum
     import spark.implicits._
     Seq(((System.nanoTime() - t0) / 1e9, outRows.get, peak, last, dropped))
       .toDF("wall_s", "out_rows", "peak_state", "final_state", "wm_dropped")
@@ -515,17 +503,17 @@ object Stress {
       }),
       // ---- stream drives over the phased events feed
       "stream_dedup" -> stream("stream_dedup")(src =>
-        graft.streaming.Streams.streamingDedup(src, Seq("event_id"), watermark = "1 hour")),
+        Streams.streamingDedup(src, Seq("event_id"), watermark = "1 hour")),
       "stream_window" -> stream("stream_window")(src =>
-        graft.streaming.Streams.windowedCounts(src, length = "1 hour", watermark = "30 minutes")),
+        Streams.windowedCounts(src, length = "1 hour", watermark = "30 minutes")),
       "stream_join" -> stream("stream_join")(src =>
-        graft.streaming.Streams.intervalJoin(src.filter(col("event_type") === "view"),
+        Streams.intervalJoin(src.filter(col("event_type") === "view"),
           src.filter(col("event_type") === "click"), window = "10 minutes",
           watermark = "30 minutes")),
       "stream_sessionize" -> stream("stream_sessionize")(src =>
-        graft.streaming.Streams.sessionize(
+        Streams.sessionize(
           src.select("event_id", "ts", "user_id", "event_type", "value")
-            .as(org.apache.spark.sql.Encoders.product[graft.streaming.Streams.Event]),
+            .as(org.apache.spark.sql.Encoders.product[Streams.Event]),
           gapMs = 30 * 60 * 1000L, watermark = "30 minutes").toDF()),
       // the exactly-once ingest store (`ingest=b<id>` per batch): the
       // resident 90% written first, the 10% batch streamed in `phases`
@@ -544,14 +532,8 @@ object Stress {
           .filter(pmod(expr("vec_id div 10"), lit(phases)) === i)
           .coalesce(4).write.mode("append").parquet(feed)
         phase(0)
-        val ss = s.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "32")
-        val q = graft.streaming.Streams.indexAppend(
-          ss.readStream.schema(Tables.parquet(ss, feed).schema).parquet(feed), c, store, ckpt)
-        try {
-          q.processAllAvailable()
-          for (i <- 1 until phases) { phase(i); q.processAllAvailable() }
-        } finally q.stop()
+        Streams.drive(Streams.indexAppend(Streams.fileStreams(s, 32, feed).head, c, store, ckpt),
+          (() => ()) +: (1 until phases).map(i => () => phase(i)))
         rm(s, feed, ckpt)
         Tables.parquet(s, store)
       })

@@ -26,7 +26,7 @@ class StreamingSpec extends AnyFunSuite {
     mem.addData(eventRows: _*)
     val stream = mem.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val agg = Streams.hourlyTypeCounts(stream)
-    val got = Streams.runToMemory(agg, "hourly_out", OutputMode.Complete())
+    val got = Streams.runToMemory(agg, OutputMode.Complete())
       .orderBy("hour_start", "event_type")
       .select("event_type", "n_events", "sum_value")
       .as[(String, Long, Double)].collect()
@@ -57,7 +57,7 @@ class StreamingSpec extends AnyFunSuite {
     val joined = Streams.intervalJoin(
       memC.toDF.toDF(cols: _*), memV.toDF.toDF(cols: _*), "10 minutes")
     assert(joined.isStreaming)
-    val got = Streams.runToMemory(joined, "sjoin_out", OutputMode.Append())
+    val got = Streams.runToMemory(joined, OutputMode.Append())
       .select("l_id", "r_id").as[(Long, Long)].collect().toSet
     // click 1 (:00) matches view :05; click 2 (:10) has no view in
     // [:10,:20]; view :25 and user-2 view never match
@@ -85,7 +85,7 @@ class StreamingSpec extends AnyFunSuite {
     val stream = mem.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val got = Streams.runToMemory(
         Streams.slidingCounts(stream, length = "30 minutes", slide = "15 minutes"),
-        "slide_out", OutputMode.Complete())
+        OutputMode.Complete())
       .orderBy("w_start", "event_type")
       .as[(Timestamp, Timestamp, String, Long)].collect()
     assert(got.toSeq == batch.toSeq)
@@ -237,7 +237,7 @@ class StreamingSpec extends AnyFunSuite {
     val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
     val joined = Streams.intervalJoin(
       memL.toDF.toDF(cols: _*), memR.toDF.toDF(cols: _*), "10 minutes")
-    val got = Streams.runToMemory(joined, "ij_out", OutputMode.Append())
+    val got = Streams.runToMemory(joined, OutputMode.Append())
       .select("user_id", "l_id", "r_id").as[(Long, Long, Long)].collect()
     assert(got.toSeq == Seq((7L, 1L, 10L)))
 
@@ -392,7 +392,7 @@ class StreamingSpec extends AnyFunSuite {
     mem.addData(eventRows ++ Seq(eventRows.head, eventRows(1)): _*) // 2 dups
     val stream = mem.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val deduped = Streams.streamingDedup(stream, Seq("event_id"), "2 hours")
-    val got = Streams.runToMemory(deduped, "dedup_out", OutputMode.Append())
+    val got = Streams.runToMemory(deduped, OutputMode.Append())
     assert(got.count() == 4)
     assert(got.select("event_id").distinct().count() == 4)
   }
@@ -416,7 +416,7 @@ class StreamingSpec extends AnyFunSuite {
     mem.addData(rows: _*)
     val stream = mem.toDF.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val got = Streams.runToMemory(
-        Streams.userSessions(stream, gap = "30 minutes"), "sess_out",
+        Streams.userSessions(stream, gap = "30 minutes"),
         OutputMode.Complete())
       .orderBy("user_id", "session_start_ms")
       .as[(Long, Long, Long)].collect()
@@ -904,11 +904,11 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     def t2(s: String) = Timestamp.valueOf(s"2024-01-02 $s:00")
     val mem = MemoryStream[(Timestamp, String)]
-    val out = Streams.runToMemoryPhased(
+    val out = Streams.runToMemory(
       Streams.windowedCounts(
         mem.toDF.toDF("ts", "event_type"),
         length = "1 hour", watermark = "30 minutes"),
-      "slate_spec", OutputMode.Append(),
+      OutputMode.Append(),
       Seq(
         // phase 1: wm advances to 02:20 → windows 00 and 01 close
         () => mem.addData((t2("00:10"), "a"), (t2("00:20"), "a"),
@@ -926,5 +926,24 @@ class StreamingSpec extends AnyFunSuite {
       "2024-01-02 01:00:00" -> 1L,
       "2024-01-02 02:00:00" -> 2L)) // 02:10 straggler counted
     // window 03 never closed → never emitted in Append mode
+  }
+
+  test("drive stops the query when a phase throws and reports each batch once") {
+    implicit val sqlCtx = spark.sqlContext
+    def start(mem: MemoryStream[Int]) = mem.toDF().writeStream.format("noop").start()
+    val failing = MemoryStream[Int]
+    val q = start(failing)
+    val e = intercept[IllegalStateException](Streams.drive(q, Seq(
+      () => failing.addData(1, 2),
+      () => throw new IllegalStateException("phase 2 failed"))))
+    assert(e.getMessage == "phase 2 failed")
+    assert(!q.isActive)
+    assert(spark.streams.active.isEmpty)
+
+    val mem = MemoryStream[Int]
+    val progress = Streams.drive(start(mem), Seq(
+      () => mem.addData(1), () => mem.addData(2, 3)))
+    assert(progress.map(_.batchId) == Seq(0L, 1L))
+    assert(progress.map(_.numInputRows) == Seq(1L, 2L))
   }
 }
