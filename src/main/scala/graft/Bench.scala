@@ -2,14 +2,13 @@ package graft
 
 import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.engine.{Context, Stages}
+import graft.engine.{Context, Run, Stages}
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric","value","unit","queries","sf"}.
   *
-  * Each query is forced with a noop-format write — unlike count(), this
-  * materializes every output column and cannot let the optimizer drop
-  * sorts/projections, so the timing covers the full declared plan. */
+  * Each query runs through [[Run]], forced with its noop-format write
+  * ([[Run.noop]]), so the timing covers the full declared plan. */
 object Bench {
   type Query = (SparkSession, String) => DataFrame
 
@@ -25,23 +24,6 @@ object Bench {
     def total: Double = times.map(_._2).filter(_ >= 0).sum
   }
 
-  /** Time one noop write of `fn`'s result and record its stages (read
-    * after the clock stops), then isolate (untimed). None when the query
-    * fails. */
-  private def timeOnce(spark: SparkSession, sfDir: String, name: String,
-      fn: Query): Option[(Double, Stages.Record)] = {
-    val run =
-      try Some(Stages.record(spark) {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }) catch { case NonFatal(e) =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
-      }
-    Context.isolate(spark)
-    run
-  }
-
   /** Min of two measured runs per query, in name order. The second run
     * can reuse the first run's generated classes only while the session's
     * codegen cache still holds them (`Context.session` sizes it; a
@@ -50,14 +32,15 @@ object Bench {
   def sweep(spark: SparkSession, sfDir: String,
       queries: Map[String, Query]): Sweep = {
     val runs = queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      (name, Seq(timeOnce(spark, sfDir, name, fn), timeOnce(spark, sfDir, name, fn)))
+      def once() = Run(spark, "bench", name)(Run.noop(fn(spark, sfDir))).toOption
+      (name, Seq(once(), once()))
     }
     val best = runs.flatMap { case (name, rs) =>
-      rs.flatten.minByOption(_._1).map(name -> _) }.toMap
+      rs.flatten.minByOption(_.seconds).map(name -> _) }.toMap
     Sweep(
-      runs.map { case (name, _) => name -> best.get(name).fold(-1.0)(_._1) },
+      runs.map { case (name, _) => name -> best.get(name).fold(-1.0)(_.seconds) },
       runs.collect { case (name, rs) if rs.exists(_.isEmpty) => name },
-      best.map { case (name, (_, rec)) => name -> rec })
+      best.map { case (name, run) => name -> run.record })
   }
 
   /** Per-query jobs, stages that ran (a stage skipped through shuffle
@@ -79,7 +62,7 @@ object Bench {
     * two calls). */
   def setUp(sfDir: String): (SparkSession, Double) = {
     val t0 = System.nanoTime()
-    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus)
+    val spark = Context.session()
     Context.forSfDir(spark, sfDir)
     (spark, (System.nanoTime() - t0) / 1e9)
   }
@@ -95,24 +78,18 @@ object Bench {
     // Warm-up: run every query once at the smallest scale factor so the
     // measured pass reports steady-state (codegen classes compiled, JIT
     // warm) rather than first-run compilation latency. Falls back to a
-    // single-query warm-up if sf0.001 is absent.
+    // single-query warm-up if sf0.001 is absent. A warm-up failure is
+    // printed and otherwise ignored; the measured runs count failures.
     val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-      SparkEntry.queries.values.foreach { fn =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        // NonFatal: warm-up failures are fine, VM errors/interrupts are not
-        catch { case NonFatal(_) => () }
-        finally Context.isolate(spark) // warm-up persists must not leak into the runs
-      }
-    else SparkEntry.queries.get("q_scan")
-      .foreach(timeOnce(spark, sfDir, "q_scan", _))
+    val warm =
+      if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
+        SparkEntry.queries.toSeq.map { case (name, fn) => (name, fn, warmDir) }
+      else SparkEntry.queries.get("q_scan").map(("q_scan", _, sfDir)).toSeq
+    for ((name, fn, dir) <- warm) Run(spark, "bench warm-up", name)(Run.noop(fn(spark, dir)))
     val results = sweep(spark, sfDir, SparkEntry.queries)
-    // per-query values rounded to 0.1 ms: a 319-entry map at full nanotime
-    // precision is ~12 KB — rounding keeps the one-line JSON ~30% shorter
-    // so a bounded log-tail capture is likelier to hold it whole (the r11
-    // driver capture truncated the full line and lost the whole
-    // round-over-round comparison). Same methodology, same unit; 0.1 ms
-    // is far below the run-to-run noise floor.
+    // per-query values rounded to 0.1 ms (far below the run-to-run
+    // noise): the one-line JSON is ~30% shorter, so a bounded log-tail
+    // capture is likelier to hold it whole
     def fmt(v: Double): String =
       if (v < 0) v.toString
       else BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP)
@@ -127,25 +104,14 @@ object Bench {
     val fullLine =
       s"""{"metric":"total","value":${results.total},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
     println(shortLine(results, sfDir))
-    // also persist the complete per-query map to a repo file: the driver's
-    // log tail keeps only ~2 KB, which truncates the per-query line at
-    // ~45 of 240+ entries — BENCH_LOCAL.json lets round-over-round
-    // comparison diff EVERY query. Anchored to the REPO ROOT (env
-    // override, else derived from the compiled-classes location:
-    // <repo>/target/scala-2.13/classes), never the JVM cwd — a bench
-    // launched from a tool dir must not silently strand the evidence.
+    // also persist the complete per-query map to BENCH_LOCAL.json at the
+    // repo root (a bounded log tail truncates the per-query line), never
+    // in the JVM cwd, so a bench launched from a tool dir cannot strand it
     try {
       val repoRoot = sys.env.get("SPARK_GRAFT_REPO_DIR").getOrElse {
-        // The code source is <repo>/target/scala-2.13/classes for a plain
-        // classpath run, but sbt's FORKED runMain repackages classes into
-        // <repo>/target/bg-jobs/sbt_*/job-*/target/*/*.jar — a fixed
-        // number of getParent hops silently lands inside that transient
-        // dir and the artifact evaporates with it. Walk UP until the
-        // directory actually holding build.sbt (the repo root marker);
-        // fall back to the JVM cwd if the walk never finds one.
-        // getCodeSource may be null (boot/layered classloaders) — that
-        // must fall into the user.dir fallback, not NPE into the outer
-        // catch and silently strand the artifact
+        // sbt's forked runMain runs from a jar under target/bg-jobs, so walk
+        // up to the dir holding build.sbt; a null code source or a failed
+        // walk falls back to the JVM cwd
         Option(Bench.getClass.getProtectionDomain.getCodeSource)
           .flatMap { cs =>
             val start = java.nio.file.Paths.get(cs.getLocation.toURI)
@@ -156,12 +122,9 @@ object Bench {
           .getOrElse(System.getProperty("user.dir"))
       }
       val out = java.nio.file.Paths.get(repoRoot, "BENCH_LOCAL.json")
-      // ADVICE r12: carry the environment alongside the numbers so
-      // cross-round comparisons of this artifact are like-for-like
-      // (cpus, heap, gc isolation), plus the session set-up seconds, the
-      // names of failed queries and each query's stage record. Extra keys
-      // in the SIDE artifact only; the stdout full line keeps its exact
-      // shape.
+      // the side artifact also carries the environment (cpus, heap, gc
+      // isolation), the set-up seconds, the failed queries' names and each
+      // query's stage record; the stdout full line keeps its exact shape
       val failed = results.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       val envLine = fullLine.dropRight(1) +
         s""","cpus":${Context.cpus},"heap_max_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},"gc_between":true,"setup_s":${fmt(setupS)},"failed":$failed,"records":${recordsJson(results)}}"""

@@ -1,7 +1,7 @@
 package graft
-import scala.util.control.NonFatal
 import java.nio.file.{Files, Paths}
-import graft.engine.Context
+import org.apache.spark.sql.SparkSession
+import graft.engine.{Context, Run}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,44 +9,33 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg (local iteration only): comma-separated query
     // names; an unknown name is an error, not a silently empty run
-    val names: Set[String] =
-      if (args.length > 2) args(2).split(",").toSet
-      else SparkEntry.queries.keySet
-    requireKnown(names, SparkEntry.queries.keySet)
-    // SPARK_GRAFT_NO_BROADCAST=1: verify under the CLUSTER-SCALE join
-    // plan. At 100 TB no fact-table side fits a broadcast, so the plans
-    // that actually run there are sort-merge/shuffled-hash — locally AQE
-    // broadcasts instead, which leaves that plan shape unverified unless
-    // forced. Explicit broadcast() hints in operators keep their bounded
-    // broadcasts (those ARE the declared scale plan).
+    val queries =
+      if (args.length > 2) Run.resolve(args(2), SparkEntry.queries)
+      else SparkEntry.queries.toSeq.sortBy(_._1)
+    // SPARK_GRAFT_NO_BROADCAST=1: verify the sort-merge/shuffled-hash join
+    // plans that run at 100 TB, where no fact-table side fits a broadcast;
+    // explicit broadcast() hints keep their bounded broadcasts
     val noBroadcast =
       if (sys.env.get("SPARK_GRAFT_NO_BROADCAST").contains("1"))
         Map("spark.sql.autoBroadcastJoinThreshold" -> "-1",
           "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
       else Map.empty[String, String]
-    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus,
-      noBroadcast)
+    val spark = Context.session(conf = noBroadcast)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => names(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case NonFatal(e) =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      finally Context.isolate(spark)
-    }
-    writeOracleSql(outDir, names)
+    for ((name, fn) <- queries) write(spark, sfDir, outDir, name, fn)
+    writeOracleSql(outDir, queries.map(_._1).toSet)
     spark.stop()
   }
 
-  /** Reject names that are not in `known`: an unknown name is an error,
-    * not a silently empty run. */
-  def requireKnown(names: Set[String], known: Set[String]): Unit = {
-    val unknown = names -- known
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+  /** Write query `name`'s result as one parquet file under
+    * `<outDir>/<name>`. An earlier run's copy is deleted first, so a query
+    * that throws leaves no directory behind and check.py reports it
+    * MISSING instead of scoring the stale result. */
+  def write(spark: SparkSession, sfDir: String, outDir: String, name: String,
+      fn: Bench.Query): Either[Run.Failed, Run.Done[Unit]] = {
+    Context.deleteTree(Paths.get(outDir, name))
+    Run(spark, "verify", name)(
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
   }
 
   /** Write the DuckDB twins of `names` (the queries that ran) to

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.dedup.Dedup
-import graft.engine.Context
+import graft.engine.{Context, Tables}
 import graft.engine.Context.scratch
 import graft.functions.native
 
@@ -2611,11 +2611,12 @@ object TextQueries {
         () => graft.sources.Sinks.writeParquet(parts.ctx, s"$tbl/ctx"),
         () => graft.sources.Sinks.writeParquet(parts.prec, s"$tbl/prec"),
         () => graft.sources.Sinks.writeParquet(parts.consts, s"$tbl/consts")))
+      // all four footers read in one driver call, no schema job per table
+      val Seq(model, ctx, prec, consts) = Tables.parquet(s,
+        modelPath +: Seq("ctx", "prec", "consts").map(t => s"$tbl/$t"))
       graft.functions.Text.knPerplexity(
           docs.filter(col("source") === "src1"),
-          s.read.parquet(modelPath).select(col("w1"), col("w2"), col("c12")),
-          s.read.parquet(s"$tbl/ctx"), s.read.parquet(s"$tbl/prec"),
-          s.read.parquet(s"$tbl/consts"))
+          model.select(col("w1"), col("w2"), col("c12")), ctx, prec, consts)
         .orderBy("doc_id")
     },
       // stored-model scoring: parquet round-trips every model column
@@ -2647,13 +2648,12 @@ object TextQueries {
         () => graft.sources.Sinks.writeParquet(parts.ctx2, s"$tbl/ctx2"),
         () => graft.sources.Sinks.writeParquet(parts.c3, s"$tbl/c3"),
         () => graft.sources.Sinks.writeParquet(parts.consts, s"$tbl/consts")))
+      val Seq(model, ctx12, mid, ctx2, c3, consts) = Tables.parquet(s,
+        modelPath +: Seq("ctx12", "mid", "ctx2", "c3", "consts").map(t => s"$tbl/$t"))
       graft.functions.Text.knTrigramPerplexity(
           docs.filter(col("source") === "src1"),
-          s.read.parquet(modelPath)
-            .select(col("w1"), col("w2"), col("w3"), col("c123")),
-          s.read.parquet(s"$tbl/ctx12"), s.read.parquet(s"$tbl/mid"),
-          s.read.parquet(s"$tbl/ctx2"), s.read.parquet(s"$tbl/c3"),
-          s.read.parquet(s"$tbl/consts"))
+          model.select(col("w1"), col("w2"), col("w3"), col("c123")),
+          ctx12, mid, ctx2, c3, consts)
         .orderBy("doc_id")
     },
       // same stored-model argument one order up: the trigram model's

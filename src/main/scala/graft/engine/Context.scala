@@ -41,11 +41,6 @@ class Context(val spark: SparkSession) {
       options: CsvOptions = CsvOptions()): Unit =
     register(name, readCsv(path, options))
 
-  /** Parquet twin (the reference is CSV-only; Parquet is our primary format
-    * because at 100 TB a row-text format is never the right scan source). */
-  def registerParquet(name: String, path: String): Unit =
-    register(name, readParquet(path))
-
   /** Analog of `SessionContext::read_csv` (ref: context.rs:44-50).
     * Schema is either supplied (CsvReadOptions::with_schema,
     * ref: src/io/reader/csv/options.rs:25-28) or inferred — the reference
@@ -74,8 +69,6 @@ class Context(val spark: SparkSession) {
   /** Line-oriented text: one `value` string column per line. */
   def readText(path: String): DataFrame = spark.read.text(path)
 
-  def registerJson(name: String, path: String): Unit = register(name, readJson(path))
-  def registerOrc(name: String, path: String): Unit = register(name, readOrc(path))
   def registerText(name: String, path: String): Unit = register(name, readText(path))
 
   /** Look up a registered table; unknown names raise the same class of error
@@ -144,18 +137,19 @@ case class CsvOptions(
     mode: String = "PERMISSIVE")
 
 object Context {
-  /** Local-mode width of every main (`session(s"local[$cpus]", cpus)`):
+  /** Local-mode width of every main (the [[session]] defaults):
     * `SPARK_GRAFT_CPUS` if set, else this host's cores. */
   lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** The one session builder of this engine — every main and the test
     * fixture come through here, so they all run the same engine config.
-    * AQE on (runtime re-planning, skew-join splitting), shuffle partitions
-    * sized for the local harness (the 100 TB deployment would size this to
-    * ~2-3x total cores). `conf` entries are applied last and override the
-    * defaults (the broadcast-off verify sweep, forced-spill thresholds). */
-  def session(master: String = "local[*]", shufflePartitions: Int = 32,
+    * AQE on (runtime re-planning, skew-join splitting), by default
+    * `local[cpus]` with one shuffle partition per core (the 100 TB
+    * deployment would size this to ~2-3x total cores). `conf` entries are
+    * applied last and override the defaults (the broadcast-off verify
+    * sweep, forced-spill thresholds). */
+  def session(master: String = s"local[$cpus]", shufflePartitions: Int = cpus,
       conf: Map[String, String] = Map.empty): SparkSession = {
     val builder = SparkSession.builder()
       .master(master)

@@ -1,14 +1,13 @@
 package graft.tools
 
-import scala.util.control.NonFatal
-import graft.engine.{Context, Stages}
+import graft.engine.{Run, Stages}
 
-/** The query runner for local iteration: run named contract queries in ONE
+/** Local iteration on a few queries: run named contract queries in ONE
   * session (the Bench.scala execution shape, minus the full sweep) — a
-  * warm-up, then `runs` timed noop writes each — and read each run's
-  * `Stages.record`. Prints the session set-up seconds, every run, the
-  * best run, and the last run's jobs (by description, else call site)
-  * and stages sorted by cost.
+  * warm-up, then `runs` timed noop writes each, through
+  * [[graft.engine.Run]] — and read each run's stage record. Prints the
+  * session set-up seconds, every run, the best run, and the last run's
+  * jobs (by description, else call site) and stages sorted by cost.
   * Answers "where do the seconds of a multi-action query actually go"
   * (train vs store write vs audit vs probe) — the Spark-UI stage view,
   * reduced to a terminal, for sessions where the UI is disabled — and
@@ -21,30 +20,19 @@ import graft.engine.{Context, Stages}
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").toSeq
+    val queries = Run.resolve(args(0), graft.SparkEntry.queries)
     val sfDir = if (args.length > 1) args(1) else
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = if (args.length > 2) args(2).toInt else 2
     val (spark, setupS) = graft.Bench.setUp(sfDir)
     println(f"[jobprofile] set-up $setupS%.3f s (session + sf table registration)")
 
-    for (name <- names) {
-      val fn = graft.SparkEntry.queries(name)
-      // times the write alone; isolation runs after the clock stops
+    for ((name, fn) <- queries) {
+      // the processes of the whole run, build and action included
       def once(): Option[(Double, Stages.Record, Seq[String])] = {
-        val t =
-          try {
-            val ((s, rec), procs) = ProcessStarts.record(Stages.record(spark) {
-              val t0 = System.nanoTime()
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              (System.nanoTime() - t0) / 1e9
-            })
-            Some((s, rec, procs))
-          } catch { case NonFatal(e) =>
-            println(s"[jobprofile] $name FAILED: ${e.getMessage}"); None
-          }
-        Context.isolate(spark)
-        t
+        val (run, procs) = ProcessStarts.record(
+          Run(spark, "jobprofile", name)(Run.noop(fn(spark, sfDir))))
+        run.toOption.map(d => (d.seconds, d.record, procs))
       }
       def processes(procs: Seq[String]): String =
         s"${procs.size} processes" + (if (procs.isEmpty) "" else

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.engine.Context
+import graft.engine.{Context, Run}
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec,
   InputAdapter, SparkPlan, TakeOrderedAndProjectExec, WholeStageCodegenExec}
@@ -131,15 +131,16 @@ object PlanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val all = args.contains("--all")
-    val names =
+    val queries = Run.resolve(
       if (all) graft.SparkEntry.queries.keys.toSeq.sorted
       else if (args.nonEmpty) args.toSeq
       else Seq("q_agg_group", "q_join_inner", "q_join_fanout", "q_filter",
         "q_projection", "q_window_rank", "q_dedup_minhash", "q_ann_topk",
-        "q_asof", "q_events_hourly")
+        "q_asof", "q_events_hourly"),
+      graft.SparkEntry.queries)
+    val spark = Context.session()
 
     // Per-query cost annotations that must survive PLANS.md regeneration.
     val costNotes = Map(
@@ -197,8 +198,8 @@ object PlanAudit {
     val pruneFailures = scala.collection.mutable.ListBuffer.empty[String]
     val spFailures = scala.collection.mutable.ListBuffer.empty[String]
 
-    def audit(n: String): (String, Seq[String]) = {
-      val df = graft.SparkEntry.queries(n)(spark, dir)
+    def audit(n: String, fn: graft.Bench.Query): (String, Seq[String]) = {
+      val df = fn(spark, dir)
       val plan = df.queryExecution.executedPlan.toString
       val pushed = "PushedFilters: \\[[^\\]]*\\]".r.findAllIn(plan).toSeq.distinct
         .filter(_ != "PushedFilters: []")
@@ -249,6 +250,15 @@ object PlanAudit {
       (line, pushed ++ partFilters ++ pruneStats ++ readSchemas)
     }
 
+    // one query's audit through the runner (isolated after it); a query
+    // that throws is audited as failed and fails the run
+    val auditFailures = scala.collection.mutable.ListBuffer.empty[String]
+    def audited(n: String, fn: graft.Bench.Query): (String, Seq[String]) =
+      Run(spark, "planaudit", n)(audit(n, fn)).fold(
+        f => { auditFailures += s"$n: audit failed"
+          (s"AUDIT FAILED: ${f.error.getMessage}", Nil) },
+        _.value)
+
     if (all) {
       val sb = new StringBuilder
       sb ++= "# PLANS — executed-plan audit of every contract query\n\n"
@@ -256,10 +266,8 @@ object PlanAudit {
       sb ++= "Signals per query: join strategies, Exchange (shuffle/broadcast)\n"
       sb ++= "count, distinct parquet PushedFilters and ReadSchemas (column\n"
       sb ++= "pruning evidence). Spill-free at this scale.\n\n"
-      for (n <- names) {
-        val (line, detail) = try audit(n) catch {
-          case e: Throwable => (s"AUDIT FAILED: ${e.getMessage}", Nil)
-        }
+      for ((n, fn) <- queries) {
+        val (line, detail) = audited(n, fn)
         sb ++= s"## $n\n$line\n"
         detail.foreach(d => sb ++= s"- `${d.take(200)}`\n")
         costNotes.get(n).foreach(note => sb ++= s"- $note\n")
@@ -268,18 +276,18 @@ object PlanAudit {
       }
       java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"),
         sb.toString)
-      println(s"wrote PLANS.md (${names.length} queries)")
+      println(s"wrote PLANS.md (${queries.length} queries)")
     } else {
-      for (n <- names) {
-        val (line, detail) = audit(n)
+      for ((n, fn) <- queries) {
+        val (line, detail) = audited(n, fn)
         println(s"=== $n\n  $line")
         detail.foreach(d => println(s"  ${d.take(160)}"))
       }
     }
     spark.stop()
-    if (pruneFailures.nonEmpty || spFailures.nonEmpty) {
-      pruneFailures.foreach(f => System.err.println(s"[planaudit] FAIL $f"))
-      spFailures.foreach(f => System.err.println(s"[planaudit] FAIL $f"))
+    val failures = auditFailures ++ pruneFailures ++ spFailures
+    if (failures.nonEmpty) {
+      failures.foreach(f => System.err.println(s"[planaudit] FAIL $f"))
       sys.exit(1)
     }
   }

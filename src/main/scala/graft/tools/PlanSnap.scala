@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.engine.Context
+import org.apache.spark.sql.execution.FormattedMode
+import graft.engine.{Context, Run}
 
 /** Optimization-round evidence tool: write `.explain("formatted")` output
   * for the named contract queries to `<outDir>/<query>_<tag>.txt` — the
@@ -13,23 +14,19 @@ object PlanSnap {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val tag = args(1)
-    val names = args(2).split(",")
+    val queries = Run.resolve(args(2), graft.SparkEntry.queries)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.001"
-    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus)
+    val spark = Context.session()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
-    names.foreach { name =>
-      try {
-        val df = graft.SparkEntry.queries(name)(spark, sfDir)
-        val formatted = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+    for ((name, fn) <- queries)
+      Run(spark, "plansnap", name)(
+        fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+      ).foreach { run =>
         java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(outDir, s"${name}_$tag.txt"), formatted)
+          java.nio.file.Paths.get(outDir, s"${name}_$tag.txt"), run.value)
         println(s"[plansnap] wrote $outDir/${name}_$tag.txt")
-      } catch { case e: Throwable =>
-        println(s"[plansnap] $name FAILED: ${e.getMessage}")
-      } finally Context.isolate(spark)
-    }
+      }
     spark.stop()
   }
 }

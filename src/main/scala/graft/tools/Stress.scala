@@ -4,7 +4,7 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.{Context, Stages, Tables}
+import graft.engine.{Context, Run, Stages, Tables}
 import graft.streaming.Streams
 
 /** The engine's scale layer: runs named entries over a `factor`x copy of
@@ -79,8 +79,7 @@ object Stress {
     val work = o.dir.getOrElse(Context.scratch("stress"))
     val entries = resolve(o.names, o.factor, o.phases, work)
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Context.session(s"local[${Context.cpus}]", Context.cpus,
-      if (o.spill) spillConf else Map.empty)
+    val spark = Context.session(conf = if (o.spill) spillConf else Map.empty)
     val dir = corpus(spark, src, o.factor, o.repCap, work)
     println(f"${"entry"}%-24s ${"wall_s"}%8s ${"rows"}%10s ${"tasks"}%7s " +
       f"${"spill_MB"}%9s  worst stage skew (records, duration)")
@@ -99,11 +98,8 @@ object Stress {
 
   /** The entries for `names`, in order; an unknown name is an error. */
   def resolve(names: Seq[String], factor: Int, phases: Int,
-      work: String): Seq[(String, Entry)] = {
-    val all = graft.SparkEntry.queries ++ pipelines(factor, phases, work)
-    graft.Verify.requireKnown(names.toSet, all.keySet)
-    names.map(n => n -> all(n))
-  }
+      work: String): Seq[(String, Entry)] =
+    Run.resolve(names, graft.SparkEntry.queries ++ pipelines(factor, phases, work))
 
   // ------------------------------------------------------------- corpus
 
@@ -248,35 +244,41 @@ object Stress {
         s"final state $last rows is not below peak state $peak rows: the state only grows" }
     ).flatten ++ singlePartition ++ heavy(rec).flatMap(_.failures)
 
-  /** Run one entry, print its line and its gate failures, and return the
-    * failures; a non-fatal error is one failure, so the remaining entries
-    * still run. */
+  /** Run one entry through [[Run]], print its line and its gate failures,
+    * and return the failures; a non-fatal error is one failure, so the
+    * remaining entries still run. An earlier run's `<out>/<name>` is
+    * deleted first, so an entry that throws leaves no result behind. */
   def measure(spark: SparkSession, name: String, entry: Entry, dir: String,
       out: String, spill: Boolean): Seq[String] = {
-    val failures = try {
-      val ((df, wall), rec) = Stages.record(spark) {
-        val t0 = System.nanoTime()
-        val df = entry(spark, dir)
-        df.write.mode("overwrite").parquet(s"$out/$name")
-        (df, (System.nanoTime() - t0) / 1e9)
-      }
-      val back = Tables.parquet(spark, s"$out/$name")
-      val small = back.limit(5).collect()
-      // a stream drive's one-row summary: gate its feed's output rows
-      val summary = small.headOption.filter(_.schema.fieldNames.contains("peak_state"))
-      val rows = summary.fold(back.count())(_.getAs[Long]("out_rows"))
-      val state = summary.map(r => (r.getAs[Long]("peak_state"), r.getAs[Long]("final_state")))
-      val worst = heavy(rec).maxByOption(_.recSkew)
-        .fold("no stage >= 2 s")(s => f"${s.recSkew}%5.2fx ${s.durSkew}%5.2fx")
-      println(f"$name%-24s $wall%8.2f $rows%10d ${rec.tasks}%7d " +
-        f"${rec.spillBytes / 1e6}%9.1f  $worst")
-      // small results (summaries, recalls, prices) are the finding itself
-      if (small.length < 5) small.foreach(r => println(s"  $r"))
-      gates(rec, rows, spill, state,
-        PlanAudit.singlePartitionViolations(PlanAudit.physicalPlan(df)))
-        .map(f => s"$name: $f")
-    } catch { case NonFatal(e) => Seq(s"$name: $e") }
-    finally Context.isolate(spark)
+    Context.deleteTree(java.nio.file.Paths.get(out, name))
+    val failures = Run(spark, "stress", name) {
+      val df = entry(spark, dir)
+      df.write.mode("overwrite").parquet(s"$out/$name")
+      // plan the frame while the caches it reads are live: the
+      // SinglePartition gate reads this plan after isolation
+      df.queryExecution.executedPlan
+      df
+    } match {
+      case Left(f) => Seq(s"$name: ${f.error}")
+      case Right(run) => try {
+        val back = Tables.parquet(spark, s"$out/$name")
+        val small = back.limit(5).collect()
+        // a stream drive's one-row summary: gate its feed's output rows
+        val summary = small.headOption.filter(_.schema.fieldNames.contains("peak_state"))
+        val rows = summary.fold(back.count())(_.getAs[Long]("out_rows"))
+        val state = summary.map(r => (r.getAs[Long]("peak_state"), r.getAs[Long]("final_state")))
+        val rec = run.record
+        val worst = heavy(rec).maxByOption(_.recSkew)
+          .fold("no stage >= 2 s")(s => f"${s.recSkew}%5.2fx ${s.durSkew}%5.2fx")
+        println(f"$name%-24s ${run.seconds}%8.2f $rows%10d ${rec.tasks}%7d " +
+          f"${rec.spillBytes / 1e6}%9.1f  $worst")
+        // small results (summaries, recalls, prices) are the finding itself
+        if (small.length < 5) small.foreach(r => println(s"  $r"))
+        gates(rec, rows, spill, state,
+          PlanAudit.singlePartitionViolations(PlanAudit.physicalPlan(run.value)))
+          .map(f => s"$name: $f")
+      } catch { case NonFatal(e) => Seq(s"$name: $e") }
+    }
     failures.foreach(f => System.err.println(s"[stress] FAIL $f"))
     failures
   }
